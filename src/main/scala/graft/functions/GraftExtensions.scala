@@ -106,6 +106,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         Cast(args(1), LongType), Cast(args(2), LongType),
         if (args.length > 3) intArg(args(3), "bits") else 16)))
 
+    ext.injectFunction((FunctionIdentifier("shingles_sorted"),
+      info("shingles_sorted",
+        "shingles_sorted(tokens, k) - sorted distinct space-joined word " +
+          "k-shingles (whole text as one shingle when tokens < k)"),
+      (args: Seq[Expression]) => Shingles(args.head, intArg(args(1), "k"))))
+
     ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
       info("sorted_intersect_count",
         "sorted_intersect_count(a, b) - intersection size of two sorted " +

@@ -1,7 +1,8 @@
 package graft.sinks
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{AuditLog, LoadResult}
 
@@ -17,6 +18,24 @@ import graft.core.{AuditLog, LoadResult}
   * Idempotency contract (the reason K2 exists in the reference): staging is
   * truncated before each write and the merge is keyed, so re-running a load
   * leaves the final table unchanged.
+  *
+  * Publish protocol ([[stagedSync]] and [[compact]]): the new table state is
+  * written once, to `<table>__tmp`, then swapped in by two directory
+  * renames — `<table>` to `<table>__old`, `<table>__tmp` to `<table>` — and
+  * `<table>__old` is deleted (the write-once-then-publish commit shape of
+  * Structured Streaming and Delta Lake). The next call on the same table
+  * heals an interrupted publish before it reads anything:
+  *  - `<table>` missing, `<table>__tmp` has `_SUCCESS`: the swap died between
+  *    its renames, so the complete new state is promoted;
+  *  - `<table>` missing, no complete `<table>__tmp`, `<table>__old` present:
+  *    the old state is restored;
+  *  - then any `<table>__tmp` (a write that never finished, or a complete one
+  *    whose swap never started) and `<table>__old` (a swap that finished but
+  *    was not cleaned up) are dropped.
+  * A crash therefore never leaves a table half-written. On an object store
+  * (S3) a directory rename is a per-object copy and not atomic: a crash
+  * mid-rename there can leave a partial `<table>`, the same exposure as
+  * rewriting the table in place with `SaveMode.Overwrite`.
   */
 object Sinks {
 
@@ -28,24 +47,22 @@ object Sinks {
       keys, "left_anti"))
 
   /** K2: two-phase staged sync. 1) overwrite staging (truncate+append);
-    * 2) merge staging into final by key. Returns rows loaded.
+    * 2) merge staging into final by key and publish the result (see the
+    * publish protocol above). Returns the batch's row count.
     */
   def stagedSync(spark: SparkSession, df: DataFrame, stagingPath: String,
                  finalPath: String, keys: Seq[String]): LoadResult = {
     val table = finalPath
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(stagingPath)
-      val staged = spark.read.parquet(stagingPath)
-      val merged =
-        if (pathExists(spark, finalPath))
-          mergeByKey(spark.read.parquet(finalPath), staged, keys)
-        else staged
-      // materialize before overwriting the input path
-      val tmp = finalPath + "__tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(finalPath)
-      deletePath(spark, tmp)
-      LoadResult(table, staged.count(), ok = true, None)
+      // the row count rides the staging write as an Observation, and the
+      // staging read reuses the batch's schema: no count scan and no
+      // schema-inference job
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).parquet(stagingPath)
+      val staged = spark.read.schema(df.schema).parquet(stagingPath)
+      publish(spark, finalPath)(_.fold(staged)(mergeByKey(_, staged, keys)))
+      LoadResult(table, obs.get("rows").asInstanceOf[Long], ok = true, None)
     } catch {
       case e: Throwable => LoadResult(table, 0L, ok = false, Some(e.getMessage))
     }
@@ -148,16 +165,19 @@ object Sinks {
   /** Small-file compaction: rewrite a parquet path into files sized near
     * `targetFileMB`. Incremental appends (K1/appendPartitioned) accumulate
     * small files; at 100 TB unmanaged small files dominate scan planning
-    * time, so compaction is a first-class maintenance op.
+    * time, so compaction is a first-class maintenance op. The rewrite is
+    * published like a [[stagedSync]] merge (written once, swapped in by
+    * rename). Returns the target file count.
     */
   def compact(spark: SparkSession, path: String, targetFileMB: Int = 256): Long = {
-    val df = spark.read.parquet(path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1L, (bytes / (targetFileMB.toLong << 20)).toLong).toInt
-    val tmp = path + "__compact"
-    df.coalesce(files).write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
-    deletePath(spark, tmp)
+    var files = 1
+    publish(spark, path) { current =>
+      val df = current.getOrElse(
+        throw new java.io.FileNotFoundException(s"compact: no table at $path"))
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      files = math.max(1L, (bytes / (targetFileMB.toLong << 20)).toLong).toInt
+      df.coalesce(files)
+    }
     files.toLong
   }
 
@@ -171,13 +191,35 @@ object Sinks {
     AuditLog(result.table, result.rows, total, result.ok,
       result.error.getOrElse(""), at, source)
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The one owner of the publish protocol (see the object doc): heal an
+    * interrupted publish of `path`, build the new state from the current
+    * table (None if there is none), write it once to `path__tmp`, and swap
+    * it in by rename.
+    */
+  private def publish(spark: SparkSession, path: String)
+                     (next: Option[DataFrame] => DataFrame): Unit = {
+    val dir = new Path(path)
+    val tmp = new Path(path + "__tmp")
+    val old = new Path(path + "__old")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) {
+      if (fs.exists(new Path(tmp, "_SUCCESS"))) rename(fs, tmp, dir)
+      else if (fs.exists(old)) rename(fs, old, dir)
+    }
+    fs.delete(tmp, true)
+    fs.delete(old, true)
+    val current = if (fs.exists(dir)) Some(spark.read.parquet(path)) else None
+    next(current).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    if (current.isDefined) rename(fs, dir, old)
+    rename(fs, tmp, dir)
+    fs.delete(old, true)
   }
 
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  /** Hadoop's rename reports some failures by returning false; and onto an
+    * existing directory it nests the source inside it, so every target here
+    * is known to be absent.
+    */
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename $from -> $to failed")
 }

@@ -79,7 +79,9 @@ class PlanQualitySpec extends SparkTestBase {
     val self = graft.dedup.MinHashDedup.verifiedPairsFromShingles(sh,
       docs.limit(1).select(col("doc_id").as("id_a"), col("doc_id").as("id_b")),
       "doc_id", 0.99)
-    assert(self.collect().forall(_.getDouble(2) == 1.0))
+    val selfRows = self.collect()
+    assert(selfRows.length == 1, selfRows.mkString(", "))
+    assert(selfRows.forall(_.getDouble(2) == 1.0))
   }
 
   test("semi/anti joins plan as joins, not IN-subquery re-scans") {

@@ -136,6 +136,13 @@ class SetSimJoinSpec extends SparkTestBase {
         |                              sort_array(split(y, ' '))) AS c
         |FROM sic_t""".stripMargin).as[Int].head()
     assert(viaSql == 2)
+    // its sibling shingling kernel feeds it sorted sets from SQL as well
+    val viaShingles = spark.sql(
+      """SELECT sorted_intersect_count(shingles_sorted(split(x, ' '), 2),
+        |                              shingles_sorted(split(y, ' '), 2)) AS c,
+        |       shingles_sorted(split(y, ' '), 2) AS sh
+        |FROM sic_t""".stripMargin).as[(Int, Seq[String])].head()
+    assert(viaShingles == ((1, Seq("b c", "c d"))))
   }
 
   test("candidate stage plans token equi-joins, never a cartesian") {

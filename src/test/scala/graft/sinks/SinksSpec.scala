@@ -32,6 +32,72 @@ class SinksSpec extends SparkTestBase {
     assert(fin == Seq((1L, "a"), (2L, "B2"), (3L, "c")))
   }
 
+  test("stagedSync reports the batch's row count, not the final table's") {
+    val dir = tmp()
+    Sinks.stagedSync(spark, (1L to 5L).map(k => (k, s"v$k")).toDF("k", "v"),
+      s"$dir/staging", s"$dir/final", Seq("k"))
+    val r = Sinks.stagedSync(spark, Seq((4L, "x"), (5L, "y"), (6L, "z")).toDF("k", "v"),
+      s"$dir/staging", s"$dir/final", Seq("k"))
+    assert(r.ok && r.rows == 3)
+    assert(spark.read.parquet(s"$dir/final").count() == 6)
+  }
+
+  // ---- interrupted publishes: each on-disk state a crash can leave is
+  // built directly, then the next stagedSync must heal it, merge onto the
+  // right table state and leave no __tmp or __old behind
+
+  private def write(rows: Seq[(Long, String)], path: String): Unit =
+    rows.toDF("k", "v").write.mode("overwrite").parquet(path)
+
+  private def syncAndCheck(dir: String, expected: Seq[(Long, String)]): Unit = {
+    val r = Sinks.stagedSync(spark, Seq((9L, "new")).toDF("k", "v"),
+      s"$dir/staging", s"$dir/final", Seq("k"))
+    assert(r.ok && r.rows == 1, r)
+    val fin = spark.read.parquet(s"$dir/final").orderBy("k").as[(Long, String)].collect().toSeq
+    assert(fin == expected :+ ((9L, "new")))
+    for (debris <- Seq("final__tmp", "final__old"))
+      assert(!new java.io.File(s"$dir/$debris").exists(), s"$debris left behind")
+  }
+
+  private val older = Seq((1L, "a"), (2L, "b"))
+  private val newer = Seq((1L, "a"), (2L, "B2"), (3L, "c"))
+
+  test("crash between the publish renames: the complete __tmp is promoted") {
+    val dir = tmp()
+    write(newer, s"$dir/final__tmp")
+    write(older, s"$dir/final__old")
+    syncAndCheck(dir, newer)
+  }
+
+  test("crash between the publish renames of a first load: __tmp alone is promoted") {
+    val dir = tmp()
+    write(newer, s"$dir/final__tmp")
+    syncAndCheck(dir, newer)
+  }
+
+  test("crash mid-write of __tmp: the unfinished __tmp is dropped, final kept") {
+    val dir = tmp()
+    write(older, s"$dir/final")
+    write(newer, s"$dir/final__tmp")
+    assert(new java.io.File(s"$dir/final__tmp/_SUCCESS").delete())
+    syncAndCheck(dir, older)
+  }
+
+  test("crash before the final cleanup: a stale __old next to final is dropped") {
+    val dir = tmp()
+    write(newer, s"$dir/final")
+    write(older, s"$dir/final__old")
+    syncAndCheck(dir, newer)
+  }
+
+  test("final missing with only __old and an unfinished __tmp: __old is restored") {
+    val dir = tmp()
+    write(older, s"$dir/final__old")
+    write(newer, s"$dir/final__tmp")
+    assert(new java.io.File(s"$dir/final__tmp/_SUCCESS").delete())
+    syncAndCheck(dir, older)
+  }
+
   test("applyUpdates: join-based conditional update (row-wise UPDATE analog)") {
     val target = Seq((1L, 0), (2L, 0), (3L, 1)).toDF("k", "flag")
     val updates = Seq((2L, 1)).toDF("k", "flag")
@@ -94,6 +160,8 @@ class SinksSpec extends SparkTestBase {
     val after = new java.io.File(dir).list().count(_.endsWith(".parquet"))
     assert(after < before)
     assert(spark.read.parquet(dir).count() == 20)
+    for (debris <- Seq("__tmp", "__old"))
+      assert(!new java.io.File(dir + debris).exists(), s"$debris left behind")
   }
 
   test("writeSharded: ordered non-overlapping shards, per-file row cap, rows preserved") {
