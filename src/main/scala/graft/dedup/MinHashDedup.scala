@@ -114,8 +114,9 @@ object MinHashDedup {
     * |A∩B| = sorted_intersect_count, |A∪B| = |A| + |B| - |A∩B| — the
     * identical integers array_intersect/array_union produced, without
     * their per-pair UTF8String hash-set allocation (the SetSimJoin
-    * verify-kernel measurement). Persisted-index callers own the legacy
-    * defensive sort (see the `shingles_sorted` `_META` flag in Streams).
+    * verify-kernel measurement). A persisted near-dup index whose `_META`
+    * lacks the `shingles_sorted` flag is refused before it reaches here
+    * (see `Streams.requireNearDupGeometry`).
     */
   def verifiedPairsFromShingles(sh: DataFrame, pairs: DataFrame, idCol: String,
                                 threshold: Double): DataFrame = {

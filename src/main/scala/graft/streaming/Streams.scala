@@ -1,9 +1,12 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+final case class SessionState(startMs: Long, lastMs: Long, n: Int, sumValue: Double)
 
 /** Structured Streaming form of the reference's incremental semantics
   * (SURVEY.md §2.11).
@@ -19,10 +22,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * All transforms take a DataFrame/Dataset so the SAME code runs in batch
   * (tests, backfills) and streaming (readStream) — Spark's unified model.
+  *
+  * This object also holds the entry points of the two derived indexes
+  * that follow a DocStore collection: the IVF ANN index and the near-dup
+  * index. [[DerivedIndex]], which it extends, is the one owner of their
+  * on-disk layout and of every protocol they share (sync poll, takedown,
+  * batch-dir fold, sidecars); the entry points here supply only what
+  * differs per kind. Appending to an index written by an older writer's
+  * layout is unsupported: the entry points refuse it and ask for a
+  * rebuild.
   */
-final case class SessionState(startMs: Long, lastMs: Long, n: Int, sumValue: Double)
-
-object Streams {
+object Streams extends DerivedIndex {
 
   final case class Event(user_id: Long, ts: Timestamp, event_type: String, value: Double)
   final case class Session(user_id: Long, start: Timestamp, end: Timestamp,
@@ -472,6 +482,11 @@ object Streams {
                  schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema).parquet(path)
 
+  // ---- derived indexes (protocol and layout: DerivedIndex) -----------
+  //
+  // Per kind: the layout, the batch writer, the content column, and the
+  // geometry pinned in `_META`.
+
   /** Streaming ANN index maintenance: each micro-batch of embeddings is
     * assigned to its IVF cell (a pure broadcast projection —
     * [[graft.sim.Ann.IvfModel.assign]] is a codegen'd argmax over the
@@ -510,6 +525,14 @@ object Streams {
         ()
       }
 
+  /** The IVF layout: `batch_id=N/cell=M/` at the root, tombstones in
+    * `_tombstones` (underscore-prefixed so `spark.read.parquet(indexPath)`
+    * partition discovery never sees them as data dirs).
+    */
+  private def ivfLayout(indexPath: String): IndexLayout =
+    IndexLayout(indexPath, Seq(BatchTree(indexPath, Some("cell"))),
+      s"$indexPath/_tombstones")
+
   /** One IVF ingest batch: tombstone-filter, assign cells, publish as
     * `batch_id=N/cell=M/` with static overwrite (replay-idempotent).
     * Shared by the stream sink and [[syncIvfIndex]].
@@ -517,29 +540,19 @@ object Streams {
   private[graft] def ivfBatch(batch: DataFrame, bid: Long, indexPath: String,
                                   model: graft.sim.Ann.IvfModel,
                                   idCol: String, embCol: String): Long = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIndexCompaction(fs, indexPath) // a crashed compaction heals first
+    val fs = fsOf(batch.sparkSession, indexPath)
+    val ix = ivfLayout(indexPath)
+    healAll(fs, ix) // a crashed compaction heals first
     requireIvfGeometry(fs, indexPath, model, "ingestToIvfIndex")
-    writeIvfMeta(fs, indexPath, model)
-    val tombDir = s"$indexPath/$IvfTombstones"
+    writeMeta(fs, indexPath, Seq("cells" -> model.centroids.length,
+      "centroids" -> model.centroids.hashCode()))
     // the returned count rides the write job as an Observation (the
-    // DocStore.insertMany pattern) — syncIvfIndex's seed formerly paid a
-    // SECOND full snapshot pass just to count what it was about to
-    // write. Attached BELOW the tombstone anti-join so the count keeps
-    // the exact semantics the callers' former .count() had (input rows,
-    // pre-tombstone).
+    // DocStore.insertMany pattern), so no caller pays a second pass over
+    // the batch to count it. Observed before the tombstone anti-join: the
+    // count is input rows, pre-tombstone.
     val obs = org.apache.spark.sql.Observation()
-    val counted = batch.observe(obs, count(lit(1)).as("rows"))
-    val live =
-      if (fs.exists(new org.apache.hadoop.fs.Path(tombDir)))
-        counted.join(
-          broadcast(spark.read.parquet(tombDir)
-            .filter(col("cutoff_bid") >= bid).select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-      else counted
-    live.withColumn("cell", model.assign(col(embCol)))
+    withoutTombstoned(fs, ix, batch.observe(obs, count(lit(1)).as("rows")), idCol, bid)
+      .withColumn("cell", model.assign(col(embCol)))
       .repartition(col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .option("partitionOverwriteMode", "static")
@@ -547,63 +560,32 @@ object Streams {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  // underscore-prefixed so `spark.read.parquet(indexPath)` partition
-  // discovery never sees them as data dirs (direct root reads still work
-  // — the hidden-file rule exempts explicit roots)
-  private val IvfTombstones = "_tombstones"
-  private val IvfMeta = "_META"
-
-  /** Pin the index's model identity (`_META`: cell count + a content hash
-    * of the centroid values) at first write; every later entry point
-    * validates it. Cell ids are only comparable under the SAME fitted
-    * centroids — a mismatched model would silently assign/probe wrong
-    * cells (no error, just wrong recall), the same failure class the
-    * near-dup `_META` guards against.
+  /** Validate `model` against the index's `_META` pin (cell count + a
+    * content hash of the centroid values, written by the first batch).
+    * Cell ids are only comparable under the SAME fitted centroids — a
+    * mismatched model would silently assign/probe wrong cells (no error,
+    * just wrong recall), the same failure class the near-dup `_META`
+    * guards against.
     */
-  private def writeIvfMeta(fs: org.apache.hadoop.fs.FileSystem,
-                           indexPath: String,
-                           model: graft.sim.Ann.IvfModel): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, IvfMeta)
-    if (!fs.exists(p)) {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(indexPath))
-      val tmp = new org.apache.hadoop.fs.Path(indexPath,
-        s"$IvfMeta.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(
-        (s"cells=${model.centroids.length}\n" +
-          s"centroids=${model.centroids.hashCode()}\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false) // a racer wrote it first
-    }
-  }
-
-  private def requireIvfGeometry(fs: org.apache.hadoop.fs.FileSystem,
+  private def requireIvfGeometry(fs: FileSystem,
                                  indexPath: String,
                                  model: graft.sim.Ann.IvfModel,
                                  what: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, IvfMeta)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val stored = txt.split("\n").iterator.map(_.trim).filter(_.contains("="))
-        .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
-      stored.get("cells").foreach(s => require(s.toInt == model.centroids.length,
-        s"$what: model has ${model.centroids.length} cells but the index " +
-          s"at $indexPath was built with ${s.trim} — cell ids are not comparable"))
-      stored.get("centroids").foreach(s =>
-        require(s.toInt == model.centroids.hashCode(),
-          s"$what: model centroids differ from the ones the index at " +
-            s"$indexPath was built with — refit drift; rebuild the index " +
-            "or serve with the persisted model (ModelStore)"))
-    }
+    val stored = readMeta(fs, indexPath)
+    stored.get("cells").foreach(s => require(s.toInt == model.centroids.length,
+      s"$what: model has ${model.centroids.length} cells but the index " +
+        s"at $indexPath was built with ${s.trim} — cell ids are not comparable"))
+    stored.get("centroids").foreach(s =>
+      require(s.toInt == model.centroids.hashCode(),
+        s"$what: model centroids differ from the ones the index at " +
+          s"$indexPath was built with — refit drift; rebuild the index " +
+          "or serve with the persisted model (ModelStore)"))
     // layout guard: an index written by the pre-batch-dir layout has
     // `cell=M` dirs at the ROOT. Appending `batch_id=N/cell=M` next to
     // them would put leaf files at different depths and brick every
     // later partition discovery ("Conflicting directory structures") —
     // refuse LOUDLY before the first write lands instead
-    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val root = new Path(indexPath)
     if (fs.exists(root) &&
         fs.listStatus(root).exists(st =>
           st.isDirectory && st.getPath.getName.startsWith("cell=")))
@@ -616,255 +598,95 @@ object Streams {
   /** TAKEDOWN for an IVF index built by [[ingestToIvfIndex]] /
     * [[syncIvfIndex]]: purge `ids` so no future probe or replayed ingest
     * batch can serve them — the right-to-be-forgotten operation for an
-    * embedding index, mirroring [[removeFromNearDupIndex]]. Returns how
-    * many indexed vectors were removed.
+    * embedding index, the [[DerivedIndex]] takedown protocol (tombstones
+    * first, one discovery aggregate, stage-then-swap rewrites of the
+    * affected batch dirs, repartitioned by cell). Returns how many
+    * indexed vectors were removed.
     *
-    * Cost: one column-pruned scan of (id, partition dirs) finds the
-    * affected batch dirs — bounded driver collect of batch ids, never
-    * ids — and only those dirs are rewritten (repartitioned by cell,
-    * stage-then-swap with crash healing, exactly the near-dup takedown
-    * protocol). Tombstones land FIRST, stamped with the max batch id
-    * present now, so an at-least-once replay of any pre-takedown batch
-    * rewrites itself WITHOUT the removed ids; a genuinely new batch (id
-    * above the cutoff) can re-insert deliberately. `tombstone = false`
-    * is for [[syncIvfIndex]], whose crashed-poll replay must re-ingest
-    * the very ids it just removed at the SAME deterministic batch id.
-    * Single-writer like the ingest: do not run while a batch is in
-    * flight.
+    * `cellHints` restricts the discovery scan by partition pruning to the
+    * cells that may hold the ids' vectors — at 100 TB the difference
+    * between scanning the whole index's id column and O(hinted cells).
+    * The caller owns the hint's COMPLETENESS (a missed cell = an
+    * incomplete takedown); the per-batch rewrite is unhinted either way.
+    * `tombstone = false` is for [[syncIvfIndex]], whose crashed-poll
+    * replay must re-ingest the very ids it just removed at the SAME
+    * deterministic batch id. Single-writer like the ingest: do not run
+    * while a batch is in flight.
     */
   def removeFromIvfIndex(spark: SparkSession, indexPath: String,
                          ids: DataFrame, idCol: String = "vec_id",
                          tombstone: Boolean = true,
                          cellHints: Option[Seq[Long]] = None): Long = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(indexPath)),
+    require(fsOf(spark, indexPath).exists(new Path(indexPath)),
       s"removeFromIvfIndex: no index at $indexPath")
-    // complete a crashed compaction first (same reason as near-dup)
-    healIndexCompaction(fs, indexPath)
-    // crash recovery for our own swap protocol (same as near-dup): a
-    // leftover staging dir whose batch dir is gone means a crash between
-    // delete and rename — complete the swap
-    fs.listStatus(new org.apache.hadoop.fs.Path(indexPath)).foreach { st =>
-      val nm = st.getPath.getName
-      if (st.isDirectory && nm.startsWith(".takedown-b")) {
-        val b = nm.stripPrefix(".takedown-b").takeWhile(_ != '-')
-        val target = new org.apache.hadoop.fs.Path(indexPath, s"batch_id=$b")
-        if (!fs.exists(target)) {
-          if (!fs.rename(st.getPath, target))
-            throw new java.io.IOException(
-              s"removeFromIvfIndex: cannot recover ${st.getPath} -> $target")
-        } else fs.delete(st.getPath, true)
-      }
-    }
-    val batchDirs = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-      .toSeq.collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("batch_id=") =>
-          st.getPath.getName.stripPrefix("batch_id=").toLong
-      }.sorted
-    if (batchDirs.isEmpty) return 0L
-    val idDf = ids.select(col(idCol)).distinct().cache()
-    // TOMBSTONE FIRST (the removeFromNearDupIndex ordering argument): a
-    // crash after this leaves the replay filter in place even if the
-    // physical purge is incomplete; re-running finishes it
-    if (tombstone)
-      idDf.withColumn("cutoff_bid", lit(batchDirs.max))
-        .write.mode(SaveMode.Append).parquet(s"$indexPath/$IvfTombstones")
-    // the DISCOVERY scan finds which batch dirs hold the ids. `cellHints`
-    // restricts it by partition pruning to the cells that may hold the
-    // ids' vectors — at 100 TB the difference between scanning the whole
-    // index's id column and O(hinted cells). The caller owns the hint's
-    // COMPLETENESS (a missed cell = an incomplete takedown):
-    // [[syncIvfIndex]] derives it from the change window's before-image
-    // embeddings under the _META-pinned model, which is exactly where
-    // every superseded vector was assigned. The per-batch REWRITE below
-    // is unhinted either way — it anti-joins the whole dir it rewrites.
-    val all0 = spark.read.parquet(indexPath)
-    val all = cellHints.fold(all0)(cs => all0.filter(col("cell").isin(cs: _*)))
-    // ONE discovery pass: removed-id count and affected batch set come
-    // from a single aggregate collect (bounded: one long + one batch-id
-    // set) — the former cache + count + collect shape paid two jobs and
-    // a cache build over the same scan
-    val disc = all.select(col(idCol), col("batch_id"))
-      .join(idDf, Seq(idCol), "leftsemi")
-      .agg(countDistinct(col(idCol)).as("__n"),
-        collect_set(col("batch_id").cast("long")).as("__bs"))
-      .head()
-    val removed = disc.getLong(0)
-    if (removed == 0L) { idDf.unpersist(); return 0L }
-    val tainted = disc.getSeq[Long](1).sorted
-    // per-batch rewrites target disjoint batch dirs — run them
-    // concurrently (the near-dup takedown / ingest-publish argument),
-    // sequentially under the SessionCatalog monitor (SQL TVF path)
-    def rewrite(b: Long): Unit = {
-      // no pre-write materialization needed: the rewrite writes into a
-      // PRIVATE tmp dir while the source batch dir stays intact — the
-      // destructive delete happens only after the write completed, so
-      // the write job itself is the materialization
-      val kept = spark.read.parquet(s"$indexPath/batch_id=$b")
-        .join(idDf, Seq(idCol), "left_anti")
-      val tmp = new org.apache.hadoop.fs.Path(indexPath,
-        s".takedown-b$b-${java.util.UUID.randomUUID()}")
-      kept.repartition(col("cell"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(tmp.toString)
-      val target = new org.apache.hadoop.fs.Path(indexPath, s"batch_id=$b")
-      fs.delete(target, true)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(
-          s"removeFromIvfIndex: cannot swap $tmp -> $target")
-    }
-    if (Thread.holdsLock(spark.sessionState.catalog)) tainted.foreach(rewrite)
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      tainted.map(b => Future(rewrite(b)))
-        .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    }
-    idDf.unpersist()
-    removed
+    takedown(spark, ivfLayout(indexPath), ids, idCol, tombstone)(
+      _ => Some(ivfScope(spark, indexPath, cellHints)))
+  }
+
+  /** The IVF takedown's discovery scan, pruned to `cells` when given. */
+  private def ivfScope(spark: SparkSession, indexPath: String,
+                       cells: Option[Seq[Long]]): DataFrame = {
+    val all = spark.read.parquet(indexPath)
+    cells.fold(all)(cs => all.filter(col("cell").isin(cs: _*)))
   }
 
   /** Keep an IVF ANN index FOLLOWING a DocStore corpus by cursor CDC —
-    * the embedding twin of [[syncNearDupIndex]], closing the r10 gap
-    * where a mutating corpus left its ANN index stale or holding removed
-    * vectors: appended embeddings are assigned and join the index;
+    * the embedding twin of [[syncNearDupIndex]], so a mutating corpus
+    * never leaves its ANN index stale or holding removed vectors:
+    * appended embeddings are assigned and join the index;
     * deleted documents' vectors are taken down (batch-dir rewrites);
     * an UPDATED embedding is re-indexed — but only when the vector
     * actually changed (a metadata-only document update touches nothing).
     * Returns how many vectors were upserted this poll.
     *
-    * Exactly-once by the syncNearDupIndex protocol: a poll is
-    * removeFromIvfIndex (idempotent) + one [[ivfBatch]] at the
-    * deterministic `lastBid + 1` (overwrite-by-batch-dir), with the
-    * consumed cursor committed to `_SYNC` (tmp-then-rename) only after
-    * both — a crash anywhere replays byte-identically. The model must
-    * stay FIXED across polls (`_META` pins its centroid content; fit
-    * once, persist via ModelStore, serve forever — refitting would
-    * scramble cell ids under the existing index). At 100 TB each poll
-    * costs O(changed embeddings + their batch dirs), never an index or
-    * corpus rescan.
+    * Exactly-once by the [[DerivedIndex]] sync protocol: a poll is a
+    * takedown (idempotent) + one [[ivfBatch]] at the deterministic
+    * `lastBid + 1`, with the consumed cursor committed to `_SYNC` only
+    * after both. The takedown's discovery scan is CELL-HINTED: the
+    * superseded vectors live in the cells their before-images (the
+    * window's first change per id) assign to under the `_META`-pinned
+    * model. The model must stay FIXED across polls (fit once, persist via
+    * ModelStore, serve forever — refitting would scramble cell ids under
+    * the existing index).
     */
   def syncIvfIndex(spark: SparkSession, srcPath: String, indexPath: String,
                    model: graft.sim.Ann.IvfModel,
                    idCol: String = "vec_id", embCol: String = "embedding",
                    maxBatchDirs: Int = 0): Long = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIndexCompaction(fs, indexPath) // a crashed compaction heals first
-    requireIvfGeometry(fs, indexPath, model, "syncIvfIndex")
-    registerIndex(spark, srcPath, indexPath, "ivf") // maintainAll discovery
-    // maxBatchDirs > 0: bound the batch-dir count as part of the poll
-    // loop (see syncNearDupIndex) — fold committed dirs after the poll
-    def maybeCompactIdx(): Unit =
-      if (maxBatchDirs > 0) { compactIvfIndex(spark, indexPath, maxBatchDirs); () }
-    def hasBatches: Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(indexPath)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-          .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    def seed(c: graft.sources.DocStore.DocCursor): Long = {
-      // EXACTLY the cursor's snapshot (not a live find): the first
-      // poll's delta is then disjoint from the seed by construction —
-      // the near-dup seed discipline
-      val snap = graft.sources.DocStore.snapshotAt(spark, srcPath, c)
-        .select(col(idCol), col(embCol))
-        .filter(col(embCol).isNotNull)
-      // ONE full snapshot pass: isEmpty is a limit-1 probe and the count
-      // rides the ivfBatch write's own job (the former snap.count()
-      // paid a second corpus-sized scan at seed time)
-      val n = if (snap.isEmpty) 0L
-        else ivfBatch(snap, 1L, indexPath, model, idCol, embCol)
-      writeNearDupSync(fs, indexPath, c, if (hasBatches) 1L else 0L)
-      n
-    }
-    readNearDupSync(fs, indexPath) match {
-      case None =>
-        require(!hasBatches,
-          s"syncIvfIndex: $indexPath already has ingested batches but no " +
-            "_SYNC state — it was built by the stream ingest or another " +
-            "maintainer; point CDC sync at a fresh index directory")
-        val c = graft.sources.DocStore.cursor(spark, srcPath)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(indexPath))
-        writeNearDupSync(fs, indexPath, c, -1L) // seed intent (crash-safe)
-        seed(c)
-      case Some((c0, -1L)) => // a crashed seed: redo it (idempotent)
-        seed(c0)
-      case Some((c0, lastBid)) =>
-        val (changes, next) =
-          graft.sources.DocStore.changesSince(spark, srcPath, c0, idCol)
-        if (next == c0) { maybeCompactIdx(); return 0L }
-        def sideEmb(side: String): org.apache.spark.sql.Column = {
-          val st = changes.schema(side).dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          if (st.fieldNames.contains(embCol)) col(s"$side.$embCol")
-          else lit(null)
-        }
-        // ONE per-id pass over the change window, and a SINGLE aggregate
-        // — no window functions at all: `max_by`/`min_by` pick the
-        // latest/earliest generation's side images directly (MaxBy skips
-        // null ORDERINGS only, and `generation` is never null, so a
-        // latest-is-delete id correctly yields a null `__emb`), where the
-        // former shape paid two window sorts (desc + asc row_number)
-        // before the same group-agg. `__tc` = the indexed vector must
-        // change, `__old` = superseded content may exist in the index,
-        // `__emb` = the latest after-image embedding (null when the net
-        // effect is a delete)
-        val perId = changes
-          .groupBy(col(idCol))
-          .agg(max(when(!(sideEmb("before") <=> sideEmb("after")), 1)
-              .otherwise(0)).as("__tc"),
-            max(when(col("change") =!= "inserted", 1).otherwise(0)).as("__old"),
-            max_by(when(col("change") =!= "deleted", sideEmb("after")),
-              col("generation")).as("__emb"),
-            // the id's indexed vector as of the cursor == the before image
-            // of its FIRST change in the window (the index follows the
-            // corpus exactly, pinned by SyncIvfSpec) — its cell under the
-            // _META-pinned model is where the takedown must look
-            min_by(sideEmb("before"), col("generation")).as("__embBefore"))
-          .filter(col("__tc") === 1)
-          .localCheckpoint(true)
-        if (perId.isEmpty) { // metadata-only window: cursor advance only
-          writeNearDupSync(fs, indexPath, next, lastBid)
-          maybeCompactIdx()
-          return 0L
-        }
-        val toIngest = perId.filter(col("__emb").isNotNull)
-          .select(col(idCol), col("__emb").as(embCol))
-        // remove superseded vectors FIRST, then ingest the latest
-        // embeddings as the next batch — both steps idempotent at this
-        // cursor-determined batch id, so a crashed poll replays
-        // byte-identically. tombstone = false: the replay must re-ingest
-        // the very ids it just removed at the SAME id. PURE-INSERT FAST
-        // PATH: a freshly inserted id cannot be in the index — the seed
-        // read exactly its cursor's snapshot — so the takedown scan runs
-        // only when the window carries an update or delete. Same
-        // precondition as syncNearDupIndex's fast path: seed THROUGH
-        // this function; a foreign index seeded from a live read can
-        // hold "inserted" ids whose stale entries nothing reconciles.
-        val toRemove = perId.filter(col("__old") === 1)
-        if (hasBatches && !toRemove.isEmpty) {
-          // bounded driver collect: DISTINCT CELLS of the superseded
-          // vectors (<= nCells values, never ids). A null before-image
-          // (the doc carried no embedding at the cursor) was never
-          // indexed, so its absence from the hint is exact. Crash-replay
-          // sound: a replayed poll's after-image copies live only in
-          // batch `bid`, which the ivfBatch below overwrites whole.
-          val hintCells = toRemove.filter(col("__embBefore").isNotNull)
-            .select(model.assign(col("__embBefore")).cast("long").as("c"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          removeFromIvfIndex(spark, indexPath, toRemove.select(col(idCol)),
-            idCol, tombstone = false, cellHints = Some(hintCells))
-        }
-        val bid = lastBid + 1
-        // count rides the write (perId is checkpointed, so isEmpty is a
-        // local probe and nothing upstream recomputes)
-        val n = if (toIngest.isEmpty) 0L
-          else ivfBatch(toIngest, bid, indexPath, model, idCol, embCol)
-        writeNearDupSync(fs, indexPath, next, if (n > 0) bid else lastBid)
-        maybeCompactIdx()
-        n
+    requireIvfGeometry(fsOf(spark, indexPath), indexPath, model, "syncIvfIndex")
+    val ix = ivfLayout(indexPath)
+    syncIndex[Long](spark, srcPath, ix, "ivf", "syncIvfIndex", idCol, embCol,
+      maxBatchDirs, 0L, identity,
+      side => Seq(min_by(side("before"), col("generation")).as("__embBefore")))(
+      ivfBatch(_, _, indexPath, model, idCol, embCol)) { toRemove =>
+      takedown(spark, ix, toRemove.select(col(idCol)), idCol, tombstone = false) { _ =>
+        // bounded driver collect: DISTINCT CELLS of the superseded
+        // vectors (<= nCells values, never ids). A null before-image
+        // (the doc carried no embedding at the cursor) was never
+        // indexed, so its absence from the hint is exact. Crash-replay
+        // sound: a replayed poll's after-image copies live only in
+        // batch `bid`, which the ivfBatch after the takedown overwrites
+        // whole.
+        val cells = toRemove.filter(col("__embBefore").isNotNull)
+          .select(model.assign(col("__embBefore")).cast("long").as("c"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        Some(ivfScope(spark, indexPath, Some(cells)))
+      }
+      ()
     }
   }
+
+  /** Fold an IVF index's `batch_id=N/cell=M` dirs at/below the safe
+    * cutoff into one consolidated batch ([[DerivedIndex]] fold; per-cell
+    * layout preserved, so cell-pruned probes and the takedown's cell
+    * hints work unchanged). knn/sync results are row-identical before and
+    * after; a crashed run heals at the next entry. Returns folded dir
+    * count.
+    */
+  def compactIvfIndex(spark: SparkSession, indexPath: String,
+                      maxBatchDirs: Int = 1,
+                      maxFileBytes: Long = 1L << 28): Long =
+    foldIndex(spark, ivfLayout(indexPath), maxBatchDirs, maxFileBytes)
 
   /** Streaming NEAR-DUP detection: the dedup twin of [[ingestToIvfIndex]]
     * — documents stream in, each micro-batch is checked for near-
@@ -906,88 +728,54 @@ object Streams {
                            idCol: String = "doc_id", textCol: String = "text",
                            k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
                            threshold: Double = 0.7, maxBucket: Int = 1000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val Slots = 16L
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
       // guard against an empty trigger: the whole per-batch pipeline
       // (reads, joins, three writes) would run for nothing
       if (!batch.isEmpty) nearDupBatch(batch, bid, indexPath, idCol, textCol,
-        k, bands, rowsPerBand, threshold, maxBucket, Slots)
+        k, bands, rowsPerBand, threshold, maxBucket)
       ()
     }
-  }
 
-  /** The index's LSH geometry, persisted as `indexPath/_META` by the
-    * first ingest batch (write-if-absent, tmp-then-rename): band hashes
-    * are only comparable when shingle size and banding match, so a probe
-    * or a later ingest run with different parameters would silently
-    * produce garbage candidates (usually: no matches at all — "the eval
-    * set is clean" when it is not). Every entry point validates against
-    * the stored geometry and fails loudly on a mismatch; an index built
-    * before `_META` existed validates nothing (documented legacy gap).
+  /** Slot count of the near-dup trees: keys by xxhash64(band, band_hash),
+    * shingles by xxhash64(id), each mod `Slots`.
     */
-  private def writeNearDupMeta(fs: org.apache.hadoop.fs.FileSystem,
-                               indexPath: String, k: Int, bands: Int,
-                               rowsPerBand: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_META")
-    if (!fs.exists(p)) {
-      // shingles_sorted=1: this index's shingles sidecar holds SORTED
-      // duplicate-free arrays (the shingleSets kernel), so verify stages
-      // may run the merge-walk intersect directly; readers of an index
-      // WITHOUT the flag must defensively array_sort the stored side.
-      // Claimed ONLY when no shingles dir predates this _META — a
-      // pre-_META legacy index holds first-occurrence-ordered arrays,
-      // and stamping the flag over those would silently undercount
-      // every verify against its old batches.
-      val sortedLine =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/shingles")))
-          "" else "shingles_sorted=1\n"
-      val tmp = new org.apache.hadoop.fs.Path(indexPath,
-        s"_META.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(
-        s"k=$k\nbands=$bands\nrowsPerBand=$rowsPerBand\n$sortedLine"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false) // a racer wrote it first
-    }
-  }
+  private val Slots = 16L
 
-  private def readNearDupMeta(fs: org.apache.hadoop.fs.FileSystem,
-                              indexPath: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_META")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt.split("\n").iterator.map(_.trim).filter(_.contains("="))
-        .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
-    }
-  }
+  private def nearDupLayout(indexPath: String): IndexLayout =
+    IndexLayout(indexPath,
+      Seq(BatchTree(s"$indexPath/keys", Some("slot")),
+        BatchTree(s"$indexPath/shingles", Some("id_slot")),
+        BatchTree(s"$indexPath/matches", None, pairs = true)),
+      s"$indexPath/tombstones")
 
-  /** True when the index's persisted shingle arrays are sorted (the
-    * `shingles_sorted=1` `_META` flag). A legacy index (no flag, or no
-    * `_META` at all) may hold first-occurrence-ordered arrays — its
-    * stored side must be `array_sort`ed before the merge-walk verify,
-    * which silently undercounts on unsorted input.
+  /** Validate against the index's LSH geometry, persisted as `_META` by
+    * the first ingest batch: band hashes are only comparable when shingle
+    * size and banding match, so a probe or a later ingest run with
+    * different parameters would silently produce garbage candidates
+    * (usually: no matches at all — "the eval set is clean" when it is
+    * not). `_META` also carries `shingles_sorted=1`: the shingles tree
+    * holds SORTED duplicate-free arrays (the shingleSets kernel), which
+    * the merge-walk verify requires — it silently undercounts on unsorted
+    * input. An index whose shingles predate that flag (written before the
+    * kernel, or before `_META` existed) is refused: rebuild it.
     */
-  private def nearDupShinglesSorted(fs: org.apache.hadoop.fs.FileSystem,
-                                    indexPath: String): Boolean =
-    readNearDupMeta(fs, indexPath).get("shingles_sorted").exists(_.trim == "1")
-
-  private def requireNearDupGeometry(fs: org.apache.hadoop.fs.FileSystem,
+  private def requireNearDupGeometry(fs: FileSystem,
                                      indexPath: String, k: Int, bands: Int,
                                      rowsPerBand: Int, what: String): Unit = {
-    val stored = readNearDupMeta(fs, indexPath)
-    if (stored.nonEmpty) {
-      def chk(nm: String, v: Int): Unit = stored.get(nm).foreach(s =>
-        require(s.trim.toInt == v,
-          s"$what: $nm=$v does not match the geometry this index was built " +
-            s"with ($nm=${s.trim}, from $indexPath/_META) — band hashes are " +
-            "only comparable under identical shingling and banding"))
-      chk("k", k); chk("bands", bands); chk("rowsPerBand", rowsPerBand)
-    }
+    val stored = readMeta(fs, indexPath)
+    def chk(nm: String, v: Int): Unit = stored.get(nm).foreach(s =>
+      require(s.trim.toInt == v,
+        s"$what: $nm=$v does not match the geometry this index was built " +
+          s"with ($nm=${s.trim}, from $indexPath/_META) — band hashes are " +
+          "only comparable under identical shingling and banding"))
+    chk("k", k); chk("bands", bands); chk("rowsPerBand", rowsPerBand)
+    if (!stored.get("shingles_sorted").exists(_.trim == "1") &&
+        fs.exists(new Path(s"$indexPath/shingles")))
+      throw new IllegalStateException(
+        s"$what: the index at $indexPath predates sorted shingle arrays " +
+          "(no shingles_sorted=1 in its _META) — rebuild the index from " +
+          "the corpus")
   }
 
   /** READ-ONLY probe of a near-dup index built by
@@ -1012,14 +800,11 @@ object Streams {
                         k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
                         threshold: Double = 0.7, maxBucket: Int = 1000)
       : DataFrame = {
-    val Slots = 16L
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, indexPath)
     val keysDir = s"$indexPath/keys"
     val shDir = s"$indexPath/shingles"
-    require(fs.exists(new org.apache.hadoop.fs.Path(keysDir)) &&
-        fs.exists(new org.apache.hadoop.fs.Path(shDir)),
+    require(fs.exists(new Path(keysDir)) && fs.exists(new Path(shDir)),
       s"probeNearDupIndex: $indexPath has no keys/shingles dirs — build " +
         "the index with ingestToNearDupIndex first")
     // a crashed compaction must complete before any read: between its
@@ -1065,13 +850,9 @@ object Streams {
       .select(pmod(xxhash64(col("id_b")), lit(Slots)).as("s"))
       .distinct().collect().map(_.getLong(0)).toSeq
     if (candSlots.isEmpty) { sh.unpersist(); keys.unpersist(); return emptyResult }
-    // legacy index (no shingles_sorted flag): stored arrays may be
-    // first-occurrence-ordered — sort them or the merge-walk undercounts
-    val shSorted = nearDupShinglesSorted(fs, indexPath)
     val storedSh = spark.read.parquet(shDir)
       .filter(col("id_slot").isin(candSlots: _*))
-      .select(col(idCol),
-        (if (shSorted) col("sh") else array_sort(col("sh"))).as("sh"))
+      .select(col(idCol), col("sh"))
     // SIDE-CORRECT verify: id_a resolves from the PROBE shingles, id_b
     // from the (slot-pruned) STORED shingles — a probe doc reusing an
     // indexed id with different text must be compared against the
@@ -1103,21 +884,12 @@ object Streams {
     * Returns how many indexed documents were actually removed (0 = the
     * ids were never indexed; loud no-op signal).
     *
-    * Cost is bounded by the AFFECTED ingest batches, not the index: the
-    * id-slot-pruned shingle read locates each id's batch, and only those
-    * batches' keys/shingles dirs (plus the match dirs that mention the
-    * ids — found by one scan of the pair-sized matches table) are
-    * rewritten, with the same overwrite-by-batch-dir layout the ingest
-    * writes. Each rewrite is STAGE-THEN-SWAP (materialized with
-    * `localCheckpoint`, written to a dot-prefixed staging dir, then
-    * swapped in): a crash can never lose the surviving docs' rows for a
-    * batch — the old dir stays intact until the staged replacement is
-    * complete, and the next takedown call heals the one remaining
-    * delete->rename metadata gap from the staging dirs.
-    *
-    * Single-writer like the ingest itself: do not run while a batch is in
-    * flight (a DRAINED stream between triggers is fine — empty triggers
-    * write nothing).
+    * The [[DerivedIndex]] takedown protocol: cost is bounded by the
+    * AFFECTED ingest batches, not the index — the id-slot-pruned shingle
+    * read locates each id's batch, and only those batches' keys/shingles
+    * dirs (plus the match dirs that mention the ids — found by one scan
+    * of the pair-sized matches table) are rewritten, stage-then-swap, so
+    * a crash can never lose the surviving docs' rows for a batch.
     *
     * REPLAY-PROOF via tombstones: before any rewrite, the requested ids
     * are appended to `indexPath/tombstones/` stamped with the max batch
@@ -1131,831 +903,46 @@ object Streams {
     * within a checkpoint lineage — the same contract the
     * overwrite-by-batch-dir layout already requires of the ingest.
     * `tombstone = false` skips the sidecar — for callers whose replay
-    * protocol is already deterministic ([[syncNearDupIndex]], where a
-    * crashed poll must re-ingest the very ids it just removed at the
-    * SAME batch id).
+    * protocol is already deterministic ([[syncNearDupIndex]]).
+    *
+    * Single-writer like the ingest itself: do not run while a batch is in
+    * flight (a DRAINED stream between triggers is fine — empty triggers
+    * write nothing).
     */
   def removeFromNearDupIndex(spark: SparkSession, indexPath: String,
                              ids: DataFrame, idCol: String = "doc_id",
                              tombstone: Boolean = true): Long = {
-    val Slots = 16L
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keysDir = s"$indexPath/keys"
-    val shDir = s"$indexPath/shingles"
-    val matchesDir = s"$indexPath/matches"
-    require(fs.exists(new org.apache.hadoop.fs.Path(keysDir)) &&
-        fs.exists(new org.apache.hadoop.fs.Path(shDir)),
+    val fs = fsOf(spark, indexPath)
+    require(fs.exists(new Path(s"$indexPath/keys")) &&
+        fs.exists(new Path(s"$indexPath/shingles")),
       s"removeFromNearDupIndex: $indexPath has no keys/shingles dirs")
-    // complete a crashed compaction first — its mid-protocol state hides
-    // batch dirs the discovery scan below must see
-    healIndexCompaction(fs, keysDir); healIndexCompaction(fs, shDir)
-    healIndexCompaction(fs, matchesDir)
-    // crash recovery for OUR OWN swap protocol (below): a leftover
-    // `.takedown-b<N>-*` staging dir whose `batch_id=N` sibling is gone
-    // means the previous takedown crashed between its delete and rename —
-    // complete the swap; with the sibling present the staging is stale
-    def healSwaps(parent: String): Unit =
-      if (fs.exists(new org.apache.hadoop.fs.Path(parent)))
-        fs.listStatus(new org.apache.hadoop.fs.Path(parent)).foreach { st =>
-          val nm = st.getPath.getName
-          if (st.isDirectory && nm.startsWith(".takedown-b")) {
-            val batch = nm.stripPrefix(".takedown-b").takeWhile(_ != '-')
-            val target = new org.apache.hadoop.fs.Path(parent, s"batch_id=$batch")
-            if (!fs.exists(target)) {
-              if (!fs.rename(st.getPath, target))
-                throw new java.io.IOException(
-                  s"removeFromNearDupIndex: cannot recover ${st.getPath} -> $target")
-            } else fs.delete(st.getPath, true)
-          }
-        }
-    healSwaps(keysDir); healSwaps(shDir); healSwaps(matchesDir)
-    // stage-then-swap: the in-place alternative (Overwrite on the live
-    // dir) would, on a crash mid-rewrite, lose the SURVIVING docs' rows
-    // for that batch with no replay that restores them sans the removed
-    // ids. This narrows the loss window to the delete->rename metadata
-    // gap, and healSwaps above closes even that.
-    def swapIn(parent: String, b: Long)(write: String => Unit): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(parent,
-        s".takedown-b$b-${java.util.UUID.randomUUID()}")
-      write(tmp.toString)
-      val target = new org.apache.hadoop.fs.Path(parent, s"batch_id=$b")
-      fs.delete(target, true)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(
-          s"removeFromNearDupIndex: cannot swap $tmp -> $target")
-    }
-    val idDf = ids.select(col(idCol)).distinct().cache()
-    // bounded collects throughout: slot values (<= Slots) and affected
-    // batch ids (<= batches the removed docs were ingested in) — never ids
+    takedown(spark, nearDupLayout(indexPath), ids, idCol, tombstone)(
+      nearDupScope(spark, indexPath, idCol))
+  }
+
+  /** The near-dup takedown's discovery scan: the shingles tree pruned to
+    * the ids' id-slots (a bounded collect of at most `Slots` values).
+    */
+  private def nearDupScope(spark: SparkSession, indexPath: String, idCol: String)(
+                           idDf: DataFrame): Option[DataFrame] = {
     val idSlots = idDf.select(pmod(xxhash64(col(idCol)), lit(Slots)).as("s"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    if (idSlots.isEmpty) { idDf.unpersist(); return 0L }
-    // TOMBSTONE FIRST (before any rewrite): a crash after this point
-    // leaves the replay filter in place even if the physical purge below
-    // is incomplete — re-running the takedown finishes it; the reverse
-    // order would reopen the replay-reinstatement window this closes.
-    // Ids are stamped with the max batch id present NOW, over BOTH the
-    // keys and shingles listings: the two index writes run as parallel
-    // futures, so a batch that crashed after shingles landed but before
-    // keys did exists in one dir only — a keys-only cutoff would leave
-    // that batch's id above it, and its replay would escape the
-    // tombstone filter and reinstate the removed content.
-    if (tombstone) {
-      def maxBidIn(dir: String): Long =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) -1L
-        else fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .toSeq.collect {
-            case st if st.isDirectory &&
-                st.getPath.getName.startsWith("batch_id=") =>
-              st.getPath.getName.stripPrefix("batch_id=").toLong
-          }.foldLeft(-1L)(math.max)
-      val maxBid = math.max(maxBidIn(keysDir), maxBidIn(shDir))
-      if (maxBid >= 0L)
-        idDf.withColumn("cutoff_bid", lit(maxBid))
-          .write.mode(SaveMode.Append).parquet(s"$indexPath/tombstones")
-    }
-    // ONE discovery pass (the removeFromIvfIndex shape): removed-doc
-    // count and affected batch set in a single bounded aggregate collect
-    // — replaces the cache + count + collect pair over the same scan.
-    // batch_id cast first: partition-dir values infer as int.
-    val disc = spark.read.parquet(shDir)
-      .filter(col("id_slot").isin(idSlots: _*))
-      .join(idDf, Seq(idCol), "leftsemi")
-      .agg(countDistinct(col(idCol)).as("__n"),
-        collect_set(col("batch_id").cast("long")).as("__bs"))
-      .head()
-    val removedDocs = disc.getLong(0)
-    if (removedDocs == 0L) { idDf.unpersist(); return 0L }
-    val docBatches = disc.getSeq[Long](1).sorted
-    // every affected (dir kind, batch) rewrite targets its OWN batch dir
-    // — keys vs shingles vs matches are separate trees, and batch dirs
-    // within one tree are disjoint — so the stage-then-swap rewrites run
-    // CONCURRENTLY (the ingest's three-way publish argument): per-rewrite
-    // cost at this granularity is committer and small-file fixed
-    // overhead, and overlapping them cuts the takedown wall to the
-    // slowest single rewrite. Same deadlock guard as the ingest: under
-    // the SessionCatalog monitor (the SQL TVF path) run sequentially.
-    def rewriteKeyed(parent: String, partCol: String, b: Long): Unit =
-      // a crashed ingest's parallel writes can leave a batch with
-      // shingles but no keys (or vice versa): purge whichever half
-      // exists instead of failing the takedown on the missing one —
-      // the tombstone above already covers the batch's replay
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$parent/batch_id=$b"))) {
-        // writes land in swapIn's private staging while the source dir
-        // stays intact until after the write — no pre-materialization
-        val kept = spark.read.parquet(s"$parent/batch_id=$b")
-          .join(idDf, Seq(idCol), "left_anti")
-        swapIn(parent, b) { tmp =>
-          kept.repartition(col(partCol))
-            .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-            .parquet(tmp)
-        }
-      }
-    def rewriteMatches(b: Long): Unit = {
-      val kept = spark.read.parquet(s"$matchesDir/batch_id=$b")
-        .join(idDf.select(col(idCol).as("id_a")), Seq("id_a"), "left_anti")
-        .join(idDf.select(col(idCol).as("id_b")), Seq("id_b"), "left_anti")
-      swapIn(matchesDir, b) { tmp =>
-        kept.write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-    }
-    // matches carry removed ids on either side, in ANY batch (a later
-    // batch's doc matching an earlier removed one); one scan of the
-    // pair-sized table finds the dirs to rewrite
-    val taintedMatches: Seq[Long] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(matchesDir))) {
-        val m = spark.read.parquet(matchesDir)
-        m.join(idDf.select(col(idCol).as("id_a")), Seq("id_a"), "leftsemi")
-          .select(col("batch_id").cast("long"))
-          .union(m.join(idDf.select(col(idCol).as("id_b")), Seq("id_b"), "leftsemi")
-            .select(col("batch_id").cast("long")))
-          .distinct().collect().map(_.getLong(0)).toSeq.sorted
-      } else Seq.empty
-    val rewrites: Seq[() => Unit] =
-      docBatches.flatMap(b => Seq(() => rewriteKeyed(keysDir, "slot", b),
-        () => rewriteKeyed(shDir, "id_slot", b))) ++
-        taintedMatches.map(b => () => rewriteMatches(b))
-    if (Thread.holdsLock(spark.sessionState.catalog)) rewrites.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      rewrites.map(f => Future(f()))
-        .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    }
-    idDf.unpersist()
-    removedDocs
-  }
-
-  // ---- derived-index batch-dir compaction ---------------------------
-  //
-  // Every ingest batch / CDC poll adds one `batch_id=N` directory to a
-  // derived index (keys/shingles/matches for near-dup, batch_id/cell for
-  // IVF) and nothing else ever merges them: a corpus polled every 5
-  // minutes for 3 months is ~26k batch dirs x slots/cells whose directory
-  // listings, parquet footers, and per-probe file counts grow linearly
-  // with POLL COUNT forever, even while the data volume is flat — the
-  // exact small-file problem [[graft.sources.DocStore.maintain]] solves
-  // for the store, reproduced index-side. [[compactNearDupIndex]] /
-  // [[compactIvfIndex]] are the missing leg: fold every batch dir at or
-  // below a safe cutoff into ONE consolidated dir (per slot / per cell —
-  // the partition scheme, and therefore every pruned read, is unchanged),
-  // tombstone-correct by construction (takedowns rewrite dirs physically,
-  // so consolidation unions only post-takedown content and can never
-  // resurrect a removed id), and crash-safe via an intent-file protocol
-  // (stage -> intent -> delete olds -> rename -> clear intent; every
-  // entry point heals a crashed run before reading).
-  //
-  // CUTOFF RULE: a `_SYNC`-maintained index consolidates everything at or
-  // below the committed `lastBid` (a crashed poll's orphan `lastBid+1`
-  // dir is left alone — its replay overwrites that dir whole); a
-  // stream-built index (no `_SYNC`) keeps its MAX batch dir untouched,
-  // because only the latest batch can be redelivered by an at-least-once
-  // restart — consolidating it would double its content under the replay.
-  // Single-maintainer like every other index write: do not run while a
-  // poll or ingest batch is in flight.
-
-  private val CompactIntentFile = "_COMPACT"
-  private val CompactLockFile = "_COMPACT.lock"
-
-  /** How long a swap lock is honored before it is presumed crashed and
-    * breakable. The locked region is pure FS metadata work (delete a
-    * bounded set of batch dirs + one rename), so minutes is generous
-    * even on an object store; after a compactor crash, probes fail
-    * loudly for at most this long before the next heal completes the
-    * swap (an operator can always delete the lock by hand).
-    */
-  private def swapLockTtlMs: Long =
-    java.lang.Long.getLong("graft.index.swapLockTtlMs", 15L * 60 * 1000)
-
-  /** How long a heal waits for a LIVE swap owner to finish before
-    * failing loudly. A healthy swap clears its intent in well under
-    * this; hitting the deadline means the owner crashed inside the TTL
-    * window (or is pathologically slow) — the caller must not read a
-    * mid-swap layout silently.
-    */
-  private def healWaitMs: Long =
-    java.lang.Long.getLong("graft.index.healWaitMs", 10L * 1000)
-
-  /** Size-tier ratio for [[consolidateBatchDirs]]: a dir whose bytes
-    * exceed this factor times the total of all smaller eligible dirs is
-    * left in place rather than rewritten into every fold. 4 bounds each
-    * byte's lifetime rewrites to ~log_4(index bytes / delta bytes)
-    * while keeping the dir count within maxBatchDirs + O(log) tiers.
-    */
-  private def TierFactor: Long =
-    java.lang.Long.getLong("graft.index.tierFactor", 4L)
-
-  /** Take exclusive ownership of `parent`'s compaction swap, or None when
-    * a live owner holds it. Exclusivity rides two ATOMIC primitives: the
-    * lock itself is claimed with create-exclusive (`createNewFile` — only
-    * one claimant wins), and a stale lock (older than [[swapLockTtlMs]])
-    * is broken by RENAMING it aside first — two breakers racing on the
-    * same stale lock resolve because only one rename can succeed. This is
-    * what serializes the DESTRUCTIVE swap leg (delete folded dirs +
-    * rename staging in) between a compactor and the heals that probes and
-    * polls run at entry: the r12 protocol let a heal and a live compactor
-    * run the same delete+rename concurrently, and the interleaving
-    * "A renames staging -> batch_id=N; B, mid-delete-loop, deletes
-    * batch_id=N; B's rename finds no staging" destroyed every folded
-    * batch with no recovery path.
-    */
-  /** One JVM-level monitor per qualified index path: Hadoop's LOCAL
-    * filesystem has no atomic create-exclusive (`createNewFile` is
-    * exists-then-create), so two threads of one driver can both claim
-    * the FS lock — the monitor makes in-process claimants strictly
-    * serial, and the FS lock file covers cross-process claimants on
-    * filesystems whose create IS atomic (HDFS). Bounded by the number
-    * of distinct index paths a driver touches.
-    */
-  private val swapGuards =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def swapGuard(fs: org.apache.hadoop.fs.FileSystem,
-                        parent: String): Object =
-    swapGuards.computeIfAbsent(
-      fs.makeQualified(new org.apache.hadoop.fs.Path(parent)).toString,
-      _ => new Object)
-
-  private def tryAcquireSwapLock(fs: org.apache.hadoop.fs.FileSystem,
-                                 parent: String)
-      : Option[(org.apache.hadoop.fs.Path, String)] = {
-    val lock = new org.apache.hadoop.fs.Path(parent, CompactLockFile)
-    if (fs.exists(lock)) {
-      val age = System.currentTimeMillis() -
-        (try fs.getFileStatus(lock).getModificationTime
-         catch { case _: java.io.FileNotFoundException => return None })
-      if (age < swapLockTtlMs) return None
-      // stale: move it aside atomically — of N concurrent breakers
-      // exactly one rename succeeds; the rest see a live claim elsewhere
-      val aside = new org.apache.hadoop.fs.Path(parent,
-        s".$CompactLockFile-stale-${java.util.UUID.randomUUID()}")
-      if (!scala.util.Try(fs.rename(lock, aside)).getOrElse(false)) return None
-      fs.delete(aside, false)
-    }
-    // FENCED claim: the lock file CARRIES the owner's token (written to a
-    // claim file, renamed into place — rename refuses an existing target
-    // on HDFS-like filesystems, and the JVM monitor covers the local FS
-    // whose rename overwrites). The token is what lets the owner detect a
-    // TTL break mid-swap ([[holdsSwapLock]]) instead of blindly deleting
-    // dirs another actor now owns.
-    val token = java.util.UUID.randomUUID().toString
-    val claim = new org.apache.hadoop.fs.Path(parent,
-      s".$CompactLockFile-claim-$token")
-    val out = fs.create(claim, true)
-    try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(lock) || !scala.util.Try(fs.rename(claim, lock)).getOrElse(false)) {
-      fs.delete(claim, false)
-      None
-    } else Some((lock, token))
-  }
-
-  /** Does `lock` still carry `token`? False after a TTL break stole
-    * ownership (or the lock vanished) — the holder must then ABORT its
-    * destructive work: the committed intent lets the new owner complete
-    * the swap with no loss.
-    */
-  private def holdsSwapLock(fs: org.apache.hadoop.fs.FileSystem,
-                            lock: org.apache.hadoop.fs.Path,
-                            token: String): Boolean =
-    scala.util.Try {
-      val in = fs.open(lock)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt == token
-    }.getOrElse(false)
-
-  /** Complete (or discard) a crashed consolidation under `parent`. With
-    * an intent present: staging still there -> redo the delete+rename leg
-    * UNDER THE SWAP LOCK (see [[tryAcquireSwapLock]] — never concurrently
-    * with a live compactor or another heal); staging gone -> the rename
-    * landed, just clear the intent. When a live owner holds the lock the
-    * heal WAITS for the intent to clear (a healthy swap is metadata-fast)
-    * and fails loudly at the deadline rather than read a mid-swap layout.
-    * Stale dot-prefixed staging dirs WITHOUT an intent are debris from a
-    * crash before the intent committed — the batch dirs are all still
-    * live, so the staging is simply deleted (age-gated below). One
-    * exists() when nothing crashed.
-    */
-  private def healIndexCompaction(fs: org.apache.hadoop.fs.FileSystem,
-                                  parent: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(parent)
-    if (!fs.exists(dir)) return
-    val intent = new org.apache.hadoop.fs.Path(dir, CompactIntentFile)
-    if (fs.exists(intent)) {
-      val acquired = swapGuard(fs, parent).synchronized {
-        tryAcquireSwapLock(fs, parent) match {
-          case Some((lock, token)) =>
-            try {
-              // re-check under the lock: the owner may have completed
-              // the swap between our intent probe and the acquisition
-              if (fs.exists(intent))
-                completeSwap(fs, dir, intent, swapFence(fs, lock, token))
-            } finally {
-              // only release a lock still carrying OUR token — after a
-              // TTL break this file is the new owner's claim
-              if (holdsSwapLock(fs, lock, token)) fs.delete(lock, false)
-            }
-            true
-          case None => false
-        }
-      }
-      if (!acquired) {
-        // a live owner (another process's compactor or heal) is
-        // mid-swap: wait for it — the locked region is metadata-only,
-        // so a healthy owner clears the intent in well under the
-        // deadline
-        val deadline = System.currentTimeMillis() + healWaitMs
-        while (fs.exists(intent) && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-        if (fs.exists(intent))
-          throw new java.io.IOException(
-            s"index compaction: a swap on $parent is still in flight (or " +
-              s"its owner crashed less than ${swapLockTtlMs / 1000}s ago) " +
-              "— refusing to read a mid-swap layout; retry after it " +
-              s"completes, or delete $parent/$CompactLockFile if the " +
-              "owner is known dead")
-      }
-    }
-    // debris: staging dirs whose intent never committed. AGE-GATED — a
-    // fresh `.compact-*` dir may be a LIVE compaction's staging that has
-    // not reached its intent commit yet, and reads/polls legitimately
-    // run (and heal) concurrently with a compactor; deleting its staging
-    // here would let the compactor go on to destroy the original batch
-    // dirs and then fail its rename, losing every folded batch. 24h
-    // spares any real consolidation; crash debris stops accumulating at
-    // the next day's first heal. DELIBERATELY shorter than the store's
-    // 7-day `.staging-*` reaper: a store rewrite stages the whole corpus
-    // (legitimately multi-day at 100 TB), while an index fold stages a
-    // bounded batch-dir union whose write is minutes, not days — and the
-    // compactor's pre-delete staging-exists guard turns the residual bad
-    // case (a >24h-old LIVE staging reaped here) into a loud abort with
-    // every original batch dir intact, never a loss.
-    val debrisCutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-    fs.listStatus(dir).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".compact-") &&
-          st.getModificationTime < debrisCutoff)
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** The intent-completion leg shared by the heal AND the compactor (one
-    * copy of the destructive sequence — two byte-divergent copies were an
-    * r13 review catch): delete every folded `batch_id=` dir at/below the
-    * intent's target (ascending, so the target slot — the rename
-    * destination — goes LAST), rename the staged union in, clear the
-    * intent. MUST be called with the swap lock held; `fence` runs before
-    * EVERY destructive operation — the holder's ownership re-check +
-    * lock-mtime heartbeat, so a TTL break by another actor mid-sequence
-    * is detected at the next op instead of blindly deleting dirs the new
-    * owner just installed, and a LIVE holder's heartbeat keeps it from
-    * ever looking stale in the first place. A failed final rename with
-    * the target present and the staging gone is treated as an
-    * already-completed swap rather than an error (the ADVICE-prescribed
-    * tolerance — under the fence it should be unreachable, but external
-    * interference must degrade to idempotence, not loss).
-    * `expectStaging` = the compactor's last-line guard: it KNOWS it
-    * staged, so a vanished staging aborts loudly with every original
-    * batch dir intact (intent cleared first); a heal with no staging
-    * infers the rename already landed and just clears the intent.
-    */
-  private[streaming] def completeSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                      dir: org.apache.hadoop.fs.Path,
-                                      intent: org.apache.hadoop.fs.Path,
-                                      fence: () => Unit = () => (),
-                                      expectStaging: Boolean = false): Unit = {
-    val in = fs.open(intent)
-    val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val kv = txt.split("\n").iterator.map(_.trim).filter(_.contains("="))
-      .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
-    val target = kv("target").toLong
-    val staging = new org.apache.hadoop.fs.Path(dir, kv("staging"))
-    // the intent's explicit fold set (tiered folds leave LARGER dirs in
-    // place, possibly with ids below the target); an intent without one
-    // (pre-tiering format) folds everything at/below the target
-    val foldSet: Option[Set[Long]] = kv.get("ids")
-      .map(_.split(",").iterator.map(_.trim).filter(_.nonEmpty)
-        .map(_.toLong).toSet)
-    if (fs.exists(staging)) {
-      val folded = fs.listStatus(dir).toSeq.collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          foldSet.fold(
-            st.getPath.getName.stripPrefix("batch_id=").toLong <= target)(
-            _.contains(st.getPath.getName.stripPrefix("batch_id=").toLong)) =>
-          (st.getPath.getName.stripPrefix("batch_id=").toLong, st.getPath)
-      }.sortBy(_._1)
-      folded.foreach { case (_, p) => fence(); fs.delete(p, true) }
-      fence()
-      val dst = new org.apache.hadoop.fs.Path(dir, s"batch_id=$target")
-      if (!fs.rename(staging, dst) &&
-          !(fs.exists(dst) && !fs.exists(staging)))
-        throw new java.io.IOException(
-          s"index compaction: cannot recover $staging -> batch_id=$target")
-    } else if (expectStaging) {
-      fs.delete(intent, false)
-      throw new java.io.IOException(
-        s"index compaction: staged union $staging disappeared before the " +
-          "swap — aborting with all original batch dirs intact")
-    }
-    fs.delete(intent, false)
-  }
-
-  /** The holder-side fence for [[completeSwap]]: abort LOUDLY when the
-    * lock no longer carries this holder's token (a TTL break after a
-    * stall — the new owner completes the swap from the committed intent,
-    * so aborting loses nothing), and heartbeat the lock's mtime so a
-    * live holder never crosses the TTL between two metadata ops.
-    */
-  private[streaming] def swapFence(fs: org.apache.hadoop.fs.FileSystem,
-                                   lock: org.apache.hadoop.fs.Path,
-                                   token: String): () => Unit = () => {
-    if (!holdsSwapLock(fs, lock, token))
-      throw new java.io.IOException(
-        s"index compaction: lost swap-lock ownership at $lock mid-swap " +
-          "(TTL break after a stall) — aborting; the committed intent " +
-          "lets the new owner complete the swap with no loss")
-    scala.util.Try(fs.setTimes(lock, System.currentTimeMillis(), -1))
-    ()
-  }
-
-  /** Fold `parent`'s batch dirs with id <= `cutoff` into one consolidated
-    * `batch_id=max(folded)` dir, preserving `partitionCol`'s partition
-    * scheme (None = unpartitioned, the matches table). Returns how many
-    * dirs were folded away (0 = one or zero dirs at/below the cutoff —
-    * already consolidated). The stage->intent->delete->rename protocol
-    * with [[healIndexCompaction]] makes a crash at ANY point recoverable
-    * with no content loss: until the intent commits, every original dir
-    * is still live; after it, the staged union carries all of them.
-    */
-  private def consolidateBatchDirs(spark: SparkSession,
-                                   fs: org.apache.hadoop.fs.FileSystem,
-                                   parent: String, cutoff: Long,
-                                   partitionCol: Option[String],
-                                   maxFileBytes: Long = 1L << 28): Long = {
-    val dir = new org.apache.hadoop.fs.Path(parent)
-    if (!fs.exists(dir)) return 0L
-    healIndexCompaction(fs, parent)
-    // a TAKEDOWN that crashed between its delete and rename left a
-    // `.takedown-bN` staging whose batch dir is missing — complete it
-    // BEFORE pinning ids, so the recovered batch joins this fold instead
-    // of surviving as a straggler dir until the next takedown runs (the
-    // restore itself is always safe — the consolidated target is an id
-    // that was present, never N — but folding N now is the whole point
-    // of being here). Same recovery the takedowns themselves run.
-    fs.listStatus(dir).foreach { st =>
-      val nm = st.getPath.getName
-      if (st.isDirectory && nm.startsWith(".takedown-b")) {
-        val b = nm.stripPrefix(".takedown-b").takeWhile(_ != '-')
-        val target = new org.apache.hadoop.fs.Path(parent, s"batch_id=$b")
-        if (!fs.exists(target)) {
-          if (!fs.rename(st.getPath, target))
-            throw new java.io.IOException(
-              s"index compaction: cannot recover ${st.getPath} -> $target")
-        } else fs.delete(st.getPath, true)
-      }
-    }
-    val eligible = fs.listStatus(dir).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch_id=") =>
-        st.getPath.getName.stripPrefix("batch_id=").toLong
-    }.filter(_ <= cutoff).sorted
-    if (eligible.size <= 1) return 0L
-    // SIZE-TIERED fold (the LSM merge invariant): a dir already so large
-    // that every smaller eligible dir together is under a quarter of it
-    // is KEPT IN PLACE — rewriting it per fold would make compaction
-    // O(index) instead of O(accumulated small dirs), i.e. a 100 TB
-    // consolidated dir re-written every maxBatchDirs polls. Walking the
-    // sizes descending and keeping each dir whose bytes exceed
-    // TierFactor x the total below it bounds every byte's lifetime
-    // rewrites to O(log_TierFactor(index/delta)). Correctness is
-    // untouched: probes union ALL batch dirs regardless of grouping,
-    // takedowns rewrite per-dir, and a folded id is at/below the cutoff,
-    // which the monotonic-bid contract already promises is never
-    // redelivered — so old content living in a higher-id consolidated
-    // dir can never be clobbered by a replay.
-    val sized = eligible.map { n =>
-      n -> fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"batch_id=$n")).getLength
-    }
-    val bySizeDesc = sized.sortBy { case (n, b) => (-b, n) }
-    val suffix = bySizeDesc.map(_._2).scanRight(0L)(_ + _).tail
-    val foldStart = bySizeDesc.indices
-      .find(k => bySizeDesc(k)._2 <= TierFactor * suffix(k))
-      .getOrElse(bySizeDesc.size)
-    val ids = bySizeDesc.drop(foldStart).map(_._1).sorted
-    if (ids.size <= 1) return 0L
-    val target = ids.max
-    // read EXACTLY the pinned ids (partition pruning on batch_id), union
-    // them, restore the partition layout with one clustered shuffle —
-    // this IS the small-file payoff. Output file count is BYTE-BUDGETED
-    // (the ceil(bytes/maxFileBytes) pattern DocStore.maintain uses), not
-    // a single task: at a 100 TB index the matches table is pair-scaled
-    // and one coalesce(1) writer would be the whole job's critical path,
-    // and a hot slot/cell past maxFileBytes splits across a salt so no
-    // single file (or write task) grows with corpus size. Sizing comes
-    // from the folded dirs' ON-DISK bytes (same compression in = out).
-    val foldedBytes = sized.collect { case (n, b) if ids.contains(n) => b }.sum
-    val nFiles = math.max(1L, (foldedBytes + maxFileBytes - 1) / maxFileBytes).toInt
-    val all = spark.read.parquet(parent)
-      .filter(col("batch_id").isin(ids: _*))
-      .drop("batch_id")
-    val staging = new org.apache.hadoop.fs.Path(dir,
-      s".compact-${java.util.UUID.randomUUID()}")
-    partitionCol match {
-      case Some(pc) =>
-        // per-value dirs: one file per value while the budget allows it;
-        // above it, a deterministic row-hash salt splits each value's
-        // write into ~splits files (skewed values can still exceed the
-        // budget by their skew factor — bounded by splits, never by one)
-        val slots = ids.iterator.flatMap { n =>
-          fs.listStatus(new org.apache.hadoop.fs.Path(dir, s"batch_id=$n"))
-            .iterator.filter(_.isDirectory).map(_.getPath.getName)
-        }.toSet.size
-        val splits = math.max(1L, (nFiles + slots - 1) / math.max(1, slots)).toInt
-        if (splits <= 1)
-          all.repartition(col(pc))
-            .write.mode(SaveMode.Overwrite).partitionBy(pc)
-            .parquet(staging.toString)
-        else
-          all.withColumn("__salt",
-              pmod(xxhash64(all.columns.map(col): _*), lit(splits.toLong)))
-            .repartition(col(pc), col("__salt")).drop("__salt")
-            .write.mode(SaveMode.Overwrite).partitionBy(pc)
-            .parquet(staging.toString)
-      case None =>
-        if (nFiles <= 1)
-          all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-        else
-          all.repartition(nFiles)
-            .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    }
-    // SWAP LOCK: the destructive leg below and the heal's completion leg
-    // are mutually exclusive ([[tryAcquireSwapLock]]) — without it, a
-    // probe's heal racing this compactor could install the consolidated
-    // dir and have this delete loop destroy it (the r12 loss window).
-    // Acquired AFTER the staging write (the long part) so the lock's TTL
-    // only has to cover metadata work.
-    swapGuard(fs, parent).synchronized {
-    val (lock, token) = tryAcquireSwapLock(fs, parent).getOrElse {
-      fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"index compaction: cannot take the swap lock on $parent — another " +
-          "maintainer or heal is mid-swap (or crashed holding it less than " +
-          s"${swapLockTtlMs / 1000}s ago); aborting with all original batch " +
-          "dirs intact")
-    }
-    try {
-      // INTENT commit (tmp-then-rename): from here the heal protocol owns
-      // completion — a crash mid-delete can no longer lose content
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        s"$CompactIntentFile.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      // `ids` pins the EXPLICIT fold set: a tiered fold keeps larger
-      // dirs (possibly with ids below the target) in place, so the
-      // swap's delete leg must never infer "everything at/below target"
-      try out.write(
-        s"target=$target\nstaging=${staging.getName}\nids=${ids.mkString(",")}\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val intent = new org.apache.hadoop.fs.Path(dir, CompactIntentFile)
-      fs.delete(intent, false)
-      if (!fs.rename(tmp, intent))
-        throw new java.io.IOException(s"index compaction: cannot commit $intent")
-      // the destructive leg IS the heal's completion leg — one shared
-      // sequence (staging guard, fenced ascending deletes, tolerant
-      // rename, intent clear); expectStaging aborts loudly with every
-      // original dir intact if the staging vanished underneath us
-      completeSwap(fs, dir, intent, swapFence(fs, lock, token),
-        expectStaging = true)
-    } finally {
-      // only release a lock still carrying OUR token — after a TTL
-      // break this file is the new owner's claim
-      if (holdsSwapLock(fs, lock, token)) fs.delete(lock, false)
-    }
-    }
-    ids.size.toLong - 1L
-  }
-
-  /** Fold a takedown-tombstone sidecar (one parquet file PER takedown
-    * call, forever) into a single file, dropping DEAD rows on the way: a
-    * tombstone with `cutoff_bid <= cutoff` only protects replays of
-    * batches the compaction just consolidated (committed, never
-    * redelivered — replays target ids above the cutoff by the same
-    * monotonic-bid contract the batch-dir layout already requires), and
-    * per-id rows collapse to their max cutoff (the replay filter is
-    * `cutoff_bid >= bid`, so only the max matters). Crash-safe WITHOUT
-    * an intent: the merged file is appended FIRST and the old files
-    * deleted after — any crash point leaves duplicates, which the
-    * (distinct'd, idempotent) replay filter absorbs. Returns files
-    * removed.
-    */
-  private def compactTombstones(spark: SparkSession,
-                                fs: org.apache.hadoop.fs.FileSystem,
-                                tombDir: String, cutoff: Long,
-                                maxFileBytes: Long = 1L << 28): Long = {
-    val dir = new org.apache.hadoop.fs.Path(tombDir)
-    if (!fs.exists(dir)) return 0L
-    val old = fs.listStatus(dir).toSeq.filter { st =>
-      val nm = st.getPath.getName
-      st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
-    if (old.size <= 1) return 0L
-    val t = spark.read.parquet(tombDir)
-    val idCols = t.columns.filterNot(_ == "cutoff_bid").toSeq
-    val kept = t.groupBy(idCols.map(col): _*)
-      .agg(max(col("cutoff_bid")).as("cutoff_bid"))
-      .filter(col("cutoff_bid") > cutoff)
-    // byte-budgeted like the batch-dir fold — the sidecar is id-sized so
-    // this is one file in practice, but the writer task count must never
-    // be a hardcoded 1 at any scale
-    val nFiles = math.max(1L,
-      (old.iterator.map(_.getLen).sum + maxFileBytes - 1) / maxFileBytes).toInt
-    (if (nFiles <= 1) kept.coalesce(1) else kept.repartition(nFiles))
-      .write.mode(SaveMode.Append).parquet(tombDir)
-    old.foreach(st => fs.delete(st.getPath, false))
-    old.size.toLong
-  }
-
-  /** Visible tombstone files under `dir` (0 when the dir is missing) —
-    * the standalone fold trigger for takedown-heavy indexes.
-    */
-  private def tombstoneFileCount(fs: org.apache.hadoop.fs.FileSystem,
-                                 dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count { st =>
-      val nm = st.getPath.getName
-      st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
-  }
-
-  /** Batch ids present under `parent` (empty when the dir is missing). */
-  private def batchIdsIn(fs: org.apache.hadoop.fs.FileSystem,
-                         parent: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(parent)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch_id=") =>
-        st.getPath.getName.stripPrefix("batch_id=").toLong
-    }.sorted
+    if (idSlots.isEmpty) None
+    else Some(spark.read.parquet(s"$indexPath/shingles")
+      .filter(col("id_slot").isin(idSlots: _*)))
   }
 
   /** MAINTENANCE for a near-dup index: fold accumulated batch dirs of
     * keys/shingles/matches into one consolidated dir each, whenever any
-    * of them exceeds `maxBatchDirs`. Probe/poll results are row-identical
-    * before and after (the partition scheme and every id survive; only
-    * the dir count changes — pinned by IndexCompactionSpec), takedowns
-    * stay honored (consolidation reads post-takedown content), and a
-    * crashed run heals at the next entry into any index operation.
-    * Returns the number of batch dirs folded away across the three
-    * parents. Single-maintainer: never run while a poll/ingest/takedown
-    * is in flight — same contract as [[removeFromNearDupIndex]].
+    * of them exceeds `maxBatchDirs` ([[DerivedIndex]] fold). Probe/poll
+    * results are row-identical before and after. Returns the number of
+    * batch dirs folded away across the three trees. Single-maintainer:
+    * never run while a poll/ingest/takedown is in flight.
     */
   def compactNearDupIndex(spark: SparkSession, indexPath: String,
                           maxBatchDirs: Int = 1,
-                          maxFileBytes: Long = 1L << 28): Long = {
-    require(maxBatchDirs >= 1, s"maxBatchDirs must be >= 1, got $maxBatchDirs")
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parents = Seq(s"$indexPath/keys" -> Some("slot"),
-      s"$indexPath/shingles" -> Some("id_slot"),
-      s"$indexPath/matches" -> (None: Option[String]))
-    // heal first — the dir count below must see a consistent layout
-    parents.foreach { case (p, _) => healIndexCompaction(fs, p) }
-    val cutoff = readNearDupSync(fs, indexPath) match {
-      case Some((_, lastBid)) => lastBid // committed polls; orphan stays
-      case None => // stream-built: the max dir may be redelivered — keep it
-        val ids = batchIdsIn(fs, s"$indexPath/keys") ++
-          batchIdsIn(fs, s"$indexPath/shingles")
-        if (ids.isEmpty) return 0L else ids.max - 1L
-    }
-    val dirsOver =
-      parents.map { case (p, _) => batchIdsIn(fs, p).size }.max > maxBatchDirs
-    val folded =
-      if (!dirsOver) 0L
-      else parents.map { case (p, pc) =>
-        consolidateBatchDirs(spark, fs, p, cutoff, pc, maxFileBytes) }.sum
-    // the tombstone sidecar folds on its OWN trigger (visible file
-    // count), not just the batch-dir one: a takedown-heavy/ingest-light
-    // index grows one file per takedown forever while its batch dirs
-    // stay under the threshold
-    if (dirsOver ||
-        tombstoneFileCount(fs, s"$indexPath/tombstones") > maxBatchDirs)
-      compactTombstones(spark, fs, s"$indexPath/tombstones", cutoff, maxFileBytes)
-    folded
-  }
-
-  /** [[compactNearDupIndex]]'s IVF twin: fold the `batch_id=N/cell=M`
-    * dirs at/below the safe cutoff into one consolidated batch
-    * (per-cell layout preserved, so cell-pruned probes and the takedown's
-    * cell hints work unchanged). knn/sync results are row-identical
-    * before and after; a crashed run heals at the next entry. Returns
-    * folded dir count.
-    */
-  def compactIvfIndex(spark: SparkSession, indexPath: String,
-                      maxBatchDirs: Int = 1,
-                      maxFileBytes: Long = 1L << 28): Long = {
-    require(maxBatchDirs >= 1, s"maxBatchDirs must be >= 1, got $maxBatchDirs")
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIndexCompaction(fs, indexPath)
-    val ids = batchIdsIn(fs, indexPath)
-    if (ids.isEmpty) return 0L
-    val cutoff = readNearDupSync(fs, indexPath) match {
-      case Some((_, lastBid)) => lastBid
-      case None => ids.max - 1L
-    }
-    val dirsOver = ids.size > maxBatchDirs
-    val folded =
-      if (!dirsOver) 0L
-      else consolidateBatchDirs(spark, fs, indexPath, cutoff, Some("cell"),
-        maxFileBytes)
-    // same standalone tombstone trigger as the near-dup fold
-    if (dirsOver ||
-        tombstoneFileCount(fs, s"$indexPath/$IvfTombstones") > maxBatchDirs)
-      compactTombstones(spark, fs, s"$indexPath/$IvfTombstones", cutoff, maxFileBytes)
-    folded
-  }
-
-  // ---- derived-index registry + one-call maintenance ----------------
-
-  private val IndexRegistryFile = "_INDEXES"
-
-  /** Indexes registered against the store at `storePath`, as (kind, path)
-    * pairs — kind is "neardup" or "ivf". Backed by a tab-separated
-    * sidecar at the store root (underscore-prefixed: invisible to data
-    * reads and to the store's own listings).
-    */
-  private[streaming] def registeredIndexes(spark: SparkSession,
-                                           storePath: String)
-      : Seq[(String, String)] = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(storePath, IndexRegistryFile)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt.split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty).flatMap { ln =>
-        ln.split("\t", 2) match {
-          case Array(k, path) if path.nonEmpty => Some((k, path))
-          case _ => None // an unparseable line registers nothing
-        }
-      }
-    }
-  }
-
-  private def writeIndexRegistry(fs: org.apache.hadoop.fs.FileSystem,
-                                 storePath: String,
-                                 entries: Seq[(String, String)]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(storePath,
-      s"$IndexRegistryFile.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(entries.map { case (k, p) => s"$k\t$p" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(storePath, IndexRegistryFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"cannot write index registry $dst")
-  }
-
-  /** One JVM monitor per store path: registry updates are
-    * read-modify-write, and two concurrent registrations (first polls of
-    * two indexes of the same store — legal, the single-maintainer
-    * contract is per INDEX) would otherwise lose one entry or fail a
-    * poll on the rename (an r13 review catch). Cross-process racers can
-    * still interleave — the damage is bounded because EVERY poll
-    * re-registers, so a lost entry self-heals at its index's next poll.
-    */
-  private val registryGuards =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def registryGuard(fs: org.apache.hadoop.fs.FileSystem,
-                            storePath: String): Object =
-    registryGuards.computeIfAbsent(
-      fs.makeQualified(new org.apache.hadoop.fs.Path(storePath)).toString,
-      _ => new Object)
-
-  /** Record `indexPath` as a CDC-synced derived index of the store at
-    * `storePath` — idempotent (a present entry rewrites nothing), written
-    * tmp-then-rename so a torn write reads as the previous registry, and
-    * serialized in-process by [[registryGuard]]. The sync entry points
-    * self-register on every poll, so [[maintainAll]] discovers every live
-    * index with no operator-maintained list.
-    */
-  private def registerIndex(spark: SparkSession, storePath: String,
-                            indexPath: String, kind: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) return
-    registryGuard(fs, storePath).synchronized {
-      val existing = registeredIndexes(spark, storePath)
-      if (!existing.contains((kind, indexPath)))
-        writeIndexRegistry(fs, storePath, existing :+ ((kind, indexPath)))
-    }
-  }
+                          maxFileBytes: Long = 1L << 28): Long =
+    foldIndex(spark, nearDupLayout(indexPath), maxBatchDirs, maxFileBytes)
 
   /** One [[maintainAll]] pass's outcome: the store triad's report plus
     * the batch dirs folded per registered derived index.
@@ -1967,8 +954,8 @@ object Streams {
   /** The WHOLE maintenance story — store AND derived indexes — as ONE
     * idempotent call: [[graft.sources.DocStore.maintain]]'s triad
     * (tail-merge / recluster / vacuum), then every index registered
-    * against the store (see [[registerIndex]] — the sync entry points
-    * self-register) folds its batch dirs via [[compactNearDupIndex]] /
+    * against the store (the sync entry points self-register on every
+    * poll) folds its batch dirs via [[compactNearDupIndex]] /
     * [[compactIvfIndex]] under the same `maxBatchDirs` policy. Every leg
     * is threshold-gated: a healthy store and healthy indexes cost
     * metadata listings only and commit nothing, so the operator cron
@@ -2001,13 +988,10 @@ object Streams {
       maxFileBytes)
     val entries = registeredIndexes(spark, path)
     val (live, dead) = entries.partition { case (_, idx) =>
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(new org.apache.hadoop.fs.Path(idx))
+      fsOf(spark, idx).exists(new Path(idx))
     }
     if (dead.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(spark, path)
       // prune under the registry monitor, against a FRESH read — the
       // stale `entries` list would clobber a registration a concurrent
       // sync poll just added (self-healing, but no reason to rely on it)
@@ -2030,77 +1014,27 @@ object Streams {
     MaintainAllReport(store, folded)
   }
 
-  // ---- CDC-driven index maintenance ---------------------------------
-
-  private val NearDupSyncFile = "_SYNC"
-
-  private def writeNearDupSync(fs: org.apache.hadoop.fs.FileSystem,
-                               indexPath: String,
-                               cur: graft.sources.DocStore.DocCursor,
-                               lastBid: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(indexPath,
-      s"$NearDupSyncFile.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write((s"gen=${cur.generation}\nbid=$lastBid\n" +
-        cur.files.toSeq.sorted.mkString("\n"))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(indexPath, NearDupSyncFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"syncNearDupIndex: cannot commit $dst")
-  }
-
-  private def readNearDupSync(fs: org.apache.hadoop.fs.FileSystem,
-                              indexPath: String)
-      : Option[(graft.sources.DocStore.DocCursor, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, NearDupSyncFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val lines = txt.split("\n", -1).toSeq.map(_.trim)
-    val kv = lines.takeWhile(_.contains("=")).map { l =>
-      val Array(a, b) = l.split("=", 2); a -> b }.toMap
-    Some((graft.sources.DocStore.DocCursor(kv("gen").toInt,
-      lines.drop(kv.size).filter(_.nonEmpty).toSet), kv("bid").toLong))
-  }
-
   /** Keep a near-dup index FOLLOWING a DocStore corpus by cursor CDC —
     * the loop that makes the index a live property of the collection
     * rather than a nightly rebuild: appended documents are matched
     * against everything already indexed and join it (arrival-time
     * semantics, the [[ingestToNearDupIndex]] batch body); deleted
-    * documents are taken down ([[removeFromNearDupIndex]]: keys,
-    * shingles, AND the matches that referenced them — right-to-be-
-    * forgotten follows the source delete with no separate workflow);
-    * updated documents are re-indexed under their new text, but ONLY
-    * when the text actually changed — a metadata-only update touches
-    * nothing (pinned). Returns the poll's newly verified matches
-    * (typed-empty when caught up).
+    * documents are taken down (keys, shingles, AND the matches that
+    * referenced them — right-to-be-forgotten follows the source delete
+    * with no separate workflow); updated documents are re-indexed under
+    * their new text, but ONLY when the text actually changed — a
+    * metadata-only update touches nothing (pinned). Returns the poll's
+    * newly verified matches (typed-empty when caught up).
     *
-    * Exactly-once without a transaction, by IDEMPOTENCE at a
-    * DETERMINISTIC batch id: a poll's work is removeFromNearDupIndex
-    * (removing again is a no-op) followed by one nearDupBatch at
-    * `lastBid + 1` (overwrite-by-batch-dir rewrites identical content),
-    * so a crash ANYWHERE before the `_SYNC` state commit (cursor +
-    * lastBid, tmp-then-rename) makes the retry replay byte-identically
-    * — the property the spec pins by restoring `_SYNC` and re-polling.
-    * Multi-generation poll windows collapse to the LATEST state per key
-    * first (an insert->update->delete chain applies as its net effect),
-    * and within one poll the old content is removed before the new is
-    * ingested, so the new batch's self/stored matching never sees the
-    * superseded text.
-    *
-    * Ownership: the index belongs to this maintainer (single-writer,
-    * like the stream ingest) — a keys dir with no `_SYNC` state fails
-    * loudly instead of silently mixing corpora. The first call seeds
-    * from the full snapshot as batch 1 (cursor captured BEFORE the
-    * read: a racing append double-ingested by the seed is self-healed
-    * on the next poll, which removes-then-reingests exactly those
-    * re-delivered keys). At 100 TB the steady state is the point:
-    * every poll costs O(changed documents + their candidate buckets),
-    * never a corpus rescan.
+    * Exactly-once by the [[DerivedIndex]] sync protocol: a poll is a
+    * takedown (idempotent) + one nearDupBatch at the deterministic
+    * `lastBid + 1`, with the consumed cursor committed to `_SYNC` only
+    * after both — pinned by restoring `_SYNC` and re-polling. Within one
+    * poll the old content is removed before the new is ingested, so the
+    * new batch's self/stored matching never sees the superseded text.
+    * The index belongs to this maintainer (single-writer, like the
+    * stream ingest). At 100 TB every poll costs O(changed documents +
+    * their candidate buckets), never a corpus rescan.
     */
   def syncNearDupIndex(spark: SparkSession, srcPath: String, indexPath: String,
                        idCol: String = "doc_id", textCol: String = "text",
@@ -2108,205 +1042,64 @@ object Streams {
                        threshold: Double = 0.7, maxBucket: Int = 1000,
                        maxBatchDirs: Int = 0)
       : DataFrame = {
-    val Slots = 16L
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, indexPath)
     requireNearDupGeometry(fs, indexPath, k, bands, rowsPerBand,
       "syncNearDupIndex")
-    registerIndex(spark, srcPath, indexPath, "neardup") // maintainAll discovery
-    // maxBatchDirs > 0 bounds the index's batch-dir count as part of the
-    // poll loop itself (the operator wiring the verdict's maintenance
-    // policy asks for): after the poll commits, fold dirs at/below the
-    // committed cursor whenever the count exceeds the threshold. The
-    // poll's OWN matches are materialized before folding, so the returned
-    // frame always reflects exactly this poll.
-    def maybeCompactIdx(): Unit =
-      if (maxBatchDirs > 0) { compactNearDupIndex(spark, indexPath, maxBatchDirs); () }
+    val ix = nearDupLayout(indexPath)
     def matchesOf(bid: Long): DataFrame = {
       val d = s"$indexPath/matches/batch_id=$bid"
-      if (fs.exists(new org.apache.hadoop.fs.Path(d))) spark.read.parquet(d)
-      else emptyMatches(spark, idCol)
+      if (fs.exists(new Path(d))) spark.read.parquet(d) else emptyMatches(spark)
     }
-    // seed, shared by the fresh path and the crashed-seed retry: ingest
-    // EXACTLY the captured cursor's file set as batch 1 (idempotent
-    // overwrite). Reading the cursor snapshot — not a live find() —
-    // makes the first poll's delta DISJOINT from the seed by
-    // construction, so pure-insert polls never need a takedown scan
-    // (the fast path below)
-    def seed(c: graft.sources.DocStore.DocCursor): DataFrame = {
-      val snap = graft.sources.DocStore.snapshotAt(spark, srcPath, c)
-        .select(col(idCol), col(textCol))
-      if (!snap.isEmpty)
-        nearDupBatch(snap, 1L, indexPath, idCol, textCol,
-          k, bands, rowsPerBand, threshold, maxBucket, Slots)
-      writeNearDupSync(fs, indexPath, c, if (fs.exists(
-        new org.apache.hadoop.fs.Path(s"$indexPath/keys"))) 1L else 0L)
-      matchesOf(1L)
-    }
-    readNearDupSync(fs, indexPath) match {
-      case None =>
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/keys")),
-          s"syncNearDupIndex: $indexPath already has ingested batches but " +
-            "no _SYNC state — it was built by the stream ingest or another " +
-            "maintainer; point CDC sync at a fresh index directory")
-        val c = graft.sources.DocStore.cursor(spark, srcPath)
-        // seed INTENT (bid = -1) committed before any index write: a
-        // seed that crashes mid-ingest is distinguishable on retry from
-        // a foreign stream-built index (which the require above refuses)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(indexPath))
-        writeNearDupSync(fs, indexPath, c, -1L)
-        seed(c)
-      case Some((c0, -1L)) => // a crashed seed: redo it (idempotent)
-        seed(c0)
-      case Some((c0, lastBid)) =>
-        val (changes, next) =
-          graft.sources.DocStore.changesSince(spark, srcPath, c0, idCol)
-        if (next == c0) { maybeCompactIdx(); return emptyMatches(spark, idCol) }
-        // absent text in a change window's structs == null text (the
-        // schemaless convention): such rows index nothing and a
-        // null -> null "change" is no change
-        def sideText(side: String): org.apache.spark.sql.Column = {
-          val st = changes.schema(side).dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          if (st.fieldNames.contains(textCol)) col(s"$side.$textCol")
-          else lit(null)
-        }
-        // ONE per-id pass over the change window (group-sized,
-        // checkpointed so the window's diff plan runs once), and a SINGLE
-        // aggregate — `max_by` picks the latest generation's after image
-        // directly (MaxBy skips null ORDERINGS only; `generation` is
-        // never null, so a latest-is-delete id correctly yields a null
-        // `__text`), where the former shape paid a window sort
-        // (row_number desc) before the same group-agg. `__tc` = the
-        // indexed content must change (text differs across the mutation —
-        // covers inserts via the null before and deletes via the null
-        // after); `__old` = any non-inserted change (only those ids can
-        // have superseded content already in the index); `__text` = the
-        // LATEST after-image text (null when the net effect is a delete).
-        val perId = changes
-          .groupBy(col(idCol))
-          .agg(max(when(!(sideText("before") <=> sideText("after")), 1)
-              .otherwise(0)).as("__tc"),
-            max(when(col("change") =!= "inserted", 1).otherwise(0)).as("__old"),
-            max_by(when(col("change") =!= "deleted", sideText("after")),
-              col("generation")).as("__text"))
-          .filter(col("__tc") === 1)
-          .localCheckpoint(true)
-        val touched = perId.select(col(idCol))
-        if (perId.isEmpty) { // metadata-only window: cursor advance only
-          writeNearDupSync(fs, indexPath, next, lastBid)
-          maybeCompactIdx()
-          return emptyMatches(spark, idCol)
-        }
-        val toIngest = perId.filter(col("__text").isNotNull)
-          .select(col(idCol), col("__text").as(textCol))
-        // remove the superseded content FIRST (old keys/shingles/matches
-        // of every touched id), then ingest the latest text as the next
-        // batch; both steps are idempotent at this (cursor-determined)
-        // batch id, so a crashed poll replays byte-identically.
-        // tombstone = false: this poll's replay protocol is already
-        // deterministic — a crashed poll must re-ingest the very ids it
-        // just removed at the SAME batch id, which a tombstone stamped
-        // with that id would suppress.
-        // PURE-INSERT FAST PATH (the steady-state ingest poll): a freshly
-        // inserted id cannot be in the index — the seed read exactly its
-        // cursor's snapshot and every poll is exactly-once — so the
-        // takedown's slot-pruned scan runs only when the window carries
-        // an update or delete. Deterministic given (_SYNC, source), so
-        // crash replays stay byte-identical. PRECONDITION: this relies
-        // on seed == cursor snapshot (DocStore.snapshotAt). An index
-        // seeded OUTSIDE this function — by hand, or by a variant that
-        // reads a live find() after capturing the cursor — can hold ids
-        // the first poll reports as "inserted", and their seed-era
-        // entries would never be reconciled; seed through this function
-        // (or run removeFromNearDupIndex over the first window's ids
-        // once) before attaching polls to a foreign index.
-        val toRemove = perId.filter(col("__old") === 1).select(col(idCol))
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/keys")) &&
-            !toRemove.isEmpty)
-          removeFromNearDupIndex(spark, indexPath, toRemove, idCol,
-            tombstone = false)
-        val ingested = !toIngest.isEmpty
-        val bid = lastBid + 1
-        if (ingested)
-          nearDupBatch(toIngest, bid, indexPath, idCol, textCol,
-            k, bands, rowsPerBand, threshold, maxBucket, Slots)
-        writeNearDupSync(fs, indexPath, next, if (ingested) bid else lastBid)
-        if (maxBatchDirs > 0) {
-          // pin this poll's matches BEFORE folding: compaction may merge
-          // matches/batch_id=bid into the consolidated dir, after which a
-          // lazy read of that dir would return ALL history, not this poll
-          val result =
-            if (ingested) matchesOf(bid).localCheckpoint(true)
-            else emptyMatches(spark, idCol)
-          maybeCompactIdx()
-          result
-        }
-        else if (ingested) matchesOf(bid) else emptyMatches(spark, idCol)
+    syncIndex[DataFrame](spark, srcPath, ix, "neardup", "syncNearDupIndex",
+      idCol, textCol, maxBatchDirs, emptyMatches(spark), _.localCheckpoint(true),
+      _ => Nil)({ (batch, bid) =>
+      nearDupBatch(batch, bid, indexPath, idCol, textCol,
+        k, bands, rowsPerBand, threshold, maxBucket)
+      matchesOf(bid)
+    }) { toRemove =>
+      takedown(spark, ix, toRemove.select(col(idCol)), idCol, tombstone = false)(
+        nearDupScope(spark, indexPath, idCol))
+      ()
     }
   }
 
   /** Typed-empty (id_a, id_b, jaccard) frame — the no-new-matches poll. */
-  private def emptyMatches(spark: SparkSession, idCol: String): DataFrame = {
+  private def emptyMatches(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", "jaccard")
   }
 
-  private def nearDupBatch(batch: Dataset[org.apache.spark.sql.Row], bid: Long,
+  private def nearDupBatch(batch: DataFrame, bid: Long,
                            indexPath: String, idCol: String, textCol: String,
                            k: Int, bands: Int, rowsPerBand: Int,
-                           threshold: Double, maxBucket: Int, Slots: Long): Unit = {
-    {
-      var tPrev = System.nanoTime()
-      def mark(stage: String): Unit = {
-        val now = System.nanoTime()
-        if (sys.env.contains("GRAFT_NEARDUP_TIMING"))
-          println(f"[neardup] b$bid $stage%-12s ${(now - tPrev) / 1e9}%6.2f s")
-        tPrev = now
-      }
-      val spark = batch.sparkSession
-      // ResolveWriteToStream force-disables AQE on the session for the
-      // streaming query; the work in THIS sink is plain batch actions
-      // (joins, aggregates, parquet writes) where AQE's broadcast
-      // conversion and partition coalescing are exactly what we want —
-      // without it every join in the candidate chain is a sort-merge at
-      // the fixed partition count (~2x slower per batch, measured). The
-      // prior value is RESTORED after the batch body (see the end of
-      // this method) so the streaming engine's own planning never sees a
-      // conf it decided to disable.
-      val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      try {
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def existing(dir: String): Boolean =
-        fs.exists(new org.apache.hadoop.fs.Path(dir))
+                           threshold: Double, maxBucket: Int): Unit = {
+    val spark = batch.sparkSession
+    // ResolveWriteToStream force-disables AQE on the session for the
+    // streaming query; the work in THIS sink is plain batch actions
+    // (joins, aggregates, parquet writes) where AQE's broadcast
+    // conversion and partition coalescing are exactly what we want —
+    // without it every join in the candidate chain is a sort-merge at
+    // the fixed partition count (~2x slower per batch, measured). The
+    // prior value is RESTORED after the batch body (the finally below)
+    // so the streaming engine's own planning never sees a conf it
+    // decided to disable.
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val fs = fsOf(spark, indexPath)
+      val ix = nearDupLayout(indexPath)
+      def existing(dir: String): Boolean = fs.exists(new Path(dir))
       val keysDir = s"$indexPath/keys"
       val shDir = s"$indexPath/shingles"
-      val matchesDir = s"$indexPath/matches"
       // complete a crashed compaction before reading stored keys/shingles
-      healIndexCompaction(fs, keysDir); healIndexCompaction(fs, shDir)
-      healIndexCompaction(fs, matchesDir)
+      healAll(fs, ix)
       // geometry contract: resuming an index with different parameters
       // would write incomparable band hashes — fail loudly instead
       requireNearDupGeometry(fs, indexPath, k, bands, rowsPerBand,
         "ingestToNearDupIndex")
-      writeNearDupMeta(fs, indexPath, k, bands, rowsPerBand)
-
-      // TAKEDOWN REPLAY FILTER: drop ids tombstoned at-or-after this batch
-      // id ([[removeFromNearDupIndex]]) — an at-least-once replay of a
-      // pre-takedown batch then rewrites the batch WITHOUT the removed
-      // docs (identical to what the takedown's own rewrite left) instead
-      // of reinstating them. Broadcast anti-join over an id-sized table;
-      // a fresh batch (id above every cutoff) passes through whole.
-      val tombDir = s"$indexPath/tombstones"
-      val live =
-        if (existing(tombDir))
-          batch.join(
-            broadcast(spark.read.parquet(tombDir)
-              .filter(col("cutoff_bid") >= bid).select(col(idCol)).distinct()),
-            Seq(idCol), "left_anti")
-        else batch
+      writeMeta(fs, indexPath, Seq("k" -> k, "bands" -> bands,
+        "rowsPerBand" -> rowsPerBand, "shingles_sorted" -> 1))
+      val live = withoutTombstoned(fs, ix, batch, idCol, bid)
 
       val sh = graft.dedup.MinHashDedup
         .shingleSets(live, idCol, textCol, k).cache()
@@ -2316,7 +1109,6 @@ object Streams {
         .cache()
       // bounded driver collect: at most `Slots` ids
       val slots = keys.select("slot").distinct().collect().map(_.getLong(0)).toSeq
-      mark("keys+slots")
       // stored keys pruned TWICE: partition pruning to the slots this
       // batch touches, then a broadcast semi-join to the batch's exact
       // (band, band_hash) bucket set — only buckets the batch can pair
@@ -2355,21 +1147,15 @@ object Streams {
         .select("id_a", "id_b")
         .cache()
       // bounded driver collect again: candidate ids' slots, <= `Slots`
-
       val candSlots = candsNew
         .select(explode(array(col("id_a"), col("id_b"))).as("id"))
         .select(pmod(xxhash64(col("id")), lit(Slots)).as("s"))
         .distinct().collect().map(_.getLong(0)).toSeq
-      mark("candidates")
       val storedSh =
         if (existing(shDir) && candSlots.nonEmpty)
           spark.read.parquet(shDir)
             .filter(col("batch_id") < bid && col("id_slot").isin(candSlots: _*))
-            // legacy index (no shingles_sorted _META flag): stored arrays
-            // may be unsorted — the merge-walk verify needs sorted input
-            .select(col(idCol),
-              (if (nearDupShinglesSorted(fs, indexPath)) col("sh")
-               else array_sort(col("sh"))).as("sh"))
+            .select(col(idCol), col("sh"))
         else sh.select(col(idCol), col("sh")).limit(0)
       val shAll = storedSh.unionByName(sh.select(col(idCol), col("sh")))
       val verified = graft.dedup.MinHashDedup
@@ -2384,52 +1170,26 @@ object Streams {
       // filter batch_id < bid) and a crash leaving any subset of the
       // three dirs replays byte-identically (overwrite-by-batch-dir,
       // with the takedown cutoff covering half-written batches) — so
-      // they run CONCURRENTLY: per-write cost here is committer and
-      // small-file fixed overhead, not bandwidth, and overlapping them
-      // cuts the publish phase of every micro-batch to the slowest one.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def writeMatches(): Unit =
-        verified.write.mode(SaveMode.Overwrite)
-          .parquet(s"$matchesDir/batch_id=$bid")
-      // static overwrite explicitly: replay idempotence needs the whole
-      // batch dir REPLACED, whatever the session's partitionOverwriteMode
-      def writeKeys(): Unit =
-        keys.select(col(idCol), col("band"), col("band_hash"), col("slot"))
+      // they run CONCURRENTLY ([[runAll]]). Static overwrite explicitly:
+      // replay idempotence needs the whole batch dir REPLACED, whatever
+      // the session's partitionOverwriteMode.
+      runAll(spark, Seq(
+        () => verified.write.mode(SaveMode.Overwrite)
+          .parquet(s"$indexPath/matches/batch_id=$bid"),
+        () => keys.select(col(idCol), col("band"), col("band_hash"), col("slot"))
           .repartition(col("slot"))
           .write.mode(SaveMode.Overwrite).partitionBy("slot")
           .option("partitionOverwriteMode", "static")
-          .parquet(s"$keysDir/batch_id=$bid")
-      def writeSh(): Unit =
-        sh.withColumn("id_slot", pmod(xxhash64(col(idCol)), lit(Slots)))
+          .parquet(s"$keysDir/batch_id=$bid"),
+        () => sh.withColumn("id_slot", pmod(xxhash64(col(idCol)), lit(Slots)))
           .repartition(col("id_slot"))
           .write.mode(SaveMode.Overwrite).partitionBy("id_slot")
           .option("partitionOverwriteMode", "static")
-          .parquet(s"$shDir/batch_id=$bid")
-      // DEADLOCK GUARD: the SQL maintenance surface (`sync_neardup`)
-      // reaches this code from inside the analyzer's function lookup,
-      // where the calling thread HOLDS the SessionCatalog monitor — a
-      // writer future analyzing its own plan on another thread then
-      // blocks on that monitor forever (observed: Await below never
-      // returns). Monitors are reentrant for the owning thread, so the
-      // sequential path is always safe; parallelism is an overlap
-      // optimization we keep only when no catalog lock is held.
-      if (Thread.holdsLock(spark.sessionState.catalog)) {
-        writeMatches(); writeKeys(); writeSh()
-      } else {
-        val fs3 = Seq(Future(writeMatches()), Future(writeKeys()), Future(writeSh()))
-        fs3.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      }
-      // one mark: verify + the three-way concurrent publish are a single
-      // overlapped phase now (a separate "index-write" mark here would
-      // always read ~0 and hide publish regressions from the profiler)
-      mark("verify+write")
+          .parquet(s"$shDir/batch_id=$bid")))
       candsNew.unpersist()
       keys.unpersist()
       sh.unpersist()
-      ()
-      } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
   /** Per-user conversion-window state: first-signup anchor (Long.MaxValue

@@ -294,6 +294,25 @@ class IndexCompactionSpec extends SparkTestBase {
     assert(indexContent(sIdx) == sBefore)
   }
 
+  test("a fold first completes a takedown that crashed mid-swap, then folds its batch") {
+    val idx = freshPath()
+    val model = Ann.fitIvf(corpusDf(0L until 24L), nCells = 3, lloydIters = 2)
+    Streams.ivfBatch(corpusDf(0L until 8L), 1L, idx, model, "vec_id", "embedding")
+    Streams.ivfBatch(corpusDf(8L until 16L), 2L, idx, model, "vec_id", "embedding")
+    Streams.ivfBatch(corpusDf(16L until 24L), 3L, idx, model, "vec_id", "embedding")
+    val before = indexContent(idx)
+    // a takedown that died between its delete and rename: batch 1 lives
+    // only in its staging dir
+    val root = new java.io.File(idx)
+    assert(new java.io.File(root, "batch_id=1")
+      .renameTo(new java.io.File(root, ".takedown-b1-crash")))
+    // stream-built (no _SYNC): the max dir stays, 1 and 2 fold into 2
+    assert(Streams.compactIvfIndex(spark, idx) == 1L)
+    assert(batchDirs(idx) == Seq(2L, 3L))
+    assert(!root.list().exists(_.startsWith(".takedown-b")))
+    assert(indexContent(idx) == before)
+  }
+
   test("50-batch ingest churn: dir count stays bounded throughout, content exact at the end") {
     val idx = freshPath()
     val src = freshPath()

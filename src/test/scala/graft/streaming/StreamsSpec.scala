@@ -708,10 +708,9 @@ class StreamsSpec extends SparkTestBase {
     assert(empty.isEmpty && empty.columns.toSeq == Seq("id_a", "id_b", "jaccard"))
   }
 
-  test("legacy index without shingles_sorted flag: probe and ingest defensively sort stored arrays") {
+  test("legacy index without shingles_sorted flag: probe, ingest and sync refuse it") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.dedup.MinHashDedup
     def doc(c: Int, variant: Int): (Long, String) = {
       val toks = (0 until 12).map(i =>
         if (i == variant) s"x${c}_$variant" else s"w${c}_$i")
@@ -719,27 +718,19 @@ class StreamsSpec extends SparkTestBase {
     }
     val corpus = for (c <- 0 until 4; v <- 0 until 2) yield doc(c, v)
     val dir = java.nio.file.Files.createTempDirectory("graft-neardup-legacy").toString
-    // ONE stream throughout: batch ids must stay monotonic over the
-    // index's lifetime (a fresh checkpoint would restart at 0 and
-    // overwrite batch dirs); the doctoring below runs against the
-    // DRAINED stream between triggers, which the ingest contract allows
     val mem = MemoryStream[(Long, String)]
     val q = Streams.ingestToNearDupIndex(
       mem.toDF().toDF("doc_id", "text"), dir,
       idCol = "doc_id", textCol = "text", k = 3, threshold = 0.5).start()
     mem.addData(corpus: _*); q.processAllAvailable()
-    // replace a token that is no other token's prefix (w0_1 would also
-    // hit w0_10/w0_11 and push the pair under the threshold)
     val probeDf = Seq((5000L, doc(0, 0)._2.replace("w0_5", "p"))).toDF("doc_id", "text")
-    val freshProbe = Streams.probeNearDupIndex(probeDf, dir,
-        idCol = "doc_id", textCol = "text", k = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(freshProbe.nonEmpty)
+    def probe() = Streams.probeNearDupIndex(probeDf, dir,
+      idCol = "doc_id", textCol = "text", k = 3, threshold = 0.5)
+    assert(probe().count() > 0)
 
-    // Doctor the index into the LEGACY shape the flag protects against:
-    // strip shingles_sorted from _META and store the arrays REVERSED
-    // (descending = maximally unsorted for the merge walk, which silently
-    // undercounts on unsorted input). Every reader must array_sort first.
+    // Doctor the index into the LEGACY shape: a _META without the
+    // shingles_sorted flag (an index written before the sorted-shingle
+    // kernel, whose arrays the merge-walk verify would undercount)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaP = new org.apache.hadoop.fs.Path(dir, "_META")
@@ -753,42 +744,30 @@ class StreamsSpec extends SparkTestBase {
     try out.write(metaTxt.linesIterator.filterNot(_.startsWith("shingles_sorted"))
       .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val shRoot = new org.apache.hadoop.fs.Path(s"$dir/shingles")
-    fs.listStatus(shRoot).filter(_.getPath.getName.startsWith("batch_id=")).foreach { st =>
-      val batchDir = st.getPath.toString
-      val doctored = spark.read.parquet(batchDir)
-        .select(col("doc_id"), reverse(col("sh")).as("sh"), col("id_slot"))
-        .localCheckpoint(true)
-      doctored.write.mode("overwrite").partitionBy("id_slot")
-        .parquet(s"$batchDir.tmp")
-      fs.delete(st.getPath, true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$batchDir.tmp"), st.getPath)
-    }
+    def batchDirs() = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/shingles"))
+      .map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSet
+    val before = batchDirs()
 
-    // probe the doctored index: identical pairs AND identical jaccards
-    val legacyProbe = Streams.probeNearDupIndex(probeDf, dir,
+    def isRefusal(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case r: IllegalStateException => r.getMessage.contains("rebuild the index")
+        case _ => false
+      }
+    // probe
+    assert(isRefusal(intercept[IllegalStateException](probe())))
+    // ingest: the next micro-batch fails the query before writing anything
+    mem.addData(doc(1, 2))
+    assert(isRefusal(intercept[Exception](q.processAllAvailable())))
+    q.stop()
+    assert(batchDirs() == before)
+    // sync: refused before the source is even read
+    assert(isRefusal(intercept[IllegalStateException] {
+      Streams.syncNearDupIndex(spark, s"$dir-src", dir,
         idCol = "doc_id", textCol = "text", k = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(legacyProbe == freshProbe, s"legacy=$legacyProbe fresh=$freshProbe")
-
-    // ingest a new near-dup batch (same stream, next batch id) into the
-    // doctored index: cross-batch verify against the legacy-ordered
-    // stored arrays must equal the direct computation over the texts
-    val newDoc = (9000L, doc(1, 0)._2.replace("w1_2", "pp"))
-    mem.addData(newDoc); q.processAllAvailable(); q.stop()
-    val gotNew = spark.read.parquet(s"$dir/matches")
-      .filter(col("id_a") === 9000L || col("id_b") === 9000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val shRef = MinHashDedup.shingleSets(
-      (corpus :+ newDoc).toDF("doc_id", "text"), "doc_id", "text", 3)
-    val refNew = MinHashDedup.verifiedPairsFromShingles(shRef,
-        MinHashDedup.candidatePairs(
-          MinHashDedup.bandKeysFromShingles(shRef, "doc_id", 16, 4), "doc_id"),
-        "doc_id", 0.5)
-      .filter(col("id_a") === 9000L || col("id_b") === 9000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(gotNew == refNew, s"got=$gotNew ref=$refNew")
-    assert(gotNew.nonEmpty)
+    }))
+    // an index older than _META itself (shingles, no _META) is refused too
+    fs.delete(metaP, false)
+    assert(isRefusal(intercept[IllegalStateException](probe())))
   }
 
   test("removeFromNearDupIndex: takedown purges ids from keys/shingles/matches, future-proof") {

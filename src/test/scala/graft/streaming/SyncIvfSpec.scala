@@ -221,4 +221,67 @@ class SyncIvfSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("legacy"), e.getMessage)
   }
+
+  private def batchDirs(idx: String): Set[String] =
+    Option(new java.io.File(idx).listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+
+  test("a crashed SEED retries idempotently via the bid=-1 intent") {
+    val src = seededSrc(0L until 20L)
+    val model = Ann.fitIvf(DocStore.find(spark, src), nCells = 3, lloydIters = 2)
+    val idx = freshPath()
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 20L)
+    val seeded = indexContent(idx)
+    // rewind the state to the seed INTENT (what a crash mid-seed leaves)
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(idx, "_SYNC")), "UTF-8")
+    assert(txt.contains("bid=1\n"))
+    rewriteSync(idx, txt.replace("bid=1\n", "bid=-1\n").getBytes("UTF-8"))
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 20L) // redo seed
+    assert(indexContent(idx) == seeded && batchDirs(idx) == Set("batch_id=1"))
+    // and a later real mutation still polls correctly
+    DocStore.insertMany(corpusDf(20L until 23L), src)
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 3L)
+    assert(indexContent(idx) == freshAssign(src, model))
+  }
+
+  test("metadata-only updates touch nothing; caught-up polls are free") {
+    val src = freshPath()
+    DocStore.insertMany((0L until 12L).map(i => (i, vec(i), "en"))
+      .toDF("vec_id", "embedding", "lang"), src)
+    val model = Ann.fitIvf(DocStore.find(spark, src), nCells = 3, lloydIters = 2)
+    val idx = freshPath()
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 12L)
+    val (c0, b0) = (indexContent(idx), batchDirs(idx))
+    DocStore.updateMany(spark, src, col("vec_id") < 4L,
+      Map("lang" -> lit("de"))) // embeddings unchanged
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 0L)
+    assert(indexContent(idx) == c0 && batchDirs(idx) == b0)
+    // the cursor advanced: the next poll is caught up, not a re-diff
+    val syncAfter = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(idx, "_SYNC"))
+    assert(Streams.syncIvfIndex(spark, src, idx, model) == 0L)
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(idx, "_SYNC")).sameElements(syncAfter))
+  }
+
+  test("a takedown that crashed mid-swap heals at the next takedown") {
+    val idx = freshPath()
+    val model = Ann.fitIvf(corpusDf(0L until 30L), nCells = 3, lloydIters = 2)
+    Streams.ivfBatch(corpusDf(0L until 15L), 1L, idx, model, "vec_id", "embedding")
+    Streams.ivfBatch(corpusDf(15L until 30L), 2L, idx, model, "vec_id", "embedding")
+    val before = indexContent(idx)
+    // a crash between the swap's delete and rename (staging present, live
+    // batch dir gone), and a stale staging next to an intact batch dir
+    val root = new java.io.File(idx)
+    assert(new java.io.File(root, "batch_id=1")
+      .renameTo(new java.io.File(root, ".takedown-b1-crash")))
+    new java.io.File(root, ".takedown-b2-stale").mkdirs()
+    assert(Streams.removeFromIvfIndex(spark, idx, Seq(424242L).toDF("vec_id")) == 0L)
+    assert(batchDirs(idx) == Set("batch_id=1", "batch_id=2"))
+    assert(!root.list().exists(_.startsWith(".takedown-b")))
+    assert(indexContent(idx) == before)
+    // and the healed index takes ids down from the recovered batch
+    assert(Streams.removeFromIvfIndex(spark, idx, Seq(3L).toDF("vec_id")) == 1L)
+    assert(indexContent(idx) == before.filterNot(_._1 == 3L))
+  }
 }
