@@ -3004,7 +3004,7 @@ object DocStore {
     // and the cron would oscillate between two O(corpus) rewrites
     // forever. The effective budget treats the structural floor as
     // healthy; only counts above it are tail debris worth merging.
-    val (effectiveMax, corpusBytes) = {
+    def countBudget(): (Int, Long) = {
       val live = liveDir(fs, spark, path)
       val bytes =
         if (!fs.exists(new Path(live))) 0L
@@ -3023,11 +3023,22 @@ object DocStore {
     // count budget (mid-sized files), the full rewrite must still honor
     // maxFileBytes — one monolithic unclustered file would violate the
     // structural floor this very function computes.
-    val escalateTarget = math.max(1L,
-      (corpusBytes + maxFileBytes - 1) / maxFileBytes).toInt
-    val compacted = maybeCompact(spark, path, effectiveMax,
-      targetFiles = 1, retain = retain, smallBytes = smallBytes,
-      escalateTargetFiles = escalateTarget)
+    def compactOnce(): Boolean = {
+      val (effectiveMax, corpusBytes) = countBudget()
+      val escalateTarget = math.max(1L,
+        (corpusBytes + maxFileBytes - 1) / maxFileBytes).toInt
+      maybeCompact(spark, path, effectiveMax,
+        targetFiles = 1, retain = retain, smallBytes = smallBytes,
+        escalateTargetFiles = escalateTarget)
+    }
+    // the budget is re-measured after every compaction: a rewrite sheds
+    // per-file overhead (fewer footers), so files sized from the old bytes
+    // can sit one over the floor of the bytes they now hold — left alone,
+    // the NEXT pass would pay another O(corpus) rewrite for that one file.
+    // Each compaction strictly lowers the logical file count (the tail
+    // merge, or an escalation to at most the budget), so the loop ends.
+    var compacted = false
+    while (compactOnce()) compacted = true
     keyCol.foreach { k =>
       val live = liveDir(fs, spark, path)
       val statted = fs.exists(new Path(live)) &&

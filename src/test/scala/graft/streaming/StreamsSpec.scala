@@ -708,7 +708,7 @@ class StreamsSpec extends SparkTestBase {
     assert(empty.isEmpty && empty.columns.toSeq == Seq("id_a", "id_b", "jaccard"))
   }
 
-  test("legacy index without shingles_sorted flag: probe, ingest and sync refuse it") {
+  test("legacy index without shingles_sorted flag: probe, ingest, sync refuse") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     def doc(c: Int, variant: Int): (Long, String) = {
