@@ -1,9 +1,9 @@
 package graft.runner
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{ChangeAction, DateWindow, LoadResult}
+import graft.core.{ChangeAction, DateWindow, LoadResult, Parallel}
 import graft.pipelines.Sales
 import graft.sinks.Sinks
 
@@ -15,10 +15,21 @@ import graft.sinks.Sinks
   * per-action passes (created/modified/deleted/undeleted,
   * /root/reference/dags/CotyData_IPN.py:596-603). Here:
   *  - the window computation is the same driver-side rule (DateWindow.daily)
-  *  - each entity load = REST source (window + action as request params)
-  *    -> from_json -> pipeline transforms -> staged-sync sink -> audit row
-  *  - entity-level sequencing respects the reference's dependency order,
-  *    but each load is internally parallel (partitioned source, Spark
+  *  - each (action, company) pass = REST source (window + action as
+  *    request params) -> from_json -> one cached batch -> three pipeline
+  *    transforms -> three staged-sync loads -> their audit rows
+  *  - the three entity loads of one pass (VENTAS, VENTAS_DETALLE,
+  *    VENTAS_METODO_PAGO) run concurrently ([[graft.core.Parallel.runAll]]):
+  *    they read the same batch and write disjoint paths (staging dir, final
+  *    table and its `__tmp`/`__old` publish dirs), and each is bound by
+  *    per-job fixed cost, not data. Their three audit rows are appended
+  *    once, on the caller thread, after all three finish: concurrent
+  *    appends to the one `CotyDataLogs` dir would share its `_temporary`
+  *    dir
+  *  - the passes themselves stay sequential: a later pass merges onto the
+  *    tables an earlier one published (a `modification` replay overwrites
+  *    `creation` rows), so it must see that publish
+  *  - each load is also internally parallel (partitioned source, Spark
   *    shuffles) instead of single-threaded pandas.
   */
 object Daily {
@@ -41,20 +52,21 @@ object Daily {
     val docs = raw.select(from_json(col("value"), Sales.docSchema).as("d"))
       .select(col("d.*")).cache()
 
-    def load(name: String, df: DataFrame, keys: Seq[String]): EntityRun = {
-      val res = Sinks.stagedSync(spark, df, s"$outDir/staging/$name", s"$outDir/$name", keys)
+    try {
+      // the transforms are built (and analyzed) here, so a plan error
+      // surfaces before any write starts; only the writes fan out
+      val loads = Seq(
+        ("VENTAS", Sales.transformHeader(docs), Seq("ID_VENTA")),
+        ("VENTAS_DETALLE", Sales.transformDetails(docs), Seq("ID_VENTA_DETALLE")),
+        ("VENTAS_METODO_PAGO", Sales.transformPayments(docs), Seq("ID_VENTA_METODO_PAGO")))
+      val results = Parallel.runAll(spark, loads.map { case (name, df, keys) =>
+        () => Sinks.stagedSync(spark, df, s"$outDir/staging/$name", s"$outDir/$name", keys)
+      })
+      val at = java.sql.Timestamp.valueOf(window.to.atStartOfDay())
       Sinks.audit(spark, s"$outDir/CotyDataLogs",
-        Sinks.auditFor(res, res.rows, s"Daily/$company/${action.param}",
-          java.sql.Timestamp.valueOf(window.to.atStartOfDay())))
-      EntityRun(name, action.param, res)
-    }
-
-    val out = Seq(
-      load("VENTAS", Sales.transformHeader(docs), Seq("ID_VENTA")),
-      load("VENTAS_DETALLE", Sales.transformDetails(docs), Seq("ID_VENTA_DETALLE")),
-      load("VENTAS_METODO_PAGO", Sales.transformPayments(docs), Seq("ID_VENTA_METODO_PAGO")))
-    docs.unpersist()
-    out
+        results.map(r => Sinks.auditFor(r, r.rows, s"Daily/$company/${action.param}", at)))
+      loads.zip(results).map { case ((name, _, _), r) => EntityRun(name, action.param, r) }
+    } finally docs.unpersist()
   }
 
   /** Full daily pass: per-action x per-company fan-out over one window,

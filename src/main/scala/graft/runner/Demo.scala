@@ -62,7 +62,7 @@ object Demo {
     println(s"[demo] details=${det.count()} payments=${pay.count()}")
 
     Sinks.audit(spark, s"$out/CotyDataLogs",
-      Sinks.auditFor(r2, finalRows, "demo", new java.sql.Timestamp(1700000000000L)))
+      Seq(Sinks.auditFor(r2, finalRows, "demo", new java.sql.Timestamp(1700000000000L))))
     spark.read.parquet(s"$out/CotyDataLogs").show(false)
 
     // expenses slice: two-level concat-key dim lookup with null-on-miss

@@ -77,14 +77,14 @@ object Sinks {
   def stagedSyncPartitioned(spark: SparkSession, df: DataFrame, finalPath: String,
                             partitionCols: Seq[String]): LoadResult =
     try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(finalPath)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      LoadResult(finalPath, df.count(), ok = true, None)
+      // the mode is a per-write option, so a load running beside this one
+      // in the same session keeps the session's mode; the row count rides
+      // the write as an Observation (no second scan)
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCols: _*).parquet(finalPath)
+      LoadResult(finalPath, obs.get("rows").asInstanceOf[Long], ok = true, None)
     } catch {
       case e: Throwable => LoadResult(finalPath, 0L, ok = false, Some(e.getMessage))
     }
@@ -181,10 +181,14 @@ object Sinks {
     files.toLong
   }
 
-  /** K6: audit-log append (/root/reference/dags/CotyData_IPN.py:19-61). */
-  def audit(spark: SparkSession, path: String, log: AuditLog): Unit = {
+  /** K6: audit-log append (reference `dags/CotyData_IPN.py:19-61`).
+    * The rows of several loads go in one append, as one file. Appends to
+    * one `path` share its `_temporary` dir, so they must not run
+    * concurrently.
+    */
+  def audit(spark: SparkSession, path: String, logs: Seq[AuditLog]): Unit = {
     import spark.implicits._
-    Seq(log).toDS().write.mode(SaveMode.Append).parquet(path)
+    logs.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
   }
 
   def auditFor(result: LoadResult, total: Long, source: String, at: Timestamp): AuditLog =

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Parallel
 import graft.sources.DocStore
 
 /** One batch-dir tree of a derived index: `dir/batch_id=N[/partCol=V]/`.
@@ -81,25 +82,6 @@ private[streaming] trait DerivedIndex {
     val dir = new Path(parent)
     if (!fs.exists(dir)) Nil else fs.listStatus(dir).toSeq.flatMap(batchIdOf).sorted
   }
-
-  /** Run independent Spark jobs concurrently: per-write cost at batch-dir
-    * granularity is committer and small-file overhead, so overlapping
-    * writes to disjoint dirs cuts the phase to the slowest one.
-    * DEADLOCK GUARD: the SQL maintenance surface (`sync_neardup`) reaches
-    * index code from inside the analyzer's function lookup, where the
-    * calling thread HOLDS the SessionCatalog monitor — a future analyzing
-    * its own plan on another thread would block on that monitor forever.
-    * Monitors are reentrant for the owning thread, so under the lock the
-    * jobs run sequentially.
-    */
-  private[streaming] def runAll(spark: SparkSession, jobs: Seq[() => Unit]): Unit =
-    if (Thread.holdsLock(spark.sessionState.catalog)) jobs.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      jobs.map(j => Future(j()))
-        .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    }
 
   // ---- _META and _SYNC ----------------------------------------------
 
@@ -343,7 +325,7 @@ private[streaming] trait DerivedIndex {
     * delete + rename; [[healTakedowns]] closes the one remaining metadata
     * gap). A tree keyed by pairs finds its affected dirs by its own scan
     * (a later batch's row can name an earlier removed id). Rewrites
-    * target disjoint dirs and run concurrently ([[runAll]]).
+    * target disjoint dirs and run concurrently ([[Parallel.runAll]]).
     *
     * `tombstone = false` is for the sync poll, whose crashed-poll replay
     * must re-ingest the very ids it just removed at the same batch id.
@@ -408,7 +390,7 @@ private[streaming] trait DerivedIndex {
           .distinct().collect().map(_.getLong(0)).toSeq.sorted
           .map(b => rewrite(t, b))
       }
-    runAll(spark, idRewrites ++ pairRewrites)
+    Parallel.runAll(spark, idRewrites ++ pairRewrites)
     done(removed)
   }
 

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Parallel
 
 final case class SessionState(startMs: Long, lastMs: Long, n: Int, sumValue: Double)
 
@@ -1170,10 +1171,10 @@ object Streams extends DerivedIndex {
       // filter batch_id < bid) and a crash leaving any subset of the
       // three dirs replays byte-identically (overwrite-by-batch-dir,
       // with the takedown cutoff covering half-written batches) — so
-      // they run CONCURRENTLY ([[runAll]]). Static overwrite explicitly:
-      // replay idempotence needs the whole batch dir REPLACED, whatever
-      // the session's partitionOverwriteMode.
-      runAll(spark, Seq(
+      // they run CONCURRENTLY ([[Parallel.runAll]]). Static overwrite
+      // explicitly: replay idempotence needs the whole batch dir
+      // REPLACED, whatever the session's partitionOverwriteMode.
+      Parallel.runAll(spark, Seq(
         () => verified.write.mode(SaveMode.Overwrite)
           .parquet(s"$indexPath/matches/batch_id=$bid"),
         () => keys.select(col(idCol), col("band"), col("band_hash"), col("slot"))

@@ -57,8 +57,35 @@ class DailySpec extends SparkTestBase {
     // idempotent rerun
     Daily.run(spark, "daily-test", out, LocalDate.of(2025, 3, 12))
     assert(spark.read.parquet(out + "/VENTAS").count() == 8)
-    // audit rows accumulated for every load
-    assert(spark.read.parquet(out + "/CotyDataLogs").count() >= 24)
+    // one audit row per load: 12 loads x 2 runs
+    assert(spark.read.parquet(out + "/CotyDataLogs").count() == 24)
+  }
+
+  test("daily run: one entity's failed load leaves the other two loaded and audited") {
+    import spark.implicits._
+    FetcherRegistry.register("daily-test", DailyFixtures.fetcher)
+    val out = java.nio.file.Files.createTempDirectory("daily-fail").toString
+    // a regular file where the VENTAS_DETALLE table should be: its merge
+    // cannot read it, while the other two loads run beside it
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "VENTAS_DETALLE"), "not a table")
+    val runs = Daily.run(spark, "daily-test", out, LocalDate.of(2025, 3, 12),
+      companies = Seq(1), actions = Seq(ChangeAction.Created))
+    assert(runs.map(_.entity) == Seq("VENTAS", "VENTAS_DETALLE", "VENTAS_METODO_PAGO"))
+    assert(runs.map(r => r.entity -> r.result.ok).toMap ==
+      Map("VENTAS" -> true, "VENTAS_DETALLE" -> false, "VENTAS_METODO_PAGO" -> true))
+    assert(spark.read.parquet(out + "/VENTAS").select("ID_VENTA").as[Long]
+      .collect().sorted.toSeq == Seq(1000L, 1001L))
+    assert(spark.read.parquet(out + "/VENTAS_METODO_PAGO").select("ID_VENTA_METODO_PAGO")
+      .as[Long].collect().sorted.toSeq == Seq(1000L, 1001L))
+    val logs = spark.read.parquet(out + "/CotyDataLogs")
+      .select("table", "statusOk", "errorMsg").as[(String, Boolean, String)].collect()
+    assert(logs.length == 3)
+    val byTable = logs.map { case (t, ok, msg) => new java.io.File(t).getName -> (ok, msg) }.toMap
+    assert(byTable.keySet == Set("VENTAS", "VENTAS_DETALLE", "VENTAS_METODO_PAGO"))
+    byTable.foreach { case (t, (ok, msg)) =>
+      if (t == "VENTAS_DETALLE") assert(!ok && msg != null && msg.nonEmpty, msg)
+      else assert(ok && msg.isEmpty, s"$t: $msg")
+    }
   }
 
   test("postAll + pollUntilConfirmed (K9) and per-record enrichment (S3)") {

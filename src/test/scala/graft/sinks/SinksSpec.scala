@@ -120,11 +120,23 @@ class SinksSpec extends SparkTestBase {
   test("audit sink appends one row per load") {
     val dir = tmp()
     val at = new java.sql.Timestamp(1700000000000L)
-    Sinks.audit(spark, s"$dir/logs", AuditLog("VENTAS", 10, 10, statusOk = true, "", at, "unit"))
-    Sinks.audit(spark, s"$dir/logs", AuditLog("VENTAS", 0, 5, statusOk = false, "boom", at, "unit"))
+    Sinks.audit(spark, s"$dir/logs", Seq(AuditLog("VENTAS", 10, 10, statusOk = true, "", at, "unit")))
+    Sinks.audit(spark, s"$dir/logs", Seq(AuditLog("VENTAS", 0, 5, statusOk = false, "boom", at, "unit")))
     val logs = spark.read.parquet(s"$dir/logs")
     assert(logs.count() == 2)
     assert(logs.filter(!col("statusOk")).head().getAs[String]("errorMsg") == "boom")
+    // the rows of several loads land in one append, as one new data file
+    def dataFiles = new java.io.File(s"$dir/logs").list().filter(_.endsWith(".parquet")).toSet
+    val before = dataFiles
+    Sinks.audit(spark, s"$dir/logs", Seq(
+      AuditLog("VENTAS_DETALLE", 3, 3, statusOk = true, "", at, "unit"),
+      AuditLog("VENTAS_METODO_PAGO", 4, 4, statusOk = true, "", at, "unit")))
+    val added = dataFiles -- before
+    assert(added.size == 1, added)
+    val rows = spark.read.parquet(s"$dir/logs/${added.head}")
+      .select("table").as[String].collect().sorted.toSeq
+    assert(rows == Seq("VENTAS_DETALLE", "VENTAS_METODO_PAGO"))
+    assert(spark.read.parquet(s"$dir/logs").count() == 4)
   }
 
   test("truncateReload replaces the table contents") {
@@ -138,10 +150,17 @@ class SinksSpec extends SparkTestBase {
     val dir = tmp() + "/t"
     val day1 = Seq((1L, "2025-01-01", "a"), (2L, "2025-01-01", "b"),
                    (3L, "2025-01-02", "c")).toDF("k", "d", "v")
-    assert(Sinks.stagedSyncPartitioned(spark, day1, dir, Seq("d")).ok)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
+    val r1 = Sinks.stagedSyncPartitioned(spark, day1, dir, Seq("d"))
+    assert(r1.ok && r1.rows == 3, r1)
+    // the dynamic mode is a per-write option: the session conf is untouched
+    assert(spark.conf.getOption(modeKey) == modeBefore)
     // replay day 2 with corrected data; day 1 must be untouched
     val day2fix = Seq((3L, "2025-01-02", "C2"), (4L, "2025-01-02", "d")).toDF("k", "d", "v")
-    assert(Sinks.stagedSyncPartitioned(spark, day2fix, dir, Seq("d")).ok)
+    val r2 = Sinks.stagedSyncPartitioned(spark, day2fix, dir, Seq("d"))
+    assert(r2.ok && r2.rows == 2, r2)
+    assert(spark.conf.getOption(modeKey) == modeBefore)
     val out = spark.read.parquet(dir).select("k", "v").orderBy("k")
       .as[(Long, String)].collect().toSeq
     assert(out == Seq((1L, "a"), (2L, "b"), (3L, "C2"), (4L, "d")))
