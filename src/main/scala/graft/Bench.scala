@@ -11,7 +11,8 @@ import graft.core.Sessions
   * third rep costs ~30 s of wall while making a contention artifact need
   * three consecutive hits to land in the number. Failed queries report
   * -1.0 (never silently folded into the total) and are listed under
-  * "failed".
+  * "failed". `runMain graft.Bench [query ...]`: with query names only those
+  * run (same warmup, reps and JSON shape).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -36,11 +37,14 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = Iterator.continually(runOnce(name, fn))
-        .take(3).takeWhile(_ >= 0).toSeq
-      (name, if (runs.size < 3) -1.0 else runs.min)
-    }
+    val only = args.toSet
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .map { case (name, fn) =>
+        val runs = Iterator.continually(runOnce(name, fn))
+          .take(3).takeWhile(_ >= 0).toSeq
+        (name, if (runs.size < 3) -1.0 else runs.min)
+      }
     // 4-decimal values: full double precision bloated the line past the
     // harvester's tail window, truncating the alphabetically-first entries
     def fmt(v: Double) = if (v < 0) "-1.0"

@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.core.Sessions
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/validate.py`).
+  * `runMain graft.Verify <sfDir> <outDir> [query ...]`: with query names
+  * only those run, and oracle_sql.json lists only their oracles, so the
+  * validator checks exactly what ran. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional extra args: run only these query names (builder iteration;
-    // the driver always passes exactly two args -> full run)
+    // optional extra args: run only these query names (two args -> full run)
     val only = args.drop(2).toSet
     val spark = Sessions.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -35,7 +37,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.iterator
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

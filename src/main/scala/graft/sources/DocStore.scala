@@ -40,8 +40,9 @@ import org.apache.spark.sql.functions._
   *    deterministically salvaged into the committed generation instead of
   *    stranding in the superseded one (see [[insertMany]]).
   * Matched/deleted counts ride the rewrite pass via `Dataset.observe`; no
-  * separate count() scan. Pre-manifest (legacy flat-directory) collections
-  * read as-is and migrate to generations on their first rewrite.
+  * separate count() scan. The generational layout is the only one: a
+  * directory holding data files but no generation (the pre-manifest
+  * layout) is refused by every surface and must be rebuilt.
   *
   * READS ARE SINGLE-SCAN: JSON generations are read with the STORED
   * stats-time schema (base `_schema.json` + per-append sidecars) whenever
@@ -137,8 +138,8 @@ object DocStore {
     dataFileNames(fs, genDir) ++ readLinks(fs, genDir)
 
   /** Absolute path of a logical name: plain names live in `genDir`, carried
-    * entries are relative to the collection root (genDir's parent — carried
-    * entries only ever exist in `gen-*` dirs, never the legacy flat root).
+    * entries are relative to the collection root (genDir's parent — every
+    * data dir is a `gen-*` dir).
     */
   private def resolvePath(genDir: String, name: String): String =
     if (name.contains("/")) s"${new Path(genDir).getParent.toString}/$name"
@@ -207,7 +208,7 @@ object DocStore {
     val spark = df.sparkSession
     val fs = fileSystem(spark, path)
     healStragglers(spark, fs, path) // recover any crashed salvage first
-    val live = liveDir(fs, spark, path, createIfMissing = true)
+    val live = liveDir(fs, path, createIfMissing = true).get
     val fmt = genFormat(fs, live)
     val staging = new Path(live, s"_append-${java.util.UUID.randomUUID()}")
     try {
@@ -276,10 +277,10 @@ object DocStore {
 
   /** Data-file format of a generation dir, detected from the data files
     * themselves: any `.parquet` data file means parquet; otherwise JSON
-    * (the default, and the legacy flat layout's only format). Detection
-    * beats a marker file because it is self-describing — there is no
-    * marker write whose ordering against `_SUCCESS`/manifest could leave
-    * a committed generation mislabeled after a crash. A generation's data
+    * (the default). Detection beats a marker file because it is
+    * self-describing — there is no marker write whose ordering against
+    * `_SUCCESS`/manifest could leave a committed generation mislabeled
+    * after a crash. A generation's data
     * is written by ONE job and appends adopt the live format, so mixed
     * dirs cannot arise (an empty generation reads as json, and whichever
     * format the first append writes becomes the detected format from
@@ -359,8 +360,7 @@ object DocStore {
       // planning a read: Spark 4 resolves readers lazily, so the doomed
       // analysis (though caught below) would emit a failed-query event
       // that any in-flight Observation listener logs at ERROR level
-      if (!fs.exists(new Path(path))) return spark.emptyDataFrame
-      val live = liveDir(fs, spark, path)
+      val live = liveDir(fs, path).getOrElse(return spark.emptyDataFrame)
       val fmt = genFormat(fs, live)
       val docs = filter.flatMap(prunedFiles(spark, fs, live, fmt, _)) match {
         case Some((files, schema)) if files.isEmpty =>
@@ -394,13 +394,8 @@ object DocStore {
     */
   def countFast(spark: SparkSession, path: String): Long = {
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path))) return 0L
-    val live = liveDir(fs, spark, path)
-    val names = {
-      val p = new Path(live)
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) logicalNames(fs, live)
-      else Set.empty[String]
-    }
+    val live = liveDir(fs, path).getOrElse(return 0L)
+    val names = logicalNames(fs, live)
     if (names.isEmpty) return 0L
     val statsP = new Path(live, StatsDir)
     // statsRows: a stats dir can exist with ZERO visible part files
@@ -457,11 +452,9 @@ object DocStore {
     require(cols.nonEmpty, "minMaxFast needs at least one column")
     import org.apache.spark.sql.types._
     val fs = fileSystem(spark, path)
-    val live = liveDir(fs, spark, path)
-    val names =
-      if (fs.exists(new Path(live)) && fs.getFileStatus(new Path(live)).isDirectory)
-        logicalNames(fs, live)
-      else Set.empty[String]
+    // no collection: an empty name set over the bare path (typed nulls)
+    val (live, names) = liveDir(fs, path)
+      .fold((path, Set.empty[String]))(l => (l, logicalNames(fs, l)))
     val fmt = genFormat(fs, live)
     val statsP = new Path(live, StatsDir)
     val schema = logicalReadSchema(spark, fs, live, fmt, names)
@@ -577,8 +570,8 @@ object DocStore {
     * (dangling/incomplete manifest target, unparseable sidecar);
     * `warn` = debris or drift the next write heals or that only costs
     * performance (crash-orphaned generations, leftover staging dirs,
-    * stats entries for vanished files, unstatted data files, flat-layout
-    * residue alongside generations).
+    * stats entries for vanished files, unstatted data files, data files
+    * at the root alongside generations).
     *
     * Limit, inherent to the recovery semantics: in a store whose live
     * generation has no `_SOURCE` record (never rewritten, or
@@ -640,8 +633,8 @@ object DocStore {
               complete.nonEmpty)
             warn("flat-residue",
               s"data file $nm at the collection root alongside generations " +
-                "(pre-migration leftover; a concurrent append's visibility " +
-                "walk or the next rewrite resolves it)")
+                "(outside every generation: no read serves it and no write " +
+                "moves it — delete it, or insertMany its rows)")
         }
       committed.foreach { g =>
         val gdir = genPath(path, g)
@@ -1061,10 +1054,11 @@ object DocStore {
   def cursor(spark: SparkSession, path: String): DocCursor = {
     val fs = fileSystem(spark, path)
     val gens = committedGens(fs, path)
-    require(gens.nonEmpty,
-      s"docstore: $path has no committed generations (a legacy flat " +
-        "collection migrates on its first rewrite); cursor CDC needs the " +
-        "generational layout")
+    if (gens.isEmpty) {
+      requireNoRootData(fs, path)
+      throw new IllegalArgumentException(
+        s"docstore: $path holds no collection; cursor CDC needs a committed generation")
+    }
     DocCursor(gens.last, logicalNames(fs, genPath(path, gens.last)))
   }
 
@@ -1224,9 +1218,9 @@ object DocStore {
     val fs = fileSystem(spark, path)
     val (liveD, fmt, names) = pinLive(spark, fs, path)
     val live =
-      // nonexistent target: empty without planning a read (the lazy-
+      // no target collection yet: empty without planning a read (the lazy-
       // reader/Observation-listener noise rationale from find())
-      if (!fs.exists(new Path(liveD))) spark.emptyDataFrame
+      if (liveD == path) spark.emptyDataFrame
       else try readPinned(spark, fs, liveD, fmt, names)
       catch { // empty/new target with no schema — the find() behavior
         case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame
@@ -1799,9 +1793,6 @@ object DocStore {
     withMutationRetry(retries) { () =>
       val fs = fileSystem(spark, path)
       val (live, fmt, names) = pinLive(spark, fs, path)
-      require(new Path(live).getName.matches("gen-\\d{6}"),
-        s"docstore: cannot renameColumn on the legacy flat layout of $path " +
-          "— run compact() first to migrate to generations")
       val stored = storedSchema(fs, new Path(live, StatsDir)).getOrElse(
         throw new IllegalStateException(
           s"docstore: cannot renameColumn on $path — the collection has no " +
@@ -1875,14 +1866,6 @@ object DocStore {
     val fs = fileSystem(spark, path)
     val (live, fmt, names) = pinLive(spark, fs, path)
     afterPin()
-    // same generational-layout gate as cowCandidates: on a legacy FLAT
-    // store the carried-branch require would throw only AFTER the
-    // dataless commit created a complete empty generation — debris the
-    // next read would resolve to, silently emptying the collection.
-    // Refuse up front instead; compact() migrates the layout.
-    require(new Path(live).getName.matches("gen-\\d{6}"),
-      s"docstore: cannot $what on the legacy flat layout of $path — run " +
-        "compact() first to migrate to generations")
     val stored = storedSchema(fs, new Path(live, StatsDir)).getOrElse(
       throw new IllegalStateException(
         s"docstore: cannot $what on $path — the collection has no stored " +
@@ -2172,8 +2155,7 @@ object DocStore {
 
   /** The COW partition of a pinned snapshot: (candidate files that may
     * contain matching rows, carried files that provably don't, the stored
-    * schema to read with) — or None when COW can't apply: no generational
-    * layout (legacy flat stores migrate via full rewrite), no usable
+    * schema to read with) — or None when COW can't apply: no usable
     * stats/predicate (pruning unavailable), pruning didn't drop anything
     * (links would only add overhead), or `schemaSafe` rejects (the
     * mutation changes the schema in a way carried files cannot serve —
@@ -2183,8 +2165,7 @@ object DocStore {
                             fmt: String, names: Set[String], filter: Column,
                             schemaSafe: org.apache.spark.sql.types.StructType => Boolean)
       : Option[(Seq[String], Seq[String], org.apache.spark.sql.types.StructType)] =
-    if (!new Path(live).getName.matches("gen-\\d{6}")) None
-    else prunedFiles(spark, fs, live, fmt, filter, pinned = Some(names)) match {
+    prunedFiles(spark, fs, live, fmt, filter, pinned = Some(names)) match {
       case Some((cand, schema))
           if schemaSafe(schema) && cand.size < names.size =>
         Some((cand, (names -- cand).toSeq.sorted, schema))
@@ -2393,8 +2374,7 @@ object DocStore {
     * stats rows (skipping and metadata-exact counts survive), the merged
     * file is re-statted with the carried geometry, and the usual manifest
     * swing gives the usual crash safety. Returns how many files were
-    * merged (0 = nothing to do, no commit; a legacy flat store delegates
-    * to [[compact]], which also migrates it).
+    * merged (0 = nothing to do, no commit).
     */
   def compactSmall(spark: SparkSession, path: String, minBytes: Long,
                    targetFiles: Int = 1, retain: Int = 2): Long = {
@@ -2402,10 +2382,6 @@ object DocStore {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val fs = fileSystem(spark, path)
     val (live, fmt, names) = pinLive(spark, fs, path)
-    if (!new Path(live).getName.matches("gen-\\d{6}")) {
-      compact(spark, path, targetFiles, retain)
-      return names.size.toLong
-    }
     val sized = names.toSeq.sorted.map { n =>
       val p = new Path(resolvePath(live, n))
       (n, if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L)
@@ -2493,20 +2469,10 @@ object DocStore {
   def cowStats(spark: SparkSession, path: String, retain: Int = 2): DataFrame = {
     import spark.implicits._
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path)))
+    val live = liveDir(fs, path).getOrElse(
       return Seq.empty[(Int, Long, Long, Long, Double, Boolean)]
         .toDF("generation", "data_bytes", "live_ref_bytes", "dead_bytes",
-          "live_fraction", "in_retain_window")
-    val live = liveDir(fs, spark, path)
-    // fail-loudly (the findAsOf convention): a legacy flat layout has no
-    // generations to account, and an empty frame here is indistinguishable
-    // from "zero garbage" on a dashboard — the one reading that must never
-    // be silently wrong
-    if (!new Path(live).getName.matches("gen-\\d{6}"))
-      throw new IllegalStateException(
-        s"docstore cowStats: $path uses the legacy flat layout — there are " +
-          "no generations to account (this is NOT 'no garbage'); run " +
-          "compact() to migrate to the generational layout first")
+          "live_fraction", "in_retain_window"))
     val names = logicalNames(fs, live)
     val window = committedGens(fs, path).takeRight(retain).toSet
     homeAccounting(fs, path, live, names).map { case (g, bytes, ref) =>
@@ -2538,7 +2504,6 @@ object DocStore {
       s"minLiveFraction must be in (0, 1], got $minLiveFraction")
     val fs = fileSystem(spark, path)
     val (live, fmt, names) = pinLive(spark, fs, path)
-    if (!new Path(live).getName.matches("gen-\\d{6}")) return 0L
     if (!names.exists(_.contains("/"))) return 0L // no links: nothing carried
     val window = committedGens(fs, path).takeRight(retain).toSet
     val badHomes = homeAccounting(fs, path, live, names).collect {
@@ -2679,16 +2644,7 @@ object DocStore {
     val empty = Seq.empty[(String, String, String, Long, String)]
       .toDF("file", "key_min", "key_max", "bytes", "status")
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path))) return empty
-    val live = liveDir(fs, spark, path)
-    // same fail-loudly rule as cowStats: on the flat layout nothing is
-    // statted, and an empty frame reads as "perfectly clustered" to the
-    // dashboard this feeds
-    if (!new Path(live).getName.matches("gen-\\d{6}"))
-      throw new IllegalStateException(
-        s"docstore clusterStats: $path uses the legacy flat layout — no " +
-          "stats geometry exists to report (this is NOT 'disjoint'); run " +
-          "compact()/cluster() to migrate first")
+    val live = liveDir(fs, path).getOrElse(return empty)
     val ranges = keyRanges(spark, fs, live, logicalNames(fs, live), keyCol)
     val ranged = ranges.collect { case (n, Some((lo, hi)), bytes) =>
       KeyInterval(n, lo, hi, bytes) }
@@ -2734,7 +2690,7 @@ object DocStore {
     require(maxFileBytes > 0, s"maxFileBytes must be positive, got $maxFileBytes")
     val fs = fileSystem(spark, path)
     val (live, fmt, names) = pinLive(spark, fs, path)
-    if (!new Path(live).getName.matches("gen-\\d{6}")) return 0L
+    if (names.isEmpty) return 0L // nothing to place (or no collection)
     val (statted, bloomed, bloomBits) = statsConfig(spark, fs, live)
     require(statted.contains(keyCol),
       s"docstore recluster: no min/max stats on '$keyCol' in $live — run " +
@@ -2870,9 +2826,7 @@ object DocStore {
     require(maxOverlapping >= 0,
       s"maxOverlapping must be >= 0, got $maxOverlapping")
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path))) return false
-    val live = liveDir(fs, spark, path)
-    if (!new Path(live).getName.matches("gen-\\d{6}")) return false
+    val live = liveDir(fs, path).getOrElse(return false)
     val ranged = keyRanges(spark, fs, live, logicalNames(fs, live), keyCol)
       .collect { case (n, Some((lo, hi)), bytes) => KeyInterval(n, lo, hi, bytes) }
     val overlapping = overlapGroups(ranged) match {
@@ -2917,16 +2871,13 @@ object DocStore {
     // targetFiles).
     val escalate = if (escalateTargetFiles >= 1) escalateTargetFiles else targetFiles
     val fs = fileSystem(spark, path)
-    val live = liveDir(fs, spark, path)
-    if (!fs.exists(new Path(live))) false
+    val live = liveDir(fs, path).getOrElse(return false)
     // logical count: carried links cost the planner exactly like physical
     // files (and pin their home generations) — compacting flattens both
-    else if (logicalNames(fs, live).size <= maxDataFiles) false
+    if (logicalNames(fs, live).size <= maxDataFiles) false
     else if (smallBytes > 0L) {
       compactSmall(spark, path, smallBytes, targetFiles, retain)
-      val after = liveDir(fs, spark, path)
-      if (fs.exists(new Path(after)) &&
-          logicalNames(fs, after).size > maxDataFiles)
+      if (logicalNames(fs, liveDir(fs, path).get).size > maxDataFiles)
         compact(spark, path, escalate, retain)
       true
     }
@@ -2969,34 +2920,21 @@ object DocStore {
                retain: Int = 2,
                maxFileBytes: Long = 1L << 28): MaintenanceReport = {
     val fs = fileSystem(spark, path)
-    if (!fs.exists(new Path(path)))
-      return MaintenanceReport(compacted = false, reclustered = false, 0L)
+    val entryLive = liveDir(fs, path).getOrElse(
+      return MaintenanceReport(compacted = false, reclustered = false, 0L))
+    // pin the stats GEOMETRY now: if the compact leg escalates to a full
+    // rewrite (stats don't carry across a no-links commit), maintain
+    // re-stats with the same geometry instead of failing its own contract
+    val (entryCols, entryBlooms, entryBits) = statsConfig(spark, fs, entryLive)
     // a misconfigured key (typo, or a store never cluster()ed) must fail
     // LOUDLY: maybeRecluster's trigger silently counts zero overlaps when
     // nothing is statted, and a cron that forever reports "healthy" while
     // clustering decays is exactly the failure maintain exists to
-    // prevent. Same require as recluster itself. Checked at entry AND
-    // re-checked after the compact leg — an escalated full compact (and
-    // the flat-layout migration) commits a generation with no stats
-    // sidecar, which would otherwise slip past an entry-only check.
-    def requireKeyStats(k: String): Unit = {
-      val live = liveDir(fs, spark, path)
-      if (new Path(live).getName.matches("gen-\\d{6}"))
-        require(statsConfig(spark, fs, live)._1.contains(k),
-          s"docstore maintain: no min/max stats on '$k' in $path — run " +
-            "cluster() or collectStats() first")
-    }
-    keyCol.foreach(requireKeyStats)
-    // pin the stats GEOMETRY now: if the compact leg escalates to a full
-    // rewrite (stats don't carry across a no-links commit), maintain
-    // re-stats with the same geometry instead of failing its own contract
-    val entryGeometry = {
-      val live = liveDir(fs, spark, path)
-      if (fs.exists(new Path(live)) &&
-          new Path(live).getName.matches("gen-\\d{6}"))
-        Some(statsConfig(spark, fs, live))
-      else None
-    }
+    // prevent. Same require as recluster itself.
+    keyCol.foreach(k =>
+      require(entryCols.contains(k),
+        s"docstore maintain: no min/max stats on '$k' in $path — run " +
+          "cluster() or collectStats() first"))
     // the FILE-COUNT budget must respect the FILE-SIZE budget: a corpus
     // of B bytes reclusters into ~B/maxFileBytes disjoint files, so a
     // maxDataFiles below that is structurally unreachable — compacting
@@ -3005,13 +2943,11 @@ object DocStore {
     // forever. The effective budget treats the structural floor as
     // healthy; only counts above it are tail debris worth merging.
     def countBudget(): (Int, Long) = {
-      val live = liveDir(fs, spark, path)
-      val bytes =
-        if (!fs.exists(new Path(live))) 0L
-        else logicalNames(fs, live).toSeq.map { n =>
-          val p = new Path(resolvePath(live, n))
-          if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
-        }.sum
+      val live = liveDir(fs, path).get
+      val bytes = logicalNames(fs, live).toSeq.map { n =>
+        val p = new Path(resolvePath(live, n))
+        if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+      }.sum
       (math.max(maxDataFiles.toLong,
         (bytes + maxFileBytes - 1) / maxFileBytes).toInt, bytes)
     }
@@ -3039,22 +2975,14 @@ object DocStore {
     // merge, or an escalation to at most the budget), so the loop ends.
     var compacted = false
     while (compactOnce()) compacted = true
+    // self-heal: an escalated full compact commits a generation with no
+    // stats sidecar; it already paid O(corpus), so one stats pass over
+    // what it wrote keeps the recluster/vacuum legs (and every later
+    // prune) working with the pinned-at-entry geometry
     keyCol.foreach { k =>
-      val live = liveDir(fs, spark, path)
-      val statted = fs.exists(new Path(live)) &&
-        new Path(live).getName.matches("gen-\\d{6}") &&
-        statsConfig(spark, fs, live)._1.contains(k)
-      if (!statted) entryGeometry match {
-        // self-heal: the escalated rewrite already paid O(corpus); one
-        // stats pass over what it wrote keeps the recluster/vacuum legs
-        // (and every later prune) working with the pinned-at-entry
-        // geometry
-        case Some((cols, blooms, bits)) if cols.contains(k) =>
-          collectStats(spark, path, cols, blooms, if (bits > 0) bits else 1 << 16)
-        // no geometry existed at entry (the flat-migration path): refuse
-        // loudly rather than let maybeRecluster report healthy forever
-        case _ => requireKeyStats(k)
-      }
+      if (!statsConfig(spark, fs, liveDir(fs, path).get)._1.contains(k))
+        collectStats(spark, path, entryCols, entryBlooms,
+          if (entryBits > 0) entryBits else 1 << 16)
     }
     val reclustered = keyCol.exists(k =>
       maybeRecluster(spark, path, k, maxOverlapping, retain, maxFileBytes))
@@ -3114,7 +3042,8 @@ object DocStore {
     require(bloomCols.isEmpty || bloomBits > 0,
       s"bloomBits must be positive when bloomCols are requested, got $bloomBits")
     val fs = fileSystem(spark, path)
-    val live = liveDir(fs, spark, path)
+    val live = liveDir(fs, path).getOrElse(throw new IllegalArgumentException(
+      s"docstore collectStats: no collection at $path"))
     val fmt = genFormat(fs, live)
     // PIN the file list (logical: physical + carried — carried files need
     // stats rows too, keyed by basename): the post-write reconciliation
@@ -3709,7 +3638,7 @@ object DocStore {
             case Some((GenName(from), _))
                 if fs.exists(new Path(genPath(path, from.toInt), "_SUCCESS")) =>
               cur = from.toInt; ids ::= cur; hops += 1
-            case _ => hops = 10000 // flat root, pruned parent, or no record
+            case _ => hops = 10000 // first generation, pruned parent, or no record
           }
         }
         ids
@@ -3717,35 +3646,53 @@ object DocStore {
     }
   }
 
-  /** Resolve the live data directory.
+  /** Resolve the live generation dir — the one place the on-disk layout
+    * is decided.
     *  - Manifest present -> the generation it names.
     *  - Manifest missing but complete generations exist (crash landed
     *    between manifest delete and rename) -> newest complete generation,
     *    manifest rewritten.
-    *  - Neither -> the flat path itself: a legacy collection, or (with
-    *    `createIfMissing`) a brand-new one initialized at gen 1.
+    *  - Neither -> None: no collection at `path`, whether the path is
+    *    missing or an existing directory without data files (a fresh temp
+    *    dir, or a root holding only sidecars such as `_INDEXES`). With
+    *    `createIfMissing` the collection is created instead: gen 1 plus
+    *    the manifest. A root that holds data files but no generation is
+    *    refused ([[requireNoRootData]]).
     */
-  private def liveDir(fs: FileSystem, spark: SparkSession, path: String,
-                      createIfMissing: Boolean = false): String = {
+  private def liveDir(fs: FileSystem, path: String,
+                      createIfMissing: Boolean = false): Option[String] =
     readManifest(fs, path) match {
-      case Some(gen) => s"$path/$gen"
+      case Some(gen) => Some(s"$path/$gen")
       case None =>
         val gens = completeGens(fs, path)
         if (gens.nonEmpty) {
           val live = genPath(path, gens.last)
           writeManifest(fs, path, new Path(live).getName)
-          live
-        } else if (fs.exists(new Path(path)) || !createIfMissing) {
-          path // legacy flat layout (or a read of a nonexistent collection)
+          Some(live)
         } else {
-          val first = genPath(path, 1)
-          fs.mkdirs(new Path(first))
-          fs.create(new Path(first, "_SUCCESS"), true).close()
-          writeManifest(fs, path, new Path(first).getName)
-          first
+          requireNoRootData(fs, path)
+          if (!createIfMissing) None
+          else {
+            val first = genPath(path, 1)
+            fs.mkdirs(new Path(first))
+            fs.create(new Path(first, "_SUCCESS"), true).close()
+            writeManifest(fs, path, new Path(first).getName)
+            Some(first)
+          }
         }
     }
-  }
+
+  /** Refuse a root that holds data files (names not starting with `_` or
+    * `.`) but no generation: that is the pre-manifest layout, which no
+    * surface reads, mutates or converts. Checked before anything is
+    * written, so the refused root stays untouched.
+    */
+  private def requireNoRootData(fs: FileSystem, path: String): Unit =
+    if (fs.exists(new Path(path)) && dataFileNames(fs, path).nonEmpty)
+      throw new IllegalStateException(
+        s"docstore: $path holds data files at its root and no generation — " +
+          "an unsupported pre-manifest layout; the store must be rebuilt " +
+          "(read its files with spark.read and insertMany them into a new path)")
 
   private def readManifest(fs: FileSystem, path: String): Option[String] = {
     val m = new Path(path, Manifest)
@@ -3793,7 +3740,8 @@ object DocStore {
 
   /** Record, inside a freshly committed generation, which data files of
     * its predecessor the rewrite read (line 1 = predecessor dir name, ""
-    * for the legacy flat root; remaining lines = file names). Written
+    * when the rewrite created the collection; remaining lines = file
+    * names). Written
     * tmp-then-rename so a torn write reads as ABSENT (no info — no
     * salvage, today's pre-protocol behavior) rather than as an
     * under-listing that would salvage already-read files and duplicate
@@ -3973,12 +3921,12 @@ object DocStore {
     var hops = 0
     while (hops < 64) {
       readSourceRecord(fs, cur) match {
-        case Some((from, files)) =>
-          val parent = if (from.isEmpty) path else s"$path/$from"
+        case Some((from, files)) if from.nonEmpty =>
+          val parent = s"$path/$from"
           chain ::= ((cur, parent, files))
-          if (from.nonEmpty && fs.exists(new Path(parent))) { cur = parent; hops += 1 }
+          if (fs.exists(new Path(parent))) { cur = parent; hops += 1 }
           else hops = 64
-        case None => hops = 64
+        case _ => hops = 64 // no record, or the collection's first generation
       }
     }
     chain.foreach { case (child, parent, l) => // oldest link first
@@ -4000,22 +3948,22 @@ object DocStore {
     */
   private def ensureVisible(spark: SparkSession, fs: FileSystem, path: String,
                             publishedDir: String, names: Seq[String]): Unit =
-    if (names.nonEmpty && publishedDir != liveDir(fs, spark, path))
+    if (names.nonEmpty && !liveDir(fs, path).contains(publishedDir))
       names.foreach(ensureFileVisible(spark, fs, path, publishedDir, _))
 
   /** The committed chain, live-first: (genDir, (from, sourceFiles)). */
   private def liveChain(fs: FileSystem, spark: SparkSession, path: String)
       : Seq[(String, (String, Set[String]))] = {
     val out = scala.collection.mutable.ListBuffer.empty[(String, (String, Set[String]))]
-    var cur = liveDir(fs, spark, path)
+    var cur = liveDir(fs, path).getOrElse(return Nil)
     var hops = 0
     while (hops < 64) {
       readSourceRecord(fs, cur) match {
         case Some(rec) =>
           out += ((cur, rec))
-          val parent = if (rec._1.isEmpty) path else s"$path/${rec._1}"
+          val parent = s"$path/${rec._1}"
           if (rec._1.nonEmpty && fs.exists(new Path(parent))) { cur = parent; hops += 1 }
-          else hops = 64
+          else hops = 64 // the first generation, or a pruned parent
         case None => hops = 64
       }
     }
@@ -4027,7 +3975,7 @@ object DocStore {
     var dir = startDir
     var name = name0
     var hops = 0
-    while (dir != liveDir(fs, spark, path)) {
+    while (!liveDir(fs, path).contains(dir)) {
       hops += 1
       require(hops <= 64,
         s"docstore: append visibility walk did not converge for $path")
@@ -4047,9 +3995,7 @@ object DocStore {
               "plus retention pruning completed mid-append) — the batch was " +
               "NOT fully published; retry the append for its missing rows")
         }
-      chain.find { case (_, (from, _)) =>
-        (if (from.isEmpty) path else s"$path/$from") == dir
-      } match {
+      chain.find { case (_, (from, _)) => from.nonEmpty && s"$path/$from" == dir } match {
         case Some((sDir, _)) =>
           name = publishForward(spark, fs, dir, sDir, Seq(name)).head
           if (fs.exists(new Path(sDir, name))) dir = sDir
@@ -4216,17 +4162,18 @@ object DocStore {
     * (their rows must be read), then list the data files ONCE — the
     * rewrite reads exactly this list and commits it as the generation's
     * [[SourceFile]] record, which is what makes concurrent appends
-    * determinate.
+    * determinate. With no collection at `path` the pin is `path` itself
+    * with no files.
     */
   private def pinLive(spark: SparkSession, fs: FileSystem, path: String)
       : (String, String, Set[String]) = {
     healStragglers(spark, fs, path)
-    val live = liveDir(fs, spark, path)
-    val p = new Path(live)
-    val names =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) logicalNames(fs, live)
-      else Set.empty[String]
-    (live, genFormat(fs, live), names)
+    liveDir(fs, path) match {
+      case Some(live) => (live, genFormat(fs, live), logicalNames(fs, live))
+      // nothing to read; a commit creates the first generation (its
+      // `_SOURCE` record names an empty predecessor)
+      case None => (path, "json", Set.empty)
+    }
   }
 
   /** [[readGen]] over a pinned file list (same stored-schema discipline,
@@ -4247,7 +4194,7 @@ object DocStore {
     * cleanup. The newest `retain` generations survive (the previous live
     * one always does, so concurrent readers' planned file lists stay
     * valid; retain > 2 buys [[findAsOf]] time travel further back); older
-    * generations and (post-migration) legacy flat files are reclaimed.
+    * generations are reclaimed.
     * `sourceNames` is the pinned file list the rewrite's `df` was read
     * from ([[pinLive]]) — committed as the [[SourceFile]] record and used
     * to salvage late concurrent appends forward before anything is pruned.
@@ -4302,8 +4249,6 @@ object DocStore {
     def disjointWinner(): Option[String] = {
       val wGen = readManifest(fs, path).getOrElse(return None)
       val pinnedGen = new Path(pinnedLive).getName
-      if (!wGen.matches("gen-\\d{6}") || !pinnedGen.matches("gen-\\d{6}"))
-        return None // flat-layout migration races never merge
       // same served schema and format across every hop: a DDL /
       // re-typing winner touches every read, so nothing is disjoint
       val pS = storedSchema(fs, new Path(pinnedLive, StatsDir))
@@ -4396,8 +4341,6 @@ object DocStore {
     // manifest swing — atomic with the data.
     if (carried.nonEmpty) {
       val pinnedGen = new Path(pinnedLive).getName
-      require(pinnedGen.matches("gen-\\d{6}"),
-        s"docstore: COW carry requires a generational source, got $pinnedLive")
       val entries = carried.map(n => if (n.contains("/")) n else s"$pinnedGen/$n")
       writeLinks(fs, next, entries)
       val stats = new Path(next, StatsDir)
@@ -4668,23 +4611,6 @@ object DocStore {
       if (st.isDirectory && st.getPath.getName.startsWith(".staging-") &&
           st.getModificationTime < stagingCutoff)
         fs.delete(st.getPath, true)
-    }
-    if (previous.isEmpty || !previous.exists(_.startsWith("gen-"))) {
-      // migration from the flat layout: drop the old part files the
-      // rewrite READ (plus housekeeping markers); a data file outside the
-      // pinned source list is a concurrent append — salvage above already
-      // moved it, and if it landed even later the appender's own
-      // visibility walk will (deleting it here would lose it)
-      val root = new Path(path)
-      if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-        val nm = st.getPath.getName
-        // `_INDEXES` is the derived-index registry (streaming.Streams'
-        // maintainAll discovery sidecar) — store-level metadata that must
-        // survive the flat->generational migration, not flat-era debris
-        if (st.isFile && nm != Manifest && nm != "_INDEXES" &&
-            (sourceNames.contains(nm) || nm.startsWith("_") || nm.startsWith(".")))
-          fs.delete(st.getPath, false)
-      }
     }
   }
 }

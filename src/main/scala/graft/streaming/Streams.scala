@@ -31,7 +31,11 @@ final case class SessionState(startMs: Long, lastMs: Long, n: Int, sumValue: Dou
   * batch-dir fold, sidecars); the entry points here supply only what
   * differs per kind. Appending to an index written by an older writer's
   * layout is unsupported: the entry points refuse it and ask for a
-  * rebuild.
+  * rebuild. The reverse is unsupported too, and nothing detects it: a
+  * build that predates the sorted-shingle kernel, appending to a near-dup
+  * index whose `_META` says `shingles_sorted=1`, writes unsorted shingle
+  * arrays that every reader trusts as sorted, so verification undercounts
+  * matches. Never run such a build against an index a newer one wrote.
   */
 object Streams extends DerivedIndex {
 
@@ -733,8 +737,23 @@ object Streams extends DerivedIndex {
     stream.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
       // guard against an empty trigger: the whole per-batch pipeline
       // (reads, joins, three writes) would run for nothing
-      if (!batch.isEmpty) nearDupBatch(batch, bid, indexPath, idCol, textCol,
-        k, bands, rowsPerBand, threshold, maxBucket)
+      if (!batch.isEmpty) {
+        // ResolveWriteToStream force-disables AQE on the stream's cloned
+        // session; the work in this sink is plain batch actions (joins,
+        // aggregates, parquet writes) where AQE's broadcast conversion
+        // and partition coalescing are exactly what we want — without it
+        // every join in the candidate chain is a sort-merge at the fixed
+        // partition count (~2x slower per batch, measured). The flip
+        // touches only that cloned session, and the prior value is
+        // restored after the batch so the streaming engine's own planning
+        // never sees a conf it decided to disable.
+        val spark = batch.sparkSession
+        val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        try nearDupBatch(batch, bid, indexPath, idCol, textCol,
+          k, bands, rowsPerBand, threshold, maxBucket)
+        finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      }
       ()
     }
 
@@ -1075,122 +1094,109 @@ object Streams extends DerivedIndex {
                            k: Int, bands: Int, rowsPerBand: Int,
                            threshold: Double, maxBucket: Int): Unit = {
     val spark = batch.sparkSession
-    // ResolveWriteToStream force-disables AQE on the session for the
-    // streaming query; the work in THIS sink is plain batch actions
-    // (joins, aggregates, parquet writes) where AQE's broadcast
-    // conversion and partition coalescing are exactly what we want —
-    // without it every join in the candidate chain is a sort-merge at
-    // the fixed partition count (~2x slower per batch, measured). The
-    // prior value is RESTORED after the batch body (the finally below)
-    // so the streaming engine's own planning never sees a conf it
-    // decided to disable.
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
-      val fs = fsOf(spark, indexPath)
-      val ix = nearDupLayout(indexPath)
-      def existing(dir: String): Boolean = fs.exists(new Path(dir))
-      val keysDir = s"$indexPath/keys"
-      val shDir = s"$indexPath/shingles"
-      // complete a crashed compaction before reading stored keys/shingles
-      healAll(fs, ix)
-      // geometry contract: resuming an index with different parameters
-      // would write incomparable band hashes — fail loudly instead
-      requireNearDupGeometry(fs, indexPath, k, bands, rowsPerBand,
-        "ingestToNearDupIndex")
-      writeMeta(fs, indexPath, Seq("k" -> k, "bands" -> bands,
-        "rowsPerBand" -> rowsPerBand, "shingles_sorted" -> 1))
-      val live = withoutTombstoned(fs, ix, batch, idCol, bid)
+    val fs = fsOf(spark, indexPath)
+    val ix = nearDupLayout(indexPath)
+    def existing(dir: String): Boolean = fs.exists(new Path(dir))
+    val keysDir = s"$indexPath/keys"
+    val shDir = s"$indexPath/shingles"
+    // complete a crashed compaction before reading stored keys/shingles
+    healAll(fs, ix)
+    // geometry contract: resuming an index with different parameters
+    // would write incomparable band hashes — fail loudly instead
+    requireNearDupGeometry(fs, indexPath, k, bands, rowsPerBand,
+      "ingestToNearDupIndex")
+    writeMeta(fs, indexPath, Seq("k" -> k, "bands" -> bands,
+      "rowsPerBand" -> rowsPerBand, "shingles_sorted" -> 1))
+    val live = withoutTombstoned(fs, ix, batch, idCol, bid)
 
-      val sh = graft.dedup.MinHashDedup
-        .shingleSets(live, idCol, textCol, k).cache()
-      val keys = graft.dedup.MinHashDedup
-        .bandKeysFromShingles(sh, idCol, bands, rowsPerBand)
-        .withColumn("slot", pmod(xxhash64(col("band"), col("band_hash")), lit(Slots)))
-        .cache()
-      // bounded driver collect: at most `Slots` ids
-      val slots = keys.select("slot").distinct().collect().map(_.getLong(0)).toSeq
-      // stored keys pruned TWICE: partition pruning to the slots this
-      // batch touches, then a broadcast semi-join to the batch's exact
-      // (band, band_hash) bucket set — only buckets the batch can pair
-      // with are read into the candidate machinery. At 100 TB this is
-      // the difference between "stored keys in 16 slots" (corpus-sized)
-      // and "stored members of batch-touched buckets" (delta-sized).
-      // Cap semantics unchanged: bucket sizes still count ALL members of
-      // a touched bucket; untouched buckets' pairs were old-old and
-      // filtered out downstream anyway.
-      val storedKeys =
-        if (existing(keysDir) && slots.nonEmpty)
-          spark.read.parquet(keysDir)
-            .filter(col("batch_id") < bid && col("slot").isin(slots: _*))
-            .join(broadcast(keys.select(col("band"), col("band_hash")).distinct()),
-              Seq("band", "band_hash"), "leftsemi")
-            .select(col("band"), col("band_hash"), col(idCol))
-        else keys.select(col("band"), col("band_hash"), col(idCol)).limit(0)
-      val combined = storedKeys
-        .unionByName(keys.select(col("band"), col("band_hash"), col(idCol)))
-      // cap evaluated over stored+batch bucket membership (as-of arrival);
-      // candidatePairs counts drops via BucketDrops
-      val cands = graft.dedup.MinHashDedup
-        .candidatePairs(combined, idCol, maxBucket)
-      // keep only pairs touching THIS batch (old-old pairs were already
-      // reported when their second member arrived): two broadcast LEFT
-      // joins adding presence flags, one filter — no shuffle and no
-      // re-distinct (cands is already distinct), where a semi-join per
-      // side plus a union-distinct would cost three more stages
-      val newIds = live.select(col(idCol)).distinct()
-      val candsNew = cands
-        .join(broadcast(newIds.select(col(idCol).as("id_a"), lit(true).as("__a"))),
-          Seq("id_a"), "left")
-        .join(broadcast(newIds.select(col(idCol).as("id_b"), lit(true).as("__b"))),
-          Seq("id_b"), "left")
-        .filter(coalesce(col("__a"), lit(false)) || coalesce(col("__b"), lit(false)))
-        .select("id_a", "id_b")
-        .cache()
-      // bounded driver collect again: candidate ids' slots, <= `Slots`
-      val candSlots = candsNew
-        .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-        .select(pmod(xxhash64(col("id")), lit(Slots)).as("s"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val storedSh =
-        if (existing(shDir) && candSlots.nonEmpty)
-          spark.read.parquet(shDir)
-            .filter(col("batch_id") < bid && col("id_slot").isin(candSlots: _*))
-            .select(col(idCol), col("sh"))
-        else sh.select(col(idCol), col("sh")).limit(0)
-      val shAll = storedSh.unionByName(sh.select(col(idCol), col("sh")))
-      val verified = graft.dedup.MinHashDedup
-        .verifiedPairsFromShingles(shAll, candsNew, idCol, threshold)
+    val sh = graft.dedup.MinHashDedup
+      .shingleSets(live, idCol, textCol, k).cache()
+    val keys = graft.dedup.MinHashDedup
+      .bandKeysFromShingles(sh, idCol, bands, rowsPerBand)
+      .withColumn("slot", pmod(xxhash64(col("band"), col("band_hash")), lit(Slots)))
+      .cache()
+    // bounded driver collect: at most `Slots` ids
+    val slots = keys.select("slot").distinct().collect().map(_.getLong(0)).toSeq
+    // stored keys pruned TWICE: partition pruning to the slots this
+    // batch touches, then a broadcast semi-join to the batch's exact
+    // (band, band_hash) bucket set — only buckets the batch can pair
+    // with are read into the candidate machinery. At 100 TB this is
+    // the difference between "stored keys in 16 slots" (corpus-sized)
+    // and "stored members of batch-touched buckets" (delta-sized).
+    // Cap semantics unchanged: bucket sizes still count ALL members of
+    // a touched bucket; untouched buckets' pairs were old-old and
+    // filtered out downstream anyway.
+    val storedKeys =
+      if (existing(keysDir) && slots.nonEmpty)
+        spark.read.parquet(keysDir)
+          .filter(col("batch_id") < bid && col("slot").isin(slots: _*))
+          .join(broadcast(keys.select(col("band"), col("band_hash")).distinct()),
+            Seq("band", "band_hash"), "leftsemi")
+          .select(col("band"), col("band_hash"), col(idCol))
+      else keys.select(col("band"), col("band_hash"), col(idCol)).limit(0)
+    val combined = storedKeys
+      .unionByName(keys.select(col("band"), col("band_hash"), col(idCol)))
+    // cap evaluated over stored+batch bucket membership (as-of arrival);
+    // candidatePairs counts drops via BucketDrops
+    val cands = graft.dedup.MinHashDedup
+      .candidatePairs(combined, idCol, maxBucket)
+    // keep only pairs touching THIS batch (old-old pairs were already
+    // reported when their second member arrived): two broadcast LEFT
+    // joins adding presence flags, one filter — no shuffle and no
+    // re-distinct (cands is already distinct), where a semi-join per
+    // side plus a union-distinct would cost three more stages
+    val newIds = live.select(col(idCol)).distinct()
+    val candsNew = cands
+      .join(broadcast(newIds.select(col(idCol).as("id_a"), lit(true).as("__a"))),
+        Seq("id_a"), "left")
+      .join(broadcast(newIds.select(col(idCol).as("id_b"), lit(true).as("__b"))),
+        Seq("id_b"), "left")
+      .filter(coalesce(col("__a"), lit(false)) || coalesce(col("__b"), lit(false)))
+      .select("id_a", "id_b")
+      .cache()
+    // bounded driver collect again: candidate ids' slots, <= `Slots`
+    val candSlots = candsNew
+      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
+      .select(pmod(xxhash64(col("id")), lit(Slots)).as("s"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    val storedSh =
+      if (existing(shDir) && candSlots.nonEmpty)
+        spark.read.parquet(shDir)
+          .filter(col("batch_id") < bid && col("id_slot").isin(candSlots: _*))
+          .select(col(idCol), col("sh"))
+      else sh.select(col(idCol), col("sh")).limit(0)
+    val shAll = storedSh.unionByName(sh.select(col(idCol), col("sh")))
+    val verified = graft.dedup.MinHashDedup
+      .verifiedPairsFromShingles(shAll, candsNew, idCol, threshold)
 
-      // repartition BY the partition column before a partitionBy write:
-      // otherwise every one of the N shuffle tasks opens a file in every
-      // slot dir (N x Slots tiny files + that many committer renames);
-      // clustered, each slot dir gets one file. ALL THREE writes
-      // (matches, keys, shingles) are independent — different dirs;
-      // matches correctness never depended on write order (readers
-      // filter batch_id < bid) and a crash leaving any subset of the
-      // three dirs replays byte-identically (overwrite-by-batch-dir,
-      // with the takedown cutoff covering half-written batches) — so
-      // they run CONCURRENTLY ([[Parallel.runAll]]). Static overwrite
-      // explicitly: replay idempotence needs the whole batch dir
-      // REPLACED, whatever the session's partitionOverwriteMode.
-      Parallel.runAll(spark, Seq(
-        () => verified.write.mode(SaveMode.Overwrite)
-          .parquet(s"$indexPath/matches/batch_id=$bid"),
-        () => keys.select(col(idCol), col("band"), col("band_hash"), col("slot"))
-          .repartition(col("slot"))
-          .write.mode(SaveMode.Overwrite).partitionBy("slot")
-          .option("partitionOverwriteMode", "static")
-          .parquet(s"$keysDir/batch_id=$bid"),
-        () => sh.withColumn("id_slot", pmod(xxhash64(col(idCol)), lit(Slots)))
-          .repartition(col("id_slot"))
-          .write.mode(SaveMode.Overwrite).partitionBy("id_slot")
-          .option("partitionOverwriteMode", "static")
-          .parquet(s"$shDir/batch_id=$bid")))
-      candsNew.unpersist()
-      keys.unpersist()
-      sh.unpersist()
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    // repartition BY the partition column before a partitionBy write:
+    // otherwise every one of the N shuffle tasks opens a file in every
+    // slot dir (N x Slots tiny files + that many committer renames);
+    // clustered, each slot dir gets one file. ALL THREE writes
+    // (matches, keys, shingles) are independent — different dirs;
+    // matches correctness never depended on write order (readers
+    // filter batch_id < bid) and a crash leaving any subset of the
+    // three dirs replays byte-identically (overwrite-by-batch-dir,
+    // with the takedown cutoff covering half-written batches) — so
+    // they run CONCURRENTLY ([[Parallel.runAll]]). Static overwrite
+    // explicitly: replay idempotence needs the whole batch dir
+    // REPLACED, whatever the session's partitionOverwriteMode.
+    Parallel.runAll(spark, Seq(
+      () => verified.write.mode(SaveMode.Overwrite)
+        .parquet(s"$indexPath/matches/batch_id=$bid"),
+      () => keys.select(col(idCol), col("band"), col("band_hash"), col("slot"))
+        .repartition(col("slot"))
+        .write.mode(SaveMode.Overwrite).partitionBy("slot")
+        .option("partitionOverwriteMode", "static")
+        .parquet(s"$keysDir/batch_id=$bid"),
+      () => sh.withColumn("id_slot", pmod(xxhash64(col(idCol)), lit(Slots)))
+        .repartition(col("id_slot"))
+        .write.mode(SaveMode.Overwrite).partitionBy("id_slot")
+        .option("partitionOverwriteMode", "static")
+        .parquet(s"$shDir/batch_id=$bid")))
+    candsNew.unpersist()
+    keys.unpersist()
+    sh.unpersist()
   }
 
   /** Per-user conversion-window state: first-signup anchor (Long.MaxValue

@@ -200,14 +200,4 @@ class DocStoreClusterSpec extends SparkTestBase {
     assert(got.filter(col("body") === "EDITED").count() == 6L)
     assert(DocStore.fsck(spark, path).filter(col("severity") === "error").isEmpty)
   }
-
-  test("clusterStats refuses the legacy flat layout (empty frame would read as disjoint)") {
-    val path = freshPath()
-    // a LEGACY flat store: data files at the collection root, no generations
-    (0 until 10).map(i => (i.toLong, 0, s"d$i")).toDF("id", "grp", "body")
-      .coalesce(1).write.json(path)
-    assert(intercept[IllegalStateException] {
-      DocStore.clusterStats(spark, path, "id")
-    }.getMessage.contains("flat layout"))
-  }
 }

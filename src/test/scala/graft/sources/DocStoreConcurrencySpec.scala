@@ -110,20 +110,6 @@ class DocStoreConcurrencySpec extends SparkTestBase {
     assert(DocStore.find(spark, path).count() == 2)
   }
 
-  test("flat-layout migration racing an append: straggler follows into the first generation") {
-    val path = freshPath()
-    new java.io.File(path).mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(path, "part-0.json"),
-      "{\"id\": 1, \"status\": \"old\"}".getBytes)
-    DocStore.insertManySeamed(Seq((2L, "new")).toDF("id", "status"), path,
-      afterStage = () => { // first rewrite migrates flat -> generations
-        DocStore.updateMany(spark, path, col("id") === 1L,
-          Map("status" -> lit("mig")))
-      },
-      beforeVisibilityCheck = () => ())
-    assert(rows(path) == Set((1L, "mig"), (2L, "new")))
-  }
-
   test("healStragglers: a crash-stranded straggler is recovered by the next write") {
     val path = freshPath()
     DocStore.insertMany(Seq((1L, "a")).toDF("id", "status"), path)

@@ -601,20 +601,6 @@ class DocStoreCowSpec extends SparkTestBase {
     assert(errs.isEmpty, errs.collect().mkString("; "))
   }
 
-  test("cowStats refuses the legacy flat layout (empty frame would read as zero garbage)") {
-    val path = java.nio.file.Files.createTempDirectory("graft-cowflat").toString
-    new java.io.File(path).delete()
-    // a LEGACY flat store: data files at the collection root, no generations
-    (0 until 10).map(i => (i.toLong, s"d$i")).toDF("id", "body")
-      .coalesce(1).write.json(path)
-    assert(intercept[IllegalStateException] {
-      DocStore.cowStats(spark, path)
-    }.getMessage.contains("flat layout"))
-    // migrated, it reports normally
-    DocStore.compact(spark, path, format = Some("parquet"))
-    assert(DocStore.cowStats(spark, path).count() >= 1L)
-  }
-
   test("a case-variant $set key updates the existing column in place (no silent nulling)") {
     val path = java.nio.file.Files.createTempDirectory("graft-cowcase").toString
     new java.io.File(path).delete()

@@ -218,19 +218,6 @@ class DocStoreDdlSpec extends SparkTestBase {
     assert(DocStore.find(spark, path).schema("score").dataType == DoubleType)
   }
 
-  test("legacy flat layout refuses DDL before any commit (no empty-generation debris)") {
-    val path = freshPath()
-    // a flat store: data file at the collection root, no generations
-    Seq((1L, "a"), (2L, "b")).toDF("id", "body").coalesce(1)
-      .write.json(path)
-    DocStore.collectStats(spark, path, Seq("id"))
-    assert(intercept[IllegalArgumentException] {
-      DocStore.addColumn(spark, path, "score", LongType)
-    }.getMessage.contains("flat layout"))
-    // no generation debris: the collection still reads its real data
-    assert(DocStore.find(spark, path).count() == 2)
-  }
-
   test("history is the metadata-only commit log across mutations and DDL") {
     val path = freshPath()
     seeded(path)                                           // insert/compact/cluster

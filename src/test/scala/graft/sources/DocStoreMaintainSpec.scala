@@ -172,22 +172,6 @@ class DocStoreMaintainSpec extends SparkTestBase {
       reclustered = false, rehomed = 0L))
   }
 
-  test("flat-layout migration inside maintain re-checks the keyCol guard") {
-    val path = freshPath()
-    // a LEGACY flat store (data files at the root, no generations): the
-    // entry check has nothing to demand stats of
-    (0 until 100).map(i => (i.toLong, s"d$i")).toDF("id", "body")
-      .repartition(4).write.json(path)
-    // entry check skips (flat layout has no stats to demand); the compact
-    // leg migrates to generations with NO stats — the re-check must then
-    // refuse loudly instead of letting maybeRecluster report healthy
-    // forever on an unstatted store
-    assert(intercept[IllegalArgumentException] {
-      DocStore.maintain(spark, path, keyCol = Some("id"), maxDataFiles = 1,
-        smallBytes = 1L << 20)
-    }.getMessage.contains("no min/max stats"))
-  }
-
   test("the file-count budget respects the file-size budget (no oscillation)") {
     val path = freshPath()
     seeded(path, 500, 5)

@@ -6,12 +6,9 @@ import graft.SparkTestBase
 class DocStoreSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshPath() = {
-    val d = java.nio.file.Files.createTempDirectory("graft-docstore").toString
-    // Spark wants to create the directory itself on first write
-    new java.io.File(d).delete()
-    d
-  }
+  // an existing empty directory is a collection that does not exist yet
+  private def freshPath() =
+    java.nio.file.Files.createTempDirectory("graft-docstore").toString
 
   test("insert heterogeneous batches; find infers the union schema") {
     val path = freshPath()
@@ -70,18 +67,55 @@ class DocStoreSpec extends SparkTestBase {
     assert(DocStore.find(spark, path).filter(col("status") === "done").count() == 3)
   }
 
-  test("legacy flat-directory collections read as-is and migrate on first rewrite") {
-    val path = freshPath()
-    // pre-manifest layout: JSON part files directly under the path
-    new java.io.File(path).mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(path, "part-0.json"),
+  test("one on-disk layout: an empty dir becomes gen 1; a root holding data files is refused untouched") {
+    // (a) an EXISTING empty directory is a collection that does not exist
+    // yet: reads see nothing, and the first insert commits gen 1 + manifest
+    val empty = freshPath()
+    assert(DocStore.find(spark, empty).isEmpty)
+    assert(DocStore.countFast(spark, empty) == 0L)
+    assert(DocStore.cowStats(spark, empty).isEmpty)
+    assert(DocStore.insertMany(Seq((1L, "a"), (2L, "b")).toDF("id", "grp"), empty) == 2)
+    assert(new java.io.File(s"$empty/gen-000001/_SUCCESS").exists())
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(empty, "_MANIFEST")).trim == "gen-000001")
+    assert(new java.io.File(empty).list().toSet.filterNot(_.startsWith(".")) ==
+      Set("_MANIFEST", "gen-000001"))
+    // ...and the generational surfaces work on it from the first commit
+    val cur = DocStore.cursor(spark, empty)
+    assert(cur.generation == 1 && cur.files.nonEmpty)
+    DocStore.insertMany(Seq((3L, "c")).toDF("id", "grp"), empty)
+    val (changes, next) = DocStore.changesSince(spark, empty, cur, "id")
+    assert(changes.select("id", "change").as[(Long, String)].collect().toSeq ==
+      Seq((3L, "inserted")))
+    assert(DocStore.updateMany(spark, empty, col("id") === 1L, Map("grp" -> lit("z"))) == 1)
+    val (changes2, _) = DocStore.changesSince(spark, empty, next, "id")
+    assert(changes2.select("id", "change").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "updated")))
+    assert(DocStore.cowStats(spark, empty).count() >= 1L)
+
+    // (b) a root holding a data file and no generation (the pre-manifest
+    // layout) is refused by every surface with the one message, before
+    // anything is written
+    val flat = freshPath()
+    java.nio.file.Files.write(java.nio.file.Paths.get(flat, "part-0.json"),
       "{\"id\": 1, \"grp\": \"a\"}\n{\"id\": 2, \"grp\": \"b\"}".getBytes)
-    assert(DocStore.find(spark, path).count() == 2)
-    // first rewrite migrates to generations; data and semantics carry over
-    assert(DocStore.deleteMany(spark, path, Some(col("grp") === "a")) == 1)
-    assert(new java.io.File(s"$path/_MANIFEST").exists())
-    assert(!new java.io.File(s"$path/part-0.json").exists()) // legacy reclaimed
-    assert(DocStore.find(spark, path).select("id").as[Long].collect().toSeq == Seq(2L))
+    def snapshot(): Map[String, Seq[Byte]] =
+      new java.io.File(flat).listFiles().map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = snapshot()
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("unsupported pre-manifest layout") &&
+        e.getMessage.contains("must be rebuilt"), e.getMessage)
+    }
+    refused(DocStore.find(spark, flat))
+    refused(DocStore.insertMany(Seq((3L, "c")).toDF("id", "grp"), flat))
+    refused(DocStore.updateMany(spark, flat, col("id") === 1L, Map("grp" -> lit("z"))))
+    refused(DocStore.cursor(spark, flat))
+    refused(DocStore.cowStats(spark, flat))
+    // byte-for-byte untouched: no manifest, no empty-generation debris
+    assert(snapshot() == before)
+    assert(new java.io.File(flat).list().toSeq == Seq("part-0.json"))
   }
 
   test("an interrupted manifest commit recovers to the newest complete generation") {
@@ -470,6 +504,25 @@ class DocStoreSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       DocStore.changesSince(spark, path, -5, "id")
     }
+  }
+
+  test("changesSince: the duplicate-key guard survives a change-free projection") {
+    val path = freshPath()
+    // id 1 twice: a store that violates the unique-key contract
+    DocStore.insertMany(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "v"), path)
+    val g0 = DocStore.generations(spark, path).last
+    val cur = DocStore.cursor(spark, path)
+    // no stats, so a full rewrite: nothing is carried and both sides of
+    // the diff read the duplicate
+    DocStore.updateMany(spark, path, col("id") === 2L, Map("v" -> lit("C")), retain = 3)
+    def raises(changes: org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](changes.select("id", "after").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("id is not unique")), e.toString)
+    }
+    raises(DocStore.changesSince(spark, path, g0, "id"))
+    raises(DocStore.changesSince(spark, path, cur, "id")._1)
   }
 
   test("docstore TVF: SQL reads the live snapshot and time-travels") {
