@@ -567,7 +567,9 @@ object DocStore {
     * they cannot).
     *
     * Severities: `error` = a read surface is (or may be) wrong right now
-    * (dangling/incomplete manifest target, unparseable sidecar);
+    * (dangling/incomplete manifest target, unparseable sidecar, data
+    * files at a root with no generation — the pre-manifest layout every
+    * surface refuses);
     * `warn` = debris or drift the next write heals or that only costs
     * performance (crash-orphaned generations, leftover staging dirs,
     * stats entries for vanished files, unstatted data files, data files
@@ -612,6 +614,8 @@ object DocStore {
           warn("manifest-missing",
             f"no manifest; reads resolve to gen-${complete.last}%06d and the " +
               "next write rewrites the manifest (crash between delete and rename)")
+        case None if dataFileNames(fs, path).nonEmpty =>
+          err("pre-manifest-layout", rootDataMessage(path))
         case None => ()
       }
       // crash-orphaned complete generations: never a committed state,
@@ -880,17 +884,19 @@ object DocStore {
     * never-committed generations fail loudly rather than diffing wrong
     * data.
     *
-    * Plan shape: ONE full-outer join on `keyCol` (null-safe), change type
-    * decided by side-presence, `updated` by comparing the row structs
-    * with null-safe equality over the UNION schema (a column added by
-    * schema evolution reads as null on the old side, so a doc whose new
-    * column is non-null correctly reports `updated`). Output:
+    * Plan shape: the two sides tagged and unioned, then ONE per-key
+    * aggregate (one shuffle per diff step; a null key groups with null,
+    * as a null-safe join would match it). The change type is decided by
+    * side-presence, `updated` by comparing the row structs with
+    * null-safe equality over the UNION schema (a column added by schema
+    * evolution reads as null on the old side, so a doc whose new column
+    * is non-null correctly reports `updated`). Output:
     * (key, change, before, after) — before/after are full-row structs,
     * null on the absent side. Requires `keyCol` to be unique per
-    * generation — enforced in-plan (a per-key count carried through the
-    * diff aggregation raises on n > 1 when the diff is consumed), so the
-    * check costs zero extra passes and a duplicated key can never
-    * silently fan out the join.
+    * generation — enforced in-plan (per-side counts carried through the
+    * aggregate raise on n > 1 when the diff is consumed), so the check
+    * costs zero extra passes and a duplicated key can never silently
+    * pick one of its rows.
     */
   def diffGenerations(spark: SparkSession, path: String, fromGen: Int,
                       toGen: Int, keyCol: String): DataFrame = {
@@ -902,7 +908,7 @@ object DocStore {
     // and a key residing in a shared file on either side resides in the
     // SAME shared file on both (its one copy travels with the file), so
     // reading only the files the sides do NOT share produces the
-    // identical change set while the join's inputs shrink from snapshot-
+    // identical change set while the diff's inputs shrink from snapshot-
     // sized to O(files the rewrite touched) — the property that makes a
     // CDC poll across a COW mutation delta-sized at 100 TB instead of
     // corpus-sized. Applied ONLY when both generations carry the SAME
@@ -978,29 +984,31 @@ object DocStore {
     }
     val av = conform(a)
     val bv = conform(b)
-    // uniqueness enforced INSIDE the diff pass, not as separate eager
-    // count jobs: each side aggregates per key (count + the row struct —
-    // `first` is exact because any n > 1 raises below before a row can
-    // leave the plan), the aggregate's hash partitioning feeds the join
-    // with no extra exchange, and the guard rides the `change` projection
-    // as a raise_error branch that the unchanged-filter must evaluate.
-    // The old shape ran a groupBy-count-limit ACTION per side per
-    // generation pair before the consumer's own job — a CDC poll across
-    // a rewrite boundary paid three snapshot-sized passes per pair where
-    // the join itself needs one.
-    def keyed(df: DataFrame, side: String): DataFrame =
-      df.groupBy(col(keyCol).as(s"__k_$side"))
-        .agg(count(lit(1)).as(s"__n_$side"),
-          first(struct(allCols.map(col): _*)).as(s"__$side"))
-    keyed(av, "before").join(keyed(bv, "after"),
-        col("__k_before") <=> col("__k_after"), "full_outer")
+    // ONE aggregate over both sides: tag each row with its side, union,
+    // group by key — one exchange per diff step (a null-safe join of
+    // per-side aggregates pays two per side: its keys do not match the
+    // aggregates' partitioning). Per side it carries the row count and
+    // the row struct (`first` ignoring the other side's nulls — exact,
+    // because any n > 1 raises below before a row can leave the plan).
+    // Uniqueness is enforced INSIDE the diff pass, not as separate eager
+    // count jobs: the guard rides the `change` projection as a
+    // raise_error branch that the unchanged-filter must evaluate.
+    def tagged(df: DataFrame, before: Boolean): DataFrame =
+      df.select(col(keyCol).as("__k"), lit(before).as("__b"),
+        struct(allCols.map(col): _*).as("__row"))
+    def onSide(before: Boolean): Column = col("__b") === lit(before)
+    tagged(av, before = true).unionByName(tagged(bv, before = false))
+      .groupBy(col("__k"))
+      .agg(count(when(onSide(true), 1)).as("__n_before"),
+        count(when(onSide(false), 1)).as("__n_after"),
+        first(when(onSide(true), col("__row")), ignoreNulls = true).as("__before"),
+        first(when(onSide(false), col("__row")), ignoreNulls = true).as("__after"))
       .select(
-        coalesce(col("__k_before"), col("__k_after")).as(keyCol),
-        when(coalesce(col("__n_before"), lit(1L)) > 1L ||
-             coalesce(col("__n_after"), lit(1L)) > 1L,
+        col("__k").as(keyCol),
+        when(col("__n_before") > 1L || col("__n_after") > 1L,
             raise_error(concat(
               lit(s"docstore diff: $keyCol is not unique in generation (key "),
-              coalesce(col("__k_before"), col("__k_after")).cast("string"),
+              col("__k").cast("string"),
               lit(")"))).cast("string"))
           .when(col("__before").isNull, lit("inserted"))
           .when(col("__after").isNull, lit("deleted"))
@@ -1091,9 +1099,9 @@ object DocStore {
     * rows appended since the cursor are recovered by reading ONLY the new
     * files — the common poll (head generation, a small append or nothing
     * new) reads appended bytes or no bytes at all, never a full snapshot
-    * and never a join. Rewrite boundaries (update/delete/compact/cluster)
-    * still cost one full-outer join per retained pair — inherent, the
-    * rewrite really did touch every row. No extra manifest state is
+    * and never a diff. Rewrite boundaries (update/delete/compact/cluster)
+    * still cost one [[diffGenerations]] aggregate per retained pair over
+    * the files the rewrite touched. No extra manifest state is
     * recorded for this: the file listing IS the membership delta (listing
     * minus cursor), which is exactly as informative as a commit-time
     * file-delta log would be and keeps appends coordination-free.
@@ -3689,10 +3697,15 @@ object DocStore {
     */
   private def requireNoRootData(fs: FileSystem, path: String): Unit =
     if (fs.exists(new Path(path)) && dataFileNames(fs, path).nonEmpty)
-      throw new IllegalStateException(
-        s"docstore: $path holds data files at its root and no generation — " +
-          "an unsupported pre-manifest layout; the store must be rebuilt " +
-          "(read its files with spark.read and insertMany them into a new path)")
+      throw new IllegalStateException(rootDataMessage(path))
+
+  /** The one wording for a root holding data files and no generation:
+    * the read and write surfaces refuse with it, [[fsck]] reports it.
+    */
+  private def rootDataMessage(path: String): String =
+    s"docstore: $path holds data files at its root and no generation — " +
+      "an unsupported pre-manifest layout; the store must be rebuilt " +
+      "(read its files with spark.read and insertMany them into a new path)"
 
   private def readManifest(fs: FileSystem, path: String): Option[String] = {
     val m = new Path(path, Manifest)

@@ -4,15 +4,41 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.core.Parallel
 import graft.sources.DocStore
 
 /** One batch-dir tree of a derived index: `dir/batch_id=N[/partCol=V]/`.
   * `pairs` marks a tree whose rows name index ids as an `(id_a, id_b)`
-  * pair (the near-dup matches) rather than in the id column.
+  * pair (the near-dup matches) rather than in the id column. `data` is
+  * the tree's file columns when the caller knows their exact types (a
+  * sync poll or batch, from the rows it indexes); reads then declare the
+  * schema instead of paying a footer-inference job. Callers holding only
+  * foreign input (ids passed to a public takedown or probe) leave it
+  * unset: those types need not match the files'.
   */
 private[streaming] final case class BatchTree(dir: String, partCol: Option[String],
-                                              pairs: Boolean = false)
+                                              pairs: Boolean = false,
+                                              data: Option[StructType] = None) {
+
+  /** Every batch of the tree: its file columns, then `batch_id` and
+    * `partCol` as partition columns.
+    */
+  def read(spark: SparkSession): DataFrame = readAt(spark, dir, "batch_id" +: partCol.toSeq)
+
+  /** One batch dir: its file columns, then `partCol`. */
+  def readBatch(spark: SparkSession, b: Long): DataFrame =
+    readAt(spark, s"$dir/batch_id=$b", partCol.toSeq)
+
+  // the declared partition columns carry the type discovery infers for
+  // them: int (slots, cells and batch ids all lie in int range)
+  private def readAt(spark: SparkSession, path: String, parts: Seq[String]): DataFrame =
+    data.fold(spark.read.parquet(path)) { d =>
+      spark.read.schema(StructType(d.fields.map(_.copy(nullable = true)) ++
+          parts.map(StructField(_, IntegerType))))
+        .parquet(path)
+    }
+}
 
 /** The on-disk layout of one derived index: the root holding the `_SYNC`
   * and `_META` sidecars, the batch-dir trees, and the takedown tombstone
@@ -174,20 +200,29 @@ private[streaming] trait DerivedIndex {
     * seeded elsewhere can hold ids the first poll reports as "inserted",
     * whose stale entries nothing reconciles.
     *
-    * `extra(side)` adds per-id aggregates over the window's before/after
-    * images for `remove` to read (the IVF cell hint); `pin` materializes
-    * an ingested poll's result before a fold can merge its batch dir
-    * away. `maxBatchDirs > 0` folds committed batch dirs after every poll
-    * ([[foldIndex]]). At 100 TB each poll costs O(changed documents +
-    * their batch dirs), never an index or corpus rescan.
+    * The kind supplies `layout`: the index layout, given the schema of
+    * the (id, content) rows it indexes when the poll knows it, so the
+    * takedown reads each tree with a declared schema. `extra(side)` adds
+    * per-id aggregates over the window's before/after images; `hint` is a
+    * long over a per-id row (its columns plus the `extra` ones), and
+    * `scope(ix, hints)` is the takedown's discovery scan given the
+    * distinct hints of the removed ids (the IVF cells or near-dup id
+    * slots their superseded content lives in; nulls are skipped). `pin`
+    * materializes an ingested poll's result before a fold can merge its
+    * batch dir away. `maxBatchDirs > 0` folds committed batch dirs after
+    * every poll ([[foldIndex]]). At 100 TB each poll costs O(changed
+    * documents + their batch dirs), never an index or corpus rescan.
     */
   private[streaming] def syncIndex[R](spark: SparkSession, srcPath: String,
-                                      ix: IndexLayout, kind: String, what: String,
+                                      layout: Option[StructType] => IndexLayout,
+                                      kind: String, what: String,
                                       idCol: String, content: String,
                                       maxBatchDirs: Int, none: => R, pin: R => R,
-                                      extra: (String => Column) => Seq[Column])(
+                                      extra: (String => Column) => Seq[Column],
+                                      hint: Column)(
                                       ingest: (DataFrame, Long) => R)(
-                                      remove: DataFrame => Unit): R = {
+                                      scope: (IndexLayout, Seq[Long]) => Option[DataFrame]): R = {
+    val ix = layout(None)
     val fs = fsOf(spark, ix.root)
     registerIndex(spark, srcPath, ix.root, kind) // maintainAll discovery
     def fold(): Unit =
@@ -226,8 +261,7 @@ private[streaming] trait DerivedIndex {
         // absent content in a window's structs == null content (the
         // schemaless convention): a null -> null "change" is no change
         def side(s: String): Column = {
-          val st = changes.schema(s).dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
+          val st = changes.schema(s).dataType.asInstanceOf[StructType]
           if (st.fieldNames.contains(content)) col(s"$s.$content") else lit(null)
         }
         // ONE per-id pass over the window (checkpointed, so the window's
@@ -239,7 +273,10 @@ private[streaming] trait DerivedIndex {
         // before and deletes via the null after); `__old` = any
         // non-inserted change (only those ids can have superseded content
         // in the index); `__after` = the latest content (null when the
-        // net effect is a delete).
+        // net effect is a delete). Every decision below rides the
+        // checkpoint job as an Observation: how many ids changed, how many
+        // need a takedown or an ingest, and the bounded hint set.
+        val polled = org.apache.spark.sql.Observation()
         val perId = changes
           .groupBy(col(idCol))
           .agg(max(when(!(side("before") <=> side("after")), 1).otherwise(0)).as("__tc"),
@@ -248,8 +285,14 @@ private[streaming] trait DerivedIndex {
                 col("generation")).as("__after") +:
               extra(side)): _*)
           .filter(col("__tc") === 1)
+          .observe(polled, count(lit(1)).as("ids"),
+            count(when(col("__old") === 1, 1)).as("old"),
+            count(when(col("__after").isNotNull, 1)).as("new"),
+            collect_set(when(col("__old") === 1, hint.cast("long"))).as("hints"))
           .localCheckpoint(true)
-        if (perId.isEmpty) { // metadata-only window: cursor advance only
+        val seen = polled.get
+        def seenCount(m: String): Long = seen(m).asInstanceOf[Long]
+        if (seenCount("ids") == 0L) { // metadata-only window: cursor advance only
           writeSync(fs, ix.root, next, lastBid)
           fold()
           return none
@@ -260,13 +303,17 @@ private[streaming] trait DerivedIndex {
         // window carries an update or delete. The takedown writes no
         // tombstones here — a crashed poll must re-ingest the very ids it
         // just removed at the SAME batch id.
-        val toRemove = perId.filter(col("__old") === 1)
-        if (!toRemove.isEmpty) remove(toRemove)
         val toIngest = perId.filter(col("__after").isNotNull)
           .select(col(idCol), col("__after").as(content))
+        val nOld = seenCount("old")
+        if (nOld != 0L) {
+          val typed = layout(Some(toIngest.schema))
+          val hints = seen("hints").asInstanceOf[Seq[Long]].sorted
+          takedownDistinct(spark, typed, perId.filter(col("__old") === 1).select(col(idCol)),
+            idCol, tombstone = false, Some(nOld))(_ => scope(typed, hints))
+        }
         val bid = lastBid + 1
-        // perId is checkpointed: isEmpty is a local probe
-        val ingested = !toIngest.isEmpty
+        val ingested = seenCount("new") != 0L
         val r = if (ingested) ingest(toIngest, bid) else none
         writeSync(fs, ix.root, next, if (ingested) bid else lastBid)
         if (maxBatchDirs <= 0) r
@@ -317,15 +364,20 @@ private[streaming] trait DerivedIndex {
     * between its parallel tree writes exists in some trees only, and its
     * replay must stay covered) — so a crash later leaves the replay filter
     * in place and re-running finishes the purge; then ONE discovery
-    * aggregate (removed count + affected batch set, bounded collects,
-    * never ids) over `scope(ids)` — the (id, batch_id) rows that can hold
+    * aggregate (removed count + affected batch set, bounded collects)
+    * over `scope(ids)` — the (id, batch_id) rows that can hold
     * the ids, pruned by what the kind knows, None when nothing can match;
     * then every affected batch dir is rewritten STAGE-THEN-SWAP (written
     * to a private staging dir while the live dir stays intact, then
     * delete + rename; [[healTakedowns]] closes the one remaining metadata
     * gap). A tree keyed by pairs finds its affected dirs by its own scan
-    * (a later batch's row can name an earlier removed id). Rewrites
-    * target disjoint dirs and run concurrently ([[Parallel.runAll]]).
+    * (a later batch's row can name an earlier removed id), run alongside
+    * the discovery aggregate. Discoveries and rewrites each run
+    * concurrently ([[Parallel.runAll]]).
+    *
+    * The ids are matched by join, or by value (`isin`) when the caller
+    * knows there are at most [[ByValueIdCap]] of them: then the only
+    * collect of ids is that bounded one.
     *
     * `tombstone = false` is for the sync poll, whose crashed-poll replay
     * must re-ingest the very ids it just removed at the same batch id.
@@ -334,64 +386,98 @@ private[streaming] trait DerivedIndex {
   private[streaming] def takedown(spark: SparkSession, ix: IndexLayout, ids: DataFrame,
                                   idCol: String, tombstone: Boolean)(
                                   scope: DataFrame => Option[DataFrame]): Long = {
+    val idDf = ids.select(col(idCol)).distinct().cache()
+    try takedownDistinct(spark, ix, idDf, idCol, tombstone)(scope)
+    finally idDf.unpersist()
+  }
+
+  /** The most ids a takedown collects to the driver to filter on by
+    * value (`isin`) rather than by joins against the id frame, each of
+    * which is a broadcast job of its own. Filtering only; never a
+    * semantics change.
+    */
+  private val ByValueIdCap = 10000L
+
+  /** [[takedown]] of `idDf`, a frame of DISTINCT ids in `idCol` that is
+    * cheap to read more than once (cached or checkpointed); `nIds` is its
+    * row count when the caller already knows it.
+    */
+  private[streaming] def takedownDistinct(spark: SparkSession, ix: IndexLayout,
+                                          idDf: DataFrame, idCol: String,
+                                          tombstone: Boolean,
+                                          nIds: Option[Long] = None)(
+                                          scope: DataFrame => Option[DataFrame]): Long = {
     val fs = fsOf(spark, ix.root)
     healAll(fs, ix)
     val present = ix.trees.map(t => healTakedowns(fs, t.dir))
     if (present.forall(_.isEmpty)) return 0L
-    val idDf = ids.select(col(idCol)).distinct().cache()
-    def done(n: Long): Long = { idDf.unpersist(); n }
-    def idsAs(c: String): DataFrame =
-      if (c == idCol) idDf else idDf.select(col(idCol).as(c))
     val scoped = scope(idDf) match {
       case Some(df) => df
-      case None => return done(0L)
+      case None => return 0L
     }
+    // the ids by value when few (one collect), else by join
+    val byValue = nIds.filter(_ <= ByValueIdCap)
+      .map(_ => idDf.collect().toSeq.map(_.get(0)).filter(_ != null))
+    def idsAs(c: String): DataFrame =
+      if (c == idCol) idDf else idDf.select(col(idCol).as(c))
+    // rows of `df` whose column `c` holds (or does not hold) a removed id;
+    // a null never matches, as under the joins, so the anti side keeps it
+    def withIds(df: DataFrame, c: String): DataFrame = byValue.fold(
+      df.join(idsAs(c), Seq(c), "leftsemi"))(v => df.filter(col(c).isin(v: _*)))
+    def withoutIds(df: DataFrame, c: String): DataFrame = byValue.fold(
+      df.join(idsAs(c), Seq(c), "left_anti"))(
+      v => df.filter(!coalesce(col(c).isin(v: _*), lit(false))))
     if (tombstone)
       idDf.withColumn("cutoff_bid", lit(present.flatten.max))
         .write.mode(SaveMode.Append).parquet(ix.tombstones)
-    // batch_id cast first: partition-dir values infer as int
-    val disc = scoped.select(col(idCol), col("batch_id"))
-      .join(idDf, Seq(idCol), "leftsemi")
-      .agg(countDistinct(col(idCol)).as("__n"),
-        collect_set(col("batch_id").cast("long")).as("__bs"))
-      .head()
-    val removed = disc.getLong(0)
-    if (removed == 0L) return done(0L)
-    val found = disc.getSeq[Long](1).sorted
+    val trees = ix.trees.zip(present)
+    val pairTrees = trees.collect { case (t, ps) if t.pairs && ps.nonEmpty => t }
+    // the removed count, then the affected batches: ONE exchange groups
+    // the found ids with their batches, and the id-sized groups then fold
+    // in a single task (coalesce(1) needs no second exchange). batch_id
+    // cast first: partition-dir values infer as int
+    def discover(): Seq[Long] = {
+      val disc = withIds(scoped.select(col(idCol), col("batch_id").cast("long").as("__b")), idCol)
+        .groupBy(col(idCol)).agg(collect_set(col("__b")).as("__bs"))
+        .coalesce(1)
+        .agg(count(lit(1)), array_distinct(flatten(collect_list(col("__bs")))))
+        .head()
+      disc.getLong(0) +: disc.getSeq[Long](1).sorted
+    }
+    def pairBatches(t: BatchTree): Seq[Long] = {
+      val m = t.read(spark)
+      Seq("id_a", "id_b")
+        .map(c => withIds(m, c).select(col("batch_id").cast("long")))
+        .reduce(_ union _)
+        .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    }
+    val found = Parallel.runAll(spark,
+      (() => discover()) +: pairTrees.map(t => () => pairBatches(t)))
+    val removed = found.head.head
+    if (removed == 0L) return 0L
     def rewrite(t: BatchTree, b: Long): () => Unit = () => {
       val keyCols = if (t.pairs) Seq("id_a", "id_b") else Seq(idCol)
-      val kept = keyCols.foldLeft(spark.read.parquet(s"${t.dir}/batch_id=$b")) {
-        (df, c) => df.join(idsAs(c), Seq(c), "left_anti")
-      }
+      val kept = keyCols.foldLeft(t.readBatch(spark, b))(withoutIds)
       val tmp = new Path(t.dir, s".takedown-b$b-${java.util.UUID.randomUUID()}")
-      t.partCol match {
-        case Some(pc) =>
-          kept.repartition(col(pc))
-            .write.mode(SaveMode.Overwrite).partitionBy(pc).parquet(tmp.toString)
-        case None => kept.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      }
+      // no repartition by `partCol`, so no shuffle: every file of the
+      // batch dir lies in one partCol dir, so a scan task writes at most
+      // one file per file (split) it reads
+      val w = kept.write.mode(SaveMode.Overwrite)
+      t.partCol.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
       val target = new Path(t.dir, s"batch_id=$b")
       fs.delete(target, true)
       if (!fs.rename(tmp, target))
         throw new java.io.IOException(s"index takedown: cannot swap $tmp -> $target")
     }
-    val trees = ix.trees.zip(present)
     // a crashed ingest's parallel writes can leave a batch in some trees
     // only: rewrite whichever trees hold it (the tombstone covers its replay)
-    val idRewrites = found.flatMap(b => trees.collect {
+    val idRewrites = found.head.tail.flatMap(b => trees.collect {
       case (t, ps) if !t.pairs && ps.contains(b) => rewrite(t, b)
     })
-    val pairRewrites = trees.collect { case (t, ps) if t.pairs && ps.nonEmpty => t }
-      .flatMap { t =>
-        val m = spark.read.parquet(t.dir)
-        Seq("id_a", "id_b")
-          .map(c => m.join(idsAs(c), Seq(c), "leftsemi").select(col("batch_id").cast("long")))
-          .reduce(_ union _)
-          .distinct().collect().map(_.getLong(0)).toSeq.sorted
-          .map(b => rewrite(t, b))
-      }
+    val pairRewrites = pairTrees.zip(found.tail)
+      .flatMap { case (t, bs) => bs.map(b => rewrite(t, b)) }
     Parallel.runAll(spark, idRewrites ++ pairRewrites)
-    done(removed)
+    removed
   }
 
   // ---- batch-dir fold -----------------------------------------------

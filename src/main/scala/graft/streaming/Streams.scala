@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import graft.core.Parallel
 
 final case class SessionState(startMs: Long, lastMs: Long, n: Int, sumValue: Double)
@@ -532,10 +534,14 @@ object Streams extends DerivedIndex {
 
   /** The IVF layout: `batch_id=N/cell=M/` at the root, tombstones in
     * `_tombstones` (underscore-prefixed so `spark.read.parquet(indexPath)`
-    * partition discovery never sees them as data dirs).
+    * partition discovery never sees them as data dirs). `data` is the
+    * indexed rows' columns when known (a CDC-synced index holds exactly
+    * the id and the embedding); a stream-built index holds whatever its
+    * stream carried.
     */
-  private def ivfLayout(indexPath: String): IndexLayout =
-    IndexLayout(indexPath, Seq(BatchTree(indexPath, Some("cell"))),
+  private def ivfLayout(indexPath: String,
+                        data: Option[StructType] = None): IndexLayout =
+    IndexLayout(indexPath, Seq(BatchTree(indexPath, Some("cell"), data = data)),
       s"$indexPath/_tombstones")
 
   /** One IVF ingest batch: tombstone-filter, assign cells, publish as
@@ -624,14 +630,14 @@ object Streams extends DerivedIndex {
                          cellHints: Option[Seq[Long]] = None): Long = {
     require(fsOf(spark, indexPath).exists(new Path(indexPath)),
       s"removeFromIvfIndex: no index at $indexPath")
-    takedown(spark, ivfLayout(indexPath), ids, idCol, tombstone)(
-      _ => Some(ivfScope(spark, indexPath, cellHints)))
+    val ix = ivfLayout(indexPath)
+    takedown(spark, ix, ids, idCol, tombstone)(_ => Some(ivfScope(spark, ix, cellHints)))
   }
 
   /** The IVF takedown's discovery scan, pruned to `cells` when given. */
-  private def ivfScope(spark: SparkSession, indexPath: String,
+  private def ivfScope(spark: SparkSession, ix: IndexLayout,
                        cells: Option[Seq[Long]]): DataFrame = {
-    val all = spark.read.parquet(indexPath)
+    val all = ix.trees.head.read(spark)
     cells.fold(all)(cs => all.filter(col("cell").isin(cs: _*)))
   }
 
@@ -650,34 +656,29 @@ object Streams extends DerivedIndex {
     * after both. The takedown's discovery scan is CELL-HINTED: the
     * superseded vectors live in the cells their before-images (the
     * window's first change per id) assign to under the `_META`-pinned
-    * model. The model must stay FIXED across polls (fit once, persist via
-    * ModelStore, serve forever — refitting would scramble cell ids under
-    * the existing index).
+    * model, and that cell set rides the poll's checkpoint job. The model
+    * must stay FIXED across polls (fit once, persist via ModelStore, serve
+    * forever — refitting would scramble cell ids under the existing
+    * index).
     */
   def syncIvfIndex(spark: SparkSession, srcPath: String, indexPath: String,
                    model: graft.sim.Ann.IvfModel,
                    idCol: String = "vec_id", embCol: String = "embedding",
                    maxBatchDirs: Int = 0): Long = {
     requireIvfGeometry(fsOf(spark, indexPath), indexPath, model, "syncIvfIndex")
-    val ix = ivfLayout(indexPath)
-    syncIndex[Long](spark, srcPath, ix, "ivf", "syncIvfIndex", idCol, embCol,
-      maxBatchDirs, 0L, identity,
-      side => Seq(min_by(side("before"), col("generation")).as("__embBefore")))(
-      ivfBatch(_, _, indexPath, model, idCol, embCol)) { toRemove =>
-      takedown(spark, ix, toRemove.select(col(idCol)), idCol, tombstone = false) { _ =>
-        // bounded driver collect: DISTINCT CELLS of the superseded
-        // vectors (<= nCells values, never ids). A null before-image
-        // (the doc carried no embedding at the cursor) was never
-        // indexed, so its absence from the hint is exact. Crash-replay
-        // sound: a replayed poll's after-image copies live only in
-        // batch `bid`, which the ivfBatch after the takedown overwrites
-        // whole.
-        val cells = toRemove.filter(col("__embBefore").isNotNull)
-          .select(model.assign(col("__embBefore")).cast("long").as("c"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        Some(ivfScope(spark, indexPath, Some(cells)))
-      }
-      ()
+    // the hint: the DISTINCT CELLS of the superseded vectors (<= nCells
+    // values, never ids). A null before-image (the doc carried no
+    // embedding at the cursor) was never indexed, so its absence from the
+    // hint is exact. Crash-replay sound: a replayed poll's after-image
+    // copies live only in batch `bid`, which the ivfBatch after the
+    // takedown overwrites whole. A synced index holds exactly the polled
+    // (id, embedding) rows, so they give its layout's file columns.
+    syncIndex[Long](spark, srcPath, ivfLayout(indexPath, _), "ivf", "syncIvfIndex",
+      idCol, embCol, maxBatchDirs, 0L, identity,
+      side => Seq(min_by(side("before"), col("generation")).as("__embBefore")),
+      when(col("__embBefore").isNotNull, model.assign(col("__embBefore"))))(
+      ivfBatch(_, _, indexPath, model, idCol, embCol)) { (ix, cells) =>
+      if (cells.isEmpty) None else Some(ivfScope(spark, ix, Some(cells)))
     }
   }
 
@@ -762,12 +763,27 @@ object Streams extends DerivedIndex {
     */
   private val Slots = 16L
 
-  private def nearDupLayout(indexPath: String): IndexLayout =
+  /** A near-dup id's shingles slot. */
+  private def idSlot(id: Column): Column = pmod(xxhash64(id), lit(Slots))
+
+  /** The near-dup layout: `keys` (slot), `shingles` (id_slot) and
+    * `matches` (pairs, unpartitioned), in that order. Given the id field,
+    * every tree's file columns are known: they are the columns the
+    * [[graft.dedup.MinHashDedup]] kernels write (band is the posexplode
+    * position, shingles are strings).
+    */
+  private def nearDupLayout(indexPath: String,
+                            id: Option[StructField] = None): IndexLayout = {
+    def data(fields: StructField => Seq[StructField]) = id.map(i => StructType(fields(i)))
     IndexLayout(indexPath,
-      Seq(BatchTree(s"$indexPath/keys", Some("slot")),
-        BatchTree(s"$indexPath/shingles", Some("id_slot")),
-        BatchTree(s"$indexPath/matches", None, pairs = true)),
+      Seq(BatchTree(s"$indexPath/keys", Some("slot"), data = data(i =>
+          Seq(i, StructField("band", IntegerType), StructField("band_hash", LongType)))),
+        BatchTree(s"$indexPath/shingles", Some("id_slot"), data = data(i =>
+          Seq(i, StructField("sh", ArrayType(StringType))))),
+        BatchTree(s"$indexPath/matches", None, pairs = true, data = data(i =>
+          Seq(i.copy(name = "id_a"), i.copy(name = "id_b"), StructField("jaccard", DoubleType))))),
       s"$indexPath/tombstones")
+  }
 
   /** Validate against the index's LSH geometry, persisted as `_META` by
     * the first ingest batch: band hashes are only comparable when shingle
@@ -867,7 +883,7 @@ object Streams extends DerivedIndex {
       .filter(col("id_a") =!= col("id_b")) // a doc probed against an index containing it
       .select("id_a", "id_b").distinct()
     val candSlots = cands
-      .select(pmod(xxhash64(col("id_b")), lit(Slots)).as("s"))
+      .select(idSlot(col("id_b")).as("s"))
       .distinct().collect().map(_.getLong(0)).toSeq
     if (candSlots.isEmpty) { sh.unpersist(); keys.unpersist(); return emptyResult }
     val storedSh = spark.read.parquet(shDir)
@@ -936,21 +952,21 @@ object Streams extends DerivedIndex {
     require(fs.exists(new Path(s"$indexPath/keys")) &&
         fs.exists(new Path(s"$indexPath/shingles")),
       s"removeFromNearDupIndex: $indexPath has no keys/shingles dirs")
-    takedown(spark, nearDupLayout(indexPath), ids, idCol, tombstone)(
-      nearDupScope(spark, indexPath, idCol))
+    val ix = nearDupLayout(indexPath)
+    takedown(spark, ix, ids, idCol, tombstone) { idDf =>
+      // bounded driver collect: the ids' id-slots, at most `Slots` values
+      nearDupScope(spark, ix, idDf.select(idSlot(col(idCol)))
+        .distinct().collect().map(_.getLong(0)).toSeq)
+    }
   }
 
   /** The near-dup takedown's discovery scan: the shingles tree pruned to
-    * the ids' id-slots (a bounded collect of at most `Slots` values).
+    * the removed ids' id-slots.
     */
-  private def nearDupScope(spark: SparkSession, indexPath: String, idCol: String)(
-                           idDf: DataFrame): Option[DataFrame] = {
-    val idSlots = idDf.select(pmod(xxhash64(col(idCol)), lit(Slots)).as("s"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+  private def nearDupScope(spark: SparkSession, ix: IndexLayout,
+                           idSlots: Seq[Long]): Option[DataFrame] =
     if (idSlots.isEmpty) None
-    else Some(spark.read.parquet(s"$indexPath/shingles")
-      .filter(col("id_slot").isin(idSlots: _*)))
-  }
+    else Some(ix.trees(1).read(spark).filter(col("id_slot").isin(idSlots: _*)))
 
   /** MAINTENANCE for a near-dup index: fold accumulated batch dirs of
     * keys/shingles/matches into one consolidated dir each, whenever any
@@ -1065,22 +1081,17 @@ object Streams extends DerivedIndex {
     val fs = fsOf(spark, indexPath)
     requireNearDupGeometry(fs, indexPath, k, bands, rowsPerBand,
       "syncNearDupIndex")
-    val ix = nearDupLayout(indexPath)
-    def matchesOf(bid: Long): DataFrame = {
-      val d = s"$indexPath/matches/batch_id=$bid"
-      if (fs.exists(new Path(d))) spark.read.parquet(d) else emptyMatches(spark)
-    }
-    syncIndex[DataFrame](spark, srcPath, ix, "neardup", "syncNearDupIndex",
-      idCol, textCol, maxBatchDirs, emptyMatches(spark), _.localCheckpoint(true),
-      _ => Nil)({ (batch, bid) =>
+    // the hint: the removed ids' id-slots, at most `Slots` values
+    syncIndex[DataFrame](spark, srcPath, rows => nearDupLayout(indexPath,
+        rows.map(_(idCol))), "neardup", "syncNearDupIndex", idCol, textCol,
+      maxBatchDirs, emptyMatches(spark), _.localCheckpoint(true), _ => Nil,
+      idSlot(col(idCol)))({ (batch, bid) =>
       nearDupBatch(batch, bid, indexPath, idCol, textCol,
         k, bands, rowsPerBand, threshold, maxBucket)
-      matchesOf(bid)
-    }) { toRemove =>
-      takedown(spark, ix, toRemove.select(col(idCol)), idCol, tombstone = false)(
-        nearDupScope(spark, indexPath, idCol))
-      ()
-    }
+      val matches = nearDupLayout(indexPath, Some(batch.schema(idCol))).trees(2)
+      if (fs.exists(new Path(s"${matches.dir}/batch_id=$bid"))) matches.readBatch(spark, bid)
+      else emptyMatches(spark)
+    })(nearDupScope(spark, _, _))
   }
 
   /** Typed-empty (id_a, id_b, jaccard) frame — the no-new-matches poll. */
@@ -1095,10 +1106,11 @@ object Streams extends DerivedIndex {
                            threshold: Double, maxBucket: Int): Unit = {
     val spark = batch.sparkSession
     val fs = fsOf(spark, indexPath)
-    val ix = nearDupLayout(indexPath)
+    val ix = nearDupLayout(indexPath, Some(batch.schema(idCol)))
+    val Seq(keysTree, shTree, _) = ix.trees
     def existing(dir: String): Boolean = fs.exists(new Path(dir))
-    val keysDir = s"$indexPath/keys"
-    val shDir = s"$indexPath/shingles"
+    val keysDir = keysTree.dir
+    val shDir = shTree.dir
     // complete a crashed compaction before reading stored keys/shingles
     healAll(fs, ix)
     // geometry contract: resuming an index with different parameters
@@ -1111,12 +1123,15 @@ object Streams extends DerivedIndex {
 
     val sh = graft.dedup.MinHashDedup
       .shingleSets(live, idCol, textCol, k).cache()
+    // the slots this batch touches (at most `Slots` values) ride the job
+    // that materializes its keys
+    val keyed = org.apache.spark.sql.Observation()
     val keys = graft.dedup.MinHashDedup
       .bandKeysFromShingles(sh, idCol, bands, rowsPerBand)
       .withColumn("slot", pmod(xxhash64(col("band"), col("band_hash")), lit(Slots)))
-      .cache()
-    // bounded driver collect: at most `Slots` ids
-    val slots = keys.select("slot").distinct().collect().map(_.getLong(0)).toSeq
+      .observe(keyed, collect_set(col("slot")).as("slots"))
+      .localCheckpoint(true)
+    val slots = keyed.get("slots").asInstanceOf[Seq[Long]].sorted
     // stored keys pruned TWICE: partition pruning to the slots this
     // batch touches, then a broadcast semi-join to the batch's exact
     // (band, band_hash) bucket set — only buckets the batch can pair
@@ -1125,12 +1140,14 @@ object Streams extends DerivedIndex {
     // and "stored members of batch-touched buckets" (delta-sized).
     // Cap semantics unchanged: bucket sizes still count ALL members of
     // a touched bucket; untouched buckets' pairs were old-old and
-    // filtered out downstream anyway.
+    // filtered out downstream anyway. The bucket set is broadcast as-is:
+    // a repeated bucket cannot widen a semi-join, so de-duplicating it
+    // would only cost an exchange.
     val storedKeys =
       if (existing(keysDir) && slots.nonEmpty)
-        spark.read.parquet(keysDir)
+        keysTree.read(spark)
           .filter(col("batch_id") < bid && col("slot").isin(slots: _*))
-          .join(broadcast(keys.select(col("band"), col("band_hash")).distinct()),
+          .join(broadcast(keys.select(col("band"), col("band_hash"))),
             Seq("band", "band_hash"), "leftsemi")
           .select(col("band"), col("band_hash"), col(idCol))
       else keys.select(col("band"), col("band_hash"), col(idCol)).limit(0)
@@ -1146,6 +1163,9 @@ object Streams extends DerivedIndex {
     // re-distinct (cands is already distinct), where a semi-join per
     // side plus a union-distinct would cost three more stages
     val newIds = live.select(col(idCol)).distinct()
+    // the candidate ids' slots (at most `Slots` values) ride the job that
+    // materializes the candidates
+    val paired = org.apache.spark.sql.Observation()
     val candsNew = cands
       .join(broadcast(newIds.select(col(idCol).as("id_a"), lit(true).as("__a"))),
         Seq("id_a"), "left")
@@ -1153,15 +1173,14 @@ object Streams extends DerivedIndex {
         Seq("id_b"), "left")
       .filter(coalesce(col("__a"), lit(false)) || coalesce(col("__b"), lit(false)))
       .select("id_a", "id_b")
-      .cache()
-    // bounded driver collect again: candidate ids' slots, <= `Slots`
-    val candSlots = candsNew
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .select(pmod(xxhash64(col("id")), lit(Slots)).as("s"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+      .observe(paired, collect_set(idSlot(col("id_a"))).as("a"),
+        collect_set(idSlot(col("id_b"))).as("b"))
+      .localCheckpoint(true)
+    val candSlots = Seq("a", "b")
+      .flatMap(paired.get(_).asInstanceOf[Seq[Long]]).distinct.sorted
     val storedSh =
       if (existing(shDir) && candSlots.nonEmpty)
-        spark.read.parquet(shDir)
+        shTree.read(spark)
           .filter(col("batch_id") < bid && col("id_slot").isin(candSlots: _*))
           .select(col(idCol), col("sh"))
       else sh.select(col(idCol), col("sh")).limit(0)
@@ -1189,13 +1208,11 @@ object Streams extends DerivedIndex {
         .write.mode(SaveMode.Overwrite).partitionBy("slot")
         .option("partitionOverwriteMode", "static")
         .parquet(s"$keysDir/batch_id=$bid"),
-      () => sh.withColumn("id_slot", pmod(xxhash64(col(idCol)), lit(Slots)))
+      () => sh.withColumn("id_slot", idSlot(col(idCol)))
         .repartition(col("id_slot"))
         .write.mode(SaveMode.Overwrite).partitionBy("id_slot")
         .option("partitionOverwriteMode", "static")
         .parquet(s"$shDir/batch_id=$bid")))
-    candsNew.unpersist()
-    keys.unpersist()
     sh.unpersist()
   }
 

@@ -515,14 +515,65 @@ class DocStoreSpec extends SparkTestBase {
     // no stats, so a full rewrite: nothing is carried and both sides of
     // the diff read the duplicate
     DocStore.updateMany(spark, path, col("id") === 2L, Map("v" -> lit("C")), retain = 3)
-    def raises(changes: org.apache.spark.sql.DataFrame): Unit = {
-      val e = intercept[Exception](changes.select("id", "after").collect())
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(t => String.valueOf(t.getMessage))
-      assert(msgs.exists(_.contains("id is not unique")), e.toString)
-    }
-    raises(DocStore.changesSince(spark, path, g0, "id"))
-    raises(DocStore.changesSince(spark, path, cur, "id")._1)
+    raisesNotUnique(DocStore.changesSince(spark, path, g0, "id"))
+    raisesNotUnique(DocStore.changesSince(spark, path, cur, "id")._1)
+  }
+
+  /** Reading `changes` through a change-free projection must fail with
+    * the diff's duplicate-key error.
+    */
+  private def raisesNotUnique(changes: org.apache.spark.sql.DataFrame): Unit = {
+    val e = intercept[Exception](changes.select("id", "after").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("id is not unique")), e.toString)
+  }
+
+  test("changesSince: a duplicate key on either side, or between two steps, raises") {
+    // before side only: the duplicated key is deleted by the next rewrite
+    val before = freshPath()
+    DocStore.insertMany(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "v"), before)
+    val b0 = DocStore.generations(spark, before).last
+    DocStore.deleteMany(spark, before, Some(col("id") === 1L), retain = 3)
+    raisesNotUnique(DocStore.changesSince(spark, before, b0, "id"))
+    // after side only: the duplicate is appended into the rewritten generation
+    val after = freshPath()
+    DocStore.insertMany(Seq((1L, "a"), (2L, "c")).toDF("id", "v"), after)
+    val a0 = DocStore.generations(spark, after).last
+    val aCur = DocStore.cursor(spark, after)
+    DocStore.updateMany(spark, after, col("id") === 2L, Map("v" -> lit("C")), retain = 3)
+    DocStore.insertMany(Seq((1L, "b")).toDF("id", "v"), after)
+    raisesNotUnique(DocStore.changesSince(spark, after, a0, "id"))
+    raisesNotUnique(DocStore.changesSince(spark, after, aCur, "id")._1)
+    // between two steps: only the middle generation holds the duplicate
+    val mid = freshPath()
+    DocStore.insertMany(Seq((1L, "a"), (2L, "c")).toDF("id", "v"), mid)
+    val m0 = DocStore.generations(spark, mid).last
+    DocStore.updateMany(spark, mid, col("id") === 2L, Map("v" -> lit("C")), retain = 4)
+    DocStore.insertMany(Seq((1L, "b")).toDF("id", "v"), mid)
+    DocStore.deleteMany(spark, mid, Some(col("id") === 1L), retain = 4)
+    assert(DocStore.generations(spark, mid).size == 3)
+    raisesNotUnique(DocStore.changesSince(spark, mid, m0, "id"))
+  }
+
+  test("changesSince: a null key is one key, matched across generations") {
+    val path = freshPath()
+    DocStore.insertMany(Seq((None: Option[Long], "a"), (Some(2L), "c")).toDF("id", "v"), path)
+    val g0 = DocStore.generations(spark, path).last
+    DocStore.updateMany(spark, path, col("id") === 2L, Map("v" -> lit("C")), retain = 5)
+    DocStore.updateMany(spark, path, col("id").isNull, Map("v" -> lit("b")), retain = 5)
+    DocStore.deleteMany(spark, path, Some(col("id").isNull), retain = 5)
+    val gens = DocStore.generations(spark, path)
+    val changes = DocStore.changesSince(spark, path, g0, "id")
+      .select(col("id"), col("change"), col("before.v"), col("after.v"), col("generation"))
+      .collect().map(r => (Option(r.get(0)), r.getString(1), Option(r.getString(2)),
+        Option(r.getString(3)), r.getInt(4))).toSeq.sortBy(_._5)
+    // the null-key row is unchanged by the first rewrite (matched, not a
+    // delete plus an insert), then updated, then deleted
+    assert(changes == Seq(
+      (Some(2L), "updated", Some("c"), Some("C"), gens(1)),
+      (None, "updated", Some("a"), Some("b"), gens(2)),
+      (None, "deleted", Some("b"), None, gens(3))), s"got $changes")
   }
 
   test("docstore TVF: SQL reads the live snapshot and time-travels") {

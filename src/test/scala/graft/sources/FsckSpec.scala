@@ -70,6 +70,18 @@ class FsckSpec extends SparkTestBase {
     assert(codes(path).contains(("error", "manifest-dangling")))
   }
 
+  test("data files at a root with no generation are an error, worded as the refusal") {
+    val path = java.nio.file.Files.createTempDirectory("graft-fsck").toString
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(path, "part-0.json"), "{\"id\":1}\n".getBytes)
+    val before = listing(path)
+    val found = DocStore.fsck(spark, path).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    val refusal = intercept[IllegalStateException](DocStore.find(spark, path)).getMessage
+    assert(found == Seq(("error", "pre-manifest-layout", refusal)), found)
+    assert(listing(path) == before)
+  }
+
   test("stale stats entries and unstatted files are warned; bad sync cursor is an error") {
     val path = freshStore()
     DocStore.collectStats(spark, path, Seq("id"))
