@@ -146,16 +146,22 @@ object StreamingQuery {
     * provider (core.Sessions). Results are partition-count-invariant
     * (exact aggregations, watermark-driven emission), which the gate
     * re-checks at both SFs.
+    *
+    * The body runs on a CLONE of `s` that carries the value, never on `s`
+    * itself: work sharing `s` (a concurrent `Parallel.runAll` job) keeps
+    * its own partition count. The drain's memory-sink table and the
+    * returned frame live in the clone.
     */
-  private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-    try f finally s.conf.set(key, prev)
+  private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession)(
+      f: org.apache.spark.sql.SparkSession => T): T = {
+    val clone = org.apache.spark.sql.GraftShims.cloneSession(s)
+    clone.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+    f(clone)
   }
 
   def hourly(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val events = streamEvents(s, d)
     val name = "st1_out"
     val q = graft.streaming.Streams.windowedCounts(events, watermark = "1 minute")
@@ -175,7 +181,7 @@ object StreamingQuery {
     * DISTINCT of the key pair, which the oracle states.
     */
   def dedupPairs(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val events = streamEvents(s, d)
     val name = "st2_out"
     val q = graft.streaming.Streams
@@ -255,7 +261,7 @@ object StreamingQuery {
     * micro-batch cut points.
     */
   def sessions(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val name = "st4_out"
     val q = sessionAgg(streamEvents(s, d))
       .writeStream.outputMode("complete").format("memory").queryName(name).start()
@@ -277,7 +283,7 @@ object StreamingQuery {
     * index copies.
     */
   def ivfIngest(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val batchEmb = graft.core.Tables.embeddings(s, d)
     val model = graft.sim.Ann.cachedIvf(d, batchEmb, nCells = 16, lloydIters = 2)
     val stream = s.readStream.schema(batchEmb.schema)
@@ -307,7 +313,7 @@ object StreamingQuery {
     * output is deterministic.
     */
   def nearDupIngest(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val docs = graft.core.Tables.documents(s, d).select("doc_id", "text")
     // stage the table as THREE files (three micro-batches) once per
     // dataset content — the fingerprint in the dir name skips the
@@ -350,7 +356,7 @@ object StreamingQuery {
     * collision side resolution) and that the index is byte-untouched.
     */
   def nearDupProbe(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val docs = graft.core.Tables.documents(s, d).select("doc_id", "text")
     val train = docs.filter(col("doc_id") % 3 =!= 0)
     val evalSet = docs.filter(col("doc_id") % 3 === 0)
@@ -425,7 +431,7 @@ object StreamingQuery {
     * oracle from the data's own max timestamp.
     */
   def funnel(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     import s.implicits._
     val events = streamEvents(s, d)
       .withWatermark("ts", "10 minutes")
@@ -453,7 +459,7 @@ object StreamingQuery {
     * oracle states.
     */
   def errorPairs(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val events = streamEvents(s, d)
     val errors = streamEvents(s, d)
       .filter(col("event_type") === "error")
@@ -479,7 +485,7 @@ object StreamingQuery {
     * the data.
     */
   def errorPairsOuter(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = withStatePartitions(s) {
+      : org.apache.spark.sql.DataFrame = withStatePartitions(s) { s =>
     val events = streamEvents(s, d)
     val errors = streamEvents(s, d)
       .filter(col("event_type") === "error")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * Format: a small versioned binary blob (magic + dims + doubles) written
   * through the Hadoop FileSystem API so it lands wherever the data lives
   * (local disk here, object store on a cluster). Write is
-  * tmp-then-rename, the DocStore manifest discipline — a crashed save
+  * tmp-then-rename ([[graft.core.Io.commitSmallFile]]) — a crashed save
   * never leaves a torn model where a loader can trust it.
   */
 object ModelStore {
@@ -24,13 +24,11 @@ object ModelStore {
   private def writeBlob(spark: SparkSession, path: String)
                        (body: DataOutputStream => Unit): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "__tmp")
-    val out = new DataOutputStream(fs.create(tmp, true))
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new DataOutputStream(bytes)
     try body(out) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"modelstore: cannot commit $path")
+    graft.core.Io.commitSmallFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p.getParent, p.getName, bytes.toByteArray, replace = true)
   }
 
   private def readBlob[T](spark: SparkSession, path: String, magic: Int)

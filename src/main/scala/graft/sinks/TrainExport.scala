@@ -3,15 +3,16 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Io
 
 /** Training-corpus export: the terminal sink of the preprocessing
   * pipeline (`pipe_corpus_prep` upstream, this downstream). Rows land as
   * parquet PARTITIONED BY the split column, so a trainer reading one
   * split scans only that directory (partition pruning does the work — no
   * filter ever touches the other splits' files), and a `_MANIFEST.json`
-  * records per-split row counts plus the schema, written AFTER the data
-  * so its presence marks a complete export (the DocStore manifest-swing
-  * idea at its simplest).
+  * records per-split row counts plus the schema, committed atomically
+  * AFTER the data so its presence marks a complete export (the DocStore
+  * manifest-swing idea at its simplest).
   *
   * One scan total: per-split counts ride the write via `observe` instead
   * of a second aggregation pass.
@@ -42,10 +43,9 @@ object TrainExport {
       s"""{"total": $total,
          | "splits": {${all.toSeq.sorted.map { case (k, v) => s""""$k": $v""" }.mkString(", ")}},
          | "schema": ${compactJson(df.drop(splitCol).schema.json)}}""".stripMargin
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(path, "_MANIFEST.json"), true)
-    try out.write(manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Io.commitSmallFile(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(path), "_MANIFEST.json",
+      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8), replace = true)
     all
   }
 
@@ -63,9 +63,7 @@ object TrainExport {
   /** Parse the manifest's per-split counts (for load-side validation). */
   def manifestCounts(spark: SparkSession, path: String): Map[String, Long] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new Path(path, "_MANIFEST.json"))
-    val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+    val txt = Io.readSmallFile(fs, new Path(path, "_MANIFEST.json"))
     """"(train|val|test|other)": (\d+)""".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
   }

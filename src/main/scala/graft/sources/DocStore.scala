@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Io
 
 /** Document-store source/sink (S7 scan, K8 write): the engine counterpart
   * of the reference's Mongo collection layer
@@ -107,27 +108,16 @@ object DocStore {
   private def readLinks(fs: FileSystem, genDir: String): Seq[String] = {
     val p = new Path(genDir, LinksFile)
     if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-                finally in.close()
-      txt.split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty)
-    }
+    else Io.readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Tmp-then-rename like [[writeSourceRecord]]: a torn write reads as
-    * ABSENT (no carried files) — and the sidecar lands before the manifest
-    * swing, so an unlinked committed generation cannot arise.
+  /** Committed like every sidecar ([[Io.commitSmallFile]]): a torn write
+    * reads as ABSENT (no carried files) — and the sidecar lands before the
+    * manifest swing, so an unlinked committed generation cannot arise.
     */
-  private def writeLinks(fs: FileSystem, genDir: String, entries: Seq[String]): Unit = {
-    val tmp = new Path(genDir, LinksFile + "__tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.sorted.mkString("\n").getBytes(UTF_8)) finally out.close()
-    val dst = new Path(genDir, LinksFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"docstore: cannot write $dst")
-  }
+  private def writeLinks(fs: FileSystem, genDir: String, entries: Seq[String]): Unit =
+    Io.commitSmallFile(fs, new Path(genDir), LinksFile,
+      entries.sorted.mkString("\n").getBytes(UTF_8), replace = true)
 
   /** LOGICAL data-file names of a generation: physical visible files (plain
     * names) plus carried entries (containing '/'). Every read/pin surface
@@ -219,12 +209,9 @@ object DocStore {
       writeData(df.observe(obs, count(lit(1)).as("rows")), fmt, staging.toString)
       val n = obs.get("rows").asInstanceOf[Long]
       afterStage()
-      val staged = fs.listStatus(staging).toSeq.filter { st =>
-        val nm = st.getPath.getName
-        // 0-byte parts (json writers emit one per empty partition) carry
-        // no rows and no inferable schema — never publish them
-        st.isFile && !nm.startsWith("_") && !nm.startsWith(".") && st.getLen > 0
-      }
+      // 0-byte parts (json writers emit one per empty partition) carry no
+      // rows and no inferable schema — never publish them
+      val staged = Io.visibleFiles(fs, staging).toSeq.filter(_.getLen > 0).map(_.getPath)
       // schema sidecar BEFORE the renames, inferred from the staged files
       // (same bytes as the published ones): the single-scan read path
       // trusts the stored schema to cover every data file, and a crash
@@ -236,20 +223,15 @@ object DocStore {
       val sidecar: Option[Path] =
         if (staged.nonEmpty && fs.exists(new Path(statsPath, "_schema.json")))
           Some(writeSchemaSidecar(fs, statsPath,
-            readFiles(spark, fmt, None, staged.map(_.getPath.toString)).schema))
+            readFiles(spark, fmt, None, staged.map(_.toString)).schema))
         else None
       afterCover()
       // publish + visibility under the per-store guard: a same-process
       // mutation commit's retention prune cannot delete the batch's files
       // out of a superseded generation mid-walk ([[publishGuard]])
       publishGuard(fs, path).synchronized {
-        val added = staged.map { st =>
-          val target = new Path(live, st.getPath.getName)
-          if (!fs.rename(st.getPath, target))
-            throw new java.io.IOException(
-              s"docstore: cannot publish appended file ${st.getPath} -> $target")
-          target.toString
-        }
+        val added = Io.publishStaged(fs, staged)((src, _) => new Path(live, src.getName))
+          .map(_.toString)
         if (fs.exists(statsPath) && added.nonEmpty)
           appendStats(spark, fs, live, fmt, added, Some(df.schema))
         // RE-COVER check: a concurrent [[collectStats]] rewrites the stats
@@ -290,11 +272,7 @@ object DocStore {
   private def genFormat(fs: FileSystem, dir: String): String = {
     val p = new Path(dir)
     val parquet = fs.exists(p) && fs.getFileStatus(p).isDirectory &&
-      fs.listStatus(p).exists { st =>
-        val nm = st.getPath.getName
-        st.isFile && !nm.startsWith("_") && !nm.startsWith(".") &&
-          nm.endsWith(".parquet")
-      }
+      Io.visibleFiles(fs, p).exists(_.getPath.getName.endsWith(".parquet"))
     // a COW generation can be all-carried (a mutation that matched rows in
     // zero or few files): no physical data files, so detect from the
     // carried entries — formats never cross a link (a COW rewrite keeps
@@ -575,13 +553,6 @@ object DocStore {
     * stats entries for vanished files, unstatted data files, data files
     * at the root alongside generations).
     *
-    * Limit, inherent to the recovery semantics: in a store whose live
-    * generation has no `_SOURCE` record (never rewritten, or
-    * pre-protocol), the committed chain is indistinguishable from the
-    * complete set, so an orphaned generation there cannot be told from a
-    * legitimate one — exactly the ambiguity manifest-loss recovery
-    * resolves by trusting complete generations.
-    *
     * `retain` must match the retention the store's mutations were run
     * with (the newest-`retain` window plus its direct link homes is the
     * promised-readable set): a dangling link INSIDE that window is
@@ -633,8 +604,7 @@ object DocStore {
               !fs.exists(new Path(st.getPath, "_SUCCESS")))
             warn("incomplete-generation",
               s"$nm has no _SUCCESS (write in flight, or crash debris)")
-          if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".") &&
-              complete.nonEmpty)
+          if (st.isFile && Io.isVisible(nm) && complete.nonEmpty)
             warn("flat-residue",
               s"data file $nm at the collection root alongside generations " +
                 "(outside every generation: no read serves it and no write " +
@@ -655,10 +625,8 @@ object DocStore {
         // sync-cursor sidecar must parse if present
         val sc = new Path(gdir, SyncCursorFile)
         if (fs.exists(sc)) {
-          val in = fs.open(sc)
-          val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-                      finally in.close()
-          try { decodeSyncCursor(bytes); () }
+          val txt = Io.readSmallFile(fs, sc)
+          try { decodeSyncCursor(txt); () }
           catch { case scala.util.control.NonFatal(_) =>
             err("bad-sync-cursor",
               f"gen-$g%06d/$SyncCursorFile does not parse — syncAggregate " +
@@ -1040,13 +1008,22 @@ object DocStore {
       s"docstore: cursor generation $sinceGen of $path is no longer retained " +
         s"(have: ${gens.mkString(", ")}); raise `retain` on mutations to " +
         "allow slower consumers")
-    val steps = gens.dropWhile(_ < sinceGen)
-    steps.sliding(2).collect { case Seq(from, to) =>
-      diffGenerations(spark, path, from, to, keyCol)
-        .withColumn("generation", lit(to))
-    }.reduceOption(_ unionByName _)
-      .getOrElse(emptyChanges(spark, fs, path, sinceGen, keyCol))
+    changeFrame(spark, fs, path, gens, sinceGen, keyCol, None)
   }
+
+  /** The change frame of both [[changesSince]] overloads: `lead` first
+    * (the cursor overload's appended-file inserts), then one
+    * [[diffGenerations]] per consecutive committed pair from `since` to
+    * the head of `gens`, tagged with the generation that introduced it;
+    * a correctly-typed empty frame when there is nothing.
+    */
+  private def changeFrame(spark: SparkSession, fs: FileSystem, path: String,
+                          gens: Seq[Int], since: Int, keyCol: String,
+                          lead: Option[DataFrame]): DataFrame =
+    (lead.toSeq ++ gens.dropWhile(_ < since).sliding(2).collect { case Seq(from, to) =>
+      diffGenerations(spark, path, from, to, keyCol).withColumn("generation", lit(to))
+    }).reduceOption(_ unionByName _)
+      .getOrElse(emptyChanges(spark, fs, path, since, keyCol))
 
   /** A FILE-granular CDC cursor: the snapshot a consumer has fully
     * processed, as (generation, data files seen in it). Capture with
@@ -1155,13 +1132,7 @@ object DocStore {
           storedSchema(fs, new Path(genDir, StatsDir)), appended)
         Some(asInserted(rows, keyCol, cur.generation))
       }
-    val steps = gens.dropWhile(_ < cur.generation).sliding(2).collect {
-      case Seq(from, to) =>
-        diffGenerations(spark, path, from, to, keyCol)
-          .withColumn("generation", lit(to))
-    }.toSeq
-    val changes = (appendFrame.toSeq ++ steps).reduceOption(_ unionByName _)
-      .getOrElse(emptyChanges(spark, fs, path, cur.generation, keyCol))
+    val changes = changeFrame(spark, fs, path, gens, cur.generation, keyCol, appendFrame)
     val head = gens.last
     (changes, DocCursor(head, logicalNames(fs, genPath(path, head))))
   }
@@ -1370,8 +1341,8 @@ object DocStore {
   private def encodeSyncCursor(c: DocCursor): Array[Byte] =
     (c.generation.toString +: c.files.toSeq.sorted).mkString("\n").getBytes(UTF_8)
 
-  private def decodeSyncCursor(bytes: Array[Byte]): DocCursor = {
-    val lines = new String(bytes, UTF_8).split("\n", -1).toSeq
+  private def decodeSyncCursor(txt: String): DocCursor = {
+    val lines = txt.split("\n", -1).toSeq
     DocCursor(lines.head.trim.toInt,
       lines.tail.map(_.trim).filter(_.nonEmpty).toSet)
   }
@@ -1388,12 +1359,7 @@ object DocStore {
     if (!fs.exists(new Path(path))) return None
     committedGens(fs, path).reverseIterator.map { g =>
       val p = new Path(genPath(path, g), SyncCursorFile)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(decodeSyncCursor(org.apache.commons.io.IOUtils.toByteArray(in)))
-        finally in.close()
-      }
+      if (!fs.exists(p)) None else Some(decodeSyncCursor(Io.readSmallFile(fs, p)))
     }.collectFirst { case Some(c) => c }
   }
 
@@ -1921,10 +1887,7 @@ object DocStore {
       val p = new Path(genPath(path, g), MutationTokenFile)
       if (!fs.exists(p)) None
       else {
-        val in = fs.open(p)
-        val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-                  finally in.close()
-        val lines = txt.split("\n", -1)
+        val lines = Io.readSmallFile(fs, p).split("\n", -1)
         // wanted = the current tagged-Base64 frame. The raw fallback
         // honors sidecars written before tokens were framed (a
         // cross-version replay must not re-execute), but ONLY for lines
@@ -3166,10 +3129,7 @@ object DocStore {
   }
 
   private def dataFileNames(fs: FileSystem, live: String): Set[String] =
-    fs.listStatus(new Path(live)).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath.getName).toSet
+    Io.visibleFiles(fs, new Path(live)).iterator.map(_.getPath.getName).toSet
 
   /** `spark.read.json` over a stats dir ONLY when it has visible part
     * files. A schema-only dir (just `_schema.json`, written by every
@@ -3189,11 +3149,7 @@ object DocStore {
     */
   private def statsPartFiles(fs: FileSystem, statsPath: Path)
       : Array[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(statsPath)) Array.empty
-    else fs.listStatus(statsPath).filter { st =>
-      val nm = st.getPath.getName
-      st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
+    if (!fs.exists(statsPath)) Array.empty else Io.visibleFiles(fs, statsPath)
 
   /** Size gate for driver-side sidecar handling (the Iceberg manifest
     * discipline: plan locally below the threshold, distributed above).
@@ -3214,13 +3170,114 @@ object DocStore {
     */
   private def statsLinesLocal(fs: FileSystem, statsPath: Path): Option[Seq[String]] = {
     val parts = statsPartFiles(fs, statsPath)
-    if (parts.isEmpty || parts.iterator.map(_.getLen).sum > StatsLocalMaxBytes) None
+    if (parts.isEmpty) None else linesUnderGate(fs, parts)
+  }
+
+  /** The raw JSON lines of listed stats part files, driver-side — None
+    * when together they exceed the size gate.
+    */
+  private def linesUnderGate(fs: FileSystem, parts: Array[org.apache.hadoop.fs.FileStatus])
+      : Option[Seq[String]] =
+    if (parts.iterator.map(_.getLen).sum > StatsLocalMaxBytes) None
     else Some(parts.sortBy(_.getPath.getName).toSeq.flatMap { st =>
-      val in = fs.open(st.getPath)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-                finally in.close()
-      txt.split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty)
+      Io.readSmallFile(fs, st.getPath).split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty)
     })
+
+  /** A fresh, collision-free name for the `i`-th stats part file published
+    * into `statsPath` (part names are never reused, so concurrent
+    * publishers cannot overwrite each other's rows).
+    */
+  private def statsPart(statsPath: Path, i: Int): Path =
+    new Path(statsPath, s"append-${java.util.UUID.randomUUID()}-$i.json")
+
+  /** One source of a [[carryStatsLines]] pass: the lines of the stats dir
+    * `stats` whose `file` key is in `files` (`keep`), or is not (`!keep`).
+    */
+  private final case class StatsCarry(stats: Path, files: Set[String], keep: Boolean)
+
+  /** THE stats line carry: write into `dst` — the stats dir of a private,
+    * not yet committed generation — the lines each carry selects,
+    * byte-verbatim. A carried data file's bytes are unchanged, so its row
+    * (keyed by basename) stays true without a re-stat pass; a carry whose
+    * source IS `dst` has its part files replaced.
+    *
+    * Driver-side when every source is under the [[StatsLocalMaxBytes]]
+    * gate (zero Spark jobs, the steady-state case); above it a DISTRIBUTED
+    * text filter with multi-file output — the 100 TB sidecar shape,
+    * hundreds of MB to GB, is never re-parsed, re-serialized or folded into
+    * one task. Both legs select the same lines: one without a usable
+    * `file` key (unparseable, or the field missing) is dropped by a keep
+    * carry and kept by a drop carry (`get_json_object` yields null there,
+    * and a null never equals a join key).
+    *
+    * With `covered`, each keep carry's lines must name every file of its
+    * set; otherwise nothing is written and the result is false. Sources
+    * without part files contribute nothing, and when no source has any
+    * there is nothing to carry: true.
+    */
+  private def carryStatsLines(spark: SparkSession, fs: FileSystem, dst: Path,
+                              carries: Seq[StatsCarry], covered: Boolean = false): Boolean = {
+    val parts = carries.map(c => statsPartFiles(fs, c.stats))
+    if (parts.forall(_.isEmpty)) return true
+    // replaced part files go only once their successors are decided
+    def dropReplaced(): Unit = carries.zip(parts).foreach { case (c, ps) =>
+      if (c.stats == dst) ps.foreach(st => fs.delete(st.getPath, false))
+    }
+    val local = parts.map(ps => if (ps.isEmpty) Some(Nil) else linesUnderGate(fs, ps))
+    if (local.forall(_.isDefined)) {
+      def fileOf(ln: String): Option[String] =
+        scala.util.Try {
+          val n = statsMapper.readTree(ln)
+          if (n != null && n.hasNonNull("file")) Some(n.get("file").asText) else None
+        }.toOption.flatten
+      val selected = carries.zip(local.flatten).map { case (c, lines) =>
+        c -> lines.filter(ln => fileOf(ln).exists(c.files.contains) == c.keep)
+      }
+      if (covered && selected.exists { case (c, lines) =>
+            c.keep && lines.flatMap(fileOf).toSet != c.files }) return false
+      dropReplaced()
+      val all = selected.flatMap(_._2)
+      if (all.nonEmpty) {
+        // fs.create throws on failure, like the publish rename below:
+        // carried files must never go silently unstatted
+        val out = fs.create(statsPart(dst, 0), true)
+        try out.write((all.mkString("\n") + "\n").getBytes(UTF_8)) finally out.close()
+      }
+      true
+    } else {
+      import org.apache.spark.sql.functions.{broadcast, get_json_object}
+      import spark.implicits._
+      val fileCol = get_json_object(col("value"), "$.file")
+      val frames = carries.zip(parts).map { case (c, ps) =>
+        Option.when(ps.nonEmpty)(spark.read.text(c.stats.toString)
+          .join(broadcast(c.files.toSeq.toDF("__f")), fileCol === col("__f"),
+            if (c.keep) "left_semi" else "left_anti"))
+      }
+      // persisted: the coverage count and the write would otherwise each
+      // re-read the sidecar — at the target scale that doubles the I/O
+      val counted = carries.zip(frames).collect { case (c, f) if covered && c.keep =>
+        (c, f.map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+      }
+      try {
+        // a keep carry's lines name only files of its set, so a distinct
+        // count equal to the set's size IS coverage
+        if (counted.exists { case (c, f) =>
+              f.fold(0L)(_.select(fileCol.as("f")).distinct().count()) != c.files.size.toLong })
+          return false
+        // staged beside `dst` inside the private generation: a crash
+        // anywhere drops the staging with the rest of the generation
+        val stage = new Path(dst.getParent, s"_stats-stage-${java.util.UUID.randomUUID()}")
+        try {
+          frames.flatten.map(_.select("value")).reduce(_ union _)
+            .write.mode(SaveMode.Overwrite).text(stage.toString)
+          dropReplaced()
+          fs.mkdirs(dst)
+          Io.publishStaged(fs, Io.visibleFiles(fs, stage).toSeq.filter(_.getLen > 0)
+            .map(_.getPath))((_, i) => statsPart(dst, i))
+        } finally fs.delete(stage, true)
+        true
+      } finally counted.foreach(_._2.foreach(_.unpersist(false)))
+    }
   }
 
   private lazy val statsMapper = new com.fasterxml.jackson.databind.ObjectMapper
@@ -3361,16 +3418,8 @@ object DocStore {
           .withColumn("file", element_at(split(col("__f"), "/"), -1))
           .drop("__f")
           .coalesce(1).write.mode(SaveMode.Overwrite).json(stage.toString)
-        fs.listStatus(stage).iterator.filter { st =>
-          val nm = st.getPath.getName
-          st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-        }.zipWithIndex.foreach { case (st, i) =>
-          val target = new Path(statsPath,
-            s"append-${java.util.UUID.randomUUID()}-$i.json")
-          if (!fs.rename(st.getPath, target))
-            throw new java.io.IOException(
-              s"docstore: cannot publish stats file ${st.getPath} -> $target")
-        }
+        Io.publishStaged(fs, Io.visibleFiles(fs, stage).toSeq.map(_.getPath))(
+          (_, i) => statsPart(statsPath, i))
       } finally fs.delete(stage, true)
     }
     // Schema widening is NOT done here: [[insertMany]] writes the batch's
@@ -3390,9 +3439,7 @@ object DocStore {
   private def storedSchema(fs: FileSystem, statsPath: Path)
       : Option[org.apache.spark.sql.types.StructType] = {
     def read(p: Path): Option[org.apache.spark.sql.types.StructType] = {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-                finally in.close()
+      val txt = Io.readSmallFile(fs, p)
       scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(txt)
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
     }
@@ -3623,36 +3670,54 @@ object DocStore {
     }.flatten.sorted
   }
 
-  /** COMMITTED generation ids, oldest first: the live chain walked
-    * backward through [[SourceFile]] links. A crash between a rewrite's
-    * data write and its manifest swing leaves an ORPHAN — a
-    * `_SUCCESS`-complete generation that never became live; it must stay
-    * on disk for id-collision avoidance ([[completeGens]] feeds the next
-    * id) but it was never a committed state, so the time-travel/CDC
-    * surfaces must not serve it: [[findAsOf]] of an aborted rewrite would
-    * return data no reader ever saw, and a CDC poll would deliver its
-    * phantom intermediate changes. Falls back to [[completeGens]] when
-    * the live generation predates the `_SOURCE` protocol (no record).
+  /** COMMITTED generation ids, oldest first: the [[committedChain]] from
+    * the live generation. A crash between a rewrite's data write and its
+    * manifest swing leaves an ORPHAN — a `_SUCCESS`-complete generation
+    * that never became live; it must stay on disk for id-collision
+    * avoidance ([[completeGens]] feeds the next id) but it was never a
+    * committed state, so the time-travel/CDC surfaces must not serve it:
+    * [[findAsOf]] of an aborted rewrite would return data no reader ever
+    * saw, and a CDC poll would deliver its phantom intermediate changes.
+    * With the manifest missing (a crash inside its swing) or naming no
+    * complete generation (the manifest errors [[fsck]] reports), the
+    * chain starts at the newest complete generation instead.
     */
-  private def committedGens(fs: FileSystem, path: String): Seq[Int] = {
-    val liveId = readManifest(fs, path).collect { case GenName(id) => id.toInt }
-    liveId match {
-      case Some(id) if readSourceRecord(fs, genPath(path, id)).isDefined =>
-        var ids = List(id)
-        var cur = id
-        var hops = 0
-        while (hops < 10000) {
-          readSourceRecord(fs, genPath(path, cur)) match {
-            case Some((GenName(from), _))
-                if fs.exists(new Path(genPath(path, from.toInt), "_SUCCESS")) =>
-              cur = from.toInt; ids ::= cur; hops += 1
-            case _ => hops = 10000 // first generation, pruned parent, or no record
-          }
-        }
-        ids
-      case _ => completeGens(fs, path) // pre-protocol store (or no manifest)
+  private def committedGens(fs: FileSystem, path: String): Seq[Int] =
+    manifestId(fs, path).map(committedChain(fs, path, _)).filter(_.nonEmpty)
+      .orElse(completeGens(fs, path).lastOption.map(committedChain(fs, path, _)))
+      .fold(Seq.empty[Int])(_.map(_.id).reverse)
+
+  /** One generation of the committed chain and its [[SourceFile]] record
+    * (None for the collection's first generation, which no rewrite wrote).
+    */
+  private final case class Committed(id: Int, dir: String,
+                                     source: Option[(String, Set[String])])
+
+  /** THE committed chain, newest first: generation `live`, then each
+    * predecessor its [[SourceFile]] record names — every link while it is
+    * still a complete generation (retention prunes the tail; a dangling or
+    * incomplete live generation has no chain). A generation without a
+    * record is the collection's first ([[liveDir]] creates it without
+    * one), so the chain ends there. Ids strictly decrease along the chain
+    * (a commit takes an id above every complete generation), so a record
+    * naming anything else ends the walk too — termination needs no hop
+    * cap. Lazy: a caller forcing a prefix reads only its records.
+    */
+  private def committedChain(fs: FileSystem, path: String, live: Int): LazyList[Committed] = {
+    val dir = genPath(path, live)
+    if (!fs.exists(new Path(dir, "_SUCCESS"))) LazyList.empty
+    else {
+      val source = readSourceRecord(fs, dir)
+      Committed(live, dir, source) #:: (source match {
+        case Some((GenName(p), _)) if p.toInt < live => committedChain(fs, path, p.toInt)
+        case _ => LazyList.empty
+      })
     }
   }
+
+  /** The generation id the manifest names, if any. */
+  private def manifestId(fs: FileSystem, path: String): Option[Int] =
+    readManifest(fs, path).collect { case GenName(id) => id.toInt }
 
   /** Resolve the live generation dir — the one place the on-disk layout
     * is decided.
@@ -3710,27 +3775,15 @@ object DocStore {
   private def readManifest(fs: FileSystem, path: String): Option[String] = {
     val m = new Path(path, Manifest)
     if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try {
-        val name = new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8).trim
-        if (name.nonEmpty) Some(name) else None
-      } finally in.close()
-    }
+    else Some(Io.readSmallFile(fs, m).trim).filter(_.nonEmpty)
   }
 
-  private def writeManifest(fs: FileSystem, path: String, gen: String): Unit = {
-    val tmp = new Path(path, Manifest + "__tmp")
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(UTF_8)) finally out.close()
-    val m = new Path(path, Manifest)
-    // HDFS-like rename refuses existing targets: delete-then-rename. A
-    // crash in the gap leaves NO manifest + complete generations, which
-    // liveDir resolves to the newest complete generation — never a loss.
-    fs.delete(m, false)
-    if (!fs.rename(tmp, m))
-      throw new java.io.IOException(s"docstore: cannot commit manifest for $path")
-  }
+  /** A crash inside the commit's delete-then-rename leaves NO manifest +
+    * complete generations, which [[liveDir]] resolves to the newest
+    * complete generation — never a loss.
+    */
+  private def writeManifest(fs: FileSystem, path: String, gen: String): Unit =
+    Io.commitSmallFile(fs, new Path(path), Manifest, gen.getBytes(UTF_8), replace = true)
 
   // ---- append-vs-mutation concurrency ------------------------------------
   //
@@ -3754,33 +3807,21 @@ object DocStore {
   /** Record, inside a freshly committed generation, which data files of
     * its predecessor the rewrite read (line 1 = predecessor dir name, ""
     * when the rewrite created the collection; remaining lines = file
-    * names). Written
-    * tmp-then-rename so a torn write reads as ABSENT (no info — no
-    * salvage, today's pre-protocol behavior) rather than as an
-    * under-listing that would salvage already-read files and duplicate
-    * their rows.
+    * names). Committed tmp-then-rename ([[Io.commitSmallFile]]), before
+    * the manifest swing: a commit crashing before the record lands leaves
+    * an orphan, never a live generation without its record.
     */
   private def writeSourceRecord(fs: FileSystem, genDir: String, from: String,
-                                files: Set[String]): Unit = {
-    val tmp = new Path(genDir, SourceFile + "__tmp")
-    val out = fs.create(tmp, true)
-    try out.write((from + "\n" + files.toSeq.sorted.mkString("\n")).getBytes(UTF_8))
-    finally out.close()
-    val dst = new Path(genDir, SourceFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"docstore: cannot write $dst")
-  }
+                                files: Set[String]): Unit =
+    Io.commitSmallFile(fs, new Path(genDir), SourceFile,
+      (from + "\n" + files.toSeq.sorted.mkString("\n")).getBytes(UTF_8), replace = true)
 
   private def readSourceRecord(fs: FileSystem, genDir: String)
       : Option[(String, Set[String])] = {
     val p = new Path(genDir, SourceFile)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-                finally in.close()
-      val lines = txt.split("\n", -1).toSeq
+      val lines = Io.readSmallFile(fs, p).split("\n", -1).toSeq
       Some((lines.head.trim, lines.tail.map(_.trim).filter(_.nonEmpty).toSet))
     }
   }
@@ -3884,10 +3925,7 @@ object DocStore {
             val stage = new Path(toDir, s"_salv-${java.util.UUID.randomUUID()}")
             try {
               writeData(rows.coalesce(1), dstFmt, stage.toString)
-              fs.listStatus(stage).toSeq.find { st =>
-                val nm = st.getPath.getName
-                st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-              }.foreach { st =>
+              Io.visibleFiles(fs, stage).headOption.foreach { st =>
                 if (fs.rename(st.getPath, target))
                   appendStats(spark, fs, toDir, dstFmt, Seq(target.toString))
               }
@@ -3927,25 +3965,14 @@ object DocStore {
     * reads recovered rows) and every append; cheap when there is nothing
     * to do (one manifest read, one small file, one listing diff).
     */
-  private def healStragglers(spark: SparkSession, fs: FileSystem, path: String): Unit = {
-    val liveName = readManifest(fs, path).getOrElse(return)
-    var chain = List.empty[(String, String, Set[String])] // (child, parent, L)
-    var cur = s"$path/$liveName"
-    var hops = 0
-    while (hops < 64) {
-      readSourceRecord(fs, cur) match {
-        case Some((from, files)) if from.nonEmpty =>
-          val parent = s"$path/$from"
-          chain ::= ((cur, parent, files))
-          if (fs.exists(new Path(parent))) { cur = parent; hops += 1 }
-          else hops = 64
-        case _ => hops = 64 // no record, or the collection's first generation
+  private def healStragglers(spark: SparkSession, fs: FileSystem, path: String): Unit =
+    manifestId(fs, path).foreach { live =>
+      committedChain(fs, path, live).sliding(2).toList.reverse.foreach { // oldest link first
+        case Seq(child, parent) =>
+          salvageInto(spark, fs, parent.dir, child.dir, child.source.fold(Set.empty[String])(_._2))
+        case _ => () // a one-generation chain has nothing to heal
       }
     }
-    chain.foreach { case (child, parent, l) => // oldest link first
-      if (parent != child) salvageInto(spark, fs, parent, child, l)
-    }
-  }
 
   /** Post-publish visibility walk for an append: if the generation the
     * batch was published into is no longer live, a mutation raced it. Per
@@ -3964,25 +3991,6 @@ object DocStore {
     if (names.nonEmpty && !liveDir(fs, path).contains(publishedDir))
       names.foreach(ensureFileVisible(spark, fs, path, publishedDir, _))
 
-  /** The committed chain, live-first: (genDir, (from, sourceFiles)). */
-  private def liveChain(fs: FileSystem, spark: SparkSession, path: String)
-      : Seq[(String, (String, Set[String]))] = {
-    val out = scala.collection.mutable.ListBuffer.empty[(String, (String, Set[String]))]
-    var cur = liveDir(fs, path).getOrElse(return Nil)
-    var hops = 0
-    while (hops < 64) {
-      readSourceRecord(fs, cur) match {
-        case Some(rec) =>
-          out += ((cur, rec))
-          val parent = s"$path/${rec._1}"
-          if (rec._1.nonEmpty && fs.exists(new Path(parent))) { cur = parent; hops += 1 }
-          else hops = 64 // the first generation, or a pruned parent
-        case None => hops = 64
-      }
-    }
-    out.toList
-  }
-
   private def ensureFileVisible(spark: SparkSession, fs: FileSystem, path: String,
                                 startDir: String, name0: String): Unit = {
     var dir = startDir
@@ -3992,13 +4000,13 @@ object DocStore {
       hops += 1
       require(hops <= 64,
         s"docstore: append visibility walk did not converge for $path")
-      val chain = liveChain(fs, spark, path)
+      val chain = manifestId(fs, path).fold(List.empty[Committed])(committedChain(fs, path, _).toList)
       // carried in any chain generation's source record: its rows were
       // read by that rewrite and flow through every later one — done
-      if (chain.exists(_._2._2.contains(name))) return
+      if (chain.exists(_.source.exists(_._2.contains(name)))) return
       def rescan(): Unit =
         chain.reverseIterator // oldest-first: resume from the EARLIEST copy
-          .map { case (g, _) => g -> dataFileNames(fs, g)
+          .map { c => c.dir -> dataFileNames(fs, c.dir)
             .find(f => f == name || f.startsWith(name + ".salv.")) }
           .collectFirst { case (g, Some(f)) => (g, f) } match {
           case Some((vDir, vName)) => dir = vDir; name = vName
@@ -4008,8 +4016,8 @@ object DocStore {
               "plus retention pruning completed mid-append) — the batch was " +
               "NOT fully published; retry the append for its missing rows")
         }
-      chain.find { case (_, (from, _)) => from.nonEmpty && s"$path/$from" == dir } match {
-        case Some((sDir, _)) =>
+      chain.find(_.source.exists { case (from, _) => from.nonEmpty && s"$path/$from" == dir }) match {
+        case Some(Committed(_, sDir, _)) =>
           name = publishForward(spark, fs, dir, sDir, Seq(name)).head
           if (fs.exists(new Path(sDir, name))) dir = sDir
           else rescan() // a racing salvager moved it further, or pruning hit
@@ -4063,112 +4071,22 @@ object DocStore {
     * `importBases` — its own fresh physical files plus (multi-hop) the
     * intermediate winners' fresh files it carries, whose rows the carry
     * discipline moved into its sidecar (else pruning/countFast scan them
-    * and fsck flags them unstatted). Line-level and byte-verbatim either way — the
-    * commitRewrite carry discipline: driver-side under the
-    * [[StatsLocalMaxBytes]] gate (zero Spark jobs, the steady-state
-    * case), and as a DISTRIBUTED text filter/union above it — a 100 TB
-    * store's per-file sidecar is hundreds of MB to GB, which is exactly
-    * the deployment whose lost races the merge exists to absorb; the r12
-    * flow bailed those to a full-body retry, repaying the whole rewrite
-    * per race. None = not safely doable (an unreadable sidecar, or a
-    * winner whose fresh files carry no rows — importing nothing would
-    * leave the merged generation under-covered while claiming full
-    * stats) — the caller then falls back to the loud serialize-and-retry
-    * path; Some(()) = done (also when neither side has stats rows at
-    * all).
+    * and fsck flags them unstatted). Both legs of [[carryStatsLines]]
+    * apply: a 100 TB store's per-file sidecar is exactly the deployment
+    * whose lost races the merge exists to absorb. False = not safely
+    * doable (a winner whose fresh files carry no rows — importing nothing
+    * would leave the merged generation under-covered while claiming full
+    * stats): the caller then falls back to the loud serialize-and-retry
+    * path. A stats-less store has nothing to move: true.
     */
   private def mergeCarriedStats(spark: SparkSession, fs: FileSystem,
                                 next: String, wDir: String,
                                 wCandBases: Set[String],
-                                importBases: Set[String]): Option[Unit] = {
+                                importBases: Set[String]): Boolean = {
     val nextStats = new Path(next, StatsDir)
-    val wStats = new Path(wDir, StatsDir)
-    def fileOf(ln: String): Option[String] =
-      scala.util.Try {
-        val n = statsMapper.readTree(ln)
-        if (n != null && n.hasNonNull("file")) Some(n.get("file").asText)
-        else None
-      }.toOption.flatten
-    val nextHas = statsPartFiles(fs, nextStats).nonEmpty
-    val wHas = statsPartFiles(fs, wStats).nonEmpty
-    if (!nextHas && !wHas) return Some(()) // stats-less store: nothing to move
-    // the winner has fresh files but no rows for them: bail loudly
-    if (!wHas && importBases.nonEmpty) return None
-    val localNext =
-      if (!nextHas) Some(Seq.empty[String]) else statsLinesLocal(fs, nextStats)
-    val localW =
-      if (!wHas) Some(Seq.empty[String]) else statsLinesLocal(fs, wStats)
-    (localNext, localW) match {
-      case (Some(nextLines), Some(wLines)) =>
-        // driver-side carry (under the size gate): zero Spark jobs
-        val kept = nextLines.filterNot(ln => fileOf(ln).exists(wCandBases.contains))
-        val imported = wLines.filter(ln => fileOf(ln).exists(importBases.contains))
-        if (importBases.nonEmpty &&
-            imported.flatMap(fileOf).toSet != importBases) return None // under-covered
-        statsPartFiles(fs, nextStats).foreach(st => fs.delete(st.getPath, false))
-        val all = kept ++ imported
-        if (all.nonEmpty) {
-          fs.mkdirs(nextStats)
-          val dst = new Path(nextStats, s"append-${java.util.UUID.randomUUID()}-0.json")
-          val out = fs.create(dst, true)
-          try out.write((all.mkString("\n") + "\n").getBytes(UTF_8))
-          finally out.close()
-        }
-        Some(())
-      case _ =>
-        // DISTRIBUTED carry (over the gate — six-figure file counts):
-        // the same two line-level filters as a Spark text read, keeping
-        // every kept/imported line byte-verbatim. `get_json_object`
-        // yields null for an unparseable line or a missing field, and a
-        // null never equals a join key — so rows without a usable `file`
-        // carry through exactly like the driver path's fileOf == None.
-        import org.apache.spark.sql.functions.{broadcast, col, get_json_object}
-        import spark.implicits._
-        def textOf(p: Path, has: Boolean): DataFrame =
-          if (has) spark.read.text(p.toString)
-          else Seq.empty[String].toDF("value")
-        val fileCol = get_json_object(col("value"), "$.file")
-        val kept = textOf(nextStats, nextHas)
-          .join(broadcast(wCandBases.toSeq.toDF("__wc")),
-            fileCol === col("__wc"), "left_anti")
-        // persisted: the coverage count below and the union write would
-        // otherwise each re-read the winner's sidecar — at the path's
-        // target scale (hundreds of MB to GB) that doubles the merge's
-        // I/O (an r13 review catch)
-        val imported = textOf(wStats, wHas)
-          .join(broadcast(importBases.toSeq.toDF("__wp")),
-            fileCol === col("__wp"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        if (importBases.nonEmpty) {
-          // the semi-join guarantees imported ⊆ importBases, so a distinct
-          // count equal to |importBases| IS set equality (the under-covered
-          // bail of the driver path)
-          val covered = imported.select(fileCol.as("f")).distinct().count()
-          if (covered != importBases.size.toLong) return None
-        }
-        // stage inside the (still-private) generation, then swap the
-        // sidecar — a crash anywhere drops the whole staging dir with the
-        // rest of the uncommitted generation
-        val stage = new Path(next, s"_stats-merge-${java.util.UUID.randomUUID()}")
-        try {
-          kept.select("value").union(imported.select("value"))
-            .write.mode(SaveMode.Overwrite).text(stage.toString)
-          statsPartFiles(fs, nextStats).foreach(st => fs.delete(st.getPath, false))
-          fs.mkdirs(nextStats)
-          fs.listStatus(stage).iterator.filter { st =>
-            val nm = st.getPath.getName
-            st.isFile && !nm.startsWith("_") && !nm.startsWith(".") && st.getLen > 0
-          }.zipWithIndex.foreach { case (st, i) =>
-            val dst = new Path(nextStats, s"append-${java.util.UUID.randomUUID()}-$i.json")
-            if (!fs.rename(st.getPath, dst))
-              throw new java.io.IOException(
-                s"docstore: cannot publish merged stats ${st.getPath} -> $dst")
-          }
-        } finally fs.delete(stage, true)
-        Some(())
-        } finally imported.unpersist(false)
-    }
+    carryStatsLines(spark, fs, nextStats, Seq(
+      StatsCarry(nextStats, wCandBases, keep = false),
+      StatsCarry(new Path(wDir, StatsDir), importBases, keep = true)), covered = true)
   }
 
   /** Pin the live generation for a rewrite: heal pending salvages first
@@ -4260,26 +4178,33 @@ object DocStore {
     // writers finish with one rewrite job each. Anything outside (a)-(c)
     // keeps today's loud serialize-and-retry.
     def disjointWinner(): Option[String] = {
-      val wGen = readManifest(fs, path).getOrElse(return None)
+      val wId = manifestId(fs, path).getOrElse(return None)
+      val wGen = new Path(genPath(path, wId)).getName
       val pinnedGen = new Path(pinnedLive).getName
+      if (wGen == pinnedGen) return None
       // same served schema and format across every hop: a DDL /
       // re-typing winner touches every read, so nothing is disjoint
       val pS = storedSchema(fs, new Path(pinnedLive, StatsDir))
       if (pS.isEmpty) return None
       val myCandBases = (sourceNames -- carried.toSet).map(baseName)
-      var cur = wGen
+      // the winners, newest first: the committed chain from the live
+      // generation down to the hop off the pinned snapshot
+      var chain = committedChain(fs, path, wId)
+      var from = ""
       var hops = 0
-      while (cur != pinnedGen) {
+      while (from != pinnedGen) {
         hops += 1
         // a chain deeper than any plausible concurrent-writer count means
-        // something else is going on (runaway, cycle) — go loud instead
-        if (hops > 8 || !cur.matches("gen-\\d{6}")) return None
-        val dir = s"$path/$cur"
-        val (from, pinned) = readSourceRecord(fs, dir).getOrElse(return None)
-        if (pS != storedSchema(fs, new Path(dir, StatsDir))) return None
-        if (genFormat(fs, dir) != format) return None
-        val candBases = pinned.map(baseName) -- readLinks(fs, dir).map(baseName)
+        // something else is going on (runaway) — go loud instead
+        if (hops > 8 || chain.isEmpty) return None
+        val hop = chain.head
+        val (hopFrom, pinned) = hop.source.getOrElse(return None)
+        if (pS != storedSchema(fs, new Path(hop.dir, StatsDir))) return None
+        if (genFormat(fs, hop.dir) != format) return None
+        val candBases = pinned.map(baseName) -- readLinks(fs, hop.dir).map(baseName)
         if ((candBases & myCandBases).nonEmpty) return None
+        from = hopFrom
+        chain = chain.tail
         // the hop's pin must equal its predecessor's served set: for the
         // hop off the shared snapshot that is THIS mutation's pin-time
         // listing (an append between the two pins makes them differ);
@@ -4289,14 +4214,13 @@ object DocStore {
         // walk cannot attribute, and the merge bails
         val prevSet =
           if (from == pinnedGen) sourceNames
-          else if (from.matches("gen-\\d{6}") &&
-                   fs.exists(new Path(s"$path/$from")))
-            logicalNames(fs, s"$path/$from") // a pruned hop bails via exists
-          else return None
+          else chain.headOption match {
+            case Some(prev) => logicalNames(fs, prev.dir)
+            case None => return None // the predecessor was pruned
+          }
         if (pinned != prevSet) return None
-        cur = from
       }
-      if (hops == 0) None else Some(wGen)
+      Some(wGen)
     }
     val previousAtStart: Option[String] =
       try validatedPrevious()
@@ -4370,71 +4294,12 @@ object DocStore {
         }
       // carried files' bytes are unchanged, so their stats rows (keyed by
       // basename) carry verbatim — selective mutations keep pruning
-      // across generations without a re-stat pass
-      val carriedBases = entries.map(baseName).toSet
-      val srcStats = new Path(pinnedLive, StatsDir)
-      def lineCarries(ln: String): Boolean =
-        scala.util.Try {
-          val n = statsMapper.readTree(ln)
-          n != null && n.hasNonNull("file") &&
-            carriedBases.contains(n.get("file").asText)
-        }.getOrElse(false) // an unparseable row carries nothing — the Spark
-                           // path's permissive read drops it the same way
-      statsLinesLocal(fs, srcStats) match {
-        case Some(lines) =>
-          // driver-side carry (the size-gated normal case): filter the
-          // pinned generation's rows at the LINE level, so kept rows carry
-          // byte-verbatim and the commit runs zero Spark jobs here
-          val kept = lines.filter(lineCarries)
-          if (kept.nonEmpty) {
-            val dst = new Path(stats, s"append-${java.util.UUID.randomUUID()}-0.json")
-            val out = fs.create(dst, true)
-            // fs.create throws on failure — same loudness contract as the
-            // rename below: carried files must never go silently unstatted
-            try out.write((kept.mkString("\n") + "\n").getBytes(UTF_8))
-            finally out.close()
-          }
-        case None =>
-          // DISTRIBUTED carry (over the local-planning gate — the 100 TB
-          // sidecar shape): the same byte-verbatim text discipline the
-          // disjoint merge uses — a line-level left_semi against the
-          // carried bases via `get_json_object` (a null file key never
-          // equals a join key, exactly lineCarries' drop behavior), with
-          // MULTI-FILE output. The former shape re-parsed and
-          // re-serialized every row through spark.read.json (schema
-          // inference over the whole sidecar, number/field-order drift)
-          // and folded the write into coalesce(1) — one task carrying a
-          // GB-scale sidecar.
-          if (statsPartFiles(fs, srcStats).nonEmpty) {
-            import org.apache.spark.sql.functions.{broadcast, get_json_object}
-            import spark.implicits._
-            val fileCol = get_json_object(col("value"), "$.file")
-            val rows = spark.read.text(srcStats.toString)
-              .join(broadcast(carriedBases.toSeq.toDF("__cb")),
-                fileCol === col("__cb"), "left_semi")
-            val stage = new Path(next, s"_stats-stage-${java.util.UUID.randomUUID()}")
-            try {
-              rows.select("value").write.mode(SaveMode.Overwrite).text(stage.toString)
-              fs.listStatus(stage).iterator.filter { st =>
-                val nm = st.getPath.getName
-                st.isFile && !nm.startsWith("_") && !nm.startsWith(".") &&
-                  st.getLen > 0
-              }.zipWithIndex.foreach { case (st, i) =>
-                val dst = new Path(stats, s"append-${java.util.UUID.randomUUID()}-$i.json")
-                // throw like appendStats does: a silently-failed rename would
-                // leave carried files stats-less — pruning and metadata-exact
-                // countFast then quietly degrade to full scans with no signal
-                if (!fs.rename(st.getPath, dst))
-                  throw new java.io.IOException(
-                    s"docstore: cannot publish carried stats ${st.getPath} -> $dst")
-              }
-            } finally fs.delete(stage, true)
-          }
-          // a dir with no visible part files (schema-only sidecar,
-          // pre-stats store) legitimately has nothing to carry: carried
-          // files stay covered by whatever covered them before — nothing
-          // to degrade
-      }
+      // across generations without a re-stat pass. A pinned generation
+      // without part files (schema-only sidecar, pre-stats store) has
+      // nothing to carry: carried files stay covered by whatever covered
+      // them before
+      carryStatsLines(spark, fs, stats, Seq(StatsCarry(
+        new Path(pinnedLive, StatsDir), entries.map(baseName).toSet, keep = true)))
       // stat the freshly rewritten files with the carried geometry (same
       // machinery an append uses) so the WHOLE generation stays covered
       val fresh = dataFileNames(fs, next).toSeq.sorted
@@ -4511,7 +4376,7 @@ object DocStore {
         // making this exactly the old pairwise set)
         val chainFresh = wLinks.filterNot(en => origBases.contains(baseName(en)))
         val importBases = wPhysical.toSet ++ chainFresh.map(baseName)
-        mergeCarriedStats(spark, fs, next, wDir, wCandBases, importBases).map { _ =>
+        Option.when(mergeCarriedStats(spark, fs, next, wDir, wCandBases, importBases)) {
           val pinnedGen = new Path(pinnedLive).getName
           val myEntries = carried.map(n =>
             if (n.contains("/")) n else s"$pinnedGen/$n")

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import graft.core.Parallel
+import graft.core.{Io, Parallel}
 import graft.sources.DocStore
 
 /** One batch-dir tree of a derived index: `dir/batch_id=N[/partCol=V]/`.
@@ -69,33 +69,10 @@ private[streaming] trait DerivedIndex {
   private[streaming] def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[streaming] def readSmallFile(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8) finally in.close()
-  }
-
   /** The `key=value` lines of a sidecar (other lines are skipped). */
   private[streaming] def parseKv(lines: Seq[String]): Map[String, String] =
     lines.map(_.trim).filter(_.contains("="))
       .map { l => val Array(a, b) = l.split("=", 2); a -> b }.toMap
-
-  /** Commit `text` as `dir/name` by tmp-then-rename, so a reader sees the
-    * old file or the new one, never a torn write. `replace = false` is
-    * write-if-absent: a file already there is kept (a racer that wrote it
-    * first wins).
-    */
-  private[streaming] def commitSmallFile(fs: FileSystem, dir: Path, name: String,
-                                         text: String, replace: Boolean): Unit = {
-    val dst = new Path(dir, name)
-    if (!replace && fs.exists(dst)) return
-    val tmp = new Path(dir, s"$name.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes(UTF_8)) finally out.close()
-    if (replace) {
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"cannot commit $dst")
-    } else if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-  }
 
   private def batchIdOf(st: FileStatus): Option[Long] = {
     val nm = st.getPath.getName
@@ -120,13 +97,13 @@ private[streaming] trait DerivedIndex {
     */
   private[streaming] def writeMeta(fs: FileSystem, root: String,
                                    fields: Seq[(String, Any)]): Unit =
-    commitSmallFile(fs, new Path(root), MetaFile,
-      fields.map { case (k, v) => s"$k=$v\n" }.mkString, replace = false)
+    Io.commitSmallFile(fs, new Path(root), MetaFile,
+      fields.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes(UTF_8), replace = false)
 
   /** The index's `_META` fields (empty when there is none). */
   private[streaming] def readMeta(fs: FileSystem, root: String): Map[String, String] = {
     val p = new Path(root, MetaFile)
-    if (!fs.exists(p)) Map.empty else parseKv(readSmallFile(fs, p).split("\n").toSeq)
+    if (!fs.exists(p)) Map.empty else parseKv(Io.readSmallFile(fs, p).split("\n").toSeq)
   }
 
   /** Commit the sync state: the consumed cursor and the last batch id it
@@ -134,15 +111,15 @@ private[streaming] trait DerivedIndex {
     */
   private[streaming] def writeSync(fs: FileSystem, root: String,
                                    cur: DocStore.DocCursor, lastBid: Long): Unit =
-    commitSmallFile(fs, new Path(root), SyncFile,
-      s"gen=${cur.generation}\nbid=$lastBid\n" + cur.files.toSeq.sorted.mkString("\n"),
-      replace = true)
+    Io.commitSmallFile(fs, new Path(root), SyncFile,
+      (s"gen=${cur.generation}\nbid=$lastBid\n" + cur.files.toSeq.sorted.mkString("\n"))
+        .getBytes(UTF_8), replace = true)
 
   private[streaming] def readSync(fs: FileSystem, root: String)
       : Option[(DocStore.DocCursor, Long)] = {
     val p = new Path(root, SyncFile)
     if (!fs.exists(p)) return None
-    val lines = readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim)
+    val lines = Io.readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim)
     val header = lines.takeWhile(_.contains("="))
     val kv = parseKv(header)
     Some((DocStore.DocCursor(kv("gen").toInt,
@@ -241,10 +218,8 @@ private[streaming] trait DerivedIndex {
       case None =>
         healAll(fs, ix) // the ownership check must not see a mid-fold layout
         val root = new Path(ix.root)
-        require(!(fs.exists(root) && fs.listStatus(root).exists { st =>
-            val nm = st.getPath.getName
-            !nm.startsWith("_") && !nm.startsWith(".")
-          }),
+        require(!(fs.exists(root) &&
+            fs.listStatus(root).exists(st => Io.isVisible(st.getPath.getName))),
           s"$what: ${ix.root} already has ingested batches but no _SYNC " +
             "state — it was built by the stream ingest or another " +
             "maintainer; point CDC sync at a fresh index directory")
@@ -379,15 +354,16 @@ private[streaming] trait DerivedIndex {
     * knows there are at most [[ByValueIdCap]] of them: then the only
     * collect of ids is that bounded one.
     *
-    * `tombstone = false` is for the sync poll, whose crashed-poll replay
-    * must re-ingest the very ids it just removed at the same batch id.
-    * Single-writer: never run while a batch is in flight.
+    * The sync poll calls [[takedownDistinct]] without tombstones: its
+    * crashed-poll replay must re-ingest the very ids it just removed at
+    * the same batch id. Single-writer: never run while a batch is in
+    * flight.
     */
   private[streaming] def takedown(spark: SparkSession, ix: IndexLayout, ids: DataFrame,
-                                  idCol: String, tombstone: Boolean)(
+                                  idCol: String)(
                                   scope: DataFrame => Option[DataFrame]): Long = {
     val idDf = ids.select(col(idCol)).distinct().cache()
-    try takedownDistinct(spark, ix, idDf, idCol, tombstone)(scope)
+    try takedownDistinct(spark, ix, idDf, idCol, tombstone = true)(scope)
     finally idDf.unpersist()
   }
 
@@ -600,7 +576,7 @@ private[streaming] trait DerivedIndex {
     * the swap with no loss.
     */
   private def holdsSwapLock(fs: FileSystem, lock: Path, token: String): Boolean =
-    scala.util.Try(readSmallFile(fs, lock) == token).getOrElse(false)
+    scala.util.Try(Io.readSmallFile(fs, lock) == token).getOrElse(false)
 
   /** Complete (or discard) a crashed consolidation under `parent`. With
     * an intent present: staging still there -> redo the delete+rename leg
@@ -698,7 +674,7 @@ private[streaming] trait DerivedIndex {
   private[streaming] def completeSwap(fs: FileSystem, dir: Path, intent: Path,
                                       fence: () => Unit = () => (),
                                       expectStaging: Boolean = false): Unit = {
-    val kv = parseKv(readSmallFile(fs, intent).split("\n").toSeq)
+    val kv = parseKv(Io.readSmallFile(fs, intent).split("\n").toSeq)
     val target = kv("target").toLong
     val staging = new Path(dir, kv("staging"))
     // the intent's explicit fold set (tiered folds leave LARGER dirs in
@@ -849,9 +825,9 @@ private[streaming] trait DerivedIndex {
       // EXPLICIT fold set: a tiered fold keeps larger dirs (possibly with
       // ids below the target) in place, so the swap's delete leg must
       // never infer "everything at/below target"
-      commitSmallFile(fs, dir, CompactIntentFile,
-        s"target=$target\nstaging=${staging.getName}\nids=${ids.mkString(",")}\n",
-        replace = true)
+      Io.commitSmallFile(fs, dir, CompactIntentFile,
+        s"target=$target\nstaging=${staging.getName}\nids=${ids.mkString(",")}\n"
+          .getBytes(UTF_8), replace = true)
       // the destructive leg IS the heal's completion leg — one shared
       // sequence (staging guard, fenced ascending deletes, tolerant
       // rename, intent clear); expectStaging aborts loudly with every
@@ -904,11 +880,7 @@ private[streaming] trait DerivedIndex {
   /** Visible tombstone files under `dir` (none when the dir is missing). */
   private def tombstoneFiles(fs: FileSystem, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter { st =>
-      val nm = st.getPath.getName
-      st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
+    if (!fs.exists(p)) Nil else Io.visibleFiles(fs, p).toSeq
   }
 
   /** MAINTENANCE for a derived index: fold each tree's accumulated batch
@@ -959,7 +931,7 @@ private[streaming] trait DerivedIndex {
     val fs = fsOf(spark, storePath)
     val p = new Path(storePath, IndexRegistryFile)
     if (!fs.exists(p)) Nil
-    else readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty).flatMap { ln =>
+    else Io.readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty).flatMap { ln =>
       ln.split("\t", 2) match {
         case Array(k, path) if path.nonEmpty => Some((k, path))
         case _ => None // an unparseable line registers nothing
@@ -969,8 +941,8 @@ private[streaming] trait DerivedIndex {
 
   private[streaming] def writeIndexRegistry(fs: FileSystem, storePath: String,
                                             entries: Seq[(String, String)]): Unit =
-    commitSmallFile(fs, new Path(storePath), IndexRegistryFile,
-      entries.map { case (k, p) => s"$k\t$p" }.mkString("\n"), replace = true)
+    Io.commitSmallFile(fs, new Path(storePath), IndexRegistryFile,
+      entries.map { case (k, p) => s"$k\t$p" }.mkString("\n").getBytes(UTF_8), replace = true)
 
   /** One JVM monitor per store path: registry updates are
     * read-modify-write, and two concurrent registrations (first polls of

@@ -612,34 +612,25 @@ object Streams extends DerivedIndex {
     * embedding index, the [[DerivedIndex]] takedown protocol (tombstones
     * first, one discovery aggregate, stage-then-swap rewrites of the
     * affected batch dirs, repartitioned by cell). Returns how many
-    * indexed vectors were removed.
-    *
-    * `cellHints` restricts the discovery scan by partition pruning to the
-    * cells that may hold the ids' vectors — at 100 TB the difference
-    * between scanning the whole index's id column and O(hinted cells).
-    * The caller owns the hint's COMPLETENESS (a missed cell = an
-    * incomplete takedown); the per-batch rewrite is unhinted either way.
-    * `tombstone = false` is for [[syncIvfIndex]], whose crashed-poll
-    * replay must re-ingest the very ids it just removed at the SAME
-    * deterministic batch id. Single-writer like the ingest: do not run
-    * while a batch is in flight.
+    * indexed vectors were removed. The sync poll ([[syncIvfIndex]]) runs
+    * its own cell-hinted takedown without tombstones. Single-writer like
+    * the ingest: do not run while a batch is in flight.
     */
   def removeFromIvfIndex(spark: SparkSession, indexPath: String,
-                         ids: DataFrame, idCol: String = "vec_id",
-                         tombstone: Boolean = true,
-                         cellHints: Option[Seq[Long]] = None): Long = {
+                         ids: DataFrame, idCol: String = "vec_id"): Long = {
     require(fsOf(spark, indexPath).exists(new Path(indexPath)),
       s"removeFromIvfIndex: no index at $indexPath")
     val ix = ivfLayout(indexPath)
-    takedown(spark, ix, ids, idCol, tombstone)(_ => Some(ivfScope(spark, ix, cellHints)))
+    takedown(spark, ix, ids, idCol)(_ => Some(ix.trees.head.read(spark)))
   }
 
-  /** The IVF takedown's discovery scan, pruned to `cells` when given. */
-  private def ivfScope(spark: SparkSession, ix: IndexLayout,
-                       cells: Option[Seq[Long]]): DataFrame = {
-    val all = ix.trees.head.read(spark)
-    cells.fold(all)(cs => all.filter(col("cell").isin(cs: _*)))
-  }
+  /** The IVF takedown's discovery scan, pruned by partition to `cells` —
+    * at 100 TB the difference between scanning the whole index's id
+    * column and O(hinted cells). The caller owns the hint's COMPLETENESS
+    * (a missed cell = an incomplete takedown).
+    */
+  private def ivfScope(spark: SparkSession, ix: IndexLayout, cells: Seq[Long]): DataFrame =
+    ix.trees.head.read(spark).filter(col("cell").isin(cells: _*))
 
   /** Keep an IVF ANN index FOLLOWING a DocStore corpus by cursor CDC —
     * the embedding twin of [[syncNearDupIndex]], so a mutating corpus
@@ -678,7 +669,7 @@ object Streams extends DerivedIndex {
       side => Seq(min_by(side("before"), col("generation")).as("__embBefore")),
       when(col("__embBefore").isNotNull, model.assign(col("__embBefore"))))(
       ivfBatch(_, _, indexPath, model, idCol, embCol)) { (ix, cells) =>
-      if (cells.isEmpty) None else Some(ivfScope(spark, ix, Some(cells)))
+      if (cells.isEmpty) None else Some(ivfScope(spark, ix, cells))
     }
   }
 
@@ -938,22 +929,21 @@ object Streams extends DerivedIndex {
     * later remains a deliberate producer choice. Batch ids are monotonic
     * within a checkpoint lineage — the same contract the
     * overwrite-by-batch-dir layout already requires of the ingest.
-    * `tombstone = false` skips the sidecar — for callers whose replay
-    * protocol is already deterministic ([[syncNearDupIndex]]).
+    * ([[syncNearDupIndex]], whose replay protocol is already
+    * deterministic, runs its own takedown without tombstones.)
     *
     * Single-writer like the ingest itself: do not run while a batch is in
     * flight (a DRAINED stream between triggers is fine — empty triggers
     * write nothing).
     */
   def removeFromNearDupIndex(spark: SparkSession, indexPath: String,
-                             ids: DataFrame, idCol: String = "doc_id",
-                             tombstone: Boolean = true): Long = {
+                             ids: DataFrame, idCol: String = "doc_id"): Long = {
     val fs = fsOf(spark, indexPath)
     require(fs.exists(new Path(s"$indexPath/keys")) &&
         fs.exists(new Path(s"$indexPath/shingles")),
       s"removeFromNearDupIndex: $indexPath has no keys/shingles dirs")
     val ix = nearDupLayout(indexPath)
-    takedown(spark, ix, ids, idCol, tombstone) { idDf =>
+    takedown(spark, ix, ids, idCol) { idDf =>
       // bounded driver collect: the ids' id-slots, at most `Slots` values
       nearDupScope(spark, ix, idDf.select(idSlot(col(idCol)))
         .distinct().collect().map(_.getLong(0)).toSeq)

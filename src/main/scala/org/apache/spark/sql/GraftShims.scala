@@ -23,6 +23,18 @@ object GraftShims {
     case _ => (c, false)
   }
 
+  /** A clone of `s`: its own runtime conf (a copy of `s`'s), temp views
+    * and streaming query manager over the same SparkContext and cache.
+    * `newSession` would not copy the conf. The streaming query listeners
+    * of `s` are attached to the clone too, so whoever observes the
+    * streams of `s` also sees those run in the clone.
+    */
+  def cloneSession(s: SparkSession): SparkSession = {
+    val c = s.asInstanceOf[classic.SparkSession].cloneSession()
+    s.streams.listListeners().foreach(l => c.streams.addListener(l))
+    c
+  }
+
   /** Field-union of two schemas via Catalyst's (private[sql]) StructType
     * merge — throws on incompatible types; callers treat that as
     * "cannot merge" and fall back.

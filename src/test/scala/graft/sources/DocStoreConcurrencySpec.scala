@@ -276,6 +276,22 @@ class DocStoreConcurrencySpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(orphan), "orphan dir must be pruned")
     assert(new java.io.File(s"$path/gen-000002").isDirectory,
       "committed previous generation must survive retention")
+    // an orphan beside a FIRST generation (never rewritten, so the live
+    // generation has no _SOURCE record): the committed chain is that
+    // generation alone, and the orphan is served nowhere either
+    val first = freshPath()
+    DocStore.insertMany(Seq((1L, "a")).toDF("id", "status"), first)
+    val orphan2 = java.nio.file.Paths.get(first, "gen-000002")
+    java.nio.file.Files.createDirectories(orphan2)
+    java.nio.file.Files.write(orphan2.resolve("part-0.json"), "{\"id\": 66}".getBytes)
+    java.nio.file.Files.write(orphan2.resolve("_SUCCESS"), Array.empty[Byte])
+    assert(DocStore.generations(spark, first) == Seq(1))
+    assert(DocStore.cursor(spark, first).generation == 1)
+    intercept[IllegalArgumentException] { DocStore.findAsOf(spark, first, 2) }
+    val firstPoll = DocStore.changesSince(spark, first, 1, "id")
+      .select("id").as[Long].collect().toSet
+    assert(firstPoll.isEmpty, s"phantom orphan changes delivered: $firstPoll")
+    assert(DocStore.find(spark, first).select("id").as[Long].collect().toSet == Set(1L))
   }
 
   test("an appended file destroyed mid-race (pruning simulation) fails LOUDLY, never silently") {

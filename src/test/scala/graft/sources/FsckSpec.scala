@@ -60,6 +60,18 @@ class FsckSpec extends SparkTestBase {
     assert(!cs.exists(_._1 == "error"), cs)
   }
 
+  test("an orphan beside a never-rewritten first generation is warned") {
+    val path = freshStore() // gen 1 only: no _SOURCE record anywhere
+    val orphan = new java.io.File(path, "gen-000002")
+    orphan.mkdirs()
+    java.nio.file.Files.write(new java.io.File(orphan, "part-0.json").toPath,
+      "{\"id\": 66}".getBytes)
+    new java.io.File(orphan, "_SUCCESS").createNewFile()
+    val cs = codes(path)
+    assert(cs.contains(("warn", "orphan-generation")), cs)
+    assert(!cs.exists(_._1 == "error"), cs)
+  }
+
   test("dangling/incomplete manifest targets are errors") {
     val path = freshStore()
     val live = DocStore.generations(spark, path).last
