@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Io
+import DocStoreCommit.StatsCarry
 
 /** Document-store source/sink (S7 scan, K8 write): the engine counterpart
   * of the reference's Mongo collection layer
@@ -56,91 +57,11 @@ import graft.core.Io
   * subsequent mutations stay parquet, and [[findAsOf]]/CDC read each
   * retained generation in its own format.
   */
-object DocStore {
+object DocStore extends DocStoreCommit {
 
   final class DeleteProtectionException extends RuntimeException(
     "deleteMany without a filter would delete every document; " +
       "pass deleteProtection = false to allow it")
-
-  /** Thrown when a mutation detects that another mutation committed
-    * between its snapshot pin and its own commit: the rewrite is based on
-    * a STALE snapshot, and swinging the manifest would silently discard
-    * the other mutation's effect (a classic lost update). The contract
-    * stays single-writer for mutations; this turns a contract violation
-    * from silent data loss into a loud, cleanly-retryable failure.
-    * Detection is best-effort (the final check and the swing are not one
-    * atomic step, and two racing rewrites that claim the SAME next
-    * generation id can still resolve last-writer-wins — the pre-protocol
-    * behavior), never a correctness downgrade.
-    */
-  final class ConcurrentMutationException(msg: String) extends RuntimeException(msg)
-
-  private val Manifest = "_MANIFEST"
-  private val StatsDir = "_STATS"
-  private val GenName = "gen-(\\d{6})".r
-
-  // ---- file-granular copy-on-write (the `_LINKS` sidecar) -----------------
-  //
-  // A generation may CARRY data files of earlier generations instead of
-  // rewriting them: its `_LINKS` sidecar lists root-relative entries
-  // (`gen-NNNNNN/part-...`) of physical files that logically belong to this
-  // generation too. A selective mutation then writes only the files that MAY
-  // contain matching rows (pruned by the `_STATS` min/max+Bloom sidecars)
-  // and links the provably-untouched rest — O(matched files) instead of
-  // O(corpus) per mutation. Entries always name a file's PHYSICAL home
-  // (links never chain), so resolution is single-hop; retention keeps the
-  // readable window (newest `retain` + previous) plus the homes ITS links
-  // name — one hop, which is exactly full resolution for the window.
-  // Older dirs survive only as storage for those links and stop being
-  // servable snapshots once their own homes age out (loud in findAsOf,
-  // `unreadable-generation` in fsck). Superseded bytes inside a home are
-  // reclaimed incrementally by [[vacuum]] (re-home the still-live files
-  // of mostly-dead homes at O(their live bytes)) or wholesale by
-  // [[compact]]/[[cluster]], which flatten every link. Data files stay
-  // immutable and generation dirs append-only, so every existing protocol
-  // (salvage, CDC, snapshot isolation) is unchanged.
-
-  private val LinksFile = "_LINKS"
-
-  /** Root-relative carried-file entries of a generation (empty when the
-    * sidecar is absent — every pre-COW generation).
-    */
-  private def readLinks(fs: FileSystem, genDir: String): Seq[String] = {
-    val p = new Path(genDir, LinksFile)
-    if (!fs.exists(p)) Nil
-    else Io.readSmallFile(fs, p).split("\n", -1).toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Committed like every sidecar ([[Io.commitSmallFile]]): a torn write
-    * reads as ABSENT (no carried files) — and the sidecar lands before the
-    * manifest swing, so an unlinked committed generation cannot arise.
-    */
-  private def writeLinks(fs: FileSystem, genDir: String, entries: Seq[String]): Unit =
-    Io.commitSmallFile(fs, new Path(genDir), LinksFile,
-      entries.sorted.mkString("\n").getBytes(UTF_8), replace = true)
-
-  /** LOGICAL data-file names of a generation: physical visible files (plain
-    * names) plus carried entries (containing '/'). Every read/pin surface
-    * operates on this set; physical-only listings ([[dataFileNames]])
-    * remain for the append/salvage protocols, which move physical files.
-    */
-  private def logicalNames(fs: FileSystem, genDir: String): Set[String] =
-    dataFileNames(fs, genDir) ++ readLinks(fs, genDir)
-
-  /** Absolute path of a logical name: plain names live in `genDir`, carried
-    * entries are relative to the collection root (genDir's parent — every
-    * data dir is a `gen-*` dir).
-    */
-  private def resolvePath(genDir: String, name: String): String =
-    if (name.contains("/")) s"${new Path(genDir).getParent.toString}/$name"
-    else s"$genDir/$name"
-
-  /** Basename of a logical name — the key stats rows use (`file` field).
-    * Part names embed job UUIDs, so basenames are collision-free across
-    * generations.
-    */
-  private def baseName(name: String): String =
-    name.substring(name.lastIndexOf('/') + 1)
 
   /** K8: append documents; returns rows written. Appending adds files to
     * the live generation — readers that already planned their scan see a
@@ -255,48 +176,6 @@ object DocStore {
       }
       n
     } finally fs.delete(staging, true)
-  }
-
-  /** Data-file format of a generation dir, detected from the data files
-    * themselves: any `.parquet` data file means parquet; otherwise JSON
-    * (the default). Detection beats a marker file because it is
-    * self-describing — there is no marker write whose ordering against
-    * `_SUCCESS`/manifest could leave a committed generation mislabeled
-    * after a crash. A generation's data
-    * is written by ONE job and appends adopt the live format, so mixed
-    * dirs cannot arise (an empty generation reads as json, and whichever
-    * format the first append writes becomes the detected format from
-    * then on; a salvaged straggler crossing a format boundary is
-    * CONVERTED by [[publishForward]], preserving purity).
-    */
-  private def genFormat(fs: FileSystem, dir: String): String = {
-    val p = new Path(dir)
-    val parquet = fs.exists(p) && fs.getFileStatus(p).isDirectory &&
-      Io.visibleFiles(fs, p).exists(_.getPath.getName.endsWith(".parquet"))
-    // a COW generation can be all-carried (a mutation that matched rows in
-    // zero or few files): no physical data files, so detect from the
-    // carried entries — formats never cross a link (a COW rewrite keeps
-    // the pinned format; format migration is compact's, which flattens)
-    if (parquet || readLinks(fs, dir).exists(_.endsWith(".parquet"))) "parquet"
-    else "json"
-  }
-
-  private def writeData(df: DataFrame, fmt: String, dest: String): Unit =
-    if (fmt == "parquet") df.write.mode(SaveMode.Overwrite).parquet(dest)
-    else df.write.mode(SaveMode.Overwrite).json(dest)
-
-  /** Read specific data files (or a whole dir) in the generation's format
-    * with an optional explicit schema. JSON without a schema pays an
-    * inference pass; parquet without one merges footers — both are the
-    * fallback, not the normal path ([[readGen]] normally supplies the
-    * stored schema).
-    */
-  private def readFiles(spark: SparkSession, fmt: String,
-                        schema: Option[org.apache.spark.sql.types.StructType],
-                        files: Seq[String]): DataFrame = {
-    val r0 = spark.read
-    val r = schema.fold(if (fmt == "parquet") r0.option("mergeSchema", "true") else r0)(r0.schema)
-    if (fmt == "parquet") r.parquet(files: _*) else r.json(files: _*)
   }
 
   /** SINGLE-SCAN read of a whole generation dir: parquet reads schema
@@ -3128,9 +3007,6 @@ object DocStore {
     case _ => None
   }
 
-  private def dataFileNames(fs: FileSystem, live: String): Set[String] =
-    Io.visibleFiles(fs, new Path(live)).iterator.map(_.getPath.getName).toSet
-
   /** `spark.read.json` over a stats dir ONLY when it has visible part
     * files. A schema-only dir (just `_schema.json`, written by every
     * parquet commit) would fail inference — and in Spark 4 the reader
@@ -3190,11 +3066,6 @@ object DocStore {
   private def statsPart(statsPath: Path, i: Int): Path =
     new Path(statsPath, s"append-${java.util.UUID.randomUUID()}-$i.json")
 
-  /** One source of a [[carryStatsLines]] pass: the lines of the stats dir
-    * `stats` whose `file` key is in `files` (`keep`), or is not (`!keep`).
-    */
-  private final case class StatsCarry(stats: Path, files: Set[String], keep: Boolean)
-
   /** THE stats line carry: write into `dst` — the stats dir of a private,
     * not yet committed generation — the lines each carry selects,
     * byte-verbatim. A carried data file's bytes are unchanged, so its row
@@ -3215,7 +3086,7 @@ object DocStore {
     * without part files contribute nothing, and when no source has any
     * there is nothing to carry: true.
     */
-  private def carryStatsLines(spark: SparkSession, fs: FileSystem, dst: Path,
+  private[sources] def carryStatsLines(spark: SparkSession, fs: FileSystem, dst: Path,
                               carries: Seq[StatsCarry], covered: Boolean = false): Boolean = {
     val parts = carries.map(c => statsPartFiles(fs, c.stats))
     if (parts.forall(_.isEmpty)) return true
@@ -3373,7 +3244,7 @@ object DocStore {
     * no stats columns leave the files unstatted — pruning then reads
     * them, which is always sound.
     */
-  private def appendStats(spark: SparkSession, fs: FileSystem, live: String,
+  private[sources] def appendStats(spark: SparkSession, fs: FileSystem, live: String,
                           fmt: String, files: Seq[String],
                           schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     // reuse the original pass's column set and Bloom geometry so probe
@@ -3388,7 +3259,7 @@ object DocStore {
     * ([[commitRewrite]]'s `stagedStats`), where the stats dir starts
     * empty and the geometry comes from the snapshot being rewritten.
     */
-  private def appendStatsWith(spark: SparkSession, fs: FileSystem, live: String,
+  private[sources] def appendStatsWith(spark: SparkSession, fs: FileSystem, live: String,
                               fmt: String, files: Seq[String],
                               cols: Seq[String], bloomCols: Seq[String],
                               bloomBits: Int,
@@ -3436,7 +3307,7 @@ object DocStore {
     * stats) or any piece is unreadable/unmergeable — callers then skip
     * pruning, which is always sound.
     */
-  private def storedSchema(fs: FileSystem, statsPath: Path)
+  private[sources] def storedSchema(fs: FileSystem, statsPath: Path)
       : Option[org.apache.spark.sql.types.StructType] = {
     def read(p: Path): Option[org.apache.spark.sql.types.StructType] = {
       val txt = Io.readSmallFile(fs, p)
@@ -3650,845 +3521,4 @@ object DocStore {
     Some((kept, schema))
   }
 
-  // ---- generation machinery ---------------------------------------------
-
-  private def fileSystem(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def genPath(path: String, id: Int): String =
-    f"$path/gen-$id%06d"
-
-  private def completeGens(fs: FileSystem, path: String): Seq[Int] = {
-    val root = new Path(path)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory =>
-        st.getPath.getName match {
-          case GenName(id) if fs.exists(new Path(st.getPath, "_SUCCESS")) => Some(id.toInt)
-          case _ => None
-        }
-    }.flatten.sorted
-  }
-
-  /** COMMITTED generation ids, oldest first: the [[committedChain]] from
-    * the live generation. A crash between a rewrite's data write and its
-    * manifest swing leaves an ORPHAN — a `_SUCCESS`-complete generation
-    * that never became live; it must stay on disk for id-collision
-    * avoidance ([[completeGens]] feeds the next id) but it was never a
-    * committed state, so the time-travel/CDC surfaces must not serve it:
-    * [[findAsOf]] of an aborted rewrite would return data no reader ever
-    * saw, and a CDC poll would deliver its phantom intermediate changes.
-    * With the manifest missing (a crash inside its swing) or naming no
-    * complete generation (the manifest errors [[fsck]] reports), the
-    * chain starts at the newest complete generation instead.
-    */
-  private def committedGens(fs: FileSystem, path: String): Seq[Int] =
-    manifestId(fs, path).map(committedChain(fs, path, _)).filter(_.nonEmpty)
-      .orElse(completeGens(fs, path).lastOption.map(committedChain(fs, path, _)))
-      .fold(Seq.empty[Int])(_.map(_.id).reverse)
-
-  /** One generation of the committed chain and its [[SourceFile]] record
-    * (None for the collection's first generation, which no rewrite wrote).
-    */
-  private final case class Committed(id: Int, dir: String,
-                                     source: Option[(String, Set[String])])
-
-  /** THE committed chain, newest first: generation `live`, then each
-    * predecessor its [[SourceFile]] record names — every link while it is
-    * still a complete generation (retention prunes the tail; a dangling or
-    * incomplete live generation has no chain). A generation without a
-    * record is the collection's first ([[liveDir]] creates it without
-    * one), so the chain ends there. Ids strictly decrease along the chain
-    * (a commit takes an id above every complete generation), so a record
-    * naming anything else ends the walk too — termination needs no hop
-    * cap. Lazy: a caller forcing a prefix reads only its records.
-    */
-  private def committedChain(fs: FileSystem, path: String, live: Int): LazyList[Committed] = {
-    val dir = genPath(path, live)
-    if (!fs.exists(new Path(dir, "_SUCCESS"))) LazyList.empty
-    else {
-      val source = readSourceRecord(fs, dir)
-      Committed(live, dir, source) #:: (source match {
-        case Some((GenName(p), _)) if p.toInt < live => committedChain(fs, path, p.toInt)
-        case _ => LazyList.empty
-      })
-    }
-  }
-
-  /** The generation id the manifest names, if any. */
-  private def manifestId(fs: FileSystem, path: String): Option[Int] =
-    readManifest(fs, path).collect { case GenName(id) => id.toInt }
-
-  /** Resolve the live generation dir — the one place the on-disk layout
-    * is decided.
-    *  - Manifest present -> the generation it names.
-    *  - Manifest missing but complete generations exist (crash landed
-    *    between manifest delete and rename) -> newest complete generation,
-    *    manifest rewritten.
-    *  - Neither -> None: no collection at `path`, whether the path is
-    *    missing or an existing directory without data files (a fresh temp
-    *    dir, or a root holding only sidecars such as `_INDEXES`). With
-    *    `createIfMissing` the collection is created instead: gen 1 plus
-    *    the manifest. A root that holds data files but no generation is
-    *    refused ([[requireNoRootData]]).
-    */
-  private def liveDir(fs: FileSystem, path: String,
-                      createIfMissing: Boolean = false): Option[String] =
-    readManifest(fs, path) match {
-      case Some(gen) => Some(s"$path/$gen")
-      case None =>
-        val gens = completeGens(fs, path)
-        if (gens.nonEmpty) {
-          val live = genPath(path, gens.last)
-          writeManifest(fs, path, new Path(live).getName)
-          Some(live)
-        } else {
-          requireNoRootData(fs, path)
-          if (!createIfMissing) None
-          else {
-            val first = genPath(path, 1)
-            fs.mkdirs(new Path(first))
-            fs.create(new Path(first, "_SUCCESS"), true).close()
-            writeManifest(fs, path, new Path(first).getName)
-            Some(first)
-          }
-        }
-    }
-
-  /** Refuse a root that holds data files (names not starting with `_` or
-    * `.`) but no generation: that is the pre-manifest layout, which no
-    * surface reads, mutates or converts. Checked before anything is
-    * written, so the refused root stays untouched.
-    */
-  private def requireNoRootData(fs: FileSystem, path: String): Unit =
-    if (fs.exists(new Path(path)) && dataFileNames(fs, path).nonEmpty)
-      throw new IllegalStateException(rootDataMessage(path))
-
-  /** The one wording for a root holding data files and no generation:
-    * the read and write surfaces refuse with it, [[fsck]] reports it.
-    */
-  private def rootDataMessage(path: String): String =
-    s"docstore: $path holds data files at its root and no generation — " +
-      "an unsupported pre-manifest layout; the store must be rebuilt " +
-      "(read its files with spark.read and insertMany them into a new path)"
-
-  private def readManifest(fs: FileSystem, path: String): Option[String] = {
-    val m = new Path(path, Manifest)
-    if (!fs.exists(m)) None
-    else Some(Io.readSmallFile(fs, m).trim).filter(_.nonEmpty)
-  }
-
-  /** A crash inside the commit's delete-then-rename leaves NO manifest +
-    * complete generations, which [[liveDir]] resolves to the newest
-    * complete generation — never a loss.
-    */
-  private def writeManifest(fs: FileSystem, path: String, gen: String): Unit =
-    Io.commitSmallFile(fs, new Path(path), Manifest, gen.getBytes(UTF_8), replace = true)
-
-  // ---- append-vs-mutation concurrency ------------------------------------
-  //
-  // A rewrite and a concurrent append race on ONE question: did the
-  // rewrite's scan read the appended files? The answer is made determinate
-  // by pinning the rewrite's input as an explicit file list and COMMITTING
-  // that list with the generation (the `_SOURCE` record): a file present
-  // in the superseded generation but absent from the record was provably
-  // invisible to the rewrite and is salvaged forward (the append
-  // linearizes AFTER the mutation — its documents do not receive the
-  // rewrite's update/delete); a recorded file's rows are already in the
-  // new generation (the append linearized BEFORE). Salvage runs on the
-  // mutation side right after the commit, is re-run by [[healStragglers]]
-  // at the start of every later write (crash recovery), and the appender
-  // independently walks its own files forward ([[ensureVisible]]) — all
-  // three paths converge on the same deterministic targets via atomic
-  // renames, so racing each other is harmless.
-
-  private val SourceFile = "_SOURCE"
-
-  /** Record, inside a freshly committed generation, which data files of
-    * its predecessor the rewrite read (line 1 = predecessor dir name, ""
-    * when the rewrite created the collection; remaining lines = file
-    * names). Committed tmp-then-rename ([[Io.commitSmallFile]]), before
-    * the manifest swing: a commit crashing before the record lands leaves
-    * an orphan, never a live generation without its record.
-    */
-  private def writeSourceRecord(fs: FileSystem, genDir: String, from: String,
-                                files: Set[String]): Unit =
-    Io.commitSmallFile(fs, new Path(genDir), SourceFile,
-      (from + "\n" + files.toSeq.sorted.mkString("\n")).getBytes(UTF_8), replace = true)
-
-  private def readSourceRecord(fs: FileSystem, genDir: String)
-      : Option[(String, Set[String])] = {
-    val p = new Path(genDir, SourceFile)
-    if (!fs.exists(p)) None
-    else {
-      val lines = Io.readSmallFile(fs, p).split("\n", -1).toSeq
-      Some((lines.head.trim, lines.tail.map(_.trim).filter(_.nonEmpty).toSet))
-    }
-  }
-
-  private def writeSchemaSidecar(fs: FileSystem, statsPath: Path,
-                                 schema: org.apache.spark.sql.types.StructType): Path = {
-    val sidecar = new Path(statsPath,
-      s"_schema-append-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(sidecar, true)
-    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-    sidecar
-  }
-
-  /** Per-store JVM monitor serializing an append's publish + visibility
-    * walk against a mutation commit's retention prune. Without it, a
-    * same-process append landing its files in a superseded generation
-    * between the prune's straggler heal and its directory delete loses
-    * those files before the appender's walk can move them forward — the
-    * walk then fails LOUDLY (rows are never silently lost), but the
-    * append was forfeited for no structural reason (observed as a rare
-    * loud failure in the threaded append-vs-mutation stress race).
-    * Cross-process appenders keep the documented loud-failure contract —
-    * no FS lock here, the same in-process-only boundary as the streaming
-    * registry guard. Bounded by the number of distinct store paths a
-    * driver touches.
-    */
-  private val publishGuards =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def publishGuard(fs: FileSystem, path: String): Object =
-    publishGuards.computeIfAbsent(
-      fs.makeQualified(new Path(path)).toString, _ => new Object)
-
-  /** Idempotently publish straggler data files of `fromDir` (a superseded
-    * generation) into `toDir` (its committed successor), converting when
-    * the formats differ, with schema-sidecar and stats upkeep on the
-    * destination. Safe against a concurrent publisher of the SAME files
-    * (a mutation's salvage racing the appender's visibility walk): same
-    * source, same deterministic target, atomic rename — the loser sees
-    * the target present or the source gone and treats it as done. Returns
-    * the names the files carry in `toDir`.
-    */
-  private def publishForward(spark: SparkSession, fs: FileSystem,
-                             fromDir: String, toDir: String,
-                             names: Seq[String]): Seq[String] = {
-    if (names.isEmpty) return Nil
-    val toFmt =
-      if (dataFileNames(fs, toDir).nonEmpty) Some(genFormat(fs, toDir)) else None
-    val statsPath = new Path(toDir, StatsDir)
-    val hasBase = fs.exists(new Path(statsPath, "_schema.json"))
-    names.map { name =>
-      val src = new Path(fromDir, name)
-      val srcFmt = if (name.endsWith(".parquet")) "parquet" else "json"
-      // an empty destination adopts the straggler's own format (nothing
-      // there to stay pure against)
-      val dstFmt = toFmt.getOrElse(srcFmt)
-      if (srcFmt == dstFmt) {
-        val target = new Path(toDir, name)
-        if (fs.exists(src)) {
-          val renamed =
-            try {
-              // rowless (0-byte) parts carry no rows and no inferable
-              // schema: rename them for listing fidelity but skip sidecar
-              // and stats
-              val hasRows = fs.getFileStatus(src).getLen > 0
-              // sidecar BEFORE publish, the insertMany cover-first
-              // discipline
-              if (hasBase && hasRows)
-                writeSchemaSidecar(fs, statsPath,
-                  readFiles(spark, srcFmt, None, Seq(src.toString)).schema)
-              // rename failure = the racing publisher won; done either way
-              fs.rename(src, target) && hasRows
-            } catch { case e: Exception =>
-              // the exists() above and the getFileStatus/sidecar reads
-              // here race other salvagers of the SAME file (the
-              // mutation-side salvage vs the appender's visibility walk):
-              // a competitor renaming src away between them surfaces as
-              // FileNotFoundException. Same source, same deterministic
-              // target — the racer's outcome IS ours, so a vanished
-              // source is "already published", not an error (the caller
-              // re-verifies the target and rescans the chain on a miss,
-              // staying loud if the file truly resolved nowhere). With
-              // src still present the failure is real: rethrow.
-              if (fs.exists(src)) throw e
-              false
-            }
-          if (renamed)
-            appendStats(spark, fs, toDir, dstFmt, Seq(target.toString))
-        }
-        name
-      } else {
-        // format boundary (the straggler raced a compact(format = ...)):
-        // rewrite the file into the destination format under a
-        // DETERMINISTIC name so racing publishers converge on one target
-        val tName = name + (if (dstFmt == "parquet") ".salv.parquet" else ".salv.json")
-        val target = new Path(toDir, tName)
-        if (!fs.exists(target) && fs.exists(src)) {
-          if (fs.getFileStatus(src).getLen == 0) fs.delete(src, false) // rowless
-          else try {
-            val rows = readFiles(spark, srcFmt, None, Seq(src.toString))
-            if (hasBase) writeSchemaSidecar(fs, statsPath, rows.schema)
-            val stage = new Path(toDir, s"_salv-${java.util.UUID.randomUUID()}")
-            try {
-              writeData(rows.coalesce(1), dstFmt, stage.toString)
-              Io.visibleFiles(fs, stage).headOption.foreach { st =>
-                if (fs.rename(st.getPath, target))
-                  appendStats(spark, fs, toDir, dstFmt, Seq(target.toString))
-              }
-            } finally fs.delete(stage, true)
-          } catch { case e: Exception =>
-            // the exists-checks above ran at PLAN time but the conversion
-            // read runs at job time — the racing publisher can win (and
-            // delete src) in between. If the target exists now, the race's
-            // outcome is exactly what we wanted; anything else rethrows.
-            if (!fs.exists(target)) throw e
-          }
-        }
-        // the source copy is superseded once the target exists; a crash
-        // between the two leaves a re-deletable source, never a double
-        if (fs.exists(target) && fs.exists(src)) fs.delete(src, false)
-        tName
-      }
-    }
-  }
-
-  /** Move data files that landed in `fromDir` after the committed rewrite
-    * pinned its source list — appends the rewrite never saw — into the
-    * committed generation, so they stay in the live view.
-    */
-  private def salvageInto(spark: SparkSession, fs: FileSystem, fromDir: String,
-                          toDir: String, sourceNames: Set[String]): Unit =
-    if (fs.exists(new Path(fromDir))) {
-      publishForward(spark, fs, fromDir, toDir,
-        (dataFileNames(fs, fromDir) -- sourceNames).toSeq.sorted)
-      ()
-    }
-
-  /** Re-run any salvage a crashed mutation never finished: walk the
-    * retained generation chain from the live one back through its
-    * [[SourceFile]] links and salvage each pending predecessor
-    * oldest-first. Runs at the start of every mutation (so the rewrite
-    * reads recovered rows) and every append; cheap when there is nothing
-    * to do (one manifest read, one small file, one listing diff).
-    */
-  private def healStragglers(spark: SparkSession, fs: FileSystem, path: String): Unit =
-    manifestId(fs, path).foreach { live =>
-      committedChain(fs, path, live).sliding(2).toList.reverse.foreach { // oldest link first
-        case Seq(child, parent) =>
-          salvageInto(spark, fs, parent.dir, child.dir, child.source.fold(Set.empty[String])(_._2))
-        case _ => () // a one-generation chain has nothing to heal
-      }
-    }
-
-  /** Post-publish visibility walk for an append: if the generation the
-    * batch was published into is no longer live, a mutation raced it. Per
-    * file the outcome is determinate via the successors' [[SourceFile]]
-    * records — listed means a rewrite read it (rows then flow through
-    * every later generation), unlisted means move it forward. Racing
-    * salvagers can move a file FURTHER than one hop and retention pruning
-    * can delete a directory out from under the walk, so after every hop
-    * the file's presence is VERIFIED and a miss is re-resolved by
-    * scanning the committed chain (same or `.salv.`-converted name, or
-    * carried in some source record). A file that resolves nowhere throws
-    * — the append NEVER silently loses rows.
-    */
-  private def ensureVisible(spark: SparkSession, fs: FileSystem, path: String,
-                            publishedDir: String, names: Seq[String]): Unit =
-    if (names.nonEmpty && !liveDir(fs, path).contains(publishedDir))
-      names.foreach(ensureFileVisible(spark, fs, path, publishedDir, _))
-
-  private def ensureFileVisible(spark: SparkSession, fs: FileSystem, path: String,
-                                startDir: String, name0: String): Unit = {
-    var dir = startDir
-    var name = name0
-    var hops = 0
-    while (!liveDir(fs, path).contains(dir)) {
-      hops += 1
-      require(hops <= 64,
-        s"docstore: append visibility walk did not converge for $path")
-      val chain = manifestId(fs, path).fold(List.empty[Committed])(committedChain(fs, path, _).toList)
-      // carried in any chain generation's source record: its rows were
-      // read by that rewrite and flow through every later one — done
-      if (chain.exists(_.source.exists(_._2.contains(name)))) return
-      def rescan(): Unit =
-        chain.reverseIterator // oldest-first: resume from the EARLIEST copy
-          .map { c => c.dir -> dataFileNames(fs, c.dir)
-            .find(f => f == name || f.startsWith(name + ".salv.")) }
-          .collectFirst { case (g, Some(f)) => (g, f) } match {
-          case Some((vDir, vName)) => dir = vDir; name = vName
-          case None => throw new IllegalStateException(
-            s"docstore: appended file $name of $dir raced mutations of $path " +
-              "and can no longer be found on the committed chain (rewrites " +
-              "plus retention pruning completed mid-append) — the batch was " +
-              "NOT fully published; retry the append for its missing rows")
-        }
-      chain.find(_.source.exists { case (from, _) => from.nonEmpty && s"$path/$from" == dir }) match {
-        case Some(Committed(_, sDir, _)) =>
-          name = publishForward(spark, fs, dir, sDir, Seq(name)).head
-          if (fs.exists(new Path(sDir, name))) dir = sDir
-          else rescan() // a racing salvager moved it further, or pruning hit
-        case None => rescan() // `dir` itself fell off the chain (pruned)
-      }
-    }
-  }
-
-  /** Atomically rename a fully staged rewrite to its committed generation
-    * id — chosen HERE, after the data landed and any race was resolved,
-    * as one above every complete generation and `minAbove` (the disjoint
-    * re-commit's winner id, so CDC's by-generation ordering always puts
-    * the merged commit after the winner). Retries upward when a racer
-    * grabbed the id between the listing and the rename; on local
-    * filesystems a directory rename onto an existing directory can NEST
-    * the source inside the target (POSIX mv semantics) — detected and
-    * pulled back out before retrying. Returns the committed dir path.
-    */
-  private def publishStagedGeneration(fs: FileSystem, path: String,
-                                      staging: String, minAbove: Int): String = {
-    var attempts = 0
-    while (attempts < 8) {
-      val id = (completeGens(fs, path) :+ minAbove).max + 1
-      val target = new Path(genPath(path, id))
-      if (!fs.exists(target)) {
-        val src = new Path(staging)
-        if (fs.rename(src, target)) {
-          val nested = new Path(target, src.getName)
-          if (!fs.exists(nested)) return target.toString
-          // the target existed after all (a racer won the id and the
-          // local-FS rename nested us inside it): pull back out, retry
-          if (!fs.rename(nested, src))
-            throw new java.io.IOException(
-              s"docstore: cannot recover nested staging $nested")
-        }
-      }
-      attempts += 1
-    }
-    throw new java.io.IOException(
-      s"docstore: cannot publish staged generation $staging under $path " +
-        "— id allocation lost 8 straight races")
-  }
-
-  /** Stats-sidecar leg of the disjoint re-commit ([[commitRewrite]]'s
-    * merge path): the staged generation's rows currently cover this
-    * mutation's fresh files plus EVERYTHING it carried from the pinned
-    * snapshot — but the merge re-points the names the winner chain
-    * consumed at the chain's fresh files instead. Drop the rows for
-    * `wCandBases` (their files are no longer part of the generation —
-    * fsck would flag them as stale) and import the winner's rows for
-    * `importBases` — its own fresh physical files plus (multi-hop) the
-    * intermediate winners' fresh files it carries, whose rows the carry
-    * discipline moved into its sidecar (else pruning/countFast scan them
-    * and fsck flags them unstatted). Both legs of [[carryStatsLines]]
-    * apply: a 100 TB store's per-file sidecar is exactly the deployment
-    * whose lost races the merge exists to absorb. False = not safely
-    * doable (a winner whose fresh files carry no rows — importing nothing
-    * would leave the merged generation under-covered while claiming full
-    * stats): the caller then falls back to the loud serialize-and-retry
-    * path. A stats-less store has nothing to move: true.
-    */
-  private def mergeCarriedStats(spark: SparkSession, fs: FileSystem,
-                                next: String, wDir: String,
-                                wCandBases: Set[String],
-                                importBases: Set[String]): Boolean = {
-    val nextStats = new Path(next, StatsDir)
-    carryStatsLines(spark, fs, nextStats, Seq(
-      StatsCarry(nextStats, wCandBases, keep = false),
-      StatsCarry(new Path(wDir, StatsDir), importBases, keep = true)), covered = true)
-  }
-
-  /** Pin the live generation for a rewrite: heal pending salvages first
-    * (their rows must be read), then list the data files ONCE — the
-    * rewrite reads exactly this list and commits it as the generation's
-    * [[SourceFile]] record, which is what makes concurrent appends
-    * determinate. With no collection at `path` the pin is `path` itself
-    * with no files.
-    */
-  private def pinLive(spark: SparkSession, fs: FileSystem, path: String)
-      : (String, String, Set[String]) = {
-    healStragglers(spark, fs, path)
-    liveDir(fs, path) match {
-      case Some(live) => (live, genFormat(fs, live), logicalNames(fs, live))
-      // nothing to read; a commit creates the first generation (its
-      // `_SOURCE` record names an empty predecessor)
-      case None => (path, "json", Set.empty)
-    }
-  }
-
-  /** [[readGen]] over a pinned file list (same stored-schema discipline,
-    * same no-files behavior).
-    */
-  private def readPinned(spark: SparkSession, fs: FileSystem, live: String,
-                         fmt: String, names: Set[String]): DataFrame = {
-    val schema = storedSchema(fs, new Path(live, StatsDir))
-    if (names.isEmpty) schema match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => readFiles(spark, fmt, None, Seq(live))
-    }
-    else readFiles(spark, fmt, schema, names.toSeq.sorted.map(resolvePath(live, _)))
-  }
-
-  /** One-scan rewrite into the next generation, manifest commit, then
-    * cleanup. The newest `retain` generations survive (the previous live
-    * one always does, so concurrent readers' planned file lists stay
-    * valid; retain > 2 buys [[findAsOf]] time travel further back); older
-    * generations are reclaimed.
-    * `sourceNames` is the pinned file list the rewrite's `df` was read
-    * from ([[pinLive]]) — committed as the [[SourceFile]] record and used
-    * to salvage late concurrent appends forward before anything is pruned.
-    */
-  private def commitRewrite(fs: FileSystem, spark: SparkSession, df: DataFrame,
-                            path: String, retain: Int, format: String,
-                            sourceNames: Set[String], pinnedLive: String,
-                            sidecars: Map[String, Array[Byte]] = Map.empty,
-                            carried: Seq[String] = Nil,
-                            carriedSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                            lateSidecars: Map[String, () => Array[Byte]] = Map.empty,
-                            dataless: Boolean = false,
-                            stagedSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                            stagedStats: Option[(Seq[String], Seq[String], Int)] = None,
-                            afterStage: () => Unit = () => (),
-                            afterPublish: () => Unit = () => ()): Unit = {
-    require(retain >= 2, s"retain must keep the live + previous generation, got $retain")
-    // LOUD lost-update detection ([[ConcurrentMutationException]]): checked
-    // before the rewrite job and again right before the swing (the rewrite
-    // can be long — the widest window for a competing mutation to land)
-    def validatedPrevious(): Option[String] = {
-      val previous = readManifest(fs, path)
-      val current = previous.map(g => s"$path/$g").getOrElse(path)
-      if (current != pinnedLive)
-        throw new ConcurrentMutationException(
-          s"docstore: the live generation of $path moved while this mutation " +
-            s"ran ($pinnedLive -> $current) — mutations are single-writer; this " +
-            "rewrite is based on a stale snapshot and committing it would " +
-            "discard the other mutation's effect. Re-run this mutation.")
-      previous
-    }
-    // FILE-LEVEL CONFLICT DETECTION (the Delta/Iceberg commit-time
-    // re-validation shape): when the manifest moved under this mutation,
-    // the race is only a REAL conflict if a winner touched files this
-    // rewrite read. If every generation between the pinned snapshot and
-    // the current winner (a) is a single-generation mutation commit whose
-    // pin matches its predecessor's full served set (no interleaved
-    // append), (b) left the stored schema and format unchanged, and
-    // (c) rewrote/deleted a file set DISJOINT from this mutation's
-    // candidate set — then the already-built rewrite can re-commit
-    // against the fresh manifest: the new generation keeps this
-    // mutation's fresh files, LINKS every file the winner chain serves
-    // that this mutation didn't rewrite, and carries the files nobody
-    // touched. Observation counts stay exact (no winner ever modified a
-    // candidate row), CDC stays exact (P -> W* is the winners' diffs,
-    // W_n -> merged is this mutation's), and the loser never re-runs its
-    // rewrite job — at 100 TB, disjoint concurrent mutations stop paying
-    // a full rewrite per lost race. The walk is MULTI-HOP: a loser whose
-    // winner is itself a merged commit still converges, so N disjoint
-    // writers finish with one rewrite job each. Anything outside (a)-(c)
-    // keeps today's loud serialize-and-retry.
-    def disjointWinner(): Option[String] = {
-      val wId = manifestId(fs, path).getOrElse(return None)
-      val wGen = new Path(genPath(path, wId)).getName
-      val pinnedGen = new Path(pinnedLive).getName
-      if (wGen == pinnedGen) return None
-      // same served schema and format across every hop: a DDL /
-      // re-typing winner touches every read, so nothing is disjoint
-      val pS = storedSchema(fs, new Path(pinnedLive, StatsDir))
-      if (pS.isEmpty) return None
-      val myCandBases = (sourceNames -- carried.toSet).map(baseName)
-      // the winners, newest first: the committed chain from the live
-      // generation down to the hop off the pinned snapshot
-      var chain = committedChain(fs, path, wId)
-      var from = ""
-      var hops = 0
-      while (from != pinnedGen) {
-        hops += 1
-        // a chain deeper than any plausible concurrent-writer count means
-        // something else is going on (runaway) — go loud instead
-        if (hops > 8 || chain.isEmpty) return None
-        val hop = chain.head
-        val (hopFrom, pinned) = hop.source.getOrElse(return None)
-        if (pS != storedSchema(fs, new Path(hop.dir, StatsDir))) return None
-        if (genFormat(fs, hop.dir) != format) return None
-        val candBases = pinned.map(baseName) -- readLinks(fs, hop.dir).map(baseName)
-        if ((candBases & myCandBases).nonEmpty) return None
-        from = hopFrom
-        chain = chain.tail
-        // the hop's pin must equal its predecessor's served set: for the
-        // hop off the shared snapshot that is THIS mutation's pin-time
-        // listing (an append between the two pins makes them differ);
-        // for deeper hops the predecessor's current listing — commit-time
-        // salvage has already moved any interleaved append out of a
-        // superseded generation, so a residual mismatch is a file this
-        // walk cannot attribute, and the merge bails
-        val prevSet =
-          if (from == pinnedGen) sourceNames
-          else chain.headOption match {
-            case Some(prev) => logicalNames(fs, prev.dir)
-            case None => return None // the predecessor was pruned
-          }
-        if (pinned != prevSet) return None
-      }
-      Some(wGen)
-    }
-    val previousAtStart: Option[String] =
-      try validatedPrevious()
-      catch { case e: ConcurrentMutationException =>
-        // optimistic continue: the pinned files all still exist (the
-        // winner's retention keeps its previous generation whole), so
-        // the planned rewrite reads valid data; the actual link/stats
-        // merge happens at the commit point below, re-validated there
-        disjointWinner() match {
-          case Some(_) => readManifest(fs, path)
-          case None => throw e
-        }
-      }
-    // PRIVATE STAGING (the tmp-then-rename discipline, generation-sized):
-    // the whole rewrite lands in a dot-prefixed dir invisible to every
-    // reader and every competing mutation, and only the commit point
-    // renames it to its generation id. This closes two windows the old
-    // write-at-final-id flow had: a competing mutation could take the
-    // SAME id and the two writeData jobs clobbered each other (the
-    // documented last-writer-wins degradation — now impossible, ids are
-    // picked after the data is fully staged), and a winner's retention
-    // pass pruned the loser's completed-but-uncommitted dir as a crash
-    // orphan, which made the disjoint re-commit below unreachable in the
-    // post-stage race. Nothing inside a generation references its own
-    // dir name (links are root-relative into OTHER generations; stats
-    // rows key by basename), so the rename is free.
-    var next = s"$path/.staging-${java.util.UUID.randomUUID()}"
-    if (dataless) {
-      // metadata-only commit (DDL verbs, zero-match mutations): the df is
-      // provably empty, so skip the Spark job entirely — a rowless part
-      // file would be UNSTATTED and survive every later stats prune as a
-      // perpetual extra read (and chained DDL would carry it forever).
-      // Callers pass dataless only with carried links present, so
-      // genFormat still detects the format from the link entries.
-      fs.mkdirs(new Path(next))
-      fs.create(new Path(next, "_SUCCESS"), true).close()
-    } else writeData(df, format, next)
-    if (format == "parquet") {
-      // parquet reads back with EXACTLY the written types (unlike json,
-      // whose inference conventions differ from arbitrary df schemas), so
-      // the commit can persist the schema it just wrote — readGen then
-      // plans with zero jobs (no footer-merge pass) even when no stats
-      // pass ever runs, and appends widen it additively via sidecars
-      val stats = new Path(next, StatsDir)
-      fs.mkdirs(stats)
-      val out = fs.create(new Path(stats, "_schema.json"), true)
-      try out.write(df.schema.json.getBytes(UTF_8)) finally out.close()
-    }
-    // COPY-ON-WRITE carry: files of the pinned snapshot a selective
-    // mutation provably never touched are LINKED to their physical homes
-    // instead of rewritten — entries always point at the physical home
-    // (a carried entry that was itself a link stays as-is; a plain name's
-    // home is the pinned generation), so links never chain. The sidecar,
-    // the schema base, and the carried stats rows all land before the
-    // manifest swing — atomic with the data.
-    if (carried.nonEmpty) {
-      val pinnedGen = new Path(pinnedLive).getName
-      val entries = carried.map(n => if (n.contains("/")) n else s"$pinnedGen/$n")
-      writeLinks(fs, next, entries)
-      val stats = new Path(next, StatsDir)
-      fs.mkdirs(stats)
-      // the caller passes the schema the new generation SERVES: the
-      // pinned stored schema for a schema-preserving COW mutation, the
-      // widened one for a widening $set (carried files' narrower
-      // physical types read under it — [[widensTo]]). Needed for json,
-      // where commitRewrite's own parquet-only schema write doesn't apply
-      if (!fs.exists(new Path(stats, "_schema.json")))
-        carriedSchema.foreach { s =>
-          val out = fs.create(new Path(stats, "_schema.json"), true)
-          try out.write(s.json.getBytes(UTF_8)) finally out.close()
-        }
-      // carried files' bytes are unchanged, so their stats rows (keyed by
-      // basename) carry verbatim — selective mutations keep pruning
-      // across generations without a re-stat pass. A pinned generation
-      // without part files (schema-only sidecar, pre-stats store) has
-      // nothing to carry: carried files stay covered by whatever covered
-      // them before
-      carryStatsLines(spark, fs, stats, Seq(StatsCarry(
-        new Path(pinnedLive, StatsDir), entries.map(baseName).toSet, keep = true)))
-      // stat the freshly rewritten files with the carried geometry (same
-      // machinery an append uses) so the WHOLE generation stays covered
-      val fresh = dataFileNames(fs, next).toSeq.sorted
-        .filter(n => fs.getFileStatus(new Path(next, n)).getLen > 0)
-      if (fresh.nonEmpty)
-        appendStats(spark, fs, next, format, fresh.map(n => s"$next/$n"),
-          Some(df.schema))
-    }
-    // ATOMIC sidecar restoration for FULL rewrites (renameColumn, compact):
-    // the caller's stored schema and stats geometry land INSIDE the staged
-    // generation, so they commit (or vanish) with the data in one manifest
-    // swing. The predecessor flow restored them as a SECOND mutation after
-    // the commit — a crash between the two left the store stats-less (and
-    // a json store schema-less, erasing metadata-only columns and bricking
-    // later DDL), and under a concurrent mutation the follow-up could land
-    // its schema in a DIFFERENT generation than the one just committed.
-    stagedSchema.foreach { s =>
-      val stats = new Path(next, StatsDir)
-      fs.mkdirs(stats)
-      val out = fs.create(new Path(stats, "_schema.json"), true)
-      try out.write(s.json.getBytes(UTF_8)) finally out.close()
-    }
-    stagedStats.foreach { case (cols, bloomCols, bloomBits) =>
-      require(carried.isEmpty,
-        "docstore: stagedStats is for full rewrites only — a COW commit's " +
-          "fresh files are statted by the carry discipline above")
-      val fresh = dataFileNames(fs, next).toSeq.sorted
-        .filter(n => fs.getFileStatus(new Path(next, n)).getLen > 0)
-      if (fresh.nonEmpty && (cols.nonEmpty || bloomCols.nonEmpty))
-        appendStatsWith(spark, fs, next, format, fresh.map(n => s"$next/$n"),
-          cols, bloomCols, bloomBits, Some(df.schema))
-    }
-    // caller-supplied metadata sidecars land in the staged generation
-    // BEFORE the manifest swing, so they commit (or vanish) atomically
-    // with the data — [[syncAggregate]]'s exactly-once cursor rides this.
-    // `lateSidecars` are evaluated HERE, after writeData's job completed,
-    // so their bytes may read Observation metrics collected by the
-    // rewrite itself (the mutation-token sidecar records the matched
-    // count that way) while still landing before the swing.
-    (sidecars ++ lateSidecars.view.mapValues(f => f()).toMap)
-      .foreach { case (name, bytes) =>
-      require(name.startsWith("_"),
-        s"docstore: sidecar names must start with '_' (got $name) so reads " +
-          "never mistake them for data files")
-      val out = fs.create(new Path(next, name), true)
-      try out.write(bytes) finally out.close()
-    }
-    afterStage()
-    // re-validate after the rewrite. On a lost race, attempt the DISJOINT
-    // RE-COMMIT first ([[disjointWinner]]): relink this staged rewrite
-    // on top of the winner — keep my carried entries except the names the
-    // winner consumed, link every winner-fresh physical file, and move
-    // the stats rows to match — then publish with previous := winner. On
-    // failure drop the staging (never committed, never readable) so no
-    // debris outlives the retry.
-    var previous: Option[String] = previousAtStart
-    var recordNames: Set[String] = sourceNames
-    var winnerFloor = 0
-    try { validatedPrevious(); () }
-    catch { case e: ConcurrentMutationException =>
-      val merged: Option[(String, Set[String])] = disjointWinner().flatMap { wGen =>
-        val wDir = s"$path/$wGen"
-        val wLinks = readLinks(fs, wDir)
-        // original-snapshot bases the winner CHAIN consumed (rewrote or
-        // deleted): pinned files that no longer appear among the final
-        // winner's links. Fresh part names embed job UUIDs, so they never
-        // collide with a pinned base.
-        val origBases = sourceNames.map(baseName)
-        val wCandBases = origBases -- wLinks.map(baseName)
-        val wPhysical = dataFileNames(fs, wDir).toSeq.sorted
-        // files the chain CREATED and still serves: the final winner's own
-        // physical files plus its links to intermediate winners' fresh
-        // files (multi-hop — a one-hop winner's links are all originals,
-        // making this exactly the old pairwise set)
-        val chainFresh = wLinks.filterNot(en => origBases.contains(baseName(en)))
-        val importBases = wPhysical.toSet ++ chainFresh.map(baseName)
-        Option.when(mergeCarriedStats(spark, fs, next, wDir, wCandBases, importBases)) {
-          val pinnedGen = new Path(pinnedLive).getName
-          val myEntries = carried.map(n =>
-            if (n.contains("/")) n else s"$pinnedGen/$n")
-          // my carried originals the chain didn't consume, the final
-          // winner's fresh files, and the chain's carried fresh files
-          // (disjoint from myEntries — their bases are never originals)
-          val mergedLinks =
-            myEntries.filterNot(en => wCandBases.contains(baseName(en))) ++
-              wPhysical.map(n => s"$wGen/$n") ++ chainFresh
-          if (mergedLinks.nonEmpty) writeLinks(fs, next, mergedLinks)
-          else fs.delete(new Path(next, LinksFile), false)
-          // the W-snapshot this merged commit consumed, from the SAME
-          // listing mergedLinks used — salvage then moves exactly the
-          // files appended to W after it (nothing can be both unlinked
-          // and unsalvaged)
-          (wGen, wPhysical.toSet ++ wLinks)
-        }
-        // a third mutation landing mid-merge re-moves the manifest: bail
-        // to the loud path (the staging is dropped below)
-      }.filter { case (w, _) => readManifest(fs, path).contains(w) }
-      merged match {
-        case Some((w, consumed)) =>
-          previous = Some(w)
-          recordNames = consumed
-          winnerFloor = w.stripPrefix("gen-").toInt
-        case None =>
-          fs.delete(new Path(next), true)
-          throw e
-      }
-    }
-    // PUBLISH: pick the generation id NOW — after the data is fully
-    // staged and the race resolved — one above every complete generation
-    // and the merge winner, and atomically rename the staging to it. CDC
-    // consumers order diffs by generation id, so the merged commit always
-    // sits above the winner's.
-    next = publishStagedGeneration(fs, path, next, winnerFloor)
-    writeSourceRecord(fs, next, previous.getOrElse(""), recordNames)
-    afterPublish()
-    // FINAL manifest re-validation, after publish and immediately before
-    // the swing: the validate-then-write window above publish is wide
-    // enough for a THIRD mutation to commit (the merge path makes
-    // concurrent mutations an expected mode, not an anomaly) — writing
-    // over it here would silently discard its generation, a lost update
-    // with no ConcurrentMutationException anywhere. The published dir was
-    // never referenced by any manifest, so deleting it and going loud
-    // (serialize-and-retry) loses nothing but this body's work.
-    // HONEST LIMIT: this is still check-then-act — the filesystem offers
-    // no manifest CAS, so a racer landing between this read and the
-    // write below is still overwritten; the re-check NARROWS the window
-    // from rewrite-sized (or merge-validation-sized) to two metadata
-    // ops, it does not close it. True closure needs a lock service or a
-    // CAS-capable catalog, the same boundary every FS-backed table
-    // format (Delta on S3 pre-DynamoDB, Iceberg HadoopCatalog) documents.
-    val manifestNow = readManifest(fs, path)
-    if (manifestNow != previous) {
-      fs.delete(new Path(next), true)
-      throw new ConcurrentMutationException(
-        s"docstore: the live generation of $path moved again " +
-          s"($previous -> $manifestNow) after this mutation resolved its " +
-          "race — committing would silently discard the newer mutation. " +
-          "Re-run this mutation.")
-    }
-    writeManifest(fs, path, new Path(next).getName)
-    // salvage BEFORE pruning — and heal the WHOLE retained chain under
-    // the per-store publish guard, not just the immediate predecessor:
-    // an append that landed its files in an OLDER superseded generation
-    // after this mutation's start-of-write heal would otherwise be
-    // deleted by the prune below before the appender's visibility walk
-    // could move them (a rare but observed loud append forfeiture in the
-    // threaded stress race). The chain heal subsumes the old single-hop
-    // salvageInto(previous, next) — the live generation's _SOURCE record
-    // is already written — and [[publishGuard]] makes the heal-listing ->
-    // delete window atomic against same-process append publishes.
-    publishGuard(fs, path).synchronized {
-      healStragglers(spark, fs, path)
-      // retention counts COMMITTED generations only: a crash-orphaned
-      // complete dir must not consume a retention slot (it would prune a
-      // committed generation one mutation early and break a CDC consumer
-      // inside its promised lag headroom). Orphans themselves are pruned
-      // immediately — they were never a served state.
-      val chain = committedGens(fs, path)
-      val window = chain.takeRight(retain).map(id => f"gen-$id%06d").toSet ++ previous
-      // DIRECT-HOME closure, single hop: the readable window's carried
-      // files live in older dirs — those homes must survive so every
-      // window generation resolves fully, and links never chain, so one
-      // hop IS full resolution. Homes-of-homes are deliberately NOT kept
-      // (a home outside the window is storage, not a promised snapshot;
-      // its own stale `_LINKS` may dangle once ITS homes age out —
-      // [[findAsOf]] detects that and fails loudly, and fsck reports it
-      // as `unreadable-generation`). A fixpoint here would chase stale
-      // sidecars of carried-forward files transitively and pin every
-      // ancestor home forever — the unbounded-garbage failure mode
-      // [[vacuum]] exists to prevent.
-      val keep = window ++ window.flatMap(g =>
-        readLinks(fs, s"$path/$g").map(_.takeWhile(_ != '/')))
-      completeGens(fs, path).map(id => genPath(path, id))
-        .filterNot(p => keep.contains(new Path(p).getName))
-        .foreach(p => fs.delete(new Path(p), true))
-    }
-    // staging debris from crashed mutations (dot-prefixed, invisible to
-    // every reader): reclaim by AGE. 7 days, asymmetrically: deleting a
-    // LIVE staging aborts a rewrite after it paid its full cost (and at
-    // 100 TB a rewrite can legitimately run beyond a day, while the
-    // dir's mtime may not refresh during the write), whereas crash
-    // debris merely holds disk for the week — the cheap side of the
-    // trade. An operator can always delete `.staging-*` by hand after a
-    // known crash.
-    val stagingCutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
-    if (fs.exists(new Path(path))) fs.listStatus(new Path(path)).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".staging-") &&
-          st.getModificationTime < stagingCutoff)
-        fs.delete(st.getPath, true)
-    }
-  }
 }
