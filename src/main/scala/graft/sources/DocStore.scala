@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Io
-import DocStoreCommit.StatsCarry
+import DocStoreCommit.{Extras, Scope, StatsCarry}
 
 /** Document-store source/sink (S7 scan, K8 write): the engine counterpart
   * of the reference's Mongo collection layer
@@ -142,7 +142,7 @@ object DocStore extends DocStoreCommit {
       // never arrived), which widens the read schema harmlessly.
       val statsPath = new Path(live, StatsDir)
       val sidecar: Option[Path] =
-        if (staged.nonEmpty && fs.exists(new Path(statsPath, "_schema.json")))
+        if (staged.nonEmpty && fs.exists(new Path(statsPath, SchemaBase)))
           Some(writeSchemaSidecar(fs, statsPath,
             readFiles(spark, fmt, None, staged.map(_.toString)).schema))
         else None
@@ -164,7 +164,7 @@ object DocStore extends DocStoreCommit {
         // collectStats' post-write reconciliation, every ordering leaves
         // published files schema-covered. The common case (sidecar intact)
         // costs one exists() call.
-        if (added.nonEmpty && fs.exists(new Path(statsPath, "_schema.json")) &&
+        if (added.nonEmpty && fs.exists(new Path(statsPath, SchemaBase)) &&
             sidecar.forall(p => !fs.exists(p)))
           writeSchemaSidecar(fs, statsPath,
             readFiles(spark, fmt, None, added).schema)
@@ -223,8 +223,7 @@ object DocStore extends DocStoreCommit {
         case Some((files, schema)) if files.isEmpty =>
           // typed emptiness: the caller sees the collection's schema
           // whether or not pruning eliminated every file
-          spark.createDataFrame(spark.sparkContext
-            .emptyRDD[org.apache.spark.sql.Row], schema)
+          emptyFrame(spark, schema)
         case Some((files, schema)) =>
           // the stats-time schema (merged with any appended files'): a
           // pruned read must resolve every column the full read would —
@@ -314,11 +313,8 @@ object DocStore extends DocStoreCommit {
       .fold((path, Set.empty[String]))(l => (l, logicalNames(fs, l)))
     val fmt = genFormat(fs, live)
     val statsP = new Path(live, StatsDir)
-    val schema = logicalReadSchema(spark, fs, live, fmt, names)
-      .orElse(
-        if (names.isEmpty) None
-        else scala.util.Try(readFiles(spark, fmt, None,
-          names.toSeq.sorted.map(resolvePath(live, _))).schema).toOption)
+    val schema = storedSchema(fs, statsP)
+      .orElse(physicalSchema(spark, fmt, names.toSeq.sorted.map(resolvePath(live, _))))
     def colType(c: String): DataType =
       schema.flatMap(_.find(_.name == c)).map(_.dataType).getOrElse(NullType)
     def sidecarSafe(c: String): Boolean = colType(c) match {
@@ -636,11 +632,8 @@ object DocStore extends DocStoreCommit {
       else committedGens(fs, path).map { g =>
         val gdir = genPath(path, g)
         val links = readLinks(fs, gdir)
-        val physical = dataFileNames(fs, gdir)
-        val bytes = physical.toSeq.map { n =>
-          val p = new Path(s"$gdir/$n")
-          if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
-        }.sum
+        val physical = dataFileSizes(fs, gdir)
+        val bytes = physical.values.sum
         // grouped-by-home resolvability, the findAsOf discipline
         val present: Map[String, Set[String]] =
           links.map(_.takeWhile(_ != '/')).distinct.map { home =>
@@ -777,8 +770,7 @@ object DocStore extends DocStoreCommit {
       val diffFiles = logicalNames(fs, dir).toSeq.sorted
         .map(n => resolvePath(dir, n)).filterNot(shared)
       if (diffFiles.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        emptyFrame(spark, schema)
       else readFiles(spark, genFormat(fs, dir), Some(schema), diffFiles)
     }
     val (a, b) = {
@@ -1073,54 +1065,35 @@ object DocStore extends DocStoreCommit {
       .localCheckpoint(true)
     val upserts = last.filter(col("change") =!= "deleted").select("after.*")
     val keys = last.select(col(keyCol)).distinct()
-    val fs = fileSystem(spark, path)
-    val (liveD, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fileSystem(spark, path), path)
     val live =
       // no target collection yet: empty without planning a read (the lazy-
       // reader/Observation-listener noise rationale from find())
-      if (liveD == path) spark.emptyDataFrame
-      else try readPinned(spark, fs, liveD, fmt, names)
+      if (pin.live == path) spark.emptyDataFrame
+      else try pin.docs
       catch { // empty/new target with no schema — the find() behavior
         case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame
       }
+    val extras = Extras(sidecars = sidecars)
     if (!live.columns.contains(keyCol)) { // empty/new target
-      commitRewrite(fs, spark, upserts, path, retain, format = fmt,
-        sourceNames = names, pinnedLive = liveD, sidecars = sidecars)
+      rewrite(pin, retain, Scope.All, extras)(_ => upserts)
       return
     }
-    val merged = live.join(keys, Seq(keyCol), "left_anti")
-      .unionByName(upserts, allowMissingColumns = true)
+    def merge(d: DataFrame): DataFrame = d.join(keys, Seq(keyCol), "left_anti")
+    val merged = merge(live).unionByName(upserts, allowMissingColumns = true)
     // COW prune: a bounded changed-key set + keyCol stats on the target
     // turn the follower rewrite into O(matched files). schemaSafe allows
     // NEW columns (carried files read them as null under the widened
     // committed schema) and pure type WIDENINGS of stored columns
     // (carried files' narrower physical types read under the widened
     // committed schema — [[widensTo]]); any other type change rewrites.
-    val cow = {
-      val collected = keys.limit(ApplyCowKeyCap + 1).collect()
-      if (collected.length > ApplyCowKeyCap) None
-      else cowCandidates(spark, fs, liveD, fmt, names,
-        col(keyCol).isin(collected.map(_.get(0)).toSeq: _*),
+    val collected = keys.limit(ApplyCowKeyCap + 1).collect()
+    val scope =
+      if (collected.length > ApplyCowKeyCap) Scope.All
+      else Scope.Matching(col(keyCol).isin(collected.map(_.get(0)).toSeq: _*),
         schemaSafe = s => merged.schema.fields.forall(f =>
           s.find(_.name == f.name).forall(sf => widensTo(sf.dataType, f.dataType))))
-    }
-    cow match {
-      case Some((cand, carried, schema)) =>
-        val candDocs =
-          if (cand.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          else readFiles(spark, fmt, Some(schema),
-            cand.map(resolvePath(liveD, _)))
-        val out = candDocs.join(keys, Seq(keyCol), "left_anti")
-          .unionByName(upserts, allowMissingColumns = true)
-        commitRewrite(fs, spark, out, path, retain, format = fmt,
-          sourceNames = names, pinnedLive = liveD, sidecars = sidecars,
-          carried = carried, carriedSchema = Some(out.schema))
-      case None =>
-        commitRewrite(fs, spark, merged, path, retain, format = fmt,
-          sourceNames = names, pinnedLive = liveD, sidecars = sidecars)
-    }
+    rewrite(pin, retain, scope, extras.copy(adds = Some(upserts)))(merge(_))
   }
 
   /** Maintain a FOLLOWER collection from a leader by cursor CDC:
@@ -1133,22 +1106,8 @@ object DocStore extends DocStoreCommit {
     * next call.
     */
   def replicate(spark: SparkSession, srcPath: String, dstPath: String,
-                keyCol: String, cur: Option[DocCursor]): DocCursor = cur match {
-    case None =>
-      // seeding APPENDS the full snapshot — into a non-empty target that
-      // would duplicate rows, so refuse loudly (resume with Some(cursor),
-      // or point at a fresh path)
-      require(find(spark, dstPath).isEmpty,
-        s"replicate: seeding (cur = None) requires an empty target, but " +
-          s"$dstPath already has documents — pass the saved cursor to resume")
-      val c = cursor(spark, srcPath)
-      insertMany(find(spark, srcPath), dstPath)
-      c
-    case Some(c) =>
-      val (changes, next) = changesSince(spark, srcPath, c, keyCol)
-      applyChanges(spark, dstPath, changes, keyCol)
-      next
-  }
+                keyCol: String, cur: Option[DocCursor]): DocCursor =
+    syncDerived(spark, srcPath, dstPath, keyCol, cur)(identity)
 
   /** Incrementally maintain a DERIVED collection: poll the source's
     * cursor CDC, run `transform` over ONLY the changed rows' after
@@ -1159,15 +1118,24 @@ object DocStore extends DocStoreCommit {
     * row-wise transform (one output row per input row, key preserved) —
     * the equivalence DocStoreSpec pins against a full rebuild.
     * `transform` must be row-wise for that equality; aggregations over
-    * the whole corpus need a rebuild, not a delta.
+    * the whole corpus need a rebuild, not a delta. [[replicate]] is this
+    * with the identity transform.
     */
   def syncDerived(spark: SparkSession, srcPath: String, dstPath: String,
                   keyCol: String, cur: Option[DocCursor])
                  (transform: DataFrame => DataFrame): DocCursor = cur match {
     case None =>
+      // seeding APPENDS the full snapshot — into a non-empty target that
+      // would duplicate rows, so refuse loudly (resume with Some(cursor),
+      // or point at a fresh path)
+      require(find(spark, dstPath).isEmpty,
+        s"syncDerived: seeding (cur = None) requires an empty target, but " +
+          s"$dstPath already has documents — pass the saved cursor to resume")
       val c = cursor(spark, srcPath)
-      val out = transform(find(spark, srcPath))
-      require(out.columns.contains(keyCol),
+      val src = find(spark, srcPath)
+      val out = transform(src)
+      // an empty source seeds nothing (it has no columns to transform)
+      require(src.columns.isEmpty || out.columns.contains(keyCol),
         s"syncDerived: transform must preserve key column $keyCol")
       insertMany(out, dstPath)
       c
@@ -1363,11 +1331,8 @@ object DocStore extends DocStoreCommit {
           // compaction): advance the cursor with an identity rewrite of
           // the (small) aggregate, or every later poll re-pays this
           // window's diffs
-          val (liveD, fmt, names) = pinLive(spark, dstFs, dstPath)
-          commitRewrite(dstFs, spark, readPinned(spark, dstFs, liveD, fmt, names),
-            dstPath, retain, format = fmt, sourceNames = names,
-            pinnedLive = liveD,
-            sidecars = Map(SyncCursorFile -> encodeSyncCursor(next)))
+          rewrite(pinLive(spark, dstFs, dstPath), retain, Scope.All,
+            Extras(sidecars = Map(SyncCursorFile -> encodeSyncCursor(next))))(d => d)
           return next
         }
         require(delta.filter(col(groupCol).isNull).isEmpty,
@@ -1438,8 +1403,7 @@ object DocStore extends DocStoreCommit {
       org.apache.spark.sql.types.StructField("after", structType),
       org.apache.spark.sql.types.StructField("generation",
         org.apache.spark.sql.types.IntegerType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], out)
+    emptyFrame(spark, out)
   }
 
   /** Bounded optimistic retry for the single-writer mutation contract:
@@ -1525,8 +1489,8 @@ object DocStore extends DocStoreCommit {
               "twin would make every later reference AMBIGUOUS_REFERENCE")
           case None => Some(schema.add(name, dataType, nullable = true))
         },
-        physicalGuard = (live, fmt, names) =>
-          physicalUnionSchema(spark, fileSystem(spark, path), live, fmt, names)
+        physicalGuard = pin =>
+          physicalSchema(spark, pin.format, pin.paths)
             .flatMap(s => resolveField(spark, s, name))
             .foreach { pf =>
               throw new IllegalStateException(
@@ -1540,30 +1504,6 @@ object DocStore extends DocStoreCommit {
                   "; run compact() to purge the dropped bytes first, or pick " +
                   "a different name")
             })
-
-  /** The UNION of what the generation's data files PHYSICALLY contain —
-    * unlike [[storedSchema]] (the committed contract) and
-    * [[logicalReadSchema]] (which prefers the stored schema), this always
-    * consults the files themselves: parquet via one distributed
-    * mergeSchema footer pass (falling back to a per-file widen when
-    * strict merge refuses on width drift), json via one inference pass.
-    * None when nothing is determinable (empty, or drift so broken that
-    * full reads already fail loudly); callers treat that as unknown.
-    */
-  private def physicalUnionSchema(spark: SparkSession, fs: FileSystem,
-                                  live: String, fmt: String,
-                                  names: Set[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val paths = names.toSeq.sorted.map(resolvePath(live, _))
-    if (paths.isEmpty) None
-    else if (fmt == "parquet")
-      scala.util.Try(spark.read.option("mergeSchema", "true")
-          .parquet(paths: _*).schema).toOption
-        .orElse(scala.util.Try(
-          paths.map(p => spark.read.parquet(p).schema)
-            .reduceLeft(widenStructs)).toOption)
-    else scala.util.Try(spark.read.json(paths: _*).schema).toOption
-  }
 
   /** DROP a column: metadata-only — the bytes stay in the carried files
     * (reclaimed as files are naturally rewritten by later mutations /
@@ -1645,8 +1585,8 @@ object DocStore extends DocStoreCommit {
                                           afterCommit: () => Unit): Boolean =
     withMutationRetry(retries) { () =>
       val fs = fileSystem(spark, path)
-      val (live, fmt, names) = pinLive(spark, fs, path)
-      val stored = storedSchema(fs, new Path(live, StatsDir)).getOrElse(
+      val pin = pinLive(spark, fs, path)
+      val stored = storedSchema(fs, new Path(pin.live, StatsDir)).getOrElse(
         throw new IllegalStateException(
           s"docstore: cannot renameColumn on $path — the collection has no " +
             "stored schema; run compact()/collectStats() first"))
@@ -1658,10 +1598,8 @@ object DocStore extends DocStoreCommit {
           s"docstore renameColumn: target '$to' already exists on $path " +
             s"next to '$from' — renaming onto it would drop a live column")
         case (Some(f), None) =>
-          val (statted, bloomed, bits) = statsConfig(spark, fs, live)
+          val (statted, bloomed, bits) = statsConfig(spark, fs, pin.live)
           def ren(c: String): String = if (c == f.name) to else c
-          val docs = readPinned(spark, fs, live, fmt, names)
-            .withColumnRenamed(f.name, to)
           // the renamed STORED schema and the re-statted geometry (same
           // columns, stats key following the rename) land in the STAGED
           // generation, so they commit atomically with the data: a crash
@@ -1673,14 +1611,13 @@ object DocStore extends DocStoreCommit {
           // schema in the wrong generation
           val renamed = org.apache.spark.sql.types.StructType(
             stored.map(x => if (x.name == f.name) x.copy(name = to) else x))
-          commitRewrite(fs, spark, docs, path, retain, format = fmt,
-            sourceNames = names, pinnedLive = live,
+          rewrite(pin, retain, Scope.All, Extras(
             stagedSchema = Some(renamed),
             stagedStats =
               if (statted.nonEmpty || bloomed.nonEmpty)
                 Some((statted.map(ren), bloomed.map(ren),
                   if (bits > 0) bits else 1 << 16))
-              else None)
+              else None))(_.withColumnRenamed(f.name, to))
           afterCommit()
           true
       }
@@ -1712,14 +1649,14 @@ object DocStore extends DocStoreCommit {
       f: org.apache.spark.sql.types.StructType
         => Option[org.apache.spark.sql.types.StructType],
       // runs only when a generation WILL be committed, with the pinned
-      // (live, fmt, names) — addColumn's physical-presence check; the
-      // default is the no-op the other verbs keep
-      physicalGuard: (String, String, Set[String]) => Unit = (_, _, _) => ())
+      // snapshot — addColumn's physical-presence check; the default is
+      // the no-op the other verbs keep
+      physicalGuard: Pin => Unit = _ => ())
       : Boolean = {
     val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
     afterPin()
-    val stored = storedSchema(fs, new Path(live, StatsDir)).getOrElse(
+    val stored = storedSchema(fs, new Path(pin.live, StatsDir)).getOrElse(
       throw new IllegalStateException(
         s"docstore: cannot $what on $path — the collection has no stored " +
           "schema (pre-schema, or appends drifted it unmergeably); run " +
@@ -1727,23 +1664,20 @@ object DocStore extends DocStoreCommit {
     f(stored) match {
       case None => false // converged: nothing to commit
       case Some(next) =>
-        physicalGuard(live, fmt, names)
-        // rowless json store: the carried-branch schema write (the only
-        // json schema persistence) never runs with zero carried files —
-        // refuse rather than commit a generation that silently lost the
-        // new schema
-        require(fmt == "parquet" || names.nonEmpty,
+        physicalGuard(pin)
+        // rowless json store: no file carries the collection's format or
+        // columns, and a json generation without data files reads as
+        // schemaless — refuse rather than commit a generation that
+        // silently lost the new schema
+        require(pin.format == "parquet" || pin.names.nonEmpty,
           s"docstore: cannot $what on an empty json collection — insert " +
             "data or compact to parquet first")
-        // dataless only with carried links (genFormat reads the format
-        // from them); an EMPTY collection keeps the rowless write so the
-        // new generation still evidences its format on disk
-        commitRewrite(fs, spark,
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], next),
-          path, retain, format = fmt, sourceNames = names, pinnedLive = live,
-          carried = names.toSeq.sorted, carriedSchema = Some(next),
-          dataless = names.nonEmpty)
+        // every file carried, none read: a dataless commit (genFormat reads
+        // the format from the links); an EMPTY parquet collection keeps the
+        // rowless write so the new generation still evidences its format
+        // on disk
+        rewrite(pin, retain, Scope.Files(Nil), Extras(stagedSchema = Some(next)))(_ =>
+          emptyFrame(spark, next))
         true
     }
   }
@@ -1807,9 +1741,12 @@ object DocStore extends DocStoreCommit {
     TokenFramePrefix +
       java.util.Base64.getEncoder.encodeToString(token.getBytes(UTF_8))
 
-  private def tokenSidecar(token: String, count: => Long): Map[String, () => Array[Byte]] =
-    Map(MutationTokenFile ->
-      (() => s"${encodeToken(token)}\n$count".getBytes(UTF_8)))
+  /** The sidecar recording a mutation's count under its token (none
+    * without a token).
+    */
+  private def tokenSidecar(token: Option[String])(count: Long): Map[String, Array[Byte]] =
+    token.fold(Map.empty[String, Array[Byte]])(t =>
+      Map(MutationTokenFile -> s"${encodeToken(t)}\n$count".getBytes(UTF_8)))
 
   /** $set-style conditional update; returns matched-document count. Fields
     * in `set` that don't exist yet are added (null for unmatched docs) —
@@ -1855,94 +1792,47 @@ object DocStore extends DocStoreCommit {
     // the retried body so a racer that loses to a same-token winner
     // no-ops on its retry instead of double-applying.
     token.flatMap(mutationTokenHit(fs, path, _)).foreach(n => return n)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
     afterPin()
-    def late(n: => Long): Map[String, () => Array[Byte]] =
-      token.fold(Map.empty[String, () => Array[Byte]])(t => tokenSidecar(t, n))
     val matched = coalesce(filter, lit(false))
-    def fullRewrite(): Long = {
-      val docs = readPinned(spark, fs, live, fmt, names)
-      // The observation sits BELOW the $set projections: `matched` must
-      // be evaluated on pre-update values, or a $set that writes a column
-      // the filter reads (set status -> 'done' where status === 'pending')
-      // would count the post-update rows and report 0.
-      val obs = Observation()
-      val base = docs.observe(obs, count(when(matched, lit(1))).as("matched"))
-      val updated = set.foldLeft(base) { case (d, (k, v)) =>
-        applySet(d, k, v, matched) }
-      commitRewrite(fs, spark, updated, path, retain, format = fmt,
-        sourceNames = names, pinnedLive = live,
-        lateSidecars = late(obs.get("matched").asInstanceOf[Long]),
-        afterStage = afterStage, afterPublish = afterPublish)
-      obs.get("matched").asInstanceOf[Long]
-    }
-    val cow = cowCandidates(spark, fs, live, fmt, names, filter,
-      // dotted keys are nested paths — COW needs only the TOP-level
-      // column present (the struct rebuild decides stability below);
-      // resolution matches applySet's (analyzer case rules), so a
-      // case-variant spelling of an existing column stays COW-eligible
+    // COPY-ON-WRITE when the prune applies. Dotted keys are nested paths —
+    // COW needs only the TOP-level column present (the struct rebuild
+    // decides stability below); resolution matches applySet's (analyzer
+    // case rules), so a case-variant spelling of an existing column stays
+    // COW-eligible, and every `set` key's top-level column then exists,
+    // so applySet never takes its evolution branch on the COW read.
+    //
+    // TYPE GATE on the rewritten files: a $set whose value re-types a
+    // column (when/otherwise coerces the whole column) commits rewritten
+    // files under the new schema while carried files keep the old
+    // physical type. When the drift is a pure WIDENING the scan serves
+    // over the narrow physical type ([[widensTo]] — the compactSmall/
+    // vacuum widened-union discipline), the mutation stays COW and the
+    // committed widened schema heals the column for every later read;
+    // any other drift takes the full rewrite, which re-types every file
+    // consistently. The comparison is nullability-NORMALIZED: a dotted-
+    // path $set rebuilds its struct through when/otherwise, which relaxes
+    // the replaced field to nullable — a difference the parquet scan
+    // serves transparently (nullability is a hint, not a physical
+    // layout), and one that must not silently escalate a prunable COW
+    // update into an O(corpus) full rewrite.
+    val scope = Scope.Matching(filter,
       schemaSafe = s => set.keys.forall(k =>
-        resolveField(spark, s, k.takeWhile(_ != '.')).isDefined))
-    cow match {
-      case Some((cand, carried, schema)) if cand.isEmpty =>
-        // nothing can match: an all-carried metadata-only commit (the
-        // generation still advances — a mutation is a commit, and CDC
-        // consumers see a clean empty diff). No observe: the optimizer
-        // folds the empty scan to a LocalRelation and the metric would
-        // never fire. dataless: no rowless part file to haunt later prunes.
-        commitRewrite(fs, spark,
-          spark.createDataFrame(spark.sparkContext
-            .emptyRDD[org.apache.spark.sql.Row], schema),
-          path, retain, format = fmt, sourceNames = names,
-          pinnedLive = live, carried = carried, carriedSchema = Some(schema),
-          lateSidecars = late(0L), dataless = true, afterStage = afterStage,
-          afterPublish = afterPublish)
-        0L
-      case Some((cand, carried, schema)) =>
-        val docs = readFiles(spark, fmt, Some(schema),
-          cand.map(resolvePath(live, _)))
-        val obs = Observation()
-        val base = docs.observe(obs, count(when(matched, lit(1))).as("matched"))
-        // every `set` key's top-level column exists (schemaSafe), so the
-        // shared applySet never takes its evolution branch here
-        val updated = set.foldLeft(base) { case (d, (k, v)) =>
-          applySet(d, k, v, matched) }
-        // TYPE GATE: a $set whose value re-types a column (when/otherwise
-        // coerces the whole column) commits rewritten files under the new
-        // schema while carried files keep the old physical type. When the
-        // drift is a pure WIDENING the scan serves over the narrow
-        // physical type ([[widensTo]] — the compactSmall/vacuum
-        // widened-union discipline), the mutation stays COW and the
-        // committed widened schema heals the column for every later read;
-        // any other drift takes the full-rewrite path, which re-types
-        // every file consistently.
-        // nullability-NORMALIZED comparison: a dotted-path $set rebuilds
-        // its struct through when/otherwise, which relaxes the replaced
-        // field to nullable — a difference the parquet scan serves
-        // transparently (nullability is a hint, not a physical layout),
-        // and one that must not silently escalate a prunable COW update
-        // into an O(corpus) full rewrite
-        val stable = updated.schema.fields
-          .map(f => (f.name, allNullable(f.dataType)))
-          .sameElements(docs.schema.fields
-            .map(f => (f.name, allNullable(f.dataType))))
-        if (stable || widensOnly(docs.schema, updated.schema)) {
-          // committed schema: the pinned stored one when the rewrite
-          // changed nothing at all; otherwise the rewrite's own (the
-          // widened type, or the nullability-relaxed struct the fresh
-          // files physically carry — claiming the stricter stored
-          // nullability over possibly-null fresh data would lie)
-          val served =
-            if (updated.schema == docs.schema) schema else updated.schema
-          commitRewrite(fs, spark, updated, path, retain, format = fmt,
-            sourceNames = names, pinnedLive = live, carried = carried,
-            carriedSchema = Some(served),
-            lateSidecars = late(obs.get("matched").asInstanceOf[Long]),
-            afterStage = afterStage, afterPublish = afterPublish)
-          obs.get("matched").asInstanceOf[Long]
-        } else fullRewrite()
-      case None => fullRewrite()
-    }
+        resolveField(spark, s, k.takeWhile(_ != '.')).isDefined),
+      outputSafe = (in, out) =>
+        out.fields.map(f => (f.name, allNullable(f.dataType)))
+          .sameElements(in.fields.map(f => (f.name, allNullable(f.dataType)))) ||
+          widensOnly(in, out))
+    // The count is observed BELOW the $set projections: `matched` must be
+    // evaluated on pre-update values, or a $set that writes a column the
+    // filter reads (set status -> 'done' where status === 'pending') would
+    // count the post-update rows and report 0. Nothing can match when the
+    // prune leaves no candidate file: an all-carried metadata-only commit
+    // (the generation still advances — a mutation is a commit, and CDC
+    // consumers see a clean empty diff) that counts 0.
+    rewrite(pin, retain, scope, Extras(count = Some(matched), late = tokenSidecar(token),
+        afterStage = afterStage, afterPublish = afterPublish))(docs =>
+      set.foldLeft(docs) { case (d, (k, v)) => applySet(d, k, v, matched) })
   }
 
   /** One `$set` entry applied to the rewrite frame. A DOTTED key is a
@@ -2001,25 +1891,6 @@ object DocStore extends DocStoreCommit {
       case Some(f) =>
         d.withColumn(f.name, when(matched, v).otherwise(col(f.name)))
       case None => d.withColumn(k, when(matched, v))
-    }
-
-  /** The COW partition of a pinned snapshot: (candidate files that may
-    * contain matching rows, carried files that provably don't, the stored
-    * schema to read with) — or None when COW can't apply: no usable
-    * stats/predicate (pruning unavailable), pruning didn't drop anything
-    * (links would only add overhead), or `schemaSafe` rejects (the
-    * mutation changes the schema in a way carried files cannot serve —
-    * pure widenings are allowed through, see [[widensTo]]).
-    */
-  private def cowCandidates(spark: SparkSession, fs: FileSystem, live: String,
-                            fmt: String, names: Set[String], filter: Column,
-                            schemaSafe: org.apache.spark.sql.types.StructType => Boolean)
-      : Option[(Seq[String], Seq[String], org.apache.spark.sql.types.StructType)] =
-    prunedFiles(spark, fs, live, fmt, filter, pinned = Some(names)) match {
-      case Some((cand, schema))
-          if schemaSafe(schema) && cand.size < names.size =>
-        Some((cand, (names -- cand).toSeq.sorted, schema))
-      case _ => None
     }
 
   /** `dataType` with every nested nullability flag forced true — the
@@ -2094,51 +1965,21 @@ object DocStore extends DocStoreCommit {
                                         token: Option[String] = None): Long = {
     val fs = fileSystem(spark, path)
     token.flatMap(mutationTokenHit(fs, path, _)).foreach(n => return n)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
     afterPin()
-    def late(n: => Long): Map[String, () => Array[Byte]] =
-      token.fold(Map.empty[String, () => Array[Byte]])(t => tokenSidecar(t, n))
     filter match {
       case None =>
         // Guard-off delete-all: the kept-set is provably empty, so the
         // optimizer prunes the scan (and any CollectMetrics on it) to an
         // empty LocalRelation — count directly, then commit emptiness.
-        val docs = readPinned(spark, fs, live, fmt, names)
-        val n = docs.count()
-        commitRewrite(fs, spark, docs.filter(lit(false)), path, retain,
-          format = fmt, sourceNames = names, pinnedLive = live,
-          lateSidecars = late(n))
+        val n = pin.docs.count()
+        rewrite(pin, retain, Scope.All, Extras(late = _ => tokenSidecar(token)(n)))(
+          _.filter(lit(false)))
         n
       case Some(f) =>
         val hit = coalesce(f, lit(false))
-        cowCandidates(spark, fs, live, fmt, names, f, schemaSafe = _ => true) match {
-          case Some((cand, carried, schema)) if cand.isEmpty =>
-            commitRewrite(fs, spark,
-              spark.createDataFrame(spark.sparkContext
-                .emptyRDD[org.apache.spark.sql.Row], schema),
-              path, retain, format = fmt, sourceNames = names,
-              pinnedLive = live, carried = carried, carriedSchema = Some(schema),
-              lateSidecars = late(0L), dataless = true)
-            0L
-          case Some((cand, carried, schema)) =>
-            val docs = readFiles(spark, fmt, Some(schema),
-              cand.map(resolvePath(live, _)))
-            val obs = Observation()
-            commitRewrite(fs, spark,
-              docs.observe(obs, count(when(hit, lit(1))).as("deleted")).filter(!hit),
-              path, retain, format = fmt, sourceNames = names,
-              pinnedLive = live, carried = carried, carriedSchema = Some(schema),
-              lateSidecars = late(obs.get("deleted").asInstanceOf[Long]))
-            obs.get("deleted").asInstanceOf[Long]
-          case None =>
-            val docs = readPinned(spark, fs, live, fmt, names)
-            val obs = Observation()
-            commitRewrite(fs, spark,
-              docs.observe(obs, count(when(hit, lit(1))).as("deleted")).filter(!hit),
-              path, retain, format = fmt, sourceNames = names, pinnedLive = live,
-              lateSidecars = late(obs.get("deleted").asInstanceOf[Long]))
-            obs.get("deleted").asInstanceOf[Long]
-        }
+        rewrite(pin, retain, Scope.Matching(f, schemaSafe = _ => true),
+          Extras(count = Some(hit), late = tokenSidecar(token)))(_.filter(!hit))
     }
   }
 
@@ -2176,15 +2017,13 @@ object DocStore extends DocStoreCommit {
     require(format.forall(Seq("json", "parquet").contains),
       s"format must be json or parquet, got $format")
     val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
     // stats survive compaction: remember which columns (and Bloom
     // geometry) the generation statted and re-stat the compacted files
     // (they're freshly written and usually few — the rewrite already paid
     // the full read)
-    val (statted, bloomed, bits) = statsConfig(spark, fs, live)
-    val docs = readPinned(spark, fs, live, fmt, names)
-    val obs = Observation()
-    val fmtOut = format.getOrElse(fmt)
+    val (statted, bloomed, bits) = statsConfig(spark, fs, pin.live)
+    val fmtOut = format.getOrElse(pin.format)
     // stats (and, for json, the stored schema the old follow-up
     // collectStats used to restore) land in the STAGED generation — one
     // atomic commit instead of commit-then-restat, closing the crash
@@ -2199,19 +2038,18 @@ object DocStore extends DocStoreCommit {
     // commit's carriedSchema would otherwise drop it, erasing
     // metadata-only columns and bricking later DDL); a store with no
     // stored schema at all stays inference-served, as before.
-    val hadSchema = storedSchema(fs, new Path(live, StatsDir)).nonEmpty
-    commitRewrite(fs, spark,
-      docs.observe(obs, count(lit(1)).as("n")).coalesce(targetFiles), path, retain,
-      format = fmtOut, sourceNames = names, pinnedLive = live,
+    val hadSchema = storedSchema(fs, new Path(pin.live, StatsDir)).nonEmpty
+    val n = rewrite(pin, retain, Scope.All, Extras(
+      count = Some(lit(true)), format = format,
       stagedSchema =
-        if (fmtOut != "parquet" && hadSchema) Some(docs.schema)
+        if (fmtOut != "parquet" && hadSchema) Some(pin.docs.schema)
         else None,
       stagedStats =
         if (statted.nonEmpty || bloomed.nonEmpty)
           Some((statted, bloomed, if (bits > 0) bits else 1 << 16))
-        else None)
+        else None))(_.coalesce(targetFiles))
     afterCommit()
-    obs.get("n").asInstanceOf[Long]
+    n
   }
 
   /** Incremental small-files compaction: merge ONLY the live generation's
@@ -2230,35 +2068,14 @@ object DocStore extends DocStoreCommit {
                    targetFiles: Int = 1, retain: Int = 2): Long = {
     require(minBytes > 0, s"minBytes must be positive, got $minBytes")
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
-    val sized = names.toSeq.sorted.map { n =>
-      val p = new Path(resolvePath(live, n))
-      (n, if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L)
-    }
-    val small = sized.collect { case (n, len) if len < minBytes => n }
+    val pin = pinLive(spark, fileSystem(spark, path), path)
+    val small = fileSizes(pin.fs, pin.live, pin.names).toSeq.sorted
+      .collect { case (n, len) if len < minBytes => n }
     if (small.size <= targetFiles) return 0L // merging wouldn't shrink the tail
-    val carried = (names -- small).toSeq.sorted
-    // parquet commits always persist df.schema as the generation's read
-    // schema — so when no stored schema exists it must be derived from
-    // ALL logical files, never just the small subset, or carried-only
-    // columns would be silently dropped on read
-    val schema = logicalReadSchema(spark, fs, live, fmt, names)
-    if (fmt == "parquet" && schema.isEmpty)
-      throw new IllegalStateException(
-        s"docstore compactSmall: cannot derive a complete read schema for " +
-          s"$live — its data files carry incompatible physical types " +
-          "(drift beyond integral/float widening); full-collection reads " +
-          "fail the same way. Resolve the drift before compacting.")
-    val docs = readFiles(spark, fmt, schema, small.map(resolvePath(live, _)))
-    // carriedSchema stays the STORED schema or nothing: inferring from the
-    // small subset could under-describe columns that live only in carried
-    // files, and a committed under-wide schema silently drops them — with
-    // no sidecar the read path falls back to inference over dir + links,
-    // which is always complete
-    commitRewrite(fs, spark, docs.coalesce(targetFiles), path, retain,
-      format = fmt, sourceNames = names, pinnedLive = live,
-      carried = carried, carriedSchema = schema)
+    // the merged file is read and served under the pin's COMPLETE schema
+    // (never one inferred from the small subset, which would drop the
+    // columns that live only in carried files)
+    rewrite(pin, retain, Scope.Files(small))(_.coalesce(targetFiles))
     small.size.toLong
   }
 
@@ -2278,29 +2095,25 @@ object DocStore extends DocStoreCommit {
     * data bytes and the subset the LIVE generation still references (its
     * own files for the live gen; carried `_LINKS` bytes for older ones) —
     * the bytes that stay pinned as the retention window slides. Pure
-    * metadata (listStatus sizes); no data file is opened.
+    * metadata (one listing per generation); no data file is opened.
     */
   private def homeAccounting(fs: FileSystem, path: String, live: String,
                              names: Set[String])
       : Seq[(Int, Long, Long)] = { // (generation, dataBytes, liveRefBytes)
-    def len(p: String): Long = {
-      val q = new Path(p)
-      if (fs.exists(q)) fs.getFileStatus(q).getLen else 0L
-    }
     val liveName = new Path(live).getName
     val linksByHome = names.filter(_.contains("/"))
       .groupBy(_.takeWhile(_ != '/'))
     committedGens(fs, path).flatMap { g =>
       val gName = f"gen-$g%06d"
       val gDir = genPath(path, g)
-      if (!fs.exists(new Path(gDir))) None
+      val sizes = dataFileSizes(fs, gDir)
+      if (sizes.isEmpty && !fs.exists(new Path(gDir))) None
       else {
-        val bytes = dataFileNames(fs, gDir).iterator
-          .map(n => len(s"$gDir/$n")).sum
+        val bytes = sizes.values.sum
         val ref =
           if (gName == liveName) bytes
           else linksByHome.getOrElse(gName, Set.empty).iterator
-            .map(e => len(s"$path/$e")).sum
+            .map(e => sizes.getOrElse(baseName(e), 0L)).sum
         Some((g, bytes, ref))
       }
     }
@@ -2353,10 +2166,11 @@ object DocStore extends DocStoreCommit {
     require(minLiveFraction > 0.0 && minLiveFraction <= 1.0,
       s"minLiveFraction must be in (0, 1], got $minLiveFraction")
     val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
+    val names = pin.names
     if (!names.exists(_.contains("/"))) return 0L // no links: nothing carried
     val window = committedGens(fs, path).takeRight(retain).toSet
-    val badHomes = homeAccounting(fs, path, live, names).collect {
+    val badHomes = homeAccounting(fs, path, pin.live, names).collect {
       case (g, bytes, ref)
           if !window.contains(g) && bytes > 0L &&
             ref.toDouble / bytes < minLiveFraction => f"gen-$g%06d"
@@ -2364,19 +2178,7 @@ object DocStore extends DocStoreCommit {
     val rehome = names.filter(n =>
       n.contains("/") && badHomes.contains(n.takeWhile(_ != '/')))
     if (rehome.isEmpty) return 0L
-    val carried = (names -- rehome).toSeq.sorted
-    val schema = logicalReadSchema(spark, fs, live, fmt, names)
-    if (fmt == "parquet" && schema.isEmpty)
-      throw new IllegalStateException(
-        s"docstore vacuum: cannot derive a complete read schema for $live " +
-          "— its data files carry incompatible physical types (drift " +
-          "beyond integral/float widening); full-collection reads fail " +
-          "the same way. Resolve the drift before vacuuming.")
-    val docs = readFiles(spark, fmt, schema,
-      rehome.toSeq.sorted.map(resolvePath(live, _)))
-    commitRewrite(fs, spark, docs, path, retain, format = fmt,
-      sourceNames = names, pinnedLive = live, carried = carried,
-      carriedSchema = schema)
+    rewrite(pin, retain, Scope.Files(rehome.toSeq.sorted))(d => d)
     rehome.size.toLong
   }
 
@@ -2472,9 +2274,7 @@ object DocStore extends DocStoreCommit {
           yield (lo, hi))
       }
     }.toMap
-    names.toSeq.sorted.map { n =>
-      val p = new Path(resolvePath(live, n))
-      val bytes = if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+    fileSizes(fs, live, names).toSeq.sorted.map { case (n, bytes) =>
       (n, byFile.getOrElse(baseName(n), None), bytes)
     }
   }
@@ -2539,7 +2339,8 @@ object DocStore extends DocStoreCommit {
                 retain: Int = 2, maxFileBytes: Long = 1L << 28): Long = {
     require(maxFileBytes > 0, s"maxFileBytes must be positive, got $maxFileBytes")
     val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
+    val pin = pinLive(spark, fs, path)
+    import pin.{format => fmt, live, names}
     if (names.isEmpty) return 0L // nothing to place (or no collection)
     val (statted, bloomed, bloomBits) = statsConfig(spark, fs, live)
     require(statted.contains(keyCol),
@@ -2547,13 +2348,7 @@ object DocStore extends DocStoreCommit {
         "cluster() or collectStats() first; recluster is the incremental " +
         "maintenance of an existing clustered layout, not the initial sort")
     val ranges = keyRanges(spark, fs, live, names, keyCol)
-    val schema = logicalReadSchema(spark, fs, live, fmt, names)
-    if (fmt == "parquet" && schema.isEmpty)
-      throw new IllegalStateException(
-        s"docstore recluster: cannot derive a complete read schema for " +
-          s"$live — its data files carry incompatible physical types " +
-          "(drift beyond integral/float widening); full-collection reads " +
-          "fail the same way. Resolve the drift before reclustering.")
+    val schema = pin.partialSchema
     // place rangeless files by scanning exactly them (fresh appends, or
     // rows statted before keyCol joined the geometry): one column-pruned
     // pass over O(their bytes). All-null-key files stay rangeless and
@@ -2640,23 +2435,18 @@ object DocStore extends DocStoreCommit {
         when(key.isNull, lit(toks.head))) { case (acc, (cut, j)) =>
         acc.when(key <= lit(cut), lit(toks(j)))
       }.otherwise(lit(toks.last))
-    val docs = readFiles(spark, fmt, schema,
-        groups.flatten.map(i => resolvePath(live, i.name)))
-      .withColumn("__piece", route)
-      .repartition(cuts.size, col("__piece"))
-      .sortWithinPartitions(key)
-      .drop("__piece")
-    val rewritten = groups.flatten.map(_.name).toSet
-    val carried = (names -- rewritten).toSeq.sorted
-    commitRewrite(fs, spark, docs, path, retain, format = fmt,
-      sourceNames = names, pinnedLive = live,
-      carried = carried, carriedSchema = schema)
-    // commitRewrite's carry branch re-stats fresh files only when
-    // something was carried; a recluster that rewrote EVERYTHING (one
-    // global overlap group) must re-stat the new generation itself or
-    // the next recluster/prune would find no ranges — same pinned
-    // geometry, O(rewritten bytes), which this case already paid anyway
-    if (carried.isEmpty)
+    val rewritten = groups.flatten.map(_.name)
+    rewrite(pin, retain, Scope.Files(rewritten))(
+      _.withColumn("__piece", route)
+        .repartition(cuts.size, col("__piece"))
+        .sortWithinPartitions(key)
+        .drop("__piece"))
+    // the commit re-stats fresh files only when something was carried; a
+    // recluster that rewrote EVERYTHING (one global overlap group) must
+    // re-stat the new generation itself or the next recluster/prune would
+    // find no ranges — same pinned geometry, O(rewritten bytes), which
+    // this case already paid anyway
+    if (rewritten.size == names.size)
       collectStats(spark, path, statted, bloomed,
         if (bloomBits > 0) bloomBits else 1 << 16)
     rewritten.size.toLong
@@ -2794,10 +2584,7 @@ object DocStore extends DocStoreCommit {
     // healthy; only counts above it are tail debris worth merging.
     def countBudget(): (Int, Long) = {
       val live = liveDir(fs, path).get
-      val bytes = logicalNames(fs, live).toSeq.map { n =>
-        val p = new Path(resolvePath(live, n))
-        if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
-      }.sum
+      val bytes = fileSizes(fs, live, logicalNames(fs, live)).values.sum
       (math.max(maxDataFiles.toLong,
         (bytes + maxFileBytes - 1) / maxFileBytes).toInt, bytes)
     }
@@ -2851,15 +2638,11 @@ object DocStore extends DocStoreCommit {
               statsCols: Seq[String], retain: Int = 2,
               bloomCols: Seq[String] = Seq.empty,
               bloomBits: Int = 1 << 16): Long = {
-    val fs = fileSystem(spark, path)
-    val (live, fmt, names) = pinLive(spark, fs, path)
-    val docs = readPinned(spark, fs, live, fmt, names)
+    val pin = pinLive(spark, fileSystem(spark, path), path)
     // no Dataset.observe here: repartitionByRange runs an extra sampling
     // pass over the child, which would double the observed count
-    val n = docs.count()
-    commitRewrite(fs, spark,
-      graft.ops.Zorder.clusterByKey(docs, key, targetFiles), path, retain,
-      format = fmt, sourceNames = names, pinnedLive = live)
+    val n = pin.docs.count()
+    rewrite(pin, retain, Scope.All)(graft.ops.Zorder.clusterByKey(_, key, targetFiles))
     collectStats(spark, path, statsCols, bloomCols, bloomBits)
     n
   }
@@ -2918,15 +2701,14 @@ object DocStore extends DocStoreCommit {
     // persist the stats-time schema alongside: a pruned read must resolve
     // every column of the full collection, not just what the surviving
     // files happen to infer (underscore name -> invisible to data scans)
-    val out = fs.create(new Path(statsPath, "_schema.json"), true)
-    try out.write(docs0.schema.json.getBytes(UTF_8)) finally out.close()
+    writeSchemaBase(fs, statsPath, docs0.schema)
     // RECONCILE concurrent appends: files that landed after the pin are
     // not covered by the base schema just written (and this rewrite wiped
     // any sidecar they wrote) — re-cover and re-stat exactly those. The
     // appender's own re-cover check handles the mirror ordering (append
     // publishing after this listing sees the new base and covers itself).
-    val extras = (dataFileNames(fs, live) -- pinned).toSeq.sorted
-      .filter(n => fs.getFileStatus(new Path(live, n)).getLen > 0) // rowless: no schema
+    val extras = dataFileSizes(fs, live).toSeq.sorted
+      .collect { case (n, len) if len > 0 && !pinned.contains(n) => n } // rowless: no schema
     if (extras.nonEmpty) {
       val paths = extras.map(n => s"$live/$n")
       val extrasSchema = readFiles(spark, fmt, None, paths).schema
@@ -3314,7 +3096,7 @@ object DocStore extends DocStoreCommit {
       scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(txt)
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
     }
-    val base = new Path(statsPath, "_schema.json")
+    val base = new Path(statsPath, SchemaBase)
     if (!fs.exists(base)) return None
     val sidecars = fs.listStatus(statsPath).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith("_schema-append-"))
@@ -3331,64 +3113,6 @@ object DocStore extends DocStoreCommit {
     }
   }
 
-  /** A COMPLETE read schema for a COW commit that reads only a subset of
-    * the generation's files (compactSmall's tail, vacuum's re-homed set):
-    * the stored stats-time schema when present; else a strict footer
-    * merge over ALL logical files; else a WIDENED union — per-field
-    * tightest common type, the [[diffGenerations]] coercion rule — which
-    * the parquet reader serves through type widening (an int32 file reads
-    * correctly under a bigint schema; Spark 4 upcasts at scan time). The
-    * widened path is what makes a generation with integral-width drift
-    * (a Scala int batch appended to a JSON-inferred bigint collection)
-    * compactable without a full rewrite — and the committed widened
-    * schema HEALS the drift for every later read. None only when fields
-    * are genuinely incompatible, in which case full-collection reads fail
-    * too and callers must fail loudly rather than commit a
-    * subset-inferred schema next to carried links.
-    */
-  private def logicalReadSchema(spark: SparkSession, fs: FileSystem,
-                                live: String, fmt: String, names: Set[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    storedSchema(fs, new Path(live, StatsDir)).orElse {
-      if (fmt != "parquet") None
-      else {
-        val paths = names.toSeq.sorted.map(resolvePath(live, _))
-        scala.util.Try(readFiles(spark, fmt, None, paths).schema).toOption
-          .orElse(scala.util.Try(
-            paths.map(p => spark.read.parquet(p).schema)
-              .reduceLeft(widenStructs)).toOption)
-      }
-    }
-
-  /** Field-union of two schemas with TYPE WIDENING where they disagree
-    * (Catalyst's tightest-common-type rule); throws when no common type
-    * exists — callers treat that as "cannot merge". Unlike the strict
-    * [[org.apache.spark.sql.GraftShims.mergeSchemas]], int/long or
-    * float/double drift widens instead of failing.
-    */
-  private def widenStructs(a: org.apache.spark.sql.types.StructType,
-                           b: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val order = (a.fieldNames ++ b.fieldNames).distinct
-    StructType(order.map { n =>
-      (a.find(_.name == n), b.find(_.name == n)) match {
-        case (Some(x), Some(y)) if x.dataType == y.dataType =>
-          x.copy(nullable = x.nullable || y.nullable)
-        case (Some(x), Some(y)) =>
-          val t = org.apache.spark.sql.catalyst.analysis.TypeCoercion
-            .findTightestCommonType(x.dataType, y.dataType)
-            .getOrElse(throw new IllegalArgumentException(
-              s"docstore: column $n has incompatible physical types " +
-                s"${x.dataType} vs ${y.dataType}"))
-          StructField(n, t, nullable = true)
-        case (Some(x), None) => x.copy(nullable = true)
-        case (None, Some(y)) => y.copy(nullable = true)
-        case (None, None) => throw new IllegalStateException(s"unreachable: $n")
-      }
-    })
-  }
-
   /** Surviving LOGICAL file names of the live generation (resolve with
     * [[resolvePath]]) plus the schema to read them with, or None when
     * pruning can't apply (no stats/schema, no recognizable conjunct, or an
@@ -3401,7 +3125,7 @@ object DocStore extends DocStoreCommit {
     * listing) makes the candidate set exactly the mutation's snapshot —
     * the COW path needs kept + carried to partition the SAME set.
     */
-  private def prunedFiles(spark: SparkSession, fs: FileSystem, live: String,
+  private[sources] def prunedFiles(spark: SparkSession, fs: FileSystem, live: String,
                           fmt: String, filter: Column,
                           pinned: Option[Set[String]] = None)
       : Option[(Seq[String], org.apache.spark.sql.types.StructType)] = {

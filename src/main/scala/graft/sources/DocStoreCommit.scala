@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit, when}
+import org.apache.spark.sql.types.StructType
 import graft.core.Io
 
 /** The DocStore generation commit: the one owner of the on-disk layout
@@ -11,8 +13,10 @@ import graft.core.Io
   * id, swings the manifest and prunes past the retention window — plus
   * the salvage, heal and visibility walks that keep concurrent appends
   * determinate. Only this trait writes the layout's records; [[DocStore]]
-  * mixes it in and reaches the protocol through [[pinLive]] and
-  * [[commitRewrite]].
+  * mixes it in, and every one of its mutations, compactions and DDL verbs
+  * pins a snapshot with [[pinLive]] and commits through [[rewrite]], the
+  * one place that decides which pinned files are read, which are carried
+  * by reference, and under what schema.
   */
 private[sources] trait DocStoreCommit {
   import DocStoreCommit._
@@ -74,6 +78,27 @@ private[sources] trait DocStoreCommit {
     Io.commitSmallFile(fs, new Path(genDir), LinksFile,
       entries.sorted.mkString("\n").getBytes(UTF_8), replace = true)
 
+  /** Lengths of a dir's data files, from ONE listing (empty when the dir
+    * is gone).
+    */
+  private[sources] def dataFileSizes(fs: FileSystem, dir: String): Map[String, Long] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Map.empty
+    else Io.visibleFiles(fs, p).iterator.map(st => st.getPath.getName -> st.getLen).toMap
+  }
+
+  /** Lengths of logical files of `live` — plain names and carried entries
+    * alike — from ONE listing per home dir; a file whose home is gone
+    * sizes 0. Pure metadata: no data file is opened.
+    */
+  private[sources] def fileSizes(fs: FileSystem, live: String,
+                                 names: Iterable[String]): Map[String, Long] =
+    names.groupBy(n => new Path(resolvePath(live, n)).getParent.toString)
+      .flatMap { case (home, ns) =>
+        val lens = dataFileSizes(fs, home)
+        ns.map(n => n -> lens.getOrElse(baseName(n), 0L))
+      }
+
   /** LOGICAL data-file names of a generation: physical visible files (plain
     * names) plus carried entries (containing '/'). Every read/pin surface
     * operates on this set; physical-only listings ([[dataFileNames]])
@@ -132,33 +157,40 @@ private[sources] trait DocStoreCommit {
     * stored schema).
     */
   private[sources] def readFiles(spark: SparkSession, fmt: String,
-                        schema: Option[org.apache.spark.sql.types.StructType],
-                        files: Seq[String]): DataFrame = {
+                                 schema: Option[StructType], files: Seq[String]): DataFrame = {
     val r0 = spark.read
     val r = schema.fold(if (fmt == "parquet") r0.option("mergeSchema", "true") else r0)(r0.schema)
     if (fmt == "parquet") r.parquet(files: _*) else r.json(files: _*)
   }
+
+  /** A rowless frame typed `schema`: no read planned, no job. */
+  private[sources] def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   private[sources] def dataFileNames(fs: FileSystem, live: String): Set[String] =
     Io.visibleFiles(fs, new Path(live)).iterator.map(_.getPath.getName).toSet
 
   // ---- the stats sidecars a commit carries (implemented by DocStore) ------
 
-  private[sources] def storedSchema(fs: FileSystem, statsPath: Path)
-      : Option[org.apache.spark.sql.types.StructType]
+  private[sources] def storedSchema(fs: FileSystem, statsPath: Path): Option[StructType]
 
   private[sources] def appendStats(spark: SparkSession, fs: FileSystem, live: String,
                                    fmt: String, files: Seq[String],
-                                   schema: Option[org.apache.spark.sql.types.StructType] = None): Unit
+                                   schema: Option[StructType] = None): Unit
 
   private[sources] def appendStatsWith(spark: SparkSession, fs: FileSystem, live: String,
                                        fmt: String, files: Seq[String],
                                        cols: Seq[String], bloomCols: Seq[String],
                                        bloomBits: Int,
-                                       schema: Option[org.apache.spark.sql.types.StructType] = None): Unit
+                                       schema: Option[StructType] = None): Unit
 
   private[sources] def carryStatsLines(spark: SparkSession, fs: FileSystem, dst: Path,
                                        carries: Seq[StatsCarry], covered: Boolean = false): Boolean
+
+  private[sources] def prunedFiles(spark: SparkSession, fs: FileSystem, live: String,
+                                   fmt: String, filter: Column,
+                                   pinned: Option[Set[String]] = None)
+      : Option[(Seq[String], StructType)]
 
   // ---- generation machinery ---------------------------------------------
 
@@ -330,8 +362,20 @@ private[sources] trait DocStoreCommit {
     }
   }
 
+  /** The schema base of a generation's stats dir: the stored schema every
+    * read of the generation is planned with (append sidecars widen it).
+    */
+  private[sources] val SchemaBase = "_schema.json"
+
+  /** Write (or replace) the schema base — the one writer of it. */
+  private[sources] def writeSchemaBase(fs: FileSystem, statsPath: Path,
+                                       schema: StructType): Unit = {
+    val out = fs.create(new Path(statsPath, SchemaBase), true)
+    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+  }
+
   private[sources] def writeSchemaSidecar(fs: FileSystem, statsPath: Path,
-                                 schema: org.apache.spark.sql.types.StructType): Path = {
+                                 schema: StructType): Path = {
     val sidecar = new Path(statsPath,
       s"_schema-append-${java.util.UUID.randomUUID()}.json")
     val out = fs.create(sidecar, true)
@@ -374,7 +418,7 @@ private[sources] trait DocStoreCommit {
     val toFmt =
       if (dataFileNames(fs, toDir).nonEmpty) Some(genFormat(fs, toDir)) else None
     val statsPath = new Path(toDir, StatsDir)
-    val hasBase = fs.exists(new Path(statsPath, "_schema.json"))
+    val hasBase = fs.exists(new Path(statsPath, SchemaBase))
     names.map { name =>
       val src = new Path(fromDir, name)
       val srcFmt = if (name.endsWith(".parquet")) "parquet" else "json"
@@ -593,6 +637,54 @@ private[sources] trait DocStoreCommit {
       StatsCarry(new Path(wDir, StatsDir), importBases, keep = true)), covered = true)
   }
 
+  /** A pinned snapshot ([[pinLive]]): the store `path`, the `live`
+    * generation a rewrite reads (`path` itself when there is no
+    * collection yet), its `format`, and the exact logical file list the
+    * commit records as its [[SourceFile]]. The whole pinned read and the
+    * complete read schema of a partial read are each planned once,
+    * however often an op and its [[rewrite]] use them.
+    */
+  private[sources] final class Pin(val spark: SparkSession, val fs: FileSystem,
+                                   val path: String, val live: String,
+                                   val format: String, val names: Set[String]) {
+    /** The pinned files' absolute paths, in name order. */
+    lazy val paths: Seq[String] = names.toSeq.sorted.map(resolvePath(live, _))
+
+    /** Every pinned file under the stored schema — [[readGen]]'s
+      * discipline, and its no-files behavior.
+      */
+    lazy val docs: DataFrame = {
+      val schema = storedSchema(fs, new Path(live, StatsDir))
+      if (names.nonEmpty) readFiles(spark, format, schema, paths)
+      else schema.fold(readFiles(spark, format, None, Seq(live)))(emptyFrame(spark, _))
+    }
+
+    /** A COMPLETE read schema for a rewrite that reads only some pinned
+      * files (compactSmall's tail, vacuum's re-homed set): the stored
+      * stats-time schema when present; else, for parquet, the
+      * [[physicalSchema]] of ALL pinned files. Its widened union is what
+      * makes a generation with integral-width drift (a Scala int batch
+      * appended to a JSON-inferred bigint collection) compactable without
+      * a full rewrite — and the committed widened schema HEALS the drift
+      * for every later read. None only for a json store without a stored
+      * schema, whose reads infer. A parquet store whose files drift
+      * beyond widening is refused — full reads fail the same way, and a
+      * schema inferred from the subset would drop the columns that live
+      * only in carried files.
+      */
+    lazy val partialSchema: Option[StructType] = {
+      val schema = storedSchema(fs, new Path(live, StatsDir))
+        .orElse(if (format == "parquet") physicalSchema(spark, format, paths) else None)
+      if (format == "parquet" && schema.isEmpty)
+        throw new IllegalStateException(
+          s"docstore: cannot derive a complete read schema for $live — its " +
+            "data files carry incompatible physical types (drift beyond " +
+            "integral/float widening); full-collection reads fail the same " +
+            "way. Resolve the drift before rewriting part of the collection.")
+      schema
+    }
+  }
+
   /** Pin the live generation for a rewrite: heal pending salvages first
     * (their rows must be read), then list the data files ONCE — the
     * rewrite reads exactly this list and commits it as the generation's
@@ -600,52 +692,152 @@ private[sources] trait DocStoreCommit {
     * determinate. With no collection at `path` the pin is `path` itself
     * with no files.
     */
-  private[sources] def pinLive(spark: SparkSession, fs: FileSystem, path: String)
-      : (String, String, Set[String]) = {
+  private[sources] def pinLive(spark: SparkSession, fs: FileSystem, path: String): Pin = {
     healStragglers(spark, fs, path)
     liveDir(fs, path) match {
-      case Some(live) => (live, genFormat(fs, live), logicalNames(fs, live))
+      case Some(live) => new Pin(spark, fs, path, live, genFormat(fs, live), logicalNames(fs, live))
       // nothing to read; a commit creates the first generation (its
       // `_SOURCE` record names an empty predecessor)
-      case None => (path, "json", Set.empty)
+      case None => new Pin(spark, fs, path, path, "json", Set.empty)
     }
   }
 
-  /** [[readGen]] over a pinned file list (same stored-schema discipline,
-    * same no-files behavior).
+  /** What the files at `paths` PHYSICALLY hold, whatever the stored
+    * schema says: one strict merge (parquet footers, json inference);
+    * else, for parquet, a WIDENED union — per-field tightest common type,
+    * the [[diffGenerations]] coercion rule — which the parquet reader
+    * serves through type widening (an int32 file reads correctly under a
+    * bigint schema; Spark 4 upcasts at scan time). None when nothing is
+    * determinable: no files, or drift so broken that full reads fail too.
     */
-  private[sources] def readPinned(spark: SparkSession, fs: FileSystem, live: String,
-                         fmt: String, names: Set[String]): DataFrame = {
-    val schema = storedSchema(fs, new Path(live, StatsDir))
-    if (names.isEmpty) schema match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => readFiles(spark, fmt, None, Seq(live))
+  private[sources] def physicalSchema(spark: SparkSession, fmt: String,
+                                      paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty) None
+    else scala.util.Try(readFiles(spark, fmt, None, paths).schema).toOption.orElse(
+      if (fmt != "parquet") None
+      else scala.util.Try(
+        paths.map(p => spark.read.parquet(p).schema).reduceLeft(widenStructs)).toOption)
+
+  /** Field-union of two schemas with TYPE WIDENING where they disagree
+    * (Catalyst's tightest-common-type rule); throws when no common type
+    * exists — callers treat that as "cannot merge". Unlike the strict
+    * [[org.apache.spark.sql.GraftShims.mergeSchemas]], int/long or
+    * float/double drift widens instead of failing.
+    */
+  private[sources] def widenStructs(a: StructType, b: StructType): StructType = {
+    import org.apache.spark.sql.types.StructField
+    val order = (a.fieldNames ++ b.fieldNames).distinct
+    StructType(order.map { n =>
+      (a.find(_.name == n), b.find(_.name == n)) match {
+        case (Some(x), Some(y)) if x.dataType == y.dataType =>
+          x.copy(nullable = x.nullable || y.nullable)
+        case (Some(x), Some(y)) =>
+          val t = org.apache.spark.sql.catalyst.analysis.TypeCoercion
+            .findTightestCommonType(x.dataType, y.dataType)
+            .getOrElse(throw new IllegalArgumentException(
+              s"docstore: column $n has incompatible physical types " +
+                s"${x.dataType} vs ${y.dataType}"))
+          StructField(n, t, nullable = true)
+        case (Some(x), None) => x.copy(nullable = true)
+        case (None, Some(y)) => y.copy(nullable = true)
+        case (None, None) => throw new IllegalStateException(s"unreachable: $n")
+      }
+    })
+  }
+
+  /** THE rewrite entry: every mutation, compaction and DDL op commits
+    * through here, and here alone is decided which pinned files are
+    * read, which are carried by reference (`_LINKS`), and under what
+    * schema.
+    *
+    *  - [[Scope.All]] reads every pinned file ([[Pin.docs]]) and carries
+    *    none: a full rewrite.
+    *  - [[Scope.Files]] reads the named files under [[Pin.partialSchema]]
+    *    and carries the rest.
+    *  - [[Scope.Matching]] reads the files the filter may match (the
+    *    `_STATS` min/max and Bloom prune) and carries the rest — copy-on-
+    *    write at O(matched files). It falls back to [[Scope.All]] when
+    *    pruning cannot apply, drops nothing, or one of its gates refuses.
+    *
+    * `transform` maps the read rows (with [[Extras.count]] observed on
+    * them) to the rows the new generation holds; [[Extras.adds]] rows join
+    * them. The transform is handed the read unforced, so one that ignores
+    * its input never plans a read. When nothing is read, nothing is added
+    * and files are carried, the commit is DATALESS: no Spark job, no
+    * rowless part file (one would stay unstatted and be read by every
+    * later prune). The carried files are served under the read schema,
+    * or under the output's when the transform changed it or rows were
+    * added. Returns the observed count (0 when nothing was read).
+    */
+  private[sources] def rewrite(pin: Pin, retain: Int, scope: Scope,
+                               extras: Extras = Extras())(
+      transform: (=> DataFrame) => DataFrame): Long = {
+    import pin.{format, live, names, spark}
+    // (files read, files carried, read schema); None = the full rewrite
+    val partial: Option[(Seq[String], Seq[String], Option[StructType])] = scope match {
+      case Scope.All => None
+      case Scope.Files(read) =>
+        Some((read, (names -- read).toSeq.sorted, pin.partialSchema))
+      case Scope.Matching(filter, schemaSafe, _) =>
+        prunedFiles(spark, pin.fs, live, format, filter, pinned = Some(names)) match {
+          case Some((cand, schema)) if schemaSafe(schema) && cand.size < names.size =>
+            Some((cand, (names -- cand).toSeq.sorted, Some(schema)))
+          case _ => None
+        }
     }
-    else readFiles(spark, fmt, schema, names.toSeq.sorted.map(resolvePath(live, _)))
+    // the one commit: `n` is the observed count, read after the write
+    def commit(df: DataFrame, carried: Seq[String], served: Option[StructType],
+               dataless: Boolean, n: () => Long): Long = {
+      commitRewrite(pin, df, retain, extras.format.getOrElse(format), carried, served,
+        dataless, extras, () => extras.late(n()))
+      n()
+    }
+    partial match {
+      case Some((Seq(), carried, schema)) if carried.nonEmpty && extras.adds.isEmpty =>
+        commit(emptyFrame(spark, schema.getOrElse(new StructType())), carried, schema,
+          dataless = true, () => 0L)
+      case _ =>
+        lazy val in: DataFrame = partial match {
+          case None => pin.docs
+          case Some((Seq(), _, schema)) => emptyFrame(spark, schema.getOrElse(new StructType()))
+          case Some((read, _, schema)) =>
+            readFiles(spark, format, schema, read.map(resolvePath(live, _)))
+        }
+        val obs = extras.count.map(c => (Observation(), c))
+        lazy val observed = obs.fold(in) { case (o, c) =>
+          in.observe(o, count(when(c, lit(1))).as("n")) }
+        val out = extras.adds.foldLeft(transform(observed))(
+          _.unionByName(_, allowMissingColumns = true))
+        val counted = () => obs.fold(0L)(_._1.get("n").asInstanceOf[Long])
+        (partial, scope) match {
+          case (Some(_), Scope.Matching(_, _, outputSafe)) if !outputSafe(in.schema, out.schema) =>
+            rewrite(pin, retain, Scope.All, extras)(transform)
+          case (Some((_, carried, schema)), _) =>
+            val served =
+              if (out.schema == in.schema && extras.adds.isEmpty) schema
+              else Some(out.schema)
+            commit(out, carried, served, dataless = false, counted)
+          case (None, _) => commit(out, Nil, None, dataless = false, counted)
+        }
+    }
   }
 
   /** One-scan rewrite into the next generation, manifest commit, then
-    * cleanup. The newest `retain` generations survive (the previous live
-    * one always does, so concurrent readers' planned file lists stay
-    * valid; retain > 2 buys [[findAsOf]] time travel further back); older
-    * generations are reclaimed.
-    * `sourceNames` is the pinned file list the rewrite's `df` was read
-    * from ([[pinLive]]) — committed as the [[SourceFile]] record and used
-    * to salvage late concurrent appends forward before anything is pruned.
+    * cleanup — [[rewrite]]'s commit, so its one caller. The newest
+    * `retain` generations survive (the previous live one always does, so
+    * concurrent readers' planned file lists stay valid; retain > 2 buys
+    * [[findAsOf]] time travel further back); older generations are
+    * reclaimed. The pin's file list is what the rewrite's `df` was read
+    * from — committed as the [[SourceFile]] record and used to salvage
+    * late concurrent appends forward before anything is pruned.
     */
-  private[sources] def commitRewrite(fs: FileSystem, spark: SparkSession, df: DataFrame,
-                            path: String, retain: Int, format: String,
-                            sourceNames: Set[String], pinnedLive: String,
-                            sidecars: Map[String, Array[Byte]] = Map.empty,
-                            carried: Seq[String] = Nil,
-                            carriedSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                            lateSidecars: Map[String, () => Array[Byte]] = Map.empty,
-                            dataless: Boolean = false,
-                            stagedSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                            stagedStats: Option[(Seq[String], Seq[String], Int)] = None,
-                            afterStage: () => Unit = () => (),
-                            afterPublish: () => Unit = () => ()): Unit = {
+  private def commitRewrite(pin: Pin, df: DataFrame, retain: Int, format: String,
+                            carried: Seq[String], carriedSchema: Option[StructType],
+                            dataless: Boolean, extras: Extras,
+                            lateSidecars: () => Map[String, Array[Byte]]): Unit = {
+    import pin.{fs, path, spark}
+    val sourceNames = pin.names
+    val pinnedLive = pin.live
     require(retain >= 2, s"retain must keep the live + previous generation, got $retain")
     // LOUD lost-update detection ([[ConcurrentMutationException]]): checked
     // before the rewrite job and again right before the swing (the rewrite
@@ -757,45 +949,42 @@ private[sources] trait DocStoreCommit {
       // provably empty, so skip the Spark job entirely — a rowless part
       // file would be UNSTATTED and survive every later stats prune as a
       // perpetual extra read (and chained DDL would carry it forever).
-      // Callers pass dataless only with carried links present, so
+      // [[rewrite]] is dataless only with carried links present, so
       // genFormat still detects the format from the link entries.
       fs.mkdirs(new Path(next))
       fs.create(new Path(next, "_SUCCESS"), true).close()
     } else writeData(df, format, next)
-    if (format == "parquet") {
-      // parquet reads back with EXACTLY the written types (unlike json,
-      // whose inference conventions differ from arbitrary df schemas), so
-      // the commit can persist the schema it just wrote — readGen then
-      // plans with zero jobs (no footer-merge pass) even when no stats
-      // pass ever runs, and appends widen it additively via sidecars
-      val stats = new Path(next, StatsDir)
+    val stats = new Path(next, StatsDir)
+    if (format == "parquet" || carried.nonEmpty || extras.stagedSchema.nonEmpty)
       fs.mkdirs(stats)
-      val out = fs.create(new Path(stats, "_schema.json"), true)
-      try out.write(df.schema.json.getBytes(UTF_8)) finally out.close()
-    }
+    // THE schema base the new generation serves, written once:
+    //  - the caller's (`stagedSchema`): a full rewrite restoring the
+    //    pinned stored schema, or a DDL verb's altered one — so it commits
+    //    (or vanishes) with the data in one manifest swing;
+    //  - else, for parquet, the schema just written: parquet reads back
+    //    with EXACTLY the written types (unlike json, whose inference
+    //    conventions differ from arbitrary df schemas), so readGen plans
+    //    with zero jobs (no footer-merge pass) even when no stats pass
+    //    ever runs, and appends widen it additively via sidecars;
+    //  - else the schema carried files are served under: the pinned
+    //    stored schema for a schema-preserving COW mutation, the widened
+    //    one for a widening $set (carried files' narrower physical types
+    //    read under it — [[widensTo]]).
+    extras.stagedSchema
+      .orElse(Option.when(format == "parquet")(df.schema))
+      .orElse(carriedSchema.filter(_ => carried.nonEmpty))
+      .foreach(writeSchemaBase(fs, stats, _))
     // COPY-ON-WRITE carry: files of the pinned snapshot a selective
     // mutation provably never touched are LINKED to their physical homes
     // instead of rewritten — entries always point at the physical home
     // (a carried entry that was itself a link stays as-is; a plain name's
-    // home is the pinned generation), so links never chain. The sidecar,
-    // the schema base, and the carried stats rows all land before the
-    // manifest swing — atomic with the data.
+    // home is the pinned generation), so links never chain. The sidecar
+    // and the carried stats rows land before the manifest swing — atomic
+    // with the data.
     if (carried.nonEmpty) {
       val pinnedGen = new Path(pinnedLive).getName
       val entries = carried.map(n => if (n.contains("/")) n else s"$pinnedGen/$n")
       writeLinks(fs, next, entries)
-      val stats = new Path(next, StatsDir)
-      fs.mkdirs(stats)
-      // the caller passes the schema the new generation SERVES: the
-      // pinned stored schema for a schema-preserving COW mutation, the
-      // widened one for a widening $set (carried files' narrower
-      // physical types read under it — [[widensTo]]). Needed for json,
-      // where commitRewrite's own parquet-only schema write doesn't apply
-      if (!fs.exists(new Path(stats, "_schema.json")))
-        carriedSchema.foreach { s =>
-          val out = fs.create(new Path(stats, "_schema.json"), true)
-          try out.write(s.json.getBytes(UTF_8)) finally out.close()
-        }
       // carried files' bytes are unchanged, so their stats rows (keyed by
       // basename) carry verbatim — selective mutations keep pruning
       // across generations without a re-stat pass. A pinned generation
@@ -804,37 +993,24 @@ private[sources] trait DocStoreCommit {
       // them before
       carryStatsLines(spark, fs, stats, Seq(StatsCarry(
         new Path(pinnedLive, StatsDir), entries.map(baseName).toSet, keep = true)))
-      // stat the freshly rewritten files with the carried geometry (same
-      // machinery an append uses) so the WHOLE generation stays covered
-      val fresh = dataFileNames(fs, next).toSeq.sorted
-        .filter(n => fs.getFileStatus(new Path(next, n)).getLen > 0)
-      if (fresh.nonEmpty)
-        appendStats(spark, fs, next, format, fresh.map(n => s"$next/$n"),
-          Some(df.schema))
     }
-    // ATOMIC sidecar restoration for FULL rewrites (renameColumn, compact):
-    // the caller's stored schema and stats geometry land INSIDE the staged
-    // generation, so they commit (or vanish) with the data in one manifest
-    // swing. The predecessor flow restored them as a SECOND mutation after
-    // the commit — a crash between the two left the store stats-less (and
-    // a json store schema-less, erasing metadata-only columns and bricking
-    // later DDL), and under a concurrent mutation the follow-up could land
-    // its schema in a DIFFERENT generation than the one just committed.
-    stagedSchema.foreach { s =>
-      val stats = new Path(next, StatsDir)
-      fs.mkdirs(stats)
-      val out = fs.create(new Path(stats, "_schema.json"), true)
-      try out.write(s.json.getBytes(UTF_8)) finally out.close()
-    }
-    stagedStats.foreach { case (cols, bloomCols, bloomBits) =>
+    // the freshly written files with rows, statted so the WHOLE generation
+    // stays covered: with the carried geometry for a COW commit (the same
+    // machinery an append uses), with the caller's pinned geometry
+    // (`stagedStats`) for a full rewrite — so a crash can no longer leave
+    // a compacted or renamed store stats-less between the commit and a
+    // follow-up re-stat
+    lazy val fresh = dataFileSizes(fs, next).toSeq.sorted
+      .collect { case (n, len) if len > 0 => s"$next/$n" }
+    if (carried.nonEmpty && fresh.nonEmpty)
+      appendStats(spark, fs, next, format, fresh, Some(df.schema))
+    extras.stagedStats.foreach { case (cols, bloomCols, bloomBits) =>
       require(carried.isEmpty,
         "docstore: stagedStats is for full rewrites only — a COW commit's " +
           "fresh files are statted by the carry discipline above")
-      val fresh = dataFileNames(fs, next).toSeq.sorted
-        .filter(n => fs.getFileStatus(new Path(next, n)).getLen > 0)
       if (fresh.nonEmpty && (cols.nonEmpty || bloomCols.nonEmpty))
-        appendStatsWith(spark, fs, next, format, fresh.map(n => s"$next/$n"),
-          cols, bloomCols, bloomBits, Some(df.schema))
+        appendStatsWith(spark, fs, next, format, fresh, cols, bloomCols, bloomBits,
+          Some(df.schema))
     }
     // caller-supplied metadata sidecars land in the staged generation
     // BEFORE the manifest swing, so they commit (or vanish) atomically
@@ -843,15 +1019,14 @@ private[sources] trait DocStoreCommit {
     // so their bytes may read Observation metrics collected by the
     // rewrite itself (the mutation-token sidecar records the matched
     // count that way) while still landing before the swing.
-    (sidecars ++ lateSidecars.view.mapValues(f => f()).toMap)
-      .foreach { case (name, bytes) =>
+    (extras.sidecars ++ lateSidecars()).foreach { case (name, bytes) =>
       require(name.startsWith("_"),
         s"docstore: sidecar names must start with '_' (got $name) so reads " +
           "never mistake them for data files")
       val out = fs.create(new Path(next, name), true)
       try out.write(bytes) finally out.close()
     }
-    afterStage()
+    extras.afterStage()
     // re-validate after the rewrite. On a lost race, attempt the DISJOINT
     // RE-COMMIT first ([[disjointWinner]]): relink this staged rewrite
     // on top of the winner — keep my carried entries except the names the
@@ -918,7 +1093,7 @@ private[sources] trait DocStoreCommit {
     // sits above the winner's.
     next = publishStagedGeneration(fs, path, next, winnerFloor)
     writeSourceRecord(fs, next, previous.getOrElse(""), recordNames)
-    afterPublish()
+    extras.afterPublish()
     // FINAL manifest re-validation, after publish and immediately before
     // the swing: the validate-then-write window above publish is wide
     // enough for a THIRD mutation to commit (the merge path makes
@@ -998,6 +1173,49 @@ private[sources] trait DocStoreCommit {
 }
 
 private[sources] object DocStoreCommit {
+
+  /** Which pinned files a [[DocStoreCommit.rewrite]] reads; every other
+    * pinned file is carried by reference.
+    */
+  sealed trait Scope
+  object Scope {
+    /** Every pinned file: a full rewrite. */
+    case object All extends Scope
+    /** The named files (read in this order), under the pin's complete
+      * read schema.
+      */
+    final case class Files(read: Seq[String]) extends Scope
+    /** The files `filter` may match per the `_STATS` prune, when
+      * `schemaSafe` accepts the stored schema and `outputSafe` the
+      * transform's (read, output) schemas — else a full rewrite.
+      */
+    final case class Matching(filter: Column,
+                              schemaSafe: StructType => Boolean,
+                              outputSafe: (StructType, StructType) => Boolean =
+                                (_, _) => true) extends Scope
+  }
+
+  /** What a [[DocStoreCommit.rewrite]] commits beside the rows:
+    *  - `count`: read rows to count where this is true, observed on the
+    *    rewrite job itself (no second scan) and returned;
+    *  - `adds`: rows the new generation holds beside the transformed read;
+    *  - `format`: the output format (None keeps the pinned one);
+    *  - `sidecars`, and `late` sidecars built from the count after the
+    *    write — both land in the staged generation, before the swing;
+    *  - `stagedSchema` / `stagedStats`: the served schema and the stats
+    *    geometry (min/max columns, Bloom columns, Bloom bits) a full
+    *    rewrite restores inside the same commit;
+    *  - `afterStage` / `afterPublish`: test seams.
+    */
+  final case class Extras(count: Option[Column] = None,
+                          adds: Option[DataFrame] = None,
+                          format: Option[String] = None,
+                          sidecars: Map[String, Array[Byte]] = Map.empty,
+                          late: Long => Map[String, Array[Byte]] = _ => Map.empty,
+                          stagedSchema: Option[StructType] = None,
+                          stagedStats: Option[(Seq[String], Seq[String], Int)] = None,
+                          afterStage: () => Unit = () => (),
+                          afterPublish: () => Unit = () => ())
 
   /** One source of a [[carryStatsLines]] pass: the lines of the stats dir
     * `stats` whose `file` key is in `files` (`keep`), or is not (`!keep`).

@@ -132,8 +132,7 @@ object Streams extends DerivedIndex {
     */
   def ingestToDocStore(stream: DataFrame, path: String, key: String,
                        expectedKeys: Long = 1000000L,
-                       autoCompactAt: Int = 0,
-                       autoCompactSmallBytes: Long = 0L)
+                       autoCompactAt: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -155,14 +154,9 @@ object Streams extends DerivedIndex {
         // foreachBatch serializes batches, so the rewrite never even races
         // an append here (and if it did, DocStore's salvage protocol would
         // carry the raced batch into the committed generation).
-        // autoCompactSmallBytes > 0 keeps the self-maintenance
-        // INCREMENTAL: only the sub-threshold append tail merges (large
-        // files carry by reference), so a long-running ingest never pays
-        // a corpus rewrite just to stay under its file budget
         if (autoCompactAt > 0)
           graft.sources.DocStore.maybeCompact(spark, path, autoCompactAt,
-            targetFiles = math.max(1, autoCompactAt / 4),
-            smallBytes = autoCompactSmallBytes)
+            targetFiles = math.max(1, autoCompactAt / 4))
         ()
       }
       .start()
@@ -979,7 +973,8 @@ object Streams extends DerivedIndex {
 
   /** The WHOLE maintenance story — store AND derived indexes — as ONE
     * idempotent call: [[graft.sources.DocStore.maintain]]'s triad
-    * (tail-merge / recluster / vacuum), then every index registered
+    * (tail-merge / recluster / vacuum; every threshold but `maxDataFiles`
+    * at maintain's default), then every index registered
     * against the store (the sync entry points self-register on every
     * poll) folds its batch dirs via [[compactNearDupIndex]] /
     * [[compactIvfIndex]] under the same `maxBatchDirs` policy. Every leg
@@ -1003,15 +998,10 @@ object Streams extends DerivedIndex {
   def maintainAll(spark: SparkSession, path: String,
                   keyCol: Option[String] = None,
                   maxDataFiles: Int = 64,
-                  smallBytes: Long = 1L << 24,
-                  maxOverlapping: Int = 0,
-                  minLiveFraction: Double = 0.5,
                   retain: Int = 2,
-                  maxFileBytes: Long = 1L << 28,
                   maxBatchDirs: Int = 8): MaintainAllReport = {
     val store = graft.sources.DocStore.maintain(spark, path, keyCol,
-      maxDataFiles, smallBytes, maxOverlapping, minLiveFraction, retain,
-      maxFileBytes)
+      maxDataFiles = maxDataFiles, retain = retain)
     val entries = registeredIndexes(spark, path)
     val (live, dead) = entries.partition { case (_, idx) =>
       fsOf(spark, idx).exists(new Path(idx))
@@ -1029,9 +1019,9 @@ object Streams extends DerivedIndex {
     }
     val folded = live.map {
       case ("neardup", idx) =>
-        idx -> compactNearDupIndex(spark, idx, maxBatchDirs, maxFileBytes)
+        idx -> compactNearDupIndex(spark, idx, maxBatchDirs)
       case ("ivf", idx) =>
-        idx -> compactIvfIndex(spark, idx, maxBatchDirs, maxFileBytes)
+        idx -> compactIvfIndex(spark, idx, maxBatchDirs)
       case (kind, idx) =>
         // an unknown kind (registry written by a newer version) is left
         // alone — folding with the wrong layout assumptions could corrupt

@@ -764,6 +764,18 @@ class DocStoreSpec extends SparkTestBase {
     assert(DocStore.generations(spark, derived) == gens)
   }
 
+  test("syncDerived: seeding a non-empty target is refused, not appended twice") {
+    val src = freshPath()
+    val derived = freshPath()
+    DocStore.insertMany(Seq((1L, "a"), (2L, "b")).toDF("id", "text"), src)
+    DocStore.syncDerived(spark, src, derived, "id", None)(identity)
+    val e = intercept[IllegalArgumentException](
+      DocStore.syncDerived(spark, src, derived, "id", None)(identity))
+    assert(e.getMessage.contains("requires an empty target"))
+    assert(DocStore.find(spark, derived).select("id").orderBy("id")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+  }
+
   /** Spark jobs launched while `body` runs (listener events are posted
     * asynchronously; the short settle wait is generous for a local bus).
     */
