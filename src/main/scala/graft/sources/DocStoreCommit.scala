@@ -367,21 +367,23 @@ private[sources] trait DocStoreCommit {
     */
   private[sources] val SchemaBase = "_schema.json"
 
-  /** Write (or replace) the schema base — the one writer of it. */
-  private[sources] def writeSchemaBase(fs: FileSystem, statsPath: Path,
-                                       schema: StructType): Unit = {
-    val out = fs.create(new Path(statsPath, SchemaBase), true)
+  /** Write (or replace) `schema` as the file `p`: the one writer of the
+    * schema base and its append sidecars.
+    */
+  private def writeSchema(fs: FileSystem, p: Path, schema: StructType): Path = {
+    val out = fs.create(p, true)
     try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+    p
   }
 
+  private[sources] def writeSchemaBase(fs: FileSystem, statsPath: Path,
+                                       schema: StructType): Unit =
+    writeSchema(fs, new Path(statsPath, SchemaBase), schema)
+
   private[sources] def writeSchemaSidecar(fs: FileSystem, statsPath: Path,
-                                 schema: StructType): Path = {
-    val sidecar = new Path(statsPath,
-      s"_schema-append-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(sidecar, true)
-    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
-    sidecar
-  }
+                                          schema: StructType): Path =
+    writeSchema(fs, new Path(statsPath,
+      s"_schema-append-${java.util.UUID.randomUUID()}.json"), schema)
 
   /** Per-store JVM monitor serializing an append's publish + visibility
     * walk against a mutation commit's retention prune. Without it, a
