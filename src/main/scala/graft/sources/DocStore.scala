@@ -1586,7 +1586,7 @@ object DocStore extends DocStoreCommit {
     withMutationRetry(retries) { () =>
       val fs = fileSystem(spark, path)
       val pin = pinLive(spark, fs, path)
-      val stored = storedSchema(fs, new Path(pin.live, StatsDir)).getOrElse(
+      val stored = pin.stored.getOrElse(
         throw new IllegalStateException(
           s"docstore: cannot renameColumn on $path — the collection has no " +
             "stored schema; run compact()/collectStats() first"))
@@ -1656,7 +1656,7 @@ object DocStore extends DocStoreCommit {
     val fs = fileSystem(spark, path)
     val pin = pinLive(spark, fs, path)
     afterPin()
-    val stored = storedSchema(fs, new Path(pin.live, StatsDir)).getOrElse(
+    val stored = pin.stored.getOrElse(
       throw new IllegalStateException(
         s"docstore: cannot $what on $path — the collection has no stored " +
           "schema (pre-schema, or appends drifted it unmergeably); run " +
@@ -2038,7 +2038,7 @@ object DocStore extends DocStoreCommit {
     // commit's carriedSchema would otherwise drop it, erasing
     // metadata-only columns and bricking later DDL); a store with no
     // stored schema at all stays inference-served, as before.
-    val hadSchema = storedSchema(fs, new Path(pin.live, StatsDir)).nonEmpty
+    val hadSchema = pin.stored.nonEmpty
     val n = rewrite(pin, retain, Scope.All, Extras(
       count = Some(lit(true)), format = format,
       stagedSchema =
@@ -2106,9 +2106,9 @@ object DocStore extends DocStoreCommit {
     committedGens(fs, path).flatMap { g =>
       val gName = f"gen-$g%06d"
       val gDir = genPath(path, g)
-      val sizes = dataFileSizes(fs, gDir)
-      if (sizes.isEmpty && !fs.exists(new Path(gDir))) None
+      if (!fs.exists(new Path(gDir))) None
       else {
+        val sizes = dataFileSizes(fs, gDir)
         val bytes = sizes.values.sum
         val ref =
           if (gName == liveName) bytes

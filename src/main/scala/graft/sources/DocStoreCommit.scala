@@ -78,26 +78,20 @@ private[sources] trait DocStoreCommit {
     Io.commitSmallFile(fs, new Path(genDir), LinksFile,
       entries.sorted.mkString("\n").getBytes(UTF_8), replace = true)
 
-  /** Lengths of a dir's data files, from ONE listing (empty when the dir
-    * is gone).
-    */
-  private[sources] def dataFileSizes(fs: FileSystem, dir: String): Map[String, Long] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Map.empty
-    else Io.visibleFiles(fs, p).iterator.map(st => st.getPath.getName -> st.getLen).toMap
-  }
+  /** Lengths of a dir's data files, from ONE listing (the dir must exist). */
+  private[sources] def dataFileSizes(fs: FileSystem, dir: String): Map[String, Long] =
+    Io.visibleFiles(fs, new Path(dir)).iterator.map(st => st.getPath.getName -> st.getLen).toMap
 
   /** Lengths of logical files of `live` — plain names and carried entries
-    * alike — from ONE listing per home dir; a file whose home is gone
-    * sizes 0. Pure metadata: no data file is opened.
+    * alike — one status call each; a file that is gone sizes 0. Pure
+    * metadata: no data file is opened, and no dir is listed.
     */
   private[sources] def fileSizes(fs: FileSystem, live: String,
                                  names: Iterable[String]): Map[String, Long] =
-    names.groupBy(n => new Path(resolvePath(live, n)).getParent.toString)
-      .flatMap { case (home, ns) =>
-        val lens = dataFileSizes(fs, home)
-        ns.map(n => n -> lens.getOrElse(baseName(n), 0L))
-      }
+    names.iterator.map { n =>
+      n -> (try fs.getFileStatus(new Path(resolvePath(live, n))).getLen
+            catch { case _: java.io.FileNotFoundException => 0L })
+    }.toMap
 
   /** LOGICAL data-file names of a generation: physical visible files (plain
     * names) plus carried entries (containing '/'). Every read/pin surface
@@ -652,14 +646,15 @@ private[sources] trait DocStoreCommit {
     /** The pinned files' absolute paths, in name order. */
     lazy val paths: Seq[String] = names.toSeq.sorted.map(resolvePath(live, _))
 
+    /** The live generation's stored schema, read once. */
+    lazy val stored: Option[StructType] = storedSchema(fs, new Path(live, StatsDir))
+
     /** Every pinned file under the stored schema — [[readGen]]'s
       * discipline, and its no-files behavior.
       */
-    lazy val docs: DataFrame = {
-      val schema = storedSchema(fs, new Path(live, StatsDir))
-      if (names.nonEmpty) readFiles(spark, format, schema, paths)
-      else schema.fold(readFiles(spark, format, None, Seq(live)))(emptyFrame(spark, _))
-    }
+    lazy val docs: DataFrame =
+      if (names.nonEmpty) readFiles(spark, format, stored, paths)
+      else stored.fold(readFiles(spark, format, None, Seq(live)))(emptyFrame(spark, _))
 
     /** A COMPLETE read schema for a rewrite that reads only some pinned
       * files (compactSmall's tail, vacuum's re-homed set): the stored
@@ -675,8 +670,8 @@ private[sources] trait DocStoreCommit {
       * only in carried files.
       */
     lazy val partialSchema: Option[StructType] = {
-      val schema = storedSchema(fs, new Path(live, StatsDir))
-        .orElse(if (format == "parquet") physicalSchema(spark, format, paths) else None)
+      val schema =
+        stored.orElse(if (format == "parquet") physicalSchema(spark, format, paths) else None)
       if (format == "parquet" && schema.isEmpty)
         throw new IllegalStateException(
           s"docstore: cannot derive a complete read schema for $live — its " +
