@@ -14,12 +14,20 @@ import org.apache.spark.sql.SparkSession
   *  - ANSI mode is OFF: the reference's pandas semantics are permissive
   *    (failed parses -> NaN/None, e.g. /root/reference/dags/CotyData_IPN.py:103-104),
   *    so null-on-error matches the semantics we must replicate.
+  *  - The `file` scheme is [[LocalFs]] for `FileSystem` and `FileContext`.
+  *    Without the native `libhadoop`, Hadoop's own local file system starts
+  *    a `chmod` child process for every file and dir it creates (twice per
+  *    data file, with its `.crc`) and a `readlink` per checkpoint rename;
+  *    [[LocalFs]] does both in-process and keeps the checksum files and the
+  *    permission bits as they were. A value preset as a system property
+  *    (`spark-submit --conf`, `-D`) wins over it ([[LocalFs.settings]]).
   */
 object Sessions {
 
   /** Config shared by every session the engine creates. */
   def tuned(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cpus)
+    b.config(LocalFs.settings(sys.props.get))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

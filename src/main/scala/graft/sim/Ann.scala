@@ -158,22 +158,12 @@ object Ann {
 
   private[graft] def clearIvfCacheForTest(): Unit = fittedIvf.clear()
 
-  /** Where a persisted IVF model for (`dataDir`, geometry) lives. The
-    * name embeds the dataset's CONTENT fingerprint, so a restart over
-    * regenerated data misses the stale blob and refits — the cross-
-    * process twin of [[graft.core.FitCache]]'s in-JVM staleness rule.
-    * `SPARK_GRAFT_MODEL_DIR` overrides the default tmpdir location (on a
-    * cluster, point it at the object store the data lives on).
+  /** Where a persisted IVF model for (`dataDir`, geometry) lives
+    * ([[ModelStore.modelPath]]).
     */
   private[graft] def ivfModelPath(dataDir: String, nCells: Int,
-                                  lloydIters: Int): String = {
-    val fp = graft.core.FitCache.fingerprint(dataDir)
-    val base = sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft-models")
-    val keyHash = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dataDir))
-    f"$base/ivf-$keyHash-$fp%016x-c$nCells-i$lloydIters.bin"
-  }
+                                  lloydIters: Int): String =
+    ModelStore.modelPath("ivf", dataDir, s"c$nCells-i$lloydIters")
 
   /** Process-wide fit-once cache keyed by (dataset key, geometry) plus a
     * content fingerprint of the dataset dir (see [[graft.core.FitCache]]:

@@ -92,14 +92,8 @@ object IvfPq {
   private[graft] def clearIvfPqCacheForTest(): Unit = fittedIvfPq.clear()
 
   private[graft] def ivfPqModelPath(dataDir: String, nCells: Int, m: Int,
-                                    k: Int): String = {
-    val fp = graft.core.FitCache.fingerprint(dataDir)
-    val base = sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft-models")
-    val keyHash = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dataDir))
-    f"$base/ivfpq-$keyHash-$fp%016x-c$nCells-m$m-k$k.bin"
-  }
+                                    k: Int): String =
+    ModelStore.modelPath("ivfpq", dataDir, s"c$nCells-m$m-k$k")
 
   /** Fit-once/serve-many for the residual IVF-PQ model — the
     * [[Ann.cachedIvf]]/[[Pq.cachedPq]] two-layer cache (in-JVM FitCache +

@@ -89,18 +89,26 @@ object ModelStore {
 
   private val WhitenedMagic = 0x47415748 // "GAWH"
 
-  /** Persisted-blob path for the whitened-ANN pair (content fingerprint in
-    * the name, `SPARK_GRAFT_MODEL_DIR` override — the Ann.ivfModelPath
-    * convention).
+  /** Where a persisted model of `kind` and `geometry` for `dataDir` lives:
+    * `<base>/<kind>-<hash of dataDir>-<content fingerprint>-<geometry>.bin`.
+    * The dataset's CONTENT fingerprint in the name makes a restart over
+    * regenerated data miss the stale blob and refit — the cross-process
+    * twin of [[graft.core.FitCache]]'s in-JVM staleness rule.
+    * `SPARK_GRAFT_MODEL_DIR` overrides the default base `<tmpdir>/graft-models`
+    * (on a cluster, point it at the object store the data lives on).
     */
-  def whitenedAnnPath(dataDir: String, k: Int, nCells: Int): String = {
+  private[graft] def modelPath(kind: String, dataDir: String, geometry: String): String = {
     val fp = graft.core.FitCache.fingerprint(dataDir)
     val base = sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR",
       System.getProperty("java.io.tmpdir") + "/graft-models")
     val keyHash = Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dataDir))
-    f"$base/whitened-$keyHash-$fp%016x-k$k-c$nCells.bin"
+    f"$base/$kind-$keyHash-$fp%016x-$geometry.bin"
   }
+
+  /** Persisted-blob path for the whitened-ANN pair ([[modelPath]]). */
+  def whitenedAnnPath(dataDir: String, k: Int, nCells: Int): String =
+    modelPath("whitened", dataDir, s"k$k-c$nCells")
 
   /** e9's fitted pair — PCA whitening model + the IVF index fitted in the
     * whitened space — as ONE blob: they are fitted together and must load

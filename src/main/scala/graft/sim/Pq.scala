@@ -58,19 +58,12 @@ object Pq {
 
   private[graft] def clearPqCacheForTest(): Unit = fittedPq.clear()
 
-  /** Persisted-model path for (`dataDir`, geometry) — the
-    * [[Ann.ivfModelPath]] convention (content fingerprint in the name,
-    * `SPARK_GRAFT_MODEL_DIR` override) for PQ codebooks.
+  /** Persisted-model path for (`dataDir`, geometry) of PQ codebooks
+    * ([[ModelStore.modelPath]]).
     */
   private[graft] def pqModelPath(dataDir: String, m: Int, k: Int,
-                                 iters: Int): String = {
-    val fp = graft.core.FitCache.fingerprint(dataDir)
-    val base = sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft-models")
-    val keyHash = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dataDir))
-    f"$base/pq-$keyHash-$fp%016x-m$m-k$k-i$iters.bin"
-  }
+                                 iters: Int): String =
+    ModelStore.modelPath("pq", dataDir, s"m$m-k$k-i$iters")
 
   /** Fit-once/serve-many PQ codebooks with the same two-layer cache as
     * [[Ann.cachedIvf]]: in-JVM FitCache (content-fingerprinted), cold

@@ -131,4 +131,30 @@ class ModelStoreSpec extends SparkTestBase {
     ModelStore.savePq(spark, pq, Pq.fitPq(emb, m = 8, k = 16, iters = 1))
     intercept[IllegalArgumentException] { ModelStore.loadIvf(spark, pq) }
   }
+
+  test("the four model file names stay those of models already on disk") {
+    def names(dataDir: String) = Seq(Ann.ivfModelPath(dataDir, nCells = 16, lloydIters = 2),
+      IvfPq.ivfPqModelPath(dataDir, nCells = 16, m = 8, k = 256),
+      ModelStore.whitenedAnnPath(dataDir, k = 16, nCells = 16),
+      Pq.pqModelPath(dataDir, m = 8, k = 256, iters = 4))
+    val base = sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR",
+      System.getProperty("java.io.tmpdir") + "/graft-models")
+    // a key that is no directory fingerprints to 0
+    val absent = names("/data/graft/sf-pin")
+    assert(absent.forall(_.startsWith(base + "/")))
+    assert(absent.map(new java.io.File(_).getName) == Seq(
+      "ivf-e09e5e8a-0000000000000000-c16-i2.bin",
+      "ivfpq-e09e5e8a-0000000000000000-c16-m8-k256.bin",
+      "whitened-e09e5e8a-0000000000000000-k16-c16.bin",
+      "pq-e09e5e8a-0000000000000000-m8-k256-i4.bin"))
+    // a dataset dir: the content fingerprint of (name, size, mtime), whatever the dir's path
+    val dir = java.nio.file.Files.createTempDirectory("graft-model-names")
+    val part = java.nio.file.Files.write(dir.resolve("part-0"), Array[Byte](1, 2, 3))
+    java.nio.file.Files.setLastModifiedTime(part,
+      java.nio.file.attribute.FileTime.fromMillis(1600000000000L))
+    val hash = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir.toString))
+    assert(names(dir.toString).map(new java.io.File(_).getName) == Seq(
+      s"ivf-$hash-b72ac7fb667ba1c5-c16-i2.bin", s"ivfpq-$hash-b72ac7fb667ba1c5-c16-m8-k256.bin",
+      s"whitened-$hash-b72ac7fb667ba1c5-k16-c16.bin", s"pq-$hash-b72ac7fb667ba1c5-m8-k256-i4.bin"))
+  }
 }
